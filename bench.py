@@ -3,7 +3,7 @@
 Prints ONE compact JSON headline line (≤ ~1.9 kB — the driver captures
 only the first ~2,000 chars of stdout):
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-and writes the full record (all arms, comparative tokenizers, scaling
+and writes the full record (all arms, the rows-layout arm, scaling
 levels) to BENCH_DETAIL.json next to this file.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -333,11 +333,10 @@ def main() -> None:
     zpath = make_zip(os.path.join(os.path.dirname(
         os.path.abspath(__file__)), "dist"))
 
-    def _submit_arm(tokenizer: str, repeat: int,
-                    layout: str = "rows") -> dict:
+    def _submit_arm(layout: str, repeat: int) -> dict:
         import subprocess
 
-        out_dir = f"/tmp/fsx_bench_arm_{tokenizer}"
+        out_dir = f"/tmp/fsx_bench_arm_{layout}"
         cmd = [
             "spark-submit",
             "--master", f"local[{cpus}]",
@@ -351,8 +350,7 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "tools", "submit_build.py"),
             "--corpus", build_corpus_path, "--out", out_dir,
-            "--tokenizer", tokenizer, "--repeat", str(repeat),
-            "--layout", layout,
+            "--repeat", str(repeat), "--layout", layout,
         ]
         proc = subprocess.run(
             cmd, capture_output=True, text=True, timeout=1800, check=False
@@ -363,7 +361,7 @@ def main() -> None:
             if line.startswith("{"):
                 return json.loads(line)
         raise RuntimeError(
-            f"no JSON from build arm {tokenizer}:\n{proc.stderr[-2000:]}"
+            f"no JSON from build arm {layout}:\n{proc.stderr[-2000:]}"
         )
 
     # the parent session has served its purpose (latency/serving arms);
@@ -372,26 +370,24 @@ def main() -> None:
     # run while the idle parent JVM still holds memory
     spark.stop()
 
-    # headline arm = the DEFAULT build path (hybrid auto tokenizer:
-    # ASCII docs through the Arrow-C++ kernel, the rest through the
-    # contract analyzer — contract-exact everywhere); comparative arms:
-    # pure contract analyzer, pure-JVM SQL codegen, forced RE2 vector.
-    # each arm degrades independently: a timeout/crash in one late arm
-    # must not discard the latency/serving measurements already taken
+    # every arm runs the default analyzer (ASCII docs through the
+    # Arrow-C++ kernel, the rest through the contract analyzer —
+    # contract-exact everywhere).  Each arm degrades independently: a
+    # timeout/crash in one late arm must not discard the latency/serving
+    # measurements already taken
     arm_errors: dict[str, str] = {}
 
-    def _try_arm(tokenizer: str, repeat: int,
-                 layout: str = "rows") -> dict | None:
+    def _try_arm(layout: str, repeat: int) -> dict | None:
         try:
-            return _submit_arm(tokenizer, repeat, layout)
+            return _submit_arm(layout, repeat)
         except Exception as e:  # noqa: BLE001 — recorded, not swallowed
-            arm_errors[tokenizer] = repr(e)
+            arm_errors[layout] = repr(e)
             return None
 
-    # headline arm: auto tokenizer + GROUPED postings layout (the
-    # durable fast path — one row per (batch, term), concat-only merge;
-    # measured -60%% write phase at 2M/local[8], bit-parity pinned)
-    arm = _try_arm("auto", repeat=8, layout="grouped")
+    # headline arm: GROUPED postings layout (the durable fast path — one
+    # row per (batch, term), concat-only merge; measured -60%% write
+    # phase at 2M/local[8], bit-parity pinned)
+    arm = _try_arm("grouped", repeat=8)
     if arm is not None:
         build_secs = arm["build_secs"]
         build_cold_fresh_secs = arm["build_cold_secs"]
@@ -405,19 +401,12 @@ def main() -> None:
         build_secs = build_cold_secs
         build_cold_fresh_secs = build_cold_secs
         build_write_secs = write_secs
-    # comparative arms: repeat=4 -> median of THREE warm runs (the VM's
-    # ±25% run variance makes a single-run ranking meaningless)
-    # comparative arms stay on the rows layout: they isolate the
-    # TOKENIZER variable; arm_rows below isolates the LAYOUT variable
-    arm_rows = _try_arm("auto", repeat=4, layout="rows")
+    # comparative arm isolating the LAYOUT variable: repeat=4 -> median
+    # of THREE warm runs (the VM's ±25% run variance makes a single-run
+    # ranking meaningless)
+    arm_rows = _try_arm("rows", repeat=4)
     build_rows_secs = (arm_rows or {}).get("build_secs") or float("nan")
     write_rows_secs = (arm_rows or {}).get("write_secs") or float("nan")
-    arm_contract = _try_arm("arrow", repeat=4)
-    build_contract_secs = (arm_contract or {}).get("build_secs") or float("nan")
-    arm_sql = _try_arm("sql", repeat=4)
-    build_sql_secs = (arm_sql or {}).get("build_secs") or float("nan")
-    arm_vec = _try_arm("vector", repeat=4)
-    build_vec_secs = (arm_vec or {}).get("build_secs") or float("nan")
 
     p50 = statistics.median(lat)
     out = {
@@ -438,14 +427,6 @@ def main() -> None:
         "build_rows_layout_secs": _r(build_rows_secs, 3),
         "build_rows_layout_write_secs": _r(write_rows_secs, 3),
         "build_arm_errors": arm_errors or None,
-        "build_contract_tokenizer_secs": _r(build_contract_secs, 3),
-        "build_contract_tokenizer_docs_per_sec": _r(
-            n_build / build_contract_secs, 1
-        ),
-        "build_sql_tokenizer_secs": _r(build_sql_secs, 3),
-        "build_sql_tokenizer_docs_per_sec": _r(n_build / build_sql_secs, 1),
-        "build_vector_tokenizer_secs": _r(build_vec_secs, 3),
-        "build_vector_tokenizer_docs_per_sec": _r(n_build / build_vec_secs, 1),
         "build_write_secs": round(build_write_secs, 3),
         "durable_write_secs": round(write_secs, 3),
         "durable_docs_per_sec": round(

@@ -1139,13 +1139,17 @@ def q_lsh_bucket_skew(spark, sf_dir):
     sizes = bucket.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("bucket_size")
     )
+    return bucket_size_histogram(sizes)
+
+
+def bucket_size_histogram(sizes):
+    """(bucket_size, n_buckets, n_candidate_pairs) over (band, bucket,
+    bucket_size) rows.  The pair count is integer ``s * (s - 1) DIV 2``
+    (the DuckDB twin's ``//``): a floating-point halving rounds counts
+    above 2^53."""
     return sizes.groupBy("bucket_size").agg(
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
-        F.sum(
-            (F.col("bucket_size") * (F.col("bucket_size") - 1) / 2).cast(
-                "long"
-            )
-        )
+        F.sum(F.expr("bucket_size * (bucket_size - 1) DIV 2"))
         .cast("long")
         .alias("n_candidate_pairs"),
     )

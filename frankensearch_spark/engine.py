@@ -52,11 +52,26 @@ def _schema_from_dict(d: dict) -> ParserSchema:
     )
 
 
-# one process-wide warm serializer: warm() is rare (once per loaded
-# index) and its per-index caches make re-entry a no-op, so coarse
-# granularity costs nothing while removing the N-way duplicate preload
-# jobs a concurrent cold-open would otherwise fire
-_WARM_LOCK = threading.Lock()
+def _warm_lock(index) -> threading.Lock:
+    """The warm serializer of ONE underlying index: concurrent first
+    searches on a cold engine fire its preload jobs once, while a cold
+    open of another index never waits behind them.  The lock lives on
+    the index object (``dict.setdefault`` is atomic), so engines sharing
+    a snapshot share it."""
+    return vars(index).setdefault("_warm_lock", threading.Lock())
+
+
+def _cache_put(cache: dict, key, value) -> None:
+    """Insert into a FIFO-bounded result cache.  Serving threads evict
+    concurrently without a lock: two of them can pick the same oldest
+    key, or resize the dict under another's iterator — either just
+    means someone else already evicted."""
+    cache[key] = value
+    while len(cache) > QUERY_CACHE_MAX:
+        try:
+            cache.pop(next(iter(cache)), None)
+        except (RuntimeError, StopIteration):
+            continue
 
 
 class FrankensearchSpark:
@@ -187,7 +202,7 @@ class FrankensearchSpark:
         # searches on a cold loaded engine race here — without the lock
         # each would run the full preload jobs redundantly; results are
         # identical either way, the lock only removes the wasted jobs)
-        with _WARM_LOCK:
+        with _warm_lock(self.index):
             for sub in subs:
                 # each preload guards independently: an interrupted
                 # earlier warm (termstats landed, coverage didn't) must
@@ -258,9 +273,7 @@ class FrankensearchSpark:
             out = search_ast_collect(
                 self.index, query, limit, offset, self.schema
             )
-        self._query_cache[key] = list(out)
-        while len(self._query_cache) > QUERY_CACHE_MAX:
-            self._query_cache.pop(next(iter(self._query_cache)))
+        _cache_put(self._query_cache, key, list(out))
         return out
 
     def search_batch(self, queries, limit: int = 10, offset: int = 0):
@@ -293,9 +306,7 @@ class FrankensearchSpark:
             )
             for i, q, hits in zip(pos, misses, got):
                 out[i] = hits[offset : offset + limit]
-                self._query_cache[(q, limit, offset)] = list(out[i])
-                while len(self._query_cache) > QUERY_CACHE_MAX:
-                    self._query_cache.pop(next(iter(self._query_cache)))
+                _cache_put(self._query_cache, (q, limit, offset), list(out[i]))
         return out
 
     def search(self, query: str, limit: int = 10, offset: int = 0):

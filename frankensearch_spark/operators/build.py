@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from frankensearch_spark.contract import MAX_TERM_BYTES
-
 DOC_ORDS_PER_LEASE = 1 << 33  # scale-mode lease width (Q1 analogue)
 
 
@@ -569,13 +567,13 @@ def build_postings_grouped(
     content_col: str = "content",
     code_aware: bool = False,
     with_positions: bool = True,
-    tokenizer: str = "arrow",
 ) -> DataFrame:
     """Fused tokenize→aggregate→GROUP: one mapInArrow pass emitting the
     grouped postings layout (one row per (batch, term), array payloads).
-    Every posting batch kernel (contract / RE2 vector / auto hybrid)
-    runs unchanged; a per-batch regroup adapter folds its output into
-    grouped rows, so the bit-parity of the kernels carries over.
+    The posting batch kernels of the rows layout (the ASCII router, or
+    the contract analyzer under ``code_aware``) run unchanged; a
+    per-batch regroup adapter folds their output into grouped rows, so
+    the bit-parity of the kernels carries over.
 
     CONTRACT: the input must be docid-RANGE-partitioned and locally
     docid-sorted (the grouped build arranges this) so every emitted
@@ -583,44 +581,17 @@ def build_postings_grouped(
     the downstream block writer then merges by concatenation in
     first-docid order, never by decode (keeper.rs:4166-4206 theorem,
     carried to the map side)."""
-    from frankensearch_spark.analyze import tokenize_code_aware, tokenize_fast
+    if code_aware:
+        from frankensearch_spark.analyze import tokenize_code_aware
 
-    tok_fn = tokenize_code_aware if code_aware else tokenize_fast
-
-    if tokenizer == "arrow" or code_aware:
         def kernel(rb):
-            out = _contract_batch(rb, tok_fn, with_positions, True)
+            out = _contract_batch(
+                rb, tokenize_code_aware, with_positions, True
+            )
             return [out] if out is not None else []
-    elif tokenizer == "vector":
-        def kernel(rb):
-            out = _vector_batch(rb, with_positions)
-            return [out] if out is not None else []
-    elif tokenizer == "auto":
-        def kernel(rb):
-            import pyarrow.compute as pc
-
-            mask = pc.fill_null(pc.string_is_ascii(rb.column(1)), True)
-            n_ascii = pc.sum(mask).as_py() or 0
-            if n_ascii == rb.num_rows:
-                out = _vector_batch(rb, with_positions)
-                return [out] if out is not None else []
-            outs = []
-            if n_ascii:
-                out = _vector_batch(rb.filter(mask), with_positions)
-                if out is not None:
-                    outs.append(out)
-            other_rb = rb.filter(pc.invert(mask))
-            if other_rb.num_rows:
-                out = _contract_batch(
-                    other_rb, tokenize_fast, with_positions, True
-                )
-                if out is not None:
-                    outs.append(out)
-            return outs
     else:
-        raise ValueError(
-            f"grouped layout has no {tokenizer!r} tokenizer (arrow/vector/auto)"
-        )
+        def kernel(rb):
+            return _auto_batches(rb, with_positions)
 
     def gen(batches):
         for rb in batches:
@@ -716,43 +687,20 @@ def explode_grouped_postings(grouped: DataFrame) -> DataFrame:
     return z.select(*cols)
 
 
-def build_postings_fused_vec(
-    corpus_with_docid: DataFrame,
-    content_col: str = "content",
-    with_positions: bool = True,
-) -> DataFrame:
-    """Arrow-C++ vectorized twin of :func:`build_postings_fused`.
+def _vector_batch(rb, with_positions: bool):
+    """RE2 posting kernel, the ASCII leg of :func:`_auto_batches`.
 
     The whole tokenize→aggregate pass runs without per-token Python:
     ``utf8_lower`` + RE2 ``split_pattern_regex`` + ``dictionary_encode``
     happen in Arrow C++, and everything after is numpy over the
-    dictionary CODES (never the strings).  Token admission (>65,530-byte
-    tokens dropped, position gaps preserved — T3) and per-doc admitted
-    doclen match the contract tokenizer exactly.
-
-    Parity class is the same as the SQL codegen path: on ASCII corpora
-    the posting table is IDENTICAL to the contract Arrow tokenizer
-    (asserted by tests); for exotic Unicode, RE2's ``\\pL\\pN`` classes
-    and whole-string lowering can differ from Rust
-    ``char::is_alphanumeric`` semantics — use ``tokenizer="arrow"``
-    when that matters."""
-
-    def gen(batches):
-        for rb in batches:
-            out = _vector_batch(rb, with_positions)
-            if out is not None:
-                yield out
-
-    return corpus_with_docid.select("docid", content_col).mapInArrow(
-        gen, POSTINGS_VB_SCHEMA
-    )
-
-
-def _vector_batch(rb, with_positions: bool):
-    """Per-batch kernel of :func:`build_postings_fused_vec` (Arrow-C++
-    tokenize, numpy aggregation over dictionary codes).  Returns a
-    RecordBatch of postings or ``None`` when the batch yields no
-    tokens."""
+    dictionary CODES.  Token admission (>65,530-byte tokens dropped,
+    position gaps preserved — T3) and per-doc admitted doclen match the
+    contract analyzer.  On ASCII input the posting table is IDENTICAL to
+    :func:`_contract_batch` (pinned by test_build_paths); on other
+    Unicode RE2's ``\\pL\\pN`` classes and whole-string lowering can
+    differ from Rust ``char::is_alphanumeric``, so only ASCII documents
+    are routed here.  Returns a RecordBatch of postings or ``None`` when
+    the batch yields no tokens."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -829,57 +777,57 @@ def _vector_batch(rb, with_positions: bool):
     )
 
 
+def _auto_batches(rb, with_positions: bool) -> list:
+    """Per-batch ASCII router: postings RecordBatches for one input batch
+    of (docid, content).
+
+    Documents whose content is pure ASCII (``string_is_ascii``, Arrow
+    C++) go through the RE2 kernel (:func:`_vector_batch`), the rest
+    through the reference contract analyzer (:func:`_contract_batch`).
+    Tokenization is per-document, so per-doc routing cannot change any
+    posting.  Returns up to two sub-batches over the SAME docid span."""
+    import pyarrow.compute as pc
+
+    from frankensearch_spark.analyze import tokenize_fast
+
+    # null content: both kernels drop the doc — route to the vector side
+    # (no Python loop) via fill_null(True)
+    mask = pc.fill_null(pc.string_is_ascii(rb.column(1)), True)
+    n_ascii = pc.sum(mask).as_py() or 0
+    if n_ascii == rb.num_rows:
+        # all-ASCII batch (the common case for source code): skip the
+        # filter() copy of every content buffer
+        outs = [_vector_batch(rb, with_positions)]
+    else:
+        outs = [
+            _vector_batch(rb.filter(mask), with_positions)
+            if n_ascii else None,
+            _contract_batch(
+                rb.filter(pc.invert(mask)), tokenize_fast, with_positions,
+                True,
+            ),
+        ]
+    return [out for out in outs if out is not None]
+
+
 def build_postings_fused_auto(
     corpus_with_docid: DataFrame,
     content_col: str = "content",
     with_positions: bool = True,
 ) -> DataFrame:
-    """Hybrid tokenizer: ASCII fast path, contract-exact everywhere.
+    """The default analyzer: ASCII fast path, contract-exact everywhere.
 
     The reference tokenizes with an ASCII fast path and falls back to
     full Unicode handling per chunk; the Spark analogue routes PER
-    DOCUMENT inside one mapInArrow pass: documents whose content is
-    pure ASCII (``string_is_ascii``, Arrow C++) go through the
-    vectorized RE2 kernel (:func:`_vector_batch`), the rest through the
-    reference contract analyzer (:func:`_contract_batch`).  On ASCII
-    input the two kernels are posting-table IDENTICAL (pinned by
-    test_build_paths), and non-ASCII documents never reach the RE2
-    kernel — so ``auto`` equals the contract path bit-for-bit on EVERY
-    corpus while running the cheap kernel for the (dominant, for source
-    code) ASCII share.  Tokenization is per-document, so per-doc routing
-    cannot change any posting.
-
-    This is the default tokenizer of :func:`build_index`."""
-    from frankensearch_spark.analyze import tokenize_fast
+    DOCUMENT inside one mapInArrow pass (:func:`_auto_batches`).
+    Non-ASCII documents never reach the RE2 kernel, so the output equals
+    :func:`build_postings_fused` bit-for-bit on EVERY corpus while the
+    cheap kernel runs for the (dominant, for source code) ASCII share."""
 
     def gen(batches):
-        import pyarrow.compute as pc
-
         for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            # null content: both kernels drop the doc — route to the
-            # vector side (no Python loop) via fill_null(True)
-            mask = pc.fill_null(pc.string_is_ascii(rb.column(1)), True)
-            n_ascii = pc.sum(mask).as_py() or 0
-            if n_ascii == rb.num_rows:
-                # all-ASCII batch (the common case for source code):
-                # skip the filter() copy of every content buffer
-                out = _vector_batch(rb, with_positions)
-                if out is not None:
-                    yield out
-                continue
-            if n_ascii:
-                out = _vector_batch(rb.filter(mask), with_positions)
-                if out is not None:
-                    yield out
-            other_rb = rb.filter(pc.invert(mask))
-            if other_rb.num_rows:
-                out = _contract_batch(
-                    other_rb, tokenize_fast, with_positions, True
-                )
-                if out is not None:
-                    yield out
+            if rb.num_rows:
+                yield from _auto_batches(rb, with_positions)
 
     return corpus_with_docid.select("docid", content_col).mapInArrow(
         gen, POSTINGS_VB_SCHEMA
@@ -935,9 +883,8 @@ def positions_as_array(pos_df: DataFrame) -> DataFrame:
 def positions_as_vbyte(pos_df: DataFrame) -> DataFrame:
     """``positions array<int>`` → per-posting LEB128 ``binary`` (the
     fused build's canonical form) — one vectorized mapInArrow encode.
-    Passthrough when already binary.  Used to normalize mixed-format
-    unions (e.g. upserting an SQL-tokenizer delta into a fused-built
-    index)."""
+    Passthrough when already binary.  Used to normalize ``array<int>``
+    positions of pre-change durable segments at load."""
     dtypes = dict(pos_df.dtypes)
     if dtypes.get("positions") == "binary":
         return pos_df
@@ -985,109 +932,6 @@ def positions_as_vbyte(pos_df: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return pos_df.mapInArrow(gen, out_schema)
-
-
-def _leb128_byte_col(b):
-    """int column in 0..255 → 1-byte binary (JVM codegen: hex/lpad/unhex)."""
-    return F.unhex(F.lpad(F.hex(b), 2, "0"))
-
-
-def leb128_binary_col(arr):
-    """``array<int>`` column → canonical-LEB128 ``binary``, pure JVM.
-
-    Byte-identical to :func:`frankensearch_spark.functions.vbyte.
-    vbyte_encode` over the same values (little-endian base-128, high bit
-    = continuation, canonical widths — quiver.rs:395-430): per element a
-    width CASE over the four thresholds builds the 1–5 byte buffer, then
-    an ``aggregate`` concatenates per-element buffers in order (LEB128 is
-    per-value, so concat-of-encodes == encode-of-concat).  Keeps the SQL
-    build path free of Python workers; parity with the numpy encoder is
-    pinned in test_build_paths."""
-
-    def enc(v):
-        v = v.cast("long")
-
-        def low7(shift, cont):
-            b = F.shiftright(v, shift).bitwiseAND(F.lit(127))
-            return _leb128_byte_col(b + F.lit(128) if cont else b)
-
-        w1 = low7(0, False)
-        w2 = F.concat(low7(0, True), low7(7, False))
-        w3 = F.concat(low7(0, True), low7(7, True), low7(14, False))
-        w4 = F.concat(
-            low7(0, True), low7(7, True), low7(14, True), low7(21, False)
-        )
-        w5 = F.concat(
-            low7(0, True), low7(7, True), low7(14, True), low7(21, True),
-            low7(28, False),
-        )
-        return (
-            F.when(v < (1 << 7), w1)
-            .when(v < (1 << 14), w2)
-            .when(v < (1 << 21), w3)
-            .when(v < (1 << 28), w4)
-            .otherwise(w5)
-        )
-
-    return F.aggregate(
-        F.transform(arr, lambda p: enc(p)),
-        F.lit(bytearray(b"")),
-        lambda acc, x: F.concat(acc, x),
-    )
-
-
-def build_postings_sql(
-    corpus_with_docid: DataFrame,
-    content_col: str = "content",
-    with_positions: bool = True,
-) -> DataFrame:
-    """Pure-JVM tokenize→aggregate: whole-stage-codegen split/explode/agg.
-
-    Token boundary rule expressed in Spark SQL: split on runs of
-    non-alphanumeric chars, lowercase, drop empties, then admission-filter
-    oversized tokens AFTER position assignment (gap-preserving, T3).  On
-    ASCII corpora this emits the exact token stream of the Arrow tokenizer
-    (tests assert posting-table equality); for exotic Unicode the Java
-    regex class ``\\p{L}\\p{N}`` differs from Rust ``char::is_alphanumeric``
-    only on the Nl/No categories — use the Arrow path when that matters.
-
-    Positions are emitted PRE-ENCODED as per-posting canonical-LEB128
-    ``binary`` (:func:`leb128_binary_col`, still JVM-side) — the same
-    wire format as the fused Arrow paths, so every build path now ships
-    one positions format and downstream never normalizes.
-
-    Scale rationale: no Python workers — the build saturates executor
-    cores without JVM/Python oversubscription, which is what makes the
-    N→4N scaling criterion reachable (JVM codegen throughput, ~10x the
-    vectorized-Python path per core on the synthetic corpus).
-    """
-    toks = F.filter(
-        F.split(F.lower(F.col(content_col)), r"[^\p{L}\p{N}]+"),
-        lambda x: x != F.lit(""),
-    )
-    exploded = (
-        corpus_with_docid.select("docid", F.posexplode(toks).alias("pos", "term"))
-        .where(F.octet_length("term") <= MAX_TERM_BYTES)
-        # ONE explicit shuffle by docid: hashpartitioning(docid) satisfies
-        # the clustering needs of groupBy(docid, term), the doclen window,
-        # and every per-doc aggregate downstream — Catalyst inserts no
-        # further exchange in this path
-        .repartition("docid")
-    )
-    aggs = [F.count(F.lit(1)).cast("int").alias("tf")]
-    if with_positions:
-        aggs.append(
-            leb128_binary_col(
-                F.sort_array(F.collect_list("pos"))
-            ).alias("positions")
-        )
-    else:
-        aggs.append(F.lit(None).cast("binary").alias("positions"))
-    grouped = exploded.groupBy("docid", "term").agg(*aggs)
-    w = Window.partitionBy("docid")
-    return grouped.withColumn("doclen", F.sum("tf").over(w).cast("int")).select(
-        "docid", "term", "tf", "positions", "doclen"
-    )
 
 
 def build_termstats(postings: DataFrame) -> DataFrame:
@@ -1148,9 +992,6 @@ class BuiltIndex:
     # NOT from stats (grimoire.rs:68-71 rule; folded by lifecycle.compact)
     postings_full: DataFrame | None = None  # postings WITH positions (same
     # rows) — lets the block-store writer skip the (docid, term) re-join
-    bucket_aligned_shift: int | None = None  # postings physically
-    # co-partitioned by docid >> shift (build repartition) — enables the
-    # local-sort blockify fast path in merge.build_blocks
     postings_grouped: DataFrame | None = None  # grouped layout (one row
     # per (batch, term), array payloads, disjoint docid spans per term) —
     # when present the durable writer takes merge.build_blocks_grouped
@@ -1316,7 +1157,6 @@ def _build_index_grouped(
     cache: bool,
     n_build_partitions: int,
     meta_cols: list[str] | None,
-    tokenizer: str = "arrow",
     pre_arranged: bool = False,
     aux_caches: tuple = (),
 ) -> BuiltIndex:
@@ -1346,7 +1186,7 @@ def _build_index_grouped(
             n_build_partitions, "docid"
         ).sortWithinPartitions("docid")
     grouped = build_postings_grouped(
-        spans, content_col, code_aware, with_positions, tokenizer=tokenizer
+        spans, content_col, code_aware, with_positions
     )
     if cache:
         grouped = grouped.persist()
@@ -1388,32 +1228,24 @@ def build_index(
     with_positions: bool = True,
     code_aware: bool = False,
     cache: bool = True,
-    tokenizer: str = "auto",
     n_build_partitions: int | None = None,
     meta_cols: list[str] | None = None,
-    bucket_aligned: bool = False,
     layout: str = "rows",
 ) -> BuiltIndex:
     """Full batch build: corpus -> postings/docmeta/termstats/fieldstats.
 
-    ``tokenizer="auto"`` (default) routes ASCII documents through the
-    Arrow-C++ kernel and the rest through the contract analyzer —
-    contract-exact postings on every corpus, vectorized on the ASCII
-    share (:func:`build_postings_fused_auto`).  ``tokenizer="arrow"``
-    runs the exact reference analyzer for every document;
-    ``tokenizer="vector"`` forces the RE2 kernel (ASCII-parity class);
-    ``tokenizer="sql"`` runs the pure-JVM codegen path (identical
-    postings on ASCII corpora — see :func:`build_postings_sql`).  If
-    the corpus already carries a ``docid`` column it is trusted as the
+    The analyzer follows from the input: ``code_aware=True`` runs the
+    contract analyzer with code-aware splitting
+    (:func:`build_postings_fused`); every other build routes ASCII
+    documents through the Arrow-C++ kernel and the rest through the
+    contract analyzer — contract-exact postings on every corpus,
+    vectorized on the ASCII share (:func:`build_postings_fused_auto`).
+    If the corpus already carries a ``docid`` column it is trusted as the
     global docid (e.g. the driver testdata's ``doc_id``)."""
     spark = corpus.sparkSession
     if n_build_partitions is None:
         n_build_partitions = spark.sparkContext.defaultParallelism
     if layout == "grouped":
-        if tokenizer not in ("arrow", "vector", "auto"):
-            raise ValueError(
-                "layout='grouped' requires tokenizer arrow/vector/auto"
-            )
         if "docid" not in corpus.columns and docid_mode == "lease":
             # fused fast path: the span arrangement IS the assignment
             spans = assign_docids_fused_spans(
@@ -1421,8 +1253,7 @@ def build_index(
             )
             return _build_index_grouped(
                 spans, key_cols, content_col, with_positions, code_aware,
-                cache, n_build_partitions, meta_cols, tokenizer,
-                pre_arranged=True,
+                cache, n_build_partitions, meta_cols, pre_arranged=True,
             )
         aux: list = []
         with_docid = (
@@ -1431,8 +1262,7 @@ def build_index(
         )
         return _build_index_grouped(
             with_docid, key_cols, content_col, with_positions, code_aware,
-            cache, n_build_partitions, meta_cols, tokenizer,
-            aux_caches=tuple(aux),
+            cache, n_build_partitions, meta_cols, aux_caches=tuple(aux),
         )
     aux = []
     if "docid" in corpus.columns:
@@ -1447,62 +1277,20 @@ def build_index(
     # stage.  An explicit numbered repartition is exempt from coalescing,
     # so the build fans out to every core (measured 4x at local[32]).
     # Hashing by docid keeps the tokenize stage perfectly BALANCED.
-    # (A bucket-aligned variant — repartition by docid >> bucket_shift,
-    # enabling merge.build_blocks' local-sort fast path — was measured
-    # NET-SLOWER on this VM: the coarse bucket keys skew the CPU-heavy
-    # tokenize stage more than the smaller write exchange saves.  On a
-    # real cluster with network shuffle the trade can reverse; the fast
-    # path stays available via bucket_aligned=True.)
-    if bucket_aligned and tokenizer == "sql":
-        # build_postings_sql repartitions by docid internally, which
-        # hash-scatters each bucket across partitions — the blockify
-        # local-sort fast path would fragment every (term, bucket) group.
-        # The arrow and vector paths are narrow mapInArrow pipelines that
-        # preserve the bucket co-partitioning.
-        raise ValueError(
-            "bucket_aligned requires tokenizer='arrow'/'vector'/'auto'"
-        )
-    if bucket_aligned:
-        from frankensearch_spark.operators.merge import DEFAULT_BUCKET_SHIFT
-
-        with_docid = with_docid.repartition(
-            n_build_partitions * 4,
-            F.shiftright(F.col("docid"), DEFAULT_BUCKET_SHIFT),
-        )
-        aligned_shift = DEFAULT_BUCKET_SHIFT
-    else:
-        with_docid = with_docid.repartition(n_build_partitions, "docid")
-        aligned_shift = None
+    with_docid = with_docid.repartition(n_build_partitions, "docid")
     if cache:
         # docmeta re-reads this frame; without a persist the docid
         # assignment and repartition would run twice
         with_docid = with_docid.persist()
-    if tokenizer == "sql":
-        if code_aware:
-            raise ValueError("code_aware analysis requires tokenizer='arrow'")
-        postings_src = build_postings_sql(with_docid, content_col, with_positions)
-    elif tokenizer == "vector":
-        if code_aware:
-            raise ValueError("code_aware analysis requires tokenizer='arrow'")
-        postings_src = build_postings_fused_vec(
-            with_docid, content_col, with_positions
-        )
-    elif tokenizer == "auto":
-        if code_aware:
-            # code-aware splitting only exists in the contract analyzer
-            postings_src = build_postings_fused(
-                with_docid, content_col, code_aware, with_positions
-            )
-        else:
-            postings_src = build_postings_fused_auto(
-                with_docid, content_col, with_positions
-            )
-    elif tokenizer == "arrow":
+    if code_aware:
+        # code-aware splitting only exists in the contract analyzer
         postings_src = build_postings_fused(
             with_docid, content_col, code_aware, with_positions
         )
     else:
-        raise ValueError(f"unknown tokenizer {tokenizer!r}")
+        postings_src = build_postings_fused_auto(
+            with_docid, content_col, with_positions
+        )
     positions = None
     postings_full = None
     if with_positions:
@@ -1516,8 +1304,8 @@ def build_index(
         positions = postings_full.select("docid", "term", "positions")
         postings = postings_full.drop("positions")
     else:
-        # every tokenizer path emits a positions column (null here) —
-        # drop it so the documented 4-column postings schema holds and
+        # both analyzers emit a positions column (null here) — drop it
+        # so the documented 4-column postings schema holds and
         # format-sniffing consumers never see a no-positions build as
         # positions-bearing
         postings = postings_src.drop("positions")
@@ -1531,6 +1319,5 @@ def build_index(
     return BuiltIndex(
         postings, docmeta, termstats, fieldstats, positions,
         postings_full=postings_full,
-        bucket_aligned_shift=aligned_shift,
         aux_caches=tuple(aux),
     )

@@ -298,34 +298,13 @@ def _blockify_arrow(batches, bucket_shift: int, codec: str = "vint"):
         )
 
 
-def _blockify_presort_arrow(
-    batches,
-    bucket_shift: int,
-    n_term_partitions: int,
-    codec: str = "vint",
-):
-    """Sort-then-blockify kernel for the kernel-sort write path.
+def _encode_partition(batches, n_term_partitions: int):
+    """One blockify partition as (table, int64 term codes, unique-term
+    dictionary, tpart per unique term), or ``None`` when it is empty.
 
-    The partition arrives range-partitioned by the composed ``rkey``
-    (term-partition-major) but UNSORTED: Spark's comparator-based row
-    sorter on (int, long, string, long, long) keys measured ~34 s of the
-    89 s write phase at 2M docs / local[8], while a numpy ``lexsort``
-    over dictionary-encoded term codes does the identical grouping in
-    low single seconds.  Steps, all vectorized:
-
-      1. concat the partition's record batches into one table
-      2. ``dictionary_encode`` the term column -> int32 codes + the
-         partition's (small) unique-term dictionary
-      3. tpart per UNIQUE term via zlib.crc32 (engine-identical to the
-         JVM ``F.crc32`` the old path used), gathered per row
-      4. ``np.lexsort`` by (tpart, code, docid) — term-contiguous,
-         docid-sorted groups; term ORDER within a tpart is the
-         dictionary-code order, which no consumer depends on (blocks
-         are grouped by (term, bucket) at read time)
-      5. one Arrow ``take`` per column, then delegate to the pinned
-         :func:`_blockify_arrow` encode kernel on the sorted batch —
-         byte-identity of the encode stays guaranteed by its own tests
-    """
+    The term column is dictionary-encoded once, and tpart is computed per
+    UNIQUE term via zlib.crc32 — engine-identical to the JVM ``F.crc32``
+    of :func:`_range_partition` and to :func:`term_partition`."""
     import zlib
 
     import pyarrow as pa
@@ -333,17 +312,52 @@ def _blockify_presort_arrow(
 
     batches = [rb for rb in batches if rb.num_rows]
     if not batches:
-        return
+        return None
     tbl = pa.Table.from_batches(batches).combine_chunks()
-    term = tbl.column("term").chunk(0)
-    dict_arr = pc.dictionary_encode(term)
-    codes = dict_arr.indices.to_numpy().astype(np.int64)
-    uniq = dict_arr.dictionary.to_pylist()
+    dict_arr = pc.dictionary_encode(tbl.column("term").chunk(0))
+    uniq = dict_arr.dictionary
     tparts_u = np.fromiter(
-        (zlib.crc32(u.encode("utf-8")) % n_term_partitions for u in uniq),
+        (
+            zlib.crc32(u.encode("utf-8")) % n_term_partitions
+            for u in uniq.to_pylist()
+        ),
         dtype=np.int64,
         count=len(uniq),
     )
+    return tbl, dict_arr.indices.to_numpy().astype(np.int64), uniq, tparts_u
+
+
+def _blockify_presort_arrow(
+    batches,
+    bucket_shift: int,
+    n_term_partitions: int,
+    codec: str = "vint",
+):
+    """Sort-then-blockify kernel of :func:`build_blocks`.
+
+    The partition arrives range-partitioned by the composed ``rkey``
+    (term-partition-major) but UNSORTED: a numpy ``lexsort`` over
+    dictionary-encoded term codes does the grouping in low single
+    seconds where Spark's comparator-based row sorter took ~34 s of the
+    89 s write phase at 2M docs / local[8].  Steps, all vectorized:
+
+      1. :func:`_encode_partition` — term codes and tpart per row
+      2. ``np.lexsort`` by (tpart, code, docid) — term-contiguous,
+         docid-sorted groups; term ORDER within a tpart is the
+         dictionary-code order, which no consumer depends on (blocks
+         are grouped by (term, bucket) at read time)
+      3. one Arrow ``take`` per column, then delegate to the pinned
+         :func:`_blockify_arrow` encode kernel on the sorted batch —
+         byte-identity of the encode stays guaranteed by its own tests
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    part = _encode_partition(batches, n_term_partitions)
+    if part is None:
+        return
+    tbl, codes, _uniq, tparts_u = part
+    del part
     tpart_row = tparts_u[codes]
     docids = tbl.column("docid").chunk(0).to_numpy()
     order = np.lexsort((docids, codes, tpart_row))
@@ -355,7 +369,7 @@ def _blockify_presort_arrow(
     cols = [pc.take(tbl.column(n).chunk(0), idx) for n in names]
     cols.append(pa.array(tpart_row[order].astype(np.int32), type=pa.int32()))
     rb = pa.RecordBatch.from_arrays(cols, names=names + ["tpart"])
-    del tbl, cols, dict_arr, codes, tpart_row, docids, order, idx
+    del tbl, cols, codes, tpart_row, docids, order, idx
     yield from _blockify_arrow([rb], bucket_shift, codec)
 
 
@@ -382,27 +396,14 @@ def _blockify_grouped_arrow(
          no per-posting string materializes — to the pinned
          :func:`_blockify_arrow` encode kernel
     """
-    import zlib
-
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    batches = [rb for rb in batches if rb.num_rows]
-    if not batches:
+    part = _encode_partition(batches, n_term_partitions)
+    if part is None:
         return
-    tbl = pa.Table.from_batches(batches).combine_chunks()
-    term = tbl.column("term").chunk(0)
-    dict_arr = pc.dictionary_encode(term)
-    codes = dict_arr.indices.to_numpy().astype(np.int64)
-    uniq = dict_arr.dictionary
-    tparts_u = np.fromiter(
-        (
-            zlib.crc32(u.encode("utf-8")) % n_term_partitions
-            for u in uniq.to_pylist()
-        ),
-        dtype=np.int64,
-        count=len(uniq),
-    )
+    tbl, codes, uniq, tparts_u = part
+    del part
     docs_list = tbl.column("docids").chunk(0)
     lens = pc.list_value_length(docs_list).to_numpy().astype(np.int64)
     if (lens == 0).any():
@@ -465,6 +466,58 @@ def _blockify_grouped_arrow(
     yield from _blockify_arrow([rb], bucket_shift, codec)
 
 
+def _range_partition(
+    df: DataFrame,
+    docid,
+    bucket_shift: int,
+    n_term_partitions: int,
+    shuffle_partitions: int | None,
+) -> DataFrame:
+    """``df`` range-partitioned (unsorted) on ONE composed 8-byte key over
+    (term, ``docid`` bucket), instead of 20 B of (tpart int, thash long,
+    bucket long) key columns.  Layout, term-partition-major so parquet
+    files keep narrow tpart spans:
+
+      [63-tp_bits .. 62]  tpart   (crc32(term) % n_term_partitions)
+      [20 .. ]            thash top bits (term discriminator)
+      [0 .. 19]           bucket & 0xFFFFF (the mega-term skew salt:
+                          equal (term, bucket) rows share an identical
+                          key -> one partition; a skewed term SPLITS
+                          across partitions at bucket boundaries.
+                          mod-2^20 truncation only coarsens salting
+                          beyond 8.6 B docs.)
+
+    Rows with equal keys always land in one range partition, so every
+    (term, bucket) group stays whole; thash collisions merely co-locate
+    two terms.  Bit 63 stays clear (sign-safe)."""
+    n_shuffle = int(
+        shuffle_partitions
+        or max(df.sparkSession.sparkContext.defaultParallelism * 4, 16)
+    )
+    tp_bits = max((n_term_partitions - 1).bit_length(), 1)
+    th_bits = 63 - tp_bits - 20
+    rkey = (
+        F.shiftleft(
+            (F.crc32(F.col("term").cast("binary")) % n_term_partitions),
+            63 - tp_bits,
+        )
+        .bitwiseOR(
+            F.shiftleft(
+                F.shiftrightunsigned(F.xxhash64(F.col("term")), 64 - th_bits),
+                20,
+            )
+        )
+        .bitwiseOR(
+            F.shiftright(docid, bucket_shift).bitwiseAND(F.lit(0xFFFFF))
+        )
+    )
+    return (
+        df.withColumn("rkey", rkey)
+        .repartitionByRange(n_shuffle, "rkey")
+        .drop("rkey")
+    )
+
+
 def build_blocks_grouped(
     grouped: DataFrame,
     bucket_shift: int = DEFAULT_BUCKET_SHIFT,
@@ -481,34 +534,10 @@ def build_blocks_grouped(
     The exchange moves ~1000x fewer rows than the rows path — the
     measured write-phase wall was per-row conversion/shuffle overhead,
     not payload bytes."""
-    spark = grouped.sparkSession
-    n_shuffle = int(
-        shuffle_partitions
-        or max(spark.sparkContext.defaultParallelism * 4, 16)
-    )
-    tp_bits = max((n_term_partitions - 1).bit_length(), 1)
-    th_bits = 63 - tp_bits - 20
-    rkey = (
-        F.shiftleft(
-            (F.crc32(F.col("term").cast("binary")) % n_term_partitions),
-            63 - tp_bits,
-        )
-        .bitwiseOR(
-            F.shiftleft(
-                F.shiftrightunsigned(F.xxhash64(F.col("term")), 64 - th_bits),
-                20,
-            )
-        )
-        .bitwiseOR(
-            F.shiftright(F.element_at(F.col("docids"), 1), bucket_shift)
-            .bitwiseAND(F.lit(0xFFFFF))
-        )
-    )
-    arranged = (
-        grouped.filter(F.col("term").isNotNull())  # DOCLEN pseudo-rows out
-        .withColumn("rkey", rkey)
-        .repartitionByRange(n_shuffle, "rkey")
-        .drop("rkey")
+    arranged = _range_partition(
+        grouped.filter(F.col("term").isNotNull()),  # DOCLEN pseudo-rows out
+        F.element_at(F.col("docids"), 1), bucket_shift, n_term_partitions,
+        shuffle_partitions,
     )
     return arranged.mapInArrow(
         lambda it: _blockify_grouped_arrow(
@@ -524,40 +553,24 @@ def build_blocks(
     n_term_partitions: int = DEFAULT_TERM_PARTITIONS,
     shuffle_partitions: int | None = None,
     positions: DataFrame | None = None,
-    aligned_shift: int | None = None,
     codec: str = "vint",
-    presort: str = "kernel",
 ) -> DataFrame:
-    """postings -> compressed block table.
+    """postings -> compressed block table: the writer for every
+    non-grouped index (builds, upserted engines, compaction, serving).
 
-    Default path — one wide exchange: repartition by (term, bucket) —
-    the docid-bucket component is the explicit skew salt — then a
-    partition-local sort and a single vectorized blockify pass.
-
-    Bucket-aligned fast path (``aligned_shift == bucket_shift``): when
-    the postings are already PHYSICALLY co-partitioned by docid bucket
-    (the build repartitions by ``docid >> DEFAULT_BUCKET_SHIFT``), every
-    (term, bucket) group is partition-local, so blockify needs only a
-    LOCAL sort — the wide exchange then moves the ~64x smaller ENCODED
-    block rows instead of raw postings (positions payload included).
-    The output rows are identical; only the exchange placement differs.
+    One wide exchange (:func:`_range_partition`, whose docid-bucket key
+    component is the explicit skew salt), then the blockify kernel
+    numpy-lexsorts its partition (:func:`_blockify_presort_arrow`) — no
+    JVM sort at all.
 
     ``positions`` (docid, term, positions array<int>): when given, each
     block also carries a vbyte-packed POSITIONS sidecar (``pos_bytes``),
     so phrase queries serve from the durable index with no separate
     positions artifact.  If ``postings`` itself already carries a
     ``positions`` column (the build's fused frame) it is used directly —
-    no join; otherwise the sidecar joins on the exact posting identity
-    (which destroys physical alignment, so the join path always takes
-    the full exchange).
+    no join; otherwise the sidecar joins on the exact posting identity.
     """
-    spark = postings.sparkSession
-    n_shuffle = int(
-        shuffle_partitions
-        or max(spark.sparkContext.defaultParallelism * 4, 16)
-    )
     cols = ["term", "docid", "tf", "doclen"]
-    joined = False
     if positions is not None and "positions" in postings.columns:
         src = postings.select(*cols, "positions")
     else:
@@ -565,106 +578,15 @@ def build_blocks(
         if positions is not None:
             src = src.join(positions.select("docid", "term", "positions"),
                            ["docid", "term"], "left")
-            joined = True
-    if aligned_shift == bucket_shift and not joined:
-        src = (
-            src
-            .withColumn("bucket", F.shiftright(F.col("docid"), bucket_shift))
-            .withColumn(
-                "tpart",
-                (F.crc32(F.col("term").cast("binary")) % n_term_partitions)
-                .cast("int"),
-            )
-            # 64-bit hash sort prefix: the partition-local sort runs on a
-            # radix-friendly long almost everywhere; the string key only
-            # breaks the rare hash ties.  Grouping correctness needs
-            # term-contiguity, which (thash, term) preserves.
-            .withColumn("thash", F.xxhash64(F.col("term")))
-        )
-        arranged = src.sortWithinPartitions(
-            "tpart", "thash", "term", "bucket", "docid"
-        ).drop("thash")
-        blocks = arranged.mapInArrow(
-            lambda it: _blockify_arrow(it, bucket_shift, codec), BLOCKS_SCHEMA
-        )
-        # disk-layout exchange over BLOCK rows: HASH on tpart (a range
-        # partitioner would sample — recomputing the whole blockify a
-        # second time); with n_shuffle >= n_term_partitions most files
-        # carry a single tpart, and the within-partition sort keeps
-        # row-group min/max spans narrow for scan pruning
-        return blocks.repartition(
-            max(n_shuffle, n_term_partitions), "tpart"
-        ).sortWithinPartitions("tpart", "term", "bucket", "first_doc")
-    if presort == "kernel":
-        # ONE composed 8-byte range key instead of the 20 B of
-        # (tpart int, thash long, bucket long) key columns, and NO JVM
-        # sort at all: the blockify kernel numpy-lexsorts its partition
-        # (measured: the comparator-based JVM sort was ~34 s of the 89 s
-        # write at 2M/local[8]; the kernel sort is ~2-4 s).  Key layout,
-        # term-partition-major so parquet files keep narrow tpart spans:
-        #   [63-tp_bits .. 62]  tpart   (crc32(term) % n_term_partitions)
-        #   [20 .. ]            thash top bits (term discriminator)
-        #   [0 .. 19]           bucket & 0xFFFFF (the mega-term skew
-        #                       salt: equal (term, bucket) rows share an
-        #                       identical key -> one partition; a skewed
-        #                       term SPLITS across partitions at bucket
-        #                       boundaries.  mod-2^20 truncation only
-        #                       coarsens salting beyond 8.6 B docs.)
-        # Rows with equal keys always land in one range partition, so
-        # every (term, bucket) group stays whole; thash collisions
-        # merely co-locate two terms.  Bit 63 stays clear (sign-safe).
-        tp_bits = max((n_term_partitions - 1).bit_length(), 1)
-        th_bits = 63 - tp_bits - 20
-        rkey = (
-            F.shiftleft(
-                (F.crc32(F.col("term").cast("binary")) % n_term_partitions),
-                63 - tp_bits,
-            )
-            .bitwiseOR(
-                F.shiftleft(
-                    F.shiftrightunsigned(
-                        F.xxhash64(F.col("term")), 64 - th_bits
-                    ),
-                    20,
-                )
-            )
-            .bitwiseOR(
-                F.shiftright(F.col("docid"), bucket_shift)
-                .bitwiseAND(F.lit(0xFFFFF))
-            )
-        )
-        arranged = (
-            src.withColumn("rkey", rkey)
-            .repartitionByRange(n_shuffle, "rkey")
-            .drop("rkey")
-        )
-        return arranged.mapInArrow(
-            lambda it: _blockify_presort_arrow(
-                it, bucket_shift, n_term_partitions, codec
-            ),
-            BLOCKS_SCHEMA,
-        )
-    # presort="jvm": the original shape — RANGE partition on (tpart,
-    # thash, ..., docid): contiguous global term partitions on disk
-    # (plain parquet files carry narrow tpart min/max -> row-group
-    # pruning at query time), while the sampling range partitioner
-    # splits a skewed mega-term ('fn'/'import') across partitions at
-    # bucket boundaries — the explicit skew salt the north-rule
-    # demands, with balance chosen by data, not by guess.
-    src = (
-        src
-        .withColumn("bucket", F.shiftright(F.col("docid"), bucket_shift))
-        .withColumn(
-            "tpart",
-            (F.crc32(F.col("term").cast("binary")) % n_term_partitions).cast("int"),
-        )
-        .withColumn("thash", F.xxhash64(F.col("term")))
+    arranged = _range_partition(
+        src, F.col("docid"), bucket_shift, n_term_partitions,
+        shuffle_partitions,
     )
-    arranged = src.repartitionByRange(
-        n_shuffle, "tpart", "thash", "term", "bucket", "docid"
-    ).sortWithinPartitions("tpart", "thash", "term", "bucket", "docid").drop("thash")
     return arranged.mapInArrow(
-        lambda it: _blockify_arrow(it, bucket_shift, codec), BLOCKS_SCHEMA
+        lambda it: _blockify_presort_arrow(
+            it, bucket_shift, n_term_partitions, codec
+        ),
+        BLOCKS_SCHEMA,
     )
 
 

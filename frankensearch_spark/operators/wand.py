@@ -296,7 +296,6 @@ def serving_from_built(built, bucket_shift: int = DEFAULT_BUCKET_SHIFT,
     blocks = build_blocks(
         built.postings if (full is None or positions is None) else full,
         bucket_shift, n_term_partitions, positions=positions,
-        aligned_shift=getattr(built, "bucket_aligned_shift", None),
         codec=codec,
     )
     if cache:

@@ -236,7 +236,6 @@ def write_index(
             built.postings if full is None else full,
             bucket_shift, n_term_partitions,
             positions=getattr(built, "positions", None),
-            aligned_shift=getattr(built, "bucket_aligned_shift", None),
             codec=codec,
         )
     # with one group the block stream writes straight through (no second

@@ -11,7 +11,7 @@ from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
 def canon(df):
     """Normalize postings to comparable tuples — positions may be an
-    array<int> (reference/sql paths) or a pre-encoded vbyte binary (the
+    array<int> (the reference path) or a pre-encoded vbyte binary (the
     fused path's default pos_format)."""
     from frankensearch_spark.functions.vbyte import vbyte_decode
 
@@ -40,19 +40,6 @@ def test_fused_equals_reference_postings(spark):
     ref = build_postings(build_token_rows(corpus))
     fused = build_postings_fused(corpus)
     assert canon(fused) == canon(ref)
-
-
-def test_sql_path_equals_arrow_postings(spark):
-    """The pure-JVM codegen tokenizer emits the exact posting table of the
-    reference Arrow tokenizer on the (ASCII) synthetic corpus."""
-    from frankensearch_spark.operators.build import build_postings_sql
-
-    corpus = assign_docids(
-        synthetic_corpus_df(spark, 120, partitions=3), CORPUS_KEY
-    )
-    arrow = canon(build_postings_fused(corpus))
-    sql = canon(build_postings_sql(corpus))
-    assert sql == arrow
 
 
 def test_assign_docids_null_keys_survive(spark):
@@ -161,26 +148,37 @@ def test_fused_handles_empty_and_null_content(spark):
     ]
 
 
+def _assert_all_ascii(corpus):
+    """Every content value is ASCII (or null), so the auto router sends
+    every document through its RE2 kernel leg."""
+    texts = [r["content"] for r in corpus.select("content").collect()]
+    assert all(t is None or t.isascii() for t in texts)
+
+
 def test_vector_path_equals_arrow_postings(spark):
-    """The Arrow-C++ vectorized tokenizer (utf8_lower + RE2 split +
+    """The Arrow-C++ vectorized kernel (utf8_lower + RE2 split +
     dictionary_encode, zero per-token Python) emits the exact posting
-    table of the contract Arrow tokenizer on the (ASCII) synthetic
-    corpus — incl. positions, admission, and per-doc doclen."""
-    from frankensearch_spark.operators.build import build_postings_fused_vec
+    table of the contract analyzer on the (ASCII) synthetic corpus —
+    incl. positions, admission, and per-doc doclen.  The kernel runs
+    through the auto router, which on all-ASCII input takes only the
+    RE2 leg."""
+    from frankensearch_spark.operators.build import build_postings_fused_auto
 
     corpus = assign_docids(
         synthetic_corpus_df(spark, 120, partitions=3), CORPUS_KEY
     )
+    _assert_all_ascii(corpus)
     arrow = canon(build_postings_fused(corpus))
-    vec = canon(build_postings_fused_vec(corpus))
+    vec = canon(build_postings_fused_auto(corpus))
     assert vec == arrow
 
 
 def test_vector_path_edge_contents(spark):
-    """Vectorized tokenizer edge semantics: empty/null docs, leading and
-    trailing separators, oversized-token admission with position gaps."""
+    """Vectorized kernel edge semantics (all-ASCII input, so the auto
+    router runs only its RE2 leg): empty/null docs, leading and trailing
+    separators, oversized-token admission with position gaps."""
     from frankensearch_spark.contract import MAX_TERM_BYTES
-    from frankensearch_spark.operators.build import build_postings_fused_vec
+    from frankensearch_spark.operators.build import build_postings_fused_auto
 
     big = "x" * (MAX_TERM_BYTES + 1)
     corpus = spark.createDataFrame(
@@ -193,7 +191,8 @@ def test_vector_path_edge_contents(spark):
         ],
         "docid long, content string",
     )
-    rows = canon(build_postings_fused_vec(corpus))
+    _assert_all_ascii(corpus)
+    rows = canon(build_postings_fused_auto(corpus))
     exp = canon(build_postings_fused(corpus))
     assert rows == exp
     by_doc = {(d, t): p for d, t, _tf, p, _dl in rows}
@@ -201,7 +200,7 @@ def test_vector_path_edge_contents(spark):
 
 
 def test_auto_equals_contract_on_mixed_corpus(spark):
-    """The hybrid auto tokenizer (ASCII docs -> RE2 kernel, the rest ->
+    """The hybrid auto analyzer (ASCII docs -> RE2 kernel, the rest ->
     contract analyzer) must equal the contract path BIT-FOR-BIT on a
     corpus that mixes ASCII docs with Unicode shapes where RE2's
     \\pL\\pN classes could diverge from Rust char::is_alphanumeric."""
@@ -227,14 +226,18 @@ def test_auto_equals_contract_on_mixed_corpus(spark):
 
 
 def test_build_index_default_tokenizer_is_auto(spark):
-    """build_index() with no tokenizer arg routes through the hybrid
-    path and matches an explicit contract-tokenizer build."""
+    """A default build_index() routes through the hybrid auto analyzer
+    and matches the contract analyzer over the same docids."""
     from frankensearch_spark.operators.build import build_index
 
     corpus = synthetic_corpus_df(spark, 80, partitions=2)
     dflt = build_index(corpus, CORPUS_KEY, cache=False)
-    arrow = build_index(corpus, CORPUS_KEY, cache=False, tokenizer="arrow")
-    assert canon(dflt.postings_full) == canon(arrow.postings_full)
+    with_docid = dflt.docmeta.select("docid", *CORPUS_KEY).join(
+        corpus, CORPUS_KEY
+    )
+    assert with_docid.count() == 80
+    contract = build_postings_fused(with_docid)
+    assert canon(dflt.postings_full) == canon(contract)
 
 
 def test_code_aware_index_end_to_end(spark):
@@ -256,9 +259,7 @@ def test_code_aware_index_end_to_end(spark):
         "repo string, path string, commit string, lang string, content string",
     )
     corpus = base.unionByName(extra)
-    eng = FrankensearchSpark.build(
-        corpus, CORPUS_KEY, code_aware=True, tokenizer="arrow"
-    )
+    eng = FrankensearchSpark.build(corpus, CORPUS_KEY, code_aware=True)
     plain = FrankensearchSpark.build(corpus, CORPUS_KEY)
 
     def docids(e, q):
@@ -276,80 +277,3 @@ def test_code_aware_index_end_to_end(spark):
     assert hits[0] in docids(eng, "server")
     # snake_case splits in BOTH (underscore is a separator already)
     assert docids(eng, "handler") == docids(plain, "handler") != []
-
-
-def test_leb128_binary_col_matches_numpy_encoder(spark):
-    """The JVM-side LEB128 encoder (build.leb128_binary_col — the SQL
-    path's positions wire format since round 4) is byte-identical to the
-    numpy codec on every width boundary and on empty input."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from frankensearch_spark.functions.vbyte import vbyte_encode
-    from frankensearch_spark.operators.build import leb128_binary_col
-
-    cases = [
-        [],
-        [0],
-        [127],
-        [128],
-        [16383],
-        [16384],
-        [(1 << 21) - 1],
-        [1 << 21],
-        [(1 << 28) - 1],
-        [1 << 28],
-        [(1 << 31) - 1],
-        [0, 1, 127, 128, 300, 16384, 2**20, 2**25, 2**30],
-        list(range(0, 4000, 7)),
-    ]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(cases)], "i int, vals array<int>"
-    )
-    got = {
-        int(r["i"]): bytes(r["enc"]) if r["enc"] is not None else b""
-        for r in df.select(
-            "i", leb128_binary_col(F.col("vals")).alias("enc")
-        ).collect()
-    }
-    for i, vals in enumerate(cases):
-        want = vbyte_encode(np.asarray(vals, dtype=np.uint64))
-        assert got[i] == want, (i, vals, got[i].hex(), want.hex())
-
-
-def test_leb128_binary_col_property(spark):
-    """Property check (hypothesis): the JVM encoder matches the numpy
-    codec on arbitrary uint31 arrays — one Spark round-trip over a
-    batch of generated cases (examples generated up front so the Spark
-    job runs once, not per example)."""
-    import numpy as np
-    from hypothesis import given, settings, strategies as st
-    from pyspark.sql import functions as F
-
-    from frankensearch_spark.functions.vbyte import vbyte_encode
-    from frankensearch_spark.operators.build import leb128_binary_col
-
-    collected: list[list[int]] = []
-
-    @settings(max_examples=60, deadline=None)
-    @given(
-        st.lists(
-            st.integers(min_value=0, max_value=(1 << 31) - 1), max_size=40
-        )
-    )
-    def gather(vals):
-        collected.append(list(vals))
-
-    gather()
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(collected)], "i int, vals array<int>"
-    )
-    got = {
-        int(r["i"]): bytes(r["enc"]) if r["enc"] is not None else b""
-        for r in df.select(
-            "i", leb128_binary_col(F.col("vals")).alias("enc")
-        ).collect()
-    }
-    for i, vals in enumerate(collected):
-        want = vbyte_encode(np.asarray(vals, dtype=np.uint64))
-        assert got[i] == want, (i, vals, got[i].hex(), want.hex())

@@ -132,3 +132,88 @@ def test_upsert_refreshes_snippet_corpus(spark):
     assert len(hits) == 2
     for _ext, _score, snip in hits:
         assert snip is not None and "qqmarker" in snip.replace("<b>", "").replace("</b>", "")
+
+
+def test_result_cache_eviction_is_thread_safe(monkeypatch):
+    """Concurrent search()/search_batch() callers evicting from a full
+    FIFO result cache at once can pick the same oldest key; the second
+    eviction must not raise KeyError out of the search call."""
+    import sys
+    import threading
+
+    import frankensearch_spark.engine as engine_mod
+    from frankensearch_spark.operators import astexec, batchexec
+
+    monkeypatch.setattr(engine_mod, "QUERY_CACHE_MAX", 2)
+    monkeypatch.setattr(
+        astexec, "search_ast_collect", lambda idx, q, *a: [(1, 1.0)]
+    )
+    monkeypatch.setattr(
+        batchexec, "search_batch_collect",
+        lambda idx, qs, *a: [[(1, 1.0)] for _ in qs],
+    )
+    eng = FrankensearchSpark(object(), [])
+    errors: list = []
+
+    def worker(t):
+        try:
+            for i in range(3000):
+                if i % 2:
+                    eng.search_docids(f"q{t}-{i}")
+                else:
+                    eng.search_batch([f"b{t}-{i}", f"c{t}-{i}"])
+        except Exception as e:  # noqa: BLE001 — collected for the assert
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    assert len(eng._query_cache) <= 2
+
+
+def test_warm_lock_is_per_index():
+    """A slow warm of index A must not hold up warming an unrelated
+    index B (the preload jobs of a cold open take seconds)."""
+    import threading
+
+    release = threading.Event()
+    started = threading.Event()
+
+    class FakeIndex:
+        def __init__(self, block):
+            self.block = block
+            self._term_df_cache = None
+
+        def stats(self):
+            return (0, 0)
+
+        def preload_termstats(self):
+            if self.block:
+                started.set()
+                release.wait(30)
+            self._term_df_cache = {}
+            return 0
+
+    eng_a = FrankensearchSpark(FakeIndex(True), [])
+    eng_b = FrankensearchSpark(FakeIndex(False), [])
+    ta = threading.Thread(target=eng_a.warm)
+    ta.start()
+    try:
+        assert started.wait(10)
+        tb = threading.Thread(target=eng_b.warm)
+        tb.start()
+        tb.join(5)
+        assert not tb.is_alive(), "warming B waited behind A's warm"
+        assert eng_b.index._term_df_cache == {}
+    finally:
+        release.set()
+        ta.join()
+    assert eng_a.index._term_df_cache == {}

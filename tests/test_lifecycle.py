@@ -114,9 +114,8 @@ def test_upsert_replaces_by_key(spark, built):
 
 
 def test_upsert_mixed_position_formats_serves_phrases(spark, built):
-    """An SQL-tokenizer delta upserted into a fused-built index unions
-    cleanly: since round 4 the SQL path emits the SAME per-posting vbyte
-    binary wire format at source (build.leb128_binary_col — no
+    """A delta built by the default analyzer upserts into a built index
+    in the one positions wire format (per-posting vbyte binary, no
     normalization shim), and the upserted doc serves an exact phrase
     query."""
     new_rows = [
@@ -127,7 +126,7 @@ def test_upsert_mixed_position_formats_serves_phrases(spark, built):
         new_rows,
         "repo string, path string, commit string, lang string, content string",
     )
-    up = upsert_documents(built, new_corpus, CORPUS_KEY, tokenizer="sql")
+    up = upsert_documents(built, new_corpus, CORPUS_KEY)
     assert dict(up.positions.dtypes)["positions"] == "binary"
     from frankensearch_spark.operators.astexec import search_ast_bits
 

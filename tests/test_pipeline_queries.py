@@ -184,3 +184,23 @@ def test_dedup_keep_list_tie_breaks_to_min_docid(spark, tmp_path):
     assert keep.to_dict("records") == [
         {"cluster_id": 3, "keep_docid": 3, "keep_chars": 50, "n_dropped": 1}
     ]
+
+
+def test_lsh_bucket_skew_pair_count_exact_above_2_pow_53(spark):
+    """n_candidate_pairs is integer s*(s-1) DIV 2: for a bucket of
+    200,000,003 members the count (≈2e16, odd) is above 2^53, where a
+    floating-point halving can only hold even values."""
+    from frankensearch_spark.driver_queries import bucket_size_histogram
+
+    s = 200_000_003
+    want = s * (s - 1) // 2
+    assert want > 2**53 and want % 2 == 1
+    sizes = spark.createDataFrame(
+        [(0, "b0", s), (1, "b1", s), (0, "b2", 3)],
+        "band int, bucket string, bucket_size long",
+    )
+    got = {
+        r["bucket_size"]: (r["n_buckets"], r["n_candidate_pairs"])
+        for r in bucket_size_histogram(sizes).collect()
+    }
+    assert got == {s: (2, 2 * want), 3: (1, 3)}

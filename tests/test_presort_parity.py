@@ -1,57 +1,66 @@
-"""Kernel-sort write path parity (operators/merge.build_blocks presort modes).
+"""Block writer parity (operators/merge.build_blocks, build_blocks_grouped).
 
-The default durable-write path ("kernel") range-partitions raw postings on
-ONE composed 8-byte key and numpy-lexsorts inside the blockify kernel; the
-"jvm" path is the original sortWithinPartitions shape.  Block BOUNDARIES may
-differ (range splits land elsewhere), but the decoded posting streams per
-(term, bucket) — docids, tfs, fieldnorm ids, positions — and the tpart
-assignment must be identical.
+The non-grouped writer range-partitions raw postings on ONE composed 8-byte
+key and numpy-lexsorts inside the blockify kernel.  Decoding its blocks per
+(term, bucket) must give back the source postings — docids, tfs, fieldnorm
+ids, positions — and every row's tpart must be the term's stable partition.
 """
 
 import numpy as np
 import pytest
 
 from frankensearch_spark.operators.build import build_index
-from frankensearch_spark.operators.merge import build_blocks, decode_blocks_pdf
+from frankensearch_spark.operators.merge import (
+    DEFAULT_BUCKET_SHIFT,
+    build_blocks,
+    decode_blocks_pdf,
+    term_partition,
+)
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
 
 @pytest.fixture(scope="module")
 def built(spark):
     corpus = synthetic_corpus_df(spark, 3000)
-    b = build_index(corpus, CORPUS_KEY, docid_mode="lease", tokenizer="arrow")
+    b = build_index(corpus, CORPUS_KEY, docid_mode="lease")
     b.postings.count()
     return b
 
 
-def _decoded(b, presort):
-    blocks = build_blocks(
-        b.postings_full, positions=b.positions, presort=presort
-    )
-    pdf = blocks.toPandas()
-    out = {}
+def test_kernel_presort_blocks_decode_to_postings(built):
+    from frankensearch_spark.contract import fieldnorm_to_id
+    from frankensearch_spark.functions.vbyte import vbyte_decode
+
+    pdf = build_blocks(built.postings_full, positions=built.positions).toPandas()
+    got = {}
     for (t, bk), grp in pdf.groupby(["term", "bucket"], sort=True):
-        grp = grp.sort_values("first_doc")
         docs, tfs, fids, _rows, pos = decode_blocks_pdf(
-            grp, with_positions=True
+            grp.sort_values("first_doc"), with_positions=True
         )
-        out[(t, bk)] = (
+        got[(t, bk)] = (
             docs.tolist(),
             tfs.tolist(),
             fids.tolist(),
-            [None if p is None else list(p) for p in pos],
+            [list(p) for p in pos],
         )
-    tparts = dict(zip(pdf.term, pdf.tpart))
-    return out, tparts
 
-
-def test_kernel_presort_matches_jvm_sort(built):
-    a, ta = _decoded(built, "kernel")
-    b, tb = _decoded(built, "jvm")
-    assert set(a) == set(b)
-    mismatches = [k for k in a if a[k] != b[k]]
+    src = built.postings_full.toPandas().sort_values(["term", "docid"])
+    src["bucket"] = src["docid"].to_numpy() >> DEFAULT_BUCKET_SHIFT
+    want = {}
+    for (t, bk), grp in src.groupby(["term", "bucket"], sort=True):
+        want[(t, bk)] = (
+            grp["docid"].tolist(),
+            grp["tf"].tolist(),
+            fieldnorm_to_id(grp["doclen"].to_numpy(np.int64)).tolist(),
+            [vbyte_decode(bytes(p)).tolist() for p in grp["positions"]],
+        )
+    assert set(got) == set(want)
+    mismatches = [k for k in want if got[k] != want[k]]
     assert mismatches == []
-    assert ta == tb  # crc32 tpart computed in-kernel == JVM F.crc32
+    # crc32 tpart computed in-kernel == the query planner's term_partition
+    assert all(
+        tp == term_partition(t) for t, tp in zip(pdf.term, pdf.tpart)
+    )
 
 
 def test_grouped_layout_matches_rows_layout(spark, built):
@@ -63,10 +72,7 @@ def test_grouped_layout_matches_rows_layout(spark, built):
     per-key postings (tf, fieldnorm, positions, doclen), decoded blocks
     and termstats must be identical."""
     corpus = synthetic_corpus_df(spark, 3000)
-    bg = build_index(
-        corpus, CORPUS_KEY, docid_mode="lease", tokenizer="arrow",
-        layout="grouped",
-    )
+    bg = build_index(corpus, CORPUS_KEY, docid_mode="lease", layout="grouped")
     from frankensearch_spark.operators.merge import build_blocks_grouped
 
     key_of_r = {
@@ -116,7 +122,7 @@ def test_grouped_layout_matches_rows_layout(spark, built):
         return sorted(rows)
 
     a_blocks = build_blocks(
-        built.postings_full, positions=built.positions, presort="kernel"
+        built.postings_full, positions=built.positions
     ).toPandas()
     g_blocks = build_blocks_grouped(bg.postings_grouped).toPandas()
     assert decoded_by_key(a_blocks, key_of_r) == decoded_by_key(
@@ -168,15 +174,14 @@ def test_fused_lease_contract(spark):
 
 
 def test_grouped_auto_vector_match_rows_on_mixed_corpus(spark):
-    """Grouped layout under the auto and vector tokenizers: the regroup
-    adapter must preserve each kernel's posting table bit-for-bit, with
-    the auto router's two sub-batches (ascii + contract over the SAME
-    docid span) regrouped together.  Mixed ASCII/Unicode corpus so both
-    routes actually run."""
+    """Grouped layout under the auto analyzer: the regroup adapter must
+    preserve the posting table bit-for-bit, with the router's two
+    sub-batches (RE2 vector + contract over the SAME docid span)
+    regrouped together.  Mixed ASCII/Unicode corpus so both routes
+    actually run."""
     from frankensearch_spark.operators.build import (
         assign_docids,
         build_postings_fused_auto,
-        build_postings_fused_vec,
         build_postings_grouped,
         explode_grouped_postings,
     )
@@ -207,20 +212,13 @@ def test_grouped_auto_vector_match_rows_on_mixed_corpus(spark):
         )
 
     rows_auto = canon(build_postings_fused_auto(corpus))
-    grp_auto = canon(explode_grouped_postings(
-        build_postings_grouped(spans, tokenizer="auto")
-    ))
+    grp_auto = canon(explode_grouped_postings(build_postings_grouped(spans)))
     assert grp_auto == rows_auto
-    rows_vec = canon(build_postings_fused_vec(corpus))
-    grp_vec = canon(explode_grouped_postings(
-        build_postings_grouped(spans, tokenizer="vector")
-    ))
-    assert grp_vec == rows_vec
     corpus.unpersist()
 
 
 def test_kernel_presort_no_positions(built):
-    blocks = build_blocks(built.postings, presort="kernel").toPandas()
+    blocks = build_blocks(built.postings).toPandas()
     assert blocks.pos_bytes.isna().all()
     # decoded tf totals must equal the postings tf sum
     total = 0

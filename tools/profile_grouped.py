@@ -56,6 +56,7 @@ def main() -> None:
     from frankensearch_spark.operators.merge import (
         DEFAULT_BUCKET_SHIFT,
         DEFAULT_TERM_PARTITIONS,
+        _range_partition,
         build_blocks_grouped,
     )
     from frankensearch_spark.sources.corpus import CORPUS_KEY
@@ -88,36 +89,16 @@ def main() -> None:
         "p_spans",
         lambda: spans.write.format("noop").mode("overwrite").save(),
     )
-    grouped = build_postings_grouped(spans, tokenizer="arrow").persist()
+    grouped = build_postings_grouped(spans).persist()
     timed("p_tokenize", lambda: grouped.count())
     postings = explode_grouped_postings(grouped).drop("positions")
     docmeta = build_docmeta(wd, CORPUS_KEY, postings).persist()
     termstats = build_termstats(postings)
     timed("p_stats", lambda: (docmeta.count(), termstats.count()))
 
-    tp_bits = max((DEFAULT_TERM_PARTITIONS - 1).bit_length(), 1)
-    th_bits = 63 - tp_bits - 20
-    rkey = (
-        F.shiftleft(
-            (F.crc32(F.col("term").cast("binary")) % DEFAULT_TERM_PARTITIONS),
-            63 - tp_bits,
-        )
-        .bitwiseOR(
-            F.shiftleft(
-                F.shiftrightunsigned(F.xxhash64(F.col("term")), 64 - th_bits),
-                20,
-            )
-        )
-        .bitwiseOR(
-            F.shiftright(F.element_at(F.col("docids"), 1), DEFAULT_BUCKET_SHIFT)
-            .bitwiseAND(F.lit(0xFFFFF))
-        )
-    )
-    n_shuffle = max(args.cpus * 4, 16)
-    arranged = (
-        grouped.withColumn("rkey", rkey)
-        .repartitionByRange(n_shuffle, "rkey")
-        .drop("rkey")
+    arranged = _range_partition(
+        grouped, F.element_at(F.col("docids"), 1), DEFAULT_BUCKET_SHIFT,
+        DEFAULT_TERM_PARTITIONS, max(args.cpus * 4, 16),
     )
     timed(
         "p_exch",

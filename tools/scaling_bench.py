@@ -78,8 +78,8 @@ def ensure_corpus(n_docs: int, path: str, clustered: bool = False) -> str:
     return path
 
 
-def _level_cmd(ncpu: int, corpus: str, zpath: str, tokenizer: str,
-               layout: str, cores: str | None, out_suffix: str = "") -> list:
+def _level_cmd(ncpu: int, corpus: str, zpath: str, layout: str,
+               cores: str | None, out_suffix: str = "") -> list:
     out = f"/tmp/fsx_scaling_idx_{ncpu}{out_suffix}"
     cmd = [
         "spark-submit",
@@ -92,8 +92,7 @@ def _level_cmd(ncpu: int, corpus: str, zpath: str, tokenizer: str,
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
         os.path.join(REPO, "tools", "submit_build.py"),
-        "--corpus", corpus, "--out", out, "--tokenizer", tokenizer,
-        "--layout", layout,
+        "--corpus", corpus, "--out", out, "--layout", layout,
     ]
     if cores is not None:
         # cluster-faithful binding: "N executors" means N cores TOTAL.
@@ -113,10 +112,10 @@ def _parse_json_line(stdout: str, label: str, stderr: str = "") -> dict:
     raise RuntimeError(f"no JSON from {label}:\n{stderr[-2000:]}")
 
 
-def run_level(ncpu: int, corpus: str, zpath: str, tokenizer: str,
-              layout: str = "rows", pin: bool = False) -> dict:
+def run_level(ncpu: int, corpus: str, zpath: str, layout: str = "rows",
+              pin: bool = False) -> dict:
     cores = (f"0-{ncpu - 1}" if ncpu > 1 else "0") if pin else None
-    cmd = _level_cmd(ncpu, corpus, zpath, tokenizer, layout, cores)
+    cmd = _level_cmd(ncpu, corpus, zpath, layout, cores)
     proc = subprocess.run(
         cmd, capture_output=True, text=True, timeout=3600, check=False
     )
@@ -126,7 +125,7 @@ def run_level(ncpu: int, corpus: str, zpath: str, tokenizer: str,
 
 
 def run_pair_coscheduled(a: int, b: int, corpus: str, zpath: str,
-                         tokenizer: str, layout: str) -> tuple[dict, dict]:
+                         layout: str) -> tuple[dict, dict]:
     """Run BOTH levels of an N→4N pair SIMULTANEOUSLY on disjoint pinned
     core sets (level a on cores 0..a-1, level b on cores a..a+b-1).
 
@@ -140,9 +139,9 @@ def run_pair_coscheduled(a: int, b: int, corpus: str, zpath: str,
     run; any residual contention slows the small level MORE (it holds
     fewer bandwidth lanes), which biases the ratio DOWNWARD — the
     conservative direction for a ≥0.8 criterion."""
-    cmd_a = _level_cmd(a, corpus, zpath, tokenizer, layout,
+    cmd_a = _level_cmd(a, corpus, zpath, layout,
                        f"0-{a - 1}" if a > 1 else "0", out_suffix="_co")
-    cmd_b = _level_cmd(b, corpus, zpath, tokenizer, layout,
+    cmd_b = _level_cmd(b, corpus, zpath, layout,
                        f"{a}-{a + b - 1}", out_suffix="_co")
     # Both processes write to TEMP FILES, not PIPEs: a sequential
     # communicate() drain leaves the other process's ~64KB pipe buffers
@@ -180,7 +179,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=2_000_000)
     ap.add_argument("--pairs", nargs="*", default=["2,8", "8,32"])
-    ap.add_argument("--tokenizer", default="arrow")
     ap.add_argument("--layout", default="rows", choices=["rows", "grouped"])
     ap.add_argument("--corpus", default=None)
     ap.add_argument("--pin", action="store_true",
@@ -200,7 +198,9 @@ def main() -> None:
     zpath = make_zip(os.path.join(REPO, "dist"))
 
     results: dict = {}
-    report = {"docs": args.docs, "tokenizer": args.tokenizer,
+    # every build runs the default analyzer; older records measured the
+    # contract analyzer ("arrow") and must not merge with these
+    report = {"docs": args.docs, "tokenizer": "auto",
               "layout": args.layout
               + ("+cosched" if args.coschedule
                  else "+pinned" if args.pin else ""),
@@ -210,7 +210,7 @@ def main() -> None:
         for p in args.pairs:
             a, b = (int(x) for x in p.split(","))
             ra, rb = run_pair_coscheduled(
-                a, b, corpus, zpath, args.tokenizer, args.layout
+                a, b, corpus, zpath, args.layout
             )
             # keep per-pair level records distinct: the same level count
             # co-scheduled against a different partner is a different
@@ -232,8 +232,8 @@ def main() -> None:
     else:
         levels = sorted({int(x) for p in args.pairs for x in p.split(",")})
         for n in levels:
-            results[n] = run_level(n, corpus, zpath, args.tokenizer,
-                                   args.layout, pin=args.pin)
+            results[n] = run_level(n, corpus, zpath, args.layout,
+                                   pin=args.pin)
             if args.pin:
                 results[n]["pinned_cores"] = n
             print(f"local[{n}]: {json.dumps(results[n])}", flush=True)

@@ -5,7 +5,7 @@ Usage (what tools/scaling_bench.py invokes):
     spark-submit --master local[N] \
         --py-files dist/frankensearch_spark.zip \
         tools/submit_build.py --corpus /path/corpus.parquet \
-        --out /path/index --tokenizer auto [--no-warm]
+        --out /path/index [--layout grouped] [--no-warm]
 
 Prints ONE JSON line: {"cpus": N, "docs": D, "build_secs": S,
 "docs_per_sec": R, "write_secs": W, ...}.
@@ -30,14 +30,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--corpus", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--tokenizer", default="auto", choices=["auto", "arrow", "sql", "vector"])
     ap.add_argument("--codec", default="vint",
                     choices=["vint", "for", "bitmap"],
                     help="posting block codec for the durable write")
     ap.add_argument("--layout", default="rows", choices=["rows", "grouped"],
                     help="postings layout: 'grouped' = one row per "
                          "(batch, term) with array payloads (the durable "
-                         "fast path; requires tokenizer=arrow)")
+                         "fast path)")
     ap.add_argument("--no-warm", action="store_true")
     ap.add_argument("--skip-write", action="store_true",
                     help="stop after in-memory index materialization")
@@ -81,8 +80,7 @@ def main() -> None:
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         b = build_index(
-            corpus, CORPUS_KEY, docid_mode="lease", tokenizer=args.tokenizer,
-            layout=args.layout,
+            corpus, CORPUS_KEY, docid_mode="lease", layout=args.layout,
         )
         # materialize the index the way its layout serves it: the grouped
         # layout's cache IS the grouped frame (every consumer explodes it
@@ -131,7 +129,6 @@ def main() -> None:
                 "cpus": cpus,
                 "docs": n_docs,
                 "total_tokens": total_tokens,
-                "tokenizer": args.tokenizer,
                 "layout": args.layout,
                 "build_cold_secs": round(cold_secs, 2),
                 "build_warm_runs": [round(s, 2) for s in warm],
