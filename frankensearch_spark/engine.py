@@ -186,10 +186,12 @@ class FrankensearchSpark:
     def warm(self) -> "FrankensearchSpark":
         """Long-lived serving mode: preload snapshot stats + the bounded
         (term -> df) dictionary so per-query planning runs ZERO extra
-        Spark jobs (one job per query remains: the scan+pivot+top-k).
-        Loaded serving indexes additionally preload bucket coverage for
-        the WAND routing gates.  Idempotent per underlying index (loaded
-        serving engines also self-warm on first search — see
+        Spark jobs.  Loaded serving indexes additionally preload bucket
+        coverage for the WAND routing gates and the bounded docid ->
+        external id map, so a bounded point :meth:`search` is ONE Spark
+        job (the candidate-block collect of the driver-local lane) and
+        id materialization runs none.  Idempotent per underlying index
+        (loaded serving engines also self-warm on first search — see
         :meth:`_ensure_warm` — so an explicit warm() after a search
         costs nothing); a refresh is never needed because mutations
         return a NEW engine over a new snapshot."""
@@ -216,7 +218,21 @@ class FrankensearchSpark:
                     and getattr(sub, "_bucket_cov", None) is None
                 ):
                     sub.preload_bucket_coverage()
+            if (
+                self._is_serving()
+                and self.key_cols
+                and self._preloaded_ids() is None
+            ):
+                self.index.preload_idmap(self.key_cols)
         return self
+
+    def _preloaded_ids(self):
+        """The index's preloaded id map, if it was built for this
+        engine's key columns."""
+        idm = getattr(self.index, "_idmap", None)
+        if idm is not None and idm.key_cols == tuple(self.key_cols):
+            return idm
+        return None
 
     def _ensure_warm(self) -> None:
         """Self-warm a LOADED serving engine on its first search (the
@@ -311,7 +327,13 @@ class FrankensearchSpark:
 
     def search(self, query: str, limit: int = 10, offset: int = 0):
         """[(external_id, np.float32)] — docids materialized through the
-        IDMAP analogue (E12), external id = key cols joined by '/'."""
+        IDMAP analogue (E12), external id = key cols joined by '/'.
+
+        A warmed loaded engine reads the ids from the id map preloaded
+        by :meth:`warm`, so ``search`` runs no Spark job beyond
+        :meth:`search_docids`; docids past the map's row bound, and
+        in-session engines, resolve through one filtered docmeta
+        collect."""
         hits = self.search_docids(query, limit, offset)
         if not hits:
             return []
@@ -320,14 +342,22 @@ class FrankensearchSpark:
             # the docid IS the external id (joining zero columns would
             # label every hit with the empty string)
             return [(str(int(d)), np.float32(s)) for d, s in hits]
-        ids = {int(d) for d, _ in hits}
-        rows = self.index.docmeta.filter(F.col("docid").isin(list(ids))).select(
-            "docid", *self.key_cols
-        ).collect()
-        ext = {
-            int(r["docid"]): "/".join(str(r[c]) for c in self.key_cols)
-            for r in rows
+        ids = [int(d) for d, _ in hits]
+        idm = self._preloaded_ids()
+        ext = {} if idm is None else {
+            d: idm.ext[d] for d in ids if d in idm.ext
         }
+        missing = [d for d in ids if d not in ext]
+        if missing and (idm is None or not idm.complete):
+            from frankensearch_spark.operators.wand import external_id
+
+            rows = self.index.docmeta.filter(
+                F.col("docid").isin(missing)
+            ).select("docid", *self.key_cols).collect()
+            ext.update(
+                (int(r["docid"]), external_id(r, self.key_cols))
+                for r in rows
+            )
         return [(ext.get(int(d), str(d)), np.float32(s)) for d, s in hits]
 
     def search_with_snippets(self, query: str, limit: int = 10,

@@ -332,15 +332,17 @@ def _bucket_lane_split(fidx, specs):
     return bucket, pivot
 
 
-def _bucket_lane_scored(
+def _bucket_lane_kernel(
     fidx, primary, specs, schema: ParserSchema, k: int, doc_count: int,
-    tombstones,
-) -> DataFrame | None:
-    """Shared bucket-kernel lane over the serving index: one exchange of
-    still-compressed candidate blocks to bucket groups, one decode per
-    block, dense span-local FieldViews, every query's AST through
-    ``kernel.eval_query`` with its support mask, per-bucket local top-k
-    per query.
+):
+    """The bucket lane's inputs, built without any plan over them:
+    ``(cand, score_bucket, volume)`` — the union of the lane's candidate
+    block rows, the per-bucket kernel (decode each block once, dense
+    span-local FieldViews, every query's AST through
+    ``kernel.eval_query`` with its support mask, local top-k per query),
+    and the postings ``cand`` carries (Σ df over every queried field ×
+    union term, MustNot and phrase terms included).  None when the lane
+    has no terms or fields.
 
     Bit parity with the single-query serving path is structural: the
     decoded (tf, fieldnorm_id, positions) cells are the same bytes the
@@ -527,6 +529,25 @@ def _bucket_lane_scored(
             }
         )
 
+    volume = sum(
+        field_df[f].get(t, 0) for f in qfields for t in terms
+    )
+    return cand, score_bucket, volume
+
+
+def _bucket_lane_scored(
+    fidx, primary, specs, schema: ParserSchema, k: int, doc_count: int,
+    tombstones,
+) -> DataFrame | None:
+    """Shared bucket-kernel lane over the serving index: one exchange of
+    still-compressed candidate blocks to bucket groups, each through the
+    lane's per-bucket kernel (:func:`_bucket_lane_kernel`); tombstones
+    cogroup by bucket."""
+    lane = _bucket_lane_kernel(fidx, primary, specs, schema, k, doc_count)
+    if lane is None:
+        return None
+    cand, score_bucket, _volume = lane
+    shift = primary.bucket_shift
     out_schema = "qid int, docid long, score float"
     if tombstones is None:
         def score_grouped(pdf):
@@ -547,6 +568,37 @@ def _bucket_lane_scored(
         cand.groupBy("bucket")
         .cogroup(tb.groupBy("bucket"))
         .applyInPandas(score_cogrouped, out_schema)
+    )
+
+
+def bucket_lane_local(index, query, k: int = 10,
+                      schema: ParserSchema = ENGINE_SCHEMA):
+    """Driver-local twin of the bucket lane for ONE query — the point-
+    search route for phrases, nested booleans and split identifiers.
+    The same per-bucket kernel as the batch lane runs in-process through
+    :func:`wand.local_lane_topk` (one collect, no exchange, no
+    Python-worker stage).  Returns [(docid, np.float32)] under the
+    pinned total order, or None when the query is not bucket-lane
+    shaped or the local-lane gate declines (volume over the cap,
+    tombstones, every slot busy) — the caller then runs the batch
+    executor's distributed plan."""
+    from frankensearch_spark.operators.wand import local_lane_topk
+
+    fidx, primary, specs = _prepare(index, [query], schema)
+    if not specs:
+        return []
+    bucket, _pivot = _bucket_lane_split(fidx, specs)
+    if not bucket:
+        return None
+    doc_count, _tt = primary.stats()
+    if doc_count == 0:
+        return []
+    lane = _bucket_lane_kernel(fidx, primary, bucket, schema, k, doc_count)
+    if lane is None:
+        return []
+    cand, score_bucket, volume = lane
+    return local_lane_topk(
+        cand, score_bucket, k, volume, primary.tombstones
     )
 
 

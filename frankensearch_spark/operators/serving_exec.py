@@ -721,17 +721,18 @@ def serving_search_bits(index: ServingIndex, query, k: int = 10,
     """Top-k bits over the durable index.  Prunable flat/boolean shapes
     take the block-max WAND path (rank-identical by the conservative-
     bound theorem, and cheaper: only buckets that can beat θ decode);
-    everything else — nested booleans, phrases, mixed shapes — executes
-    through the batch bucket lane as a batch of ONE (round 4): the
-    query's candidate blocks cross one docid-colocating exchange still
-    compressed and decode exactly once, instead of the old
-    decode→explode→pivot chain (second exchange of decoded posting
-    rows + a per-term pivot).  Measured at 2M docs warm: nested boolean
-    7.7 → 1.6 s, mega-phrase 3.2 → 1.9 s, bit-identical (the batch
-    path's parity with single-query execution is pinned by
-    test_batchexec and the random-grammar fuzz).  All/metadata shapes
-    fall back to the decode-and-score pivot inside the batch executor
-    itself."""
+    everything else — nested booleans, phrases, split identifiers,
+    mixed shapes — runs the batch executor's bucket-lane kernel.  Under
+    the local-lane cap that kernel runs on the driver over ONE collect
+    of the candidate blocks (batchexec.bucket_lane_local: one Spark
+    job); over the cap, with tombstones, or with every lane slot busy
+    the query runs as a batch of ONE (round 4): its candidate blocks
+    cross one docid-colocating exchange still compressed and decode
+    exactly once.  Measured at 2M docs warm: nested boolean 7.7 → 1.6
+    s, mega-phrase 3.2 → 1.9 s against the old decode→explode→pivot
+    chain, bit-identical (parity pinned by test_batchexec and the
+    random-grammar fuzz).  All/metadata shapes fall back to the
+    decode-and-score pivot inside the batch executor itself."""
     ast = parse_lenient(query, schema).query if isinstance(query, str) else query
     from frankensearch_spark.operators.astexec import expand_globs
 
@@ -748,10 +749,13 @@ def serving_search_bits(index: ServingIndex, query, k: int = 10,
                                       term_fields=term_fields)
             ]
         from frankensearch_spark.operators.batchexec import (
+            bucket_lane_local,
             search_batch_collect,
         )
 
-        hits = search_batch_collect(index, [expanded], k, schema)[0]
+        hits = bucket_lane_local(index, expanded, k, schema)
+        if hits is None:
+            hits = search_batch_collect(index, [expanded], k, schema)[0]
         return [
             (int(d), int(np.float32(s).view(np.uint32))) for d, s in hits
         ]

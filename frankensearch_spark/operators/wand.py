@@ -61,6 +61,22 @@ from frankensearch_spark.operators.merge import (
 from frankensearch_spark.operators.query import QuerySpec
 
 
+def external_id(row, key_cols) -> str:
+    """A document's external id: its key columns joined by '/'."""
+    return "/".join(str(row[c]) for c in key_cols)
+
+
+@dataclass(frozen=True)
+class IdMap:
+    """Preloaded docid -> external id map of one serving index.
+    ``complete`` is False when the preload hit its row bound: a docid
+    the map lacks may then still exist in docmeta."""
+
+    key_cols: tuple[str, ...]
+    ext: dict[int, str]
+    complete: bool
+
+
 @dataclass
 class ServingIndex:
     """Compressed, query-ready index: block table + stats + idmap."""
@@ -98,6 +114,9 @@ class ServingIndex:
     _bucket_cov_min_nb: int | None = None
     _total_buckets: int | None = None
     _phrase_wl_cache: dict | None = None  # rare-slot docid whitelists (FIFO)
+    # preload_idmap() docid -> external id (Quiver's idmap section) — a
+    # declared field so tombstone deletes (dataclasses.replace) keep it
+    _idmap: IdMap | None = None
 
     def stats(self) -> tuple[int, int]:
         if self._cached_stats is None:
@@ -214,6 +233,29 @@ class ServingIndex:
         )
         return len(self._bucket_cov)
 
+    def preload_idmap(self, key_cols: list[str],
+                      max_rows: int = 2_000_000) -> int:
+        """docid -> external id collected once per process, so
+        ``engine.search`` resolves hits without a Spark job.  BOUNDED
+        like the other preloads (the lowest ``max_rows`` docids — a
+        driver OOM guard, not a ranking choice): past the bound only
+        the docids the map lacks fall back to a filtered collect."""
+        plan = self.docmeta.select("docid", *key_cols)
+        # doc_count IS the docmeta row count (build_fieldstats).  Only
+        # past the bound does the collect need a top-k: Spark's
+        # TakeOrderedAndProject sizes its per-task buffers by the limit
+        # (2M rows ≈ 100 MB of JVM heap on a 5,000-doc index)
+        complete = self.stats()[0] < max_rows
+        if not complete:
+            plan = plan.orderBy("docid").limit(max_rows)
+        rows = plan.collect()
+        self._idmap = IdMap(
+            tuple(key_cols),
+            {int(r["docid"]): external_id(r, key_cols) for r in rows},
+            complete,
+        )
+        return len(rows)
+
     def df_of_terms(self, terms: list[str]) -> dict[str, int]:
         if not terms:
             return {}
@@ -283,6 +325,13 @@ class ServingMultiIndex:
         return sum(
             f.preload_bucket_coverage() for f in self.fields.values()
         )
+
+    @property
+    def _idmap(self) -> IdMap | None:
+        return self.primary._idmap
+
+    def preload_idmap(self, key_cols: list[str]) -> int:
+        return self.primary.preload_idmap(key_cols)
 
 
 def serving_from_built(built, bucket_shift: int = DEFAULT_BUCKET_SHIFT,
@@ -786,7 +835,10 @@ def _single_term_stream_plan(cand: DataFrame, weight, tf_cache,
     (field, term) clause exists, no MustNot, and no tombstones: then a
     doc's score is exactly its single posting's ``w·tf/(tf+norm)``
     (the kernel's one-clause reduction) and no accumulation across
-    blocks can occur."""
+    blocks can occur.  Point queries reach it only for terms over the
+    local-lane cap or when the lane is busy (bounded terms decode on
+    the driver, :func:`local_lane_topk`); ``serving_topk_plan`` uses it
+    as its composable single-clause form."""
     w = np.float32(weight)
     tfc = tf_cache
 
@@ -1017,14 +1069,22 @@ class PruningReceipt:
 
 
 WAND_MIN_COST = 16_384  # argus.rs:31 — prune only past this posting volume
-# Driver-local serving lane: when the query's exact posting volume
-# (Σ df over scored (field, term) pairs — known from preloaded stats)
-# fits under this cap, the candidate block rows collect in ONE action
-# (≤ ~3 MB compressed) and the same bucket kernel runs in-process —
-# measured 2M i.i.d.: the bucket exchange + Python-worker stage cost
-# more wall-clock than the whole kernel for such shapes.  Above the cap
-# the distributed path runs unchanged; driver memory is bounded by the
-# cap, never the corpus.
+# Driver-local serving lane (:func:`local_lane_topk`): when a point
+# query's exact posting volume — Σ df over every (field, term) pair its
+# candidate scan carries, MustNot and phrase terms included, known from
+# preloaded stats — fits under this cap, the candidate block rows
+# collect in ONE action and the query's own per-bucket kernel runs
+# in-process.  Its three callers: wand_topk's bucket kernel (run_topk),
+# wand_topk's single-term branch, and the bucket-lane twin
+# (batchexec.bucket_lane_local) that serves phrases, nested booleans
+# and split identifiers.  Byte bound at the cap, from the 5,000-doc
+# clustered benchmark corpus: doc/tf/norm bytes take 3.3 B per posting
+# (≈3.3 MB), and phrase terms add their pos_bytes, 1.2 B per position
+# or 2.0 B per posting — ≤ ~5.3 MB when every posting carries
+# positions.  Measured 2M i.i.d.: the bucket exchange + Python-worker
+# stage cost more wall-clock than the whole kernel for such shapes.
+# Above the cap the distributed paths run unchanged; driver memory is
+# bounded by the cap, never the corpus.
 LOCAL_LANE_MAX_POSTINGS = 1_000_000
 # The local lane is a LATENCY optimization for an idle server: its
 # driver-side pandas groupby/concat holds the GIL, so N concurrent
@@ -1036,6 +1096,50 @@ LOCAL_LANE_MAX_POSTINGS = 1_000_000
 # bit-identical (pinned), so the route is purely a performance choice.
 LOCAL_LANE_MAX_INFLIGHT = 2
 _local_lane_slots = threading.BoundedSemaphore(LOCAL_LANE_MAX_INFLIGHT)
+
+
+def local_lane_topk(blocks_df: DataFrame, score_bucket, want: int,
+                    volume: int, tombstones) -> list | None:
+    """Driver-local top-``want`` over candidate block rows, or None when
+    the lane declines: tombstones present, ``volume`` (postings the scan
+    carries) over ``LOCAL_LANE_MAX_POSTINGS``, or every
+    ``_local_lane_slots`` slot held — the caller then runs its
+    distributed plan.
+
+    ONE collect of the still-compressed candidate block rows, grouped by
+    bucket, each group through ``score_bucket`` (a per-bucket kernel
+    returning ``docid``/``score`` rows, the same closure the distributed
+    plan hands to applyInPandas) — no bucket exchange, no Python-worker
+    stage.  This is the reference's in-process serving shape (argus.rs
+    runs the whole cursor tree in one thread) and the same driver-local
+    twin discipline as hybrid fusion.  Bit parity is structural: the
+    per-bucket kernel is byte-for-byte the distributed one, and the
+    final merge in ``score_total_order_key`` order equals
+    ``orderBy(desc score, asc docid).limit(want)``."""
+    if (
+        tombstones is not None
+        or volume > LOCAL_LANE_MAX_POSTINGS
+        or not _local_lane_slots.acquire(blocking=False)
+    ):
+        return None
+    try:
+        pdf_all = blocks_df.toPandas()
+        outs = [
+            out
+            for _b, g in pdf_all.groupby("bucket", sort=False)
+            if len(out := score_bucket(g))
+        ]
+        if not outs:
+            return []
+        merged = pd.concat(outs, ignore_index=True)
+        sc = merged["score"].to_numpy(dtype=np.float32)
+        dc = merged["docid"].to_numpy(dtype=np.int64)
+        order = score_total_order_key(sc, dc)[:want]
+        return [(int(dc[i]), np.float32(sc[i])) for i in order]
+    finally:
+        _local_lane_slots.release()
+
+
 COVERAGE_GAP_MIN = 0.05  # prune only if ≥5% of buckets lack some clause term
 # Block-granular θ-pruning engages only when the estimated skippable
 # block fraction clears this: the θ ceremony costs ~2 extra jobs, and
@@ -1363,52 +1467,18 @@ def wand_topk(
     out_schema = "docid long, score float"
     tomb = index.tombstones
 
-    def run_topk(blocks_df, theta: float = -math.inf,
-                 non_essential: set | None = None) -> list[tuple[int, np.float32]]:
-        score_one, score_cog = _score_buckets_kernel(
+    def kernel(theta: float = -math.inf, non_essential: set | None = None):
+        return _score_buckets_kernel(
             spec, weights, tf_caches, want, shift, tf_order,
             theta=theta, avgdls=avgdls, non_essential=non_essential,
         )
-        if (
-            tomb is None
-            and collect_cost <= LOCAL_LANE_MAX_POSTINGS
-            and _local_lane_slots.acquire(blocking=False)
-        ):
-            # DRIVER-LOCAL lane for bounded posting volume (the exact
-            # sum of the clause AND MustNot terms' df — everything the
-            # candidate scan carries — known from preloaded stats):
-            # ONE collect of the still-compressed candidate block rows
-            # (≤ ~3 MB at the cap) + the same per-bucket kernel
-            # in-process — no bucket exchange, no Python-worker stage.
-            # This is the reference's in-process serving shape
-            # (argus.rs runs the whole cursor tree in one thread) and
-            # the same driver-local twin discipline as hybrid fusion
-            # (engine.py r4).  Bit parity is structural: score_one is
-            # byte-for-byte the distributed kernel, per bucket, and the
-            # final total-order merge equals orderBy(desc score, asc
-            # docid).limit(want).  Mega shapes (query_cost above the
-            # cap) keep the distributed path — at 100 TB the cap, not
-            # the corpus, bounds driver memory.  Concurrency past
-            # LOCAL_LANE_MAX_INFLIGHT spills to the distributed path
-            # below (the non-blocking slot acquire failed).
-            try:
-                pdf_all = blocks_df.toPandas()
-                if len(pdf_all) == 0:
-                    return []
-                outs = [
-                    out
-                    for _b, g in pdf_all.groupby("bucket", sort=False)
-                    if len(out := score_one(g))
-                ]
-                if not outs:
-                    return []
-                merged = pd.concat(outs, ignore_index=True)
-                sc = merged["score"].to_numpy(dtype=np.float32)
-                dc = merged["docid"].to_numpy(dtype=np.int64)
-                order = score_total_order_key(sc, dc)[:want]
-                return [(int(dc[i]), np.float32(sc[i])) for i in order]
-            finally:
-                _local_lane_slots.release()
+
+    def run_topk(blocks_df, theta: float = -math.inf,
+                 non_essential: set | None = None) -> list[tuple[int, np.float32]]:
+        score_one, score_cog = kernel(theta, non_essential)
+        local = local_lane_topk(blocks_df, score_one, want, collect_cost, tomb)
+        if local is not None:
+            return local
         if tomb is None:
             scored = blocks_df.groupBy("bucket").applyInPandas(
                 score_one, out_schema
@@ -1445,20 +1515,25 @@ def wand_topk(
             # a missing-from-corpus Must term would leave weights empty
             # and fail the len check; '+foo foo' multiplicity shapes fail
             # the clause_terms()==1 check)
-            # SHUFFLE-FREE single-term fast path: with one scored
-            # (field, term) clause every doc owns exactly one posting,
-            # so no cross-block accumulation exists — score each block
-            # where it lies (mapInPandas, no bucket exchange), keep a
-            # partition-local top-k, and let TakeOrderedAndProject
-            # merge.  This is the mega-term/short-keyword class the
-            # coverage gate routes exhaustive on i.i.d. corpora; the
-            # bucket groupBy there only paid for an accumulation that
-            # cannot happen.  Bit-exact: the kernel's single-clause
-            # score IS w·tf/(tf+norm) with no additions.
-            (fname, t), w = next(iter(weights.items()))
-            winners = _single_term_stream_topk(
-                cand, w, tf_caches[fname], shift, want
+            # A term under the local-lane cap decodes on the driver like
+            # every other bounded shape (one collect, no Python-worker
+            # stage).  Mega-terms over the cap, and queries spilled by a
+            # busy lane, take the SHUFFLE-FREE single-term stream: with
+            # one scored (field, term) clause every doc owns exactly one
+            # posting, so no cross-block accumulation exists — score
+            # each block where it lies (mapInPandas, no bucket
+            # exchange), keep a partition-local top-k, and let
+            # TakeOrderedAndProject merge.  Both are bit-exact: the
+            # kernel's single-clause score IS w·tf/(tf+norm) with no
+            # additions.
+            winners = local_lane_topk(
+                cand, kernel()[0], want, collect_cost, tomb
             )
+            if winners is None:
+                (fname, t), w = next(iter(weights.items()))
+                winners = _single_term_stream_topk(
+                    cand, w, tf_caches[fname], shift, want
+                )
         else:
             winners = run_topk(cand)
     else:

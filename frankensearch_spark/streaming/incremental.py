@@ -17,6 +17,7 @@ checkpoint + parquet atomic commit)."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -113,6 +114,19 @@ def index_microbatch(
     )
 
 
+def _has_offsets(spark: SparkSession, ckpt: str) -> bool:
+    """True when checkpoint ``ckpt`` holds committed offsets.  A URI
+    with a scheme (``file://``, ``hdfs://``, ``s3a://``) resolves
+    through the Hadoop FileSystem API, as Spark resolves the checkpoint
+    itself; a plain path is read locally."""
+    if not urlparse(ckpt).scheme:
+        offsets = os.path.join(ckpt, "offsets")
+        return os.path.isdir(offsets) and bool(os.listdir(offsets))
+    path = spark._jvm.org.apache.hadoop.fs.Path(ckpt.rstrip("/") + "/offsets")
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(path)) and len(fs.listStatus(path)) > 0
+
+
 def start_incremental_build(
     stream_df: DataFrame,
     out_dir: str,
@@ -130,9 +144,7 @@ def start_incremental_build(
     committed segments.  Resuming with the original checkpoint is
     always fine — its offsets make the batch ids line up."""
     ckpt = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    offsets = os.path.join(ckpt, "offsets")
-    fresh_ckpt = not (os.path.isdir(offsets) and os.listdir(offsets))
-    if fresh_ckpt:
+    if not _has_offsets(stream_df.sparkSession, ckpt):
         from frankensearch_spark.plans.tiers import list_segments
 
         try:

@@ -350,3 +350,111 @@ def test_batch_accepts_generator_queries(spark):
         assert _bits(hits) == _bits(
             search_batch_collect(built, [t], k=5)[0]
         ), t
+
+
+# point shapes served by the bucket lane's driver-local twin
+BUCKET_POINT_SHAPES = [
+    '"term00001 term00002"',         # root phrase
+    '"generated record" fn',         # phrase mixed with a plain term
+    "(fn OR import) AND term00003",  # nested boolean
+    "snake_case_identifier",         # split identifier -> phrase
+]
+
+
+def _lane_parity(index, texts, monkeypatch, schema=None):
+    """Each text through the local twin and through the forced-
+    distributed route (cap -1): bit-equal, and the twin really ran."""
+    import frankensearch_spark.operators.wand as W
+    from frankensearch_spark.operators.batchexec import bucket_lane_local
+    from frankensearch_spark.operators.serving_exec import (
+        serving_search_bits,
+    )
+    from frankensearch_spark.query_ast import ENGINE_SCHEMA
+
+    schema = schema or ENGINE_SCHEMA
+    for text in texts:
+        local = bucket_lane_local(index, text, 25, schema)
+        assert local, text
+        assert serving_search_bits(index, text, 25, schema) == _bits(local)
+        monkeypatch.setattr(W, "LOCAL_LANE_MAX_POSTINGS", -1)
+        assert bucket_lane_local(index, text, 25, schema) is None
+        dist = serving_search_bits(index, text, 25, schema)
+        monkeypatch.setattr(W, "LOCAL_LANE_MAX_POSTINGS", 1_000_000)
+        assert _bits(local) == dist, text
+
+
+def test_bucket_lane_local_twin_matches_distributed(loaded, monkeypatch):
+    _lane_parity(loaded.index, BUCKET_POINT_SHAPES, monkeypatch)
+
+
+def test_bucket_lane_local_twin_multifield_phrase(spark, tmp_path,
+                                                  monkeypatch):
+    """A phrase over a loaded ServingMultiIndex (content + title^2)
+    takes the local twin and stays bit-equal to the distributed lane."""
+    from pyspark.sql import functions as F
+
+    from frankensearch_spark.operators.wand import ServingMultiIndex
+    from frankensearch_spark.query_ast import REFERENCE_SCHEMA
+
+    corpus = synthetic_corpus_df(spark, 80, partitions=2).withColumn(
+        "title", F.substring_index("content", " ", 4)
+    )
+    eng = FrankensearchSpark.build_multifield(
+        corpus, CORPUS_KEY, {"content": "content", "title": "title"},
+    )
+    p = str(tmp_path / "mf")
+    eng.save(p)
+    ld = FrankensearchSpark.load(spark, p)
+    assert isinstance(ld.index, ServingMultiIndex)
+    _lane_parity(
+        ld.index,
+        ['"term00000 term00001"', 'title:"term00000 term00002" fn'],
+        monkeypatch,
+        REFERENCE_SCHEMA,
+    )
+
+
+def test_bucket_lane_local_twin_spills_and_skips_tombstones(loaded,
+                                                           monkeypatch):
+    """With every lane slot held the twin declines and the query runs
+    the distributed lane, bit-equal; a tombstoned index never enters
+    the twin (no slot is even tried)."""
+    import frankensearch_spark.operators.wand as W
+    from frankensearch_spark.operators.batchexec import bucket_lane_local
+    from frankensearch_spark.operators.serving_exec import (
+        serving_search_bits,
+    )
+
+    text = BUCKET_POINT_SHAPES[0]
+    base = serving_search_bits(loaded.index, text, 25)
+    taken = 0
+    try:
+        while W._local_lane_slots.acquire(blocking=False):
+            taken += 1
+        assert taken == W.LOCAL_LANE_MAX_INFLIGHT
+        assert bucket_lane_local(loaded.index, text, 25) is None
+        spilled = serving_search_bits(loaded.index, text, 25)
+    finally:
+        for _ in range(taken):
+            W._local_lane_slots.release()
+    assert spilled == base
+
+    dead = [d for d, _ in base[:2]]
+    tomb = loaded.delete_documents(dead).index
+    tried = []
+
+    class Probe:
+        def acquire(self, blocking=True):
+            tried.append(1)
+            return False
+
+        def release(self):  # pragma: no cover - never held
+            pass
+
+    monkeypatch.setattr(W, "_local_lane_slots", Probe())
+    assert bucket_lane_local(tomb, text, 25) is None
+    got = serving_search_bits(tomb, text, 25)
+    assert tried == []
+    # tombstones leave df/N (and so every score) untouched
+    want = [h for h in base if h[0] not in dead]
+    assert got[: len(want)] == want

@@ -14,6 +14,47 @@ def eng(spark):
     return FrankensearchSpark.build(corpus, CORPUS_KEY)
 
 
+@pytest.fixture(scope="module")
+def loaded(spark, eng, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("engine_jobs") / "idx")
+    eng.save(path)
+    return FrankensearchSpark.load(spark, path)
+
+
+def test_warm_point_search_is_one_spark_job(spark, loaded):
+    """On a warmed loaded engine every bounded point-query shape runs
+    ONE Spark job in search_docids() (the driver-local lane's candidate
+    collect), and search() adds none: external ids come from the id map
+    warm() preloaded."""
+    sc = spark.sparkContext
+    eng = loaded.warm()
+    shapes = {
+        "single term": "fn",
+        "natural language": "fn import term00005",
+        "flat boolean": "+term00001 -term00002 term00003",
+        "root phrase": '"term00001 term00002"',
+        "mixed phrase": '"generated record" fn',
+        "nested boolean": "(fn OR import) AND term00003",
+        "split identifier": "snake_case_identifier",
+    }
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for name, q in shapes.items():
+        hits, n_ids = jobs(f"docids:{name}", lambda: eng.search_docids(q))
+        assert hits, name
+        assert n_ids == 1, (name, n_ids)
+        ext, n_ext = jobs(f"search:{name}", lambda: eng.search(q))
+        assert len(ext) == len(hits)
+        assert n_ext == 0, (name, n_ext)
+
+
 def test_search_returns_external_ids(eng):
     hits = eng.search("fn import", limit=5)
     assert hits

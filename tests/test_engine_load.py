@@ -348,3 +348,86 @@ def test_loaded_hybrid_uses_snapshot_cache(spark, loaded):
     loaded.search_docids("fn import", 15)  # populate the snapshot cache
     warm = loaded.search_hybrid("fn import", sem, limit=10, depth=15)
     assert cold == warm
+
+
+def _docmeta_ids(eng, hits):
+    """External ids of ``hits`` by the docmeta filter (the lookup a
+    search without a preloaded id map runs)."""
+    ids = [int(d) for d, _ in hits]
+    rows = (
+        eng.index.docmeta.filter(F.col("docid").isin(ids))
+        .select("docid", *eng.key_cols)
+        .collect()
+    )
+    ext = {
+        int(r["docid"]): "/".join(str(r[c]) for c in eng.key_cols)
+        for r in rows
+    }
+    return [ext[d] for d in ids]
+
+
+def test_preloaded_idmap_matches_docmeta(spark, loaded):
+    """warm() preloads docid -> external id; search() answers from it
+    with the docmeta filter's exact ids — after a tombstone delete (the
+    map is a declared field, so dataclasses.replace carries it) and
+    after with_corpus (same snapshot, same map)."""
+    eng = loaded.warm()
+    idm = eng.index._idmap
+    assert idm is not None and idm.complete
+    assert idm.key_cols == tuple(CORPUS_KEY)
+    q = "fn import"
+    hits = eng.search_docids(q, limit=10)
+    assert [e for e, _ in eng.search(q, limit=10)] == _docmeta_ids(eng, hits)
+
+    after = eng.delete_documents([hits[0][0]])
+    assert after.index._idmap is idm
+    got = after.search(q, limit=10)
+    assert [e for e, _ in got] == _docmeta_ids(
+        after, after.search_docids(q, limit=10)
+    )
+    assert _docmeta_ids(eng, hits[:1])[0] not in {e for e, _ in got}
+
+    attached = eng.with_corpus(synthetic_corpus_df(spark, N_DOCS, 3))
+    assert attached.index._idmap is idm
+    assert attached.search(q, limit=10) == eng.search(q, limit=10)
+
+
+def test_idmap_without_key_cols_uses_docids(loaded):
+    """key_cols == []: the docid is the external id, as before the id
+    map existed; a map preloaded for other key columns is not used."""
+    bare = FrankensearchSpark(loaded.index, [], schema=loaded.schema)
+    bare.warm()
+    hits = bare.search_docids("fn import", limit=5)
+    assert [e for e, _ in bare.search("fn import", limit=5)] == [
+        str(int(d)) for d, _ in hits
+    ]
+
+
+def test_bounded_idmap_falls_back_for_misses(spark, loaded):
+    """Past the row bound the map holds only the lowest docids: hits it
+    lacks resolve through ONE filtered docmeta collect, and every id
+    still equals the docmeta filter's."""
+    import dataclasses
+
+    eng = FrankensearchSpark(
+        dataclasses.replace(loaded.index, _idmap=None),
+        loaded.key_cols, schema=loaded.schema,
+    )
+    bound = N_DOCS // 4
+    assert eng.index.preload_idmap(eng.key_cols, max_rows=bound) == bound
+    eng.warm()  # keeps the bounded map: it is already built for key_cols
+    idm = eng.index._idmap
+    assert not idm.complete and len(idm.ext) == bound
+    q = "fn import"
+    hits = eng.search_docids(q, limit=20)
+    ids = [int(d) for d, _ in hits]
+    assert any(d in idm.ext for d in ids)
+    assert any(d not in idm.ext for d in ids)
+    sc = spark.sparkContext
+    sc.setJobGroup("idmap-miss", "idmap-miss")
+    try:
+        got = eng.search(q, limit=20)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("idmap-miss")) == 1
+    assert [e for e, _ in got] == _docmeta_ids(eng, hits)

@@ -119,6 +119,42 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
     )
 
 
+def test_resume_through_file_uri_checkpoint(spark, tmp_path):
+    """A checkpoint given as a URI (``file://`` here, ``hdfs://`` or
+    ``s3a://`` on a cluster) resumes over the stream's committed
+    segments: its offsets resolve through the Hadoop FileSystem API, so
+    the fresh-checkpoint guard no longer mistakes it for a new stream.
+    A genuinely fresh URI checkpoint still trips the guard."""
+    from frankensearch_spark.streaming.incremental import (
+        read_incremental_index,
+        start_incremental_build,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ckpt = (tmp_path / "ckpt").as_uri()
+    rows = make_corpus(40)
+
+    def stream_once(batch, checkpoint):
+        spark.createDataFrame(batch, schema=CORPUS_SCHEMA).write.mode(
+            "append"
+        ).parquet(src)
+        stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)
+        start_incremental_build(
+            stream, out, CORPUS_KEY, checkpoint_dir=checkpoint
+        ).awaitTermination(120)
+
+    stream_once(rows[:20], ckpt)
+    stream_once(rows[20:], ckpt)
+    assert read_incremental_index(spark, out).stats()[0] == 40
+
+    stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)
+    with pytest.raises(ValueError, match="fresh"):
+        start_incremental_build(
+            stream, out, CORPUS_KEY,
+            checkpoint_dir=(tmp_path / "ckpt2").as_uri(),
+        )
+
+
 def test_multimodal_plumbing(spark):
     from frankensearch_spark.operators.multimodal import (
         extract_features,

@@ -662,6 +662,37 @@ def test_local_lane_counts_mustnot_volume(serving, monkeypatch):
     assert attempts, "same cap must admit the shape without the MustNot"
 
 
+def test_single_term_local_lane_matches_stream(serving, monkeypatch):
+    """A single scored term under the local-lane cap decodes on the
+    driver through the bucket kernel (one collect); forced over the cap
+    it takes the shuffle-free single-term stream.  Both are bit-equal."""
+    import frankensearch_spark.operators.wand as W
+
+    taken = []
+    real = W.local_lane_topk
+
+    def probe(*a, **kw):
+        out = real(*a, **kw)
+        taken.append(out is not None)
+        return out
+
+    monkeypatch.setattr(W, "local_lane_topk", probe)
+    as_bits = lambda hits: [  # noqa: E731
+        (d, np.float32(s).view(np.uint32)) for d, s in hits
+    ]
+    for text in ("fn", "term00001", "generated"):
+        spec = QuerySpec.from_text(text)
+        taken.clear()
+        local = wand_topk(serving, spec, k=25)
+        assert local and taken == [True], text
+        monkeypatch.setattr(W, "LOCAL_LANE_MAX_POSTINGS", -1)
+        taken.clear()
+        stream = wand_topk(serving, spec, k=25)
+        assert taken == [False], text
+        monkeypatch.setattr(W, "LOCAL_LANE_MAX_POSTINGS", 1_000_000)
+        assert as_bits(local) == as_bits(stream), text
+
+
 def test_truncated_coverage_cache_fallbacks():
     """A BOUNDED coverage preload evicts low-coverage tail terms; the
     routing gates must read a miss as 'evicted: coverage ≤ smallest

@@ -159,7 +159,7 @@ def main() -> None:
             10,
         )
         sections.append((
-            "Single-clause fast path (mega-term/short-keyword serving)",
+            "Single-clause fast path (mega-terms over the local-lane cap)",
             "one scored clause means one posting per matching doc — no "
             "cross-block accumulation exists, so the bucket exchange the "
             "general kernel needs is pure overhead here.  Blocks decode "
