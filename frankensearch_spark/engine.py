@@ -132,10 +132,16 @@ class FrankensearchSpark:
         )
 
     def upsert(self, new_corpus: DataFrame) -> "FrankensearchSpark":
-        """Replace-by-external-key.  On a LOADED engine the block store
-        is first decoded back to builder form (one distributed pass —
-        see lifecycle.serving_to_built; for high-rate appends prefer
-        streamed mini-segments)."""
+        """Replace-by-external-key.  Only the new rows are built: their
+        docids lease from the first docid-bucket boundary above the
+        high-watermark, and every older docid with a replaced key is
+        tombstoned (lifecycle.upsert_documents).  On a LOADED engine the
+        committed block store is never decoded: the new rows are
+        blockified as a small delta, materialized once, and the engine
+        returned is a serving engine over base ⊕ delta — warm at birth
+        (stats, df cache, bucket coverage, id map and tombstone set are
+        extended on the driver), so its point searches stay one Spark
+        job."""
         from frankensearch_spark.operators.lifecycle import upsert_documents
 
         corpus = self.corpus
@@ -147,31 +153,23 @@ class FrankensearchSpark:
                 new_corpus.select(*self.key_cols).distinct(),
                 self.key_cols, "left_anti",
             ).unionByName(new_corpus, allowMissingColumns=True)
+        # the delta extends the warm planning state, so warm the base
+        # first (a no-op once warm; loaded engines self-warm anyway)
+        self._ensure_warm()
         return FrankensearchSpark(
-            upsert_documents(self._as_built(), new_corpus, self.key_cols),
+            upsert_documents(self.index, new_corpus, self.key_cols),
             self.key_cols, corpus, self.schema,
         )
 
     def compact(self, force: bool = True) -> "FrankensearchSpark":
+        """Fold tombstones (lifecycle.compact); a loaded engine decodes
+        its block store back to builder form to do so."""
         from frankensearch_spark.operators.lifecycle import compact
 
-        if self._is_serving() and self.index.tombstones is None:
-            return self  # nothing to fold — skip the whole-store decode
-        return FrankensearchSpark(
-            compact(self._as_built(), force=force), self.key_cols,
-            self.corpus, self.schema,
-        )
-
-    def _as_built(self):
-        """The index in builder (postings) form — identity for a built
-        engine, a whole-store decode for a loaded serving engine."""
-        if self._is_serving():
-            from frankensearch_spark.operators.lifecycle import (
-                serving_to_built,
-            )
-
-            return serving_to_built(self.index)
-        return self.index
+        out = compact(self.index, force=force)
+        if out is self.index:
+            return self  # nothing to fold
+        return FrankensearchSpark(out, self.key_cols, self.corpus, self.schema)
 
     # --- read path --------------------------------------------------------
 
@@ -187,10 +185,11 @@ class FrankensearchSpark:
         """Long-lived serving mode: preload snapshot stats + the bounded
         (term -> df) dictionary so per-query planning runs ZERO extra
         Spark jobs.  Loaded serving indexes additionally preload bucket
-        coverage for the WAND routing gates and the bounded docid ->
-        external id map, so a bounded point :meth:`search` is ONE Spark
-        job (the candidate-block collect of the driver-local lane) and
-        id materialization runs none.  Idempotent per underlying index
+        coverage for the WAND routing gates, the bounded docid ->
+        external id map and the bounded tombstone set, so a bounded
+        point :meth:`search` is ONE Spark job (the candidate-block
+        collect of the driver-local lane) and id materialization runs
+        none.  Idempotent per underlying index
         (loaded serving engines also self-warm on first search — see
         :meth:`_ensure_warm` — so an explicit warm() after a search
         costs nothing); a refresh is never needed because mutations
@@ -218,12 +217,14 @@ class FrankensearchSpark:
                     and getattr(sub, "_bucket_cov", None) is None
                 ):
                     sub.preload_bucket_coverage()
-            if (
-                self._is_serving()
-                and self.key_cols
-                and self._preloaded_ids() is None
-            ):
-                self.index.preload_idmap(self.key_cols)
+            if self._is_serving():
+                if self.key_cols and self._preloaded_ids() is None:
+                    self.index.preload_idmap(self.key_cols)
+                if (
+                    self.index.tombstones is not None
+                    and self.index._tombset is None
+                ):
+                    self.index.preload_tombstones()
         return self
 
     def _preloaded_ids(self):

@@ -579,10 +579,13 @@ def bucket_lane_local(index, query, k: int = 10,
     :func:`wand.local_lane_topk` (one collect, no exchange, no
     Python-worker stage).  Returns [(docid, np.float32)] under the
     pinned total order, or None when the query is not bucket-lane
-    shaped or the local-lane gate declines (volume over the cap,
-    tombstones, every slot busy) — the caller then runs the batch
-    executor's distributed plan."""
-    from frankensearch_spark.operators.wand import local_lane_topk
+    shaped or the local-lane gate declines (volume over the cap, a
+    tombstone set not preloaded or past its bound, every slot busy) —
+    the caller then runs the batch executor's distributed plan."""
+    from frankensearch_spark.operators.wand import (
+        lane_tombstones,
+        local_lane_topk,
+    )
 
     fidx, primary, specs = _prepare(index, [query], schema)
     if not specs:
@@ -598,7 +601,8 @@ def bucket_lane_local(index, query, k: int = 10,
         return []
     cand, score_bucket, volume = lane
     return local_lane_topk(
-        cand, score_bucket, k, volume, primary.tombstones
+        cand, score_bucket, k, volume, lane_tombstones(primary),
+        primary.bucket_shift,
     )
 
 

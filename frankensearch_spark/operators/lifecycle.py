@@ -11,16 +11,29 @@ Reference semantics carried over exactly:
   NOT change when a neighbour is deleted).
 * Upsert = index the new revision under a fresh docid + tombstone every
   older docid with the same external key (new internal docid + tombstone,
-  COMPREHENSIVE_PLAN.md:274-276).  Docids are never reused; the new ids
-  are leased above the current high-watermark (keeper.rs:1567-1610).
+  COMPREHENSIVE_PLAN.md:274-276).  Docids are never reused.  ONE lease
+  rule serves built and serving indexes alike (keeper.rs:1567-1610): the
+  new ids start at the first ``2^bucket_shift`` boundary above the
+  current high-watermark (:func:`lease_offset`), so the new rows fill
+  docid buckets of their own and no existing block changes.
+* On a serving (loaded) index an upsert never decodes the committed
+  block store: only the new rows are built and blockified — a small
+  delta, materialized once — and the result is a serving index over
+  base ⊕ delta (the Keeper's mutable delta segment, delta.rs).  Its
+  planning state (stats, the df cache, bucket coverage, the id map, the
+  tombstone set) is extended on the driver from the delta's own small
+  collects.  Only compaction decodes the store (:func:`serving_to_built`).
 * Compaction folds tombstones: drop dead rows from postings/docmeta,
   recompute stats, PRESERVE surviving docids (gaps are fine,
   keeper.rs:4219-4253).  After compaction scores MAY change (df/N drop) —
   same as the reference.
 
-Spark shapes: the tombstone set is a DataFrame of docids (anti-joined at
-query time — cheap broadcast at sane tombstone counts); compaction is an
-anti-join rewrite job.
+Spark shapes: the tombstone set is a DataFrame of docids (cogrouped or
+anti-joined at query time); compaction is an anti-join rewrite job.  A
+serving index also keeps the set on the driver as a bounded ``TombSet``
+(``wand.PRELOAD_MAX_ROWS`` docids — preloaded by ``warm()``, extended by
+delete and upsert), from which the driver-local lane drops tombstoned
+docs in-process; past the bound queries keep the cogroup route.
 """
 
 from __future__ import annotations
@@ -35,7 +48,21 @@ from frankensearch_spark.operators.build import (
     MultiFieldIndex,
     build_fieldstats,
     build_index,
+    build_multifield_index,
     build_termstats,
+)
+from frankensearch_spark.operators.merge import (
+    DEFAULT_BUCKET_SHIFT,
+    build_blocks,
+)
+from frankensearch_spark.operators.wand import (
+    NO_TOMBSTONES,
+    PRELOAD_MAX_ROWS,
+    IdMap,
+    ServingIndex,
+    ServingMultiIndex,
+    _wand_fields,
+    external_id,
 )
 
 TOMBSTONE_COMPACT_THRESHOLD = 0.20  # config.rs:29
@@ -60,11 +87,6 @@ def delete_documents(index, docids):
     "df/N include tombstoned docs until compaction" rule.  Multi-field
     indexes tombstone on the PRIMARY field (the one query-time anti-join
     source shared by every field)."""
-    from frankensearch_spark.operators.wand import (
-        ServingIndex,
-        ServingMultiIndex,
-    )
-
     if isinstance(index, MultiFieldIndex):
         fields = dict(index.fields)
         fields[index.primary_name] = delete_documents(index.primary, docids)
@@ -79,13 +101,23 @@ def delete_documents(index, docids):
         fields[index.primary_name] = delete_documents(index.primary, docids)
         return dataclasses.replace(index, fields=fields)
     if isinstance(index, ServingIndex):
+        tombset = None
+        if not isinstance(docids, DataFrame):
+            docids = [int(d) for d in docids]
+            prev = index._tombset
+            if index.tombstones is None:
+                prev = NO_TOMBSTONES
+            if prev is not None:
+                tombset = prev.extended(docids)
         ts = _tombstone_df(index, docids)
         if index.tombstones is not None:
             ts = index.tombstones.unionByName(ts).distinct()
         # replace() keeps every other field — including the warm()
         # planning state (_term_df_cache, _bucket_cov): tombstones don't
-        # change term stats or bucket coverage, only result filtering
-        return dataclasses.replace(index, tombstones=ts)
+        # change term stats or bucket coverage, only result filtering.
+        # A driver-side docid list extends the preloaded set; a
+        # DataFrame leaves it for warm() to preload
+        return dataclasses.replace(index, tombstones=ts, _tombset=tombset)
     ts = _tombstone_df(index, docids)
     if index.tombstones is not None:
         ts = index.tombstones.unionByName(ts).distinct()
@@ -101,10 +133,16 @@ def delete_by_key(index: BuiltIndex, key_predicate) -> BuiltIndex:
     return delete_documents(index, ids)
 
 
-def _shift_union(old: BuiltIndex, delta: BuiltIndex, shift: int,
-                 tombstones) -> BuiltIndex:
-    """Union ``delta`` into ``old`` with the delta's docids shifted above
-    the high-watermark; per-field stats recomputed over the union."""
+def lease_offset(hwm: int, bucket_shift: int = DEFAULT_BUCKET_SHIFT) -> int:
+    """The first docid an upsert leases: the first ``2^bucket_shift``
+    boundary above the high-watermark ``hwm`` (0 on an empty index)."""
+    return ((hwm >> bucket_shift) + 1) << bucket_shift
+
+
+def _shift_union(old: BuiltIndex, delta: BuiltIndex,
+                 shift: int) -> BuiltIndex:
+    """Union ``delta`` into ``old`` with the delta's docids shifted by
+    the lease offset; per-field stats recomputed over the union."""
     shifted_postings = delta.postings.withColumn(
         "docid", F.col("docid") + F.lit(shift)
     )
@@ -146,7 +184,141 @@ def _shift_union(old: BuiltIndex, delta: BuiltIndex, shift: int,
         termstats=build_termstats(postings),
         fieldstats=build_fieldstats(docmeta),
         positions=positions,
-        tombstones=tombstones,
+        tombstones=old.tombstones,
+    )
+
+
+def _extend_df_cache(sub, delta_df: dict) -> tuple[dict | None, bool]:
+    """``sub``'s (term -> df) cache plus the delta's dfs, under the
+    preload's bounded-cache law: a complete cache stays complete; an
+    incomplete one updates only the terms it holds — its entries,
+    negative ones included, are exact — and leaves the rest to the
+    filtered-collect fallback.  A complete cache the delta would push
+    to ``PRELOAD_MAX_ROWS`` is dropped, for warm() to preload again
+    under the bound."""
+    cache, complete = sub._term_df_cache, sub._term_df_complete
+    if cache is None:
+        return None, False
+    out = dict(cache)
+    for t, n in delta_df.items():
+        if complete or t in out:
+            out[t] = out.get(t, 0) + n
+    if complete and len(out) >= PRELOAD_MAX_ROWS:
+        return None, False
+    return out, complete
+
+
+def _extend_bucket_cov(sub, delta_nb: dict, n_buckets: int) -> dict:
+    """``sub``'s bucket-coverage planning stats plus the delta's, as
+    ``dataclasses.replace`` keywords.  The delta's buckets are its own
+    (:func:`lease_offset`), so coverage adds.  The MaxScore shape max is
+    dropped: it was computed at the old avgdl, and a stale bound could
+    under-estimate.  The skippable-fraction estimate only steers routing
+    and is kept (0.0 for a term new to the index).  Under a truncated
+    cache the eviction floor rises by the delta's largest per-term
+    coverage, so it stays an upper bound for every evicted term; a
+    complete cache the delta would push to ``PRELOAD_MAX_ROWS`` is
+    dropped, for warm() to preload again under the bound."""
+    cov, complete = sub._bucket_cov, sub._bucket_cov_complete
+    if cov is None:
+        return {}
+    out = {t: (nb, frac, None) for t, (nb, frac, *_mx) in cov.items()}
+    for t, nb in delta_nb.items():
+        if t in out:
+            out[t] = (out[t][0] + nb, out[t][1], None)
+        elif complete:
+            out[t] = (nb, 0.0, None)
+    if complete and len(out) >= PRELOAD_MAX_ROWS:
+        return {"_bucket_cov": None}
+    min_nb = sub._bucket_cov_min_nb
+    if not complete:
+        min_nb = (min_nb or 0) + max(delta_nb.values(), default=0)
+    return {
+        "_bucket_cov": out,
+        "_bucket_cov_min_nb": min_nb,
+        "_total_buckets": (sub._total_buckets or 0) + n_buckets,
+    }
+
+
+def _serving_union(sub, delta: BuiltIndex, shift: int, key_cols):
+    """``sub`` ⊕ ``delta`` with the delta's docids shifted by the lease
+    offset, in serving form.  Only the delta is blockified; its blocks
+    and docmeta are materialized once as local checkpoints (lineage
+    cut, so a read plans a plain scan of them, not the delta's build),
+    then read by ONE collect of the blocks' per-(term, bucket) posting
+    counts and one of the docmeta — the committed store is never
+    decoded or scanned.  From those two small collects the driver
+    extends the stats, the df cache, bucket coverage and (``key_cols``:
+    the primary field) the id map, so the returned index is warm at
+    birth.  Tombstones carry over unchanged."""
+    if sub.has_positions and delta.postings_full is None:
+        raise ValueError(
+            "the index carries positions but the upsert delta lacks them; "
+            "upsert with with_positions=True"
+        )
+    src = delta.postings_full if sub.has_positions else delta.postings
+    src = src.withColumn("docid", F.col("docid") + F.lit(shift))
+    blocks = build_blocks(
+        src, sub.bucket_shift, sub.n_term_partitions,
+        positions=src if sub.has_positions else None,
+    ).localCheckpoint()
+    delta_df: dict = {}
+    delta_nb: dict = {}
+    buckets = set()
+    for r in blocks.groupBy("term", "bucket").agg(
+        F.sum("n").alias("n")
+    ).collect():
+        delta_df[r["term"]] = delta_df.get(r["term"], 0) + int(r["n"])
+        delta_nb[r["term"]] = delta_nb.get(r["term"], 0) + 1
+        buckets.add(r["bucket"])
+    docmeta = delta.docmeta.withColumn(
+        "docid", F.col("docid") + F.lit(shift)
+    ).localCheckpoint()
+    rows = docmeta.select("docid", "doclen", *(key_cols or ())).collect()
+    n_docs, total_tokens = sub.stats()
+    n_docs += len(rows)
+    total_tokens += sum(int(r["doclen"]) for r in rows)
+    idm = sub._idmap
+    if key_cols is None or idm is None or idm.key_cols != tuple(key_cols):
+        idm = None
+    else:
+        ext = dict(idm.ext)
+        for r in rows:
+            if len(ext) >= PRELOAD_MAX_ROWS:
+                break
+            ext[int(r["docid"])] = external_id(r, key_cols)
+        idm = IdMap(
+            idm.key_cols, ext, idm.complete and n_docs < PRELOAD_MAX_ROWS
+        )
+    hwm = sub._max_docid
+    if hwm is not None:
+        hwm = max([hwm] + [int(r["docid"]) for r in rows])
+    term_df, term_df_complete = _extend_df_cache(sub, delta_df)
+    spark = sub.blocks.sparkSession
+    return dataclasses.replace(
+        sub,
+        # one partition per delta in every scan of the union: its rows
+        # are cached, and a read's task count must not grow by the
+        # blockify's shuffle width per upsert
+        blocks=sub.blocks.unionByName(
+            blocks.coalesce(1), allowMissingColumns=True
+        ),
+        termstats=sub.termstats.unionByName(delta.termstats)
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+        docmeta=sub.docmeta.unionByName(
+            docmeta.coalesce(1), allowMissingColumns=True
+        ),
+        fieldstats=spark.createDataFrame(
+            [(n_docs, total_tokens)], sub.fieldstats.schema
+        ),
+        _cached_stats=(n_docs, total_tokens),
+        _term_df_cache=term_df,
+        _term_df_complete=term_df_complete,
+        _phrase_wl_cache=None,
+        _idmap=idm,
+        _max_docid=hwm,
+        **_extend_bucket_cov(sub, delta_nb, len(buckets)),
     )
 
 
@@ -162,11 +334,6 @@ def serving_to_built(index):
     Cost note: linear in index size — fine for compaction-sized jobs;
     for high-rate appends at very large corpora prefer streamed
     mini-segments (streaming.incremental), which never decode the base."""
-    from frankensearch_spark.operators.wand import (
-        ServingIndex,
-        ServingMultiIndex,
-    )
-
     if isinstance(index, ServingMultiIndex):
         return MultiFieldIndex(
             {n: serving_to_built(f) for n, f in index.fields.items()},
@@ -210,45 +377,60 @@ def upsert_documents(
     """Replace-by-external-key: index new revisions under fresh docids,
     tombstone every existing docid sharing the key.
 
-    The fresh docids lease a block above the current high-watermark —
-    never reused, monotone (Q1 docid discipline).  Multi-field indexes
-    upsert every field from the same delta corpus (requires the
-    ``field_cols`` mapping the index was built with)."""
-    hwm_row = index.docmeta.agg(F.max("docid").alias("m")).collect()[0]
-    hwm = int(hwm_row["m"]) if hwm_row["m"] is not None else -1
-    shift = hwm + 1
-
+    The fresh docids start at :func:`lease_offset` above the current
+    high-watermark — never reused, monotone (Q1 docid discipline).  A
+    serving index (loaded engine) tracks its high-watermark on the
+    driver and stays in serving form (:func:`_serving_union`); a built
+    index stays in builder form.  Multi-field indexes upsert every field
+    from the same delta corpus (requires the ``field_cols`` mapping the
+    index was built with)."""
     old_ids = index.docmeta.join(
-        new_corpus.select(*key_cols).distinct(), key_cols, "inner"
+        new_corpus.select(*key_cols).distinct(), key_cols, "left_semi"
     ).select("docid")
+    if isinstance(index, (ServingIndex, ServingMultiIndex)):
+        shift = lease_offset(
+            index.high_watermark(), _wand_fields(index)[1].bucket_shift
+        )
+        # the superseded docids on the driver, where the tombstone set
+        # the local lane reads is extended
+        old_ids = [int(r["docid"]) for r in old_ids.collect()]
 
-    if isinstance(index, MultiFieldIndex):
+        def union(sub, delta, primary):
+            return _serving_union(
+                sub, delta, shift, key_cols if primary else None
+            )
+    else:
+        hwm = index.docmeta.agg(F.max("docid")).collect()[0][0]
+        shift = lease_offset(-1 if hwm is None else int(hwm))
+
+        def union(sub, delta, _primary):
+            return _shift_union(sub, delta, shift)
+
+    if hasattr(index, "fields"):
         if not getattr(index, "field_cols", None):
             raise ValueError(
                 "multi-field upsert needs the index's field_cols mapping "
                 "(build via build_multifield_index)"
             )
-        from frankensearch_spark.operators.build import build_multifield_index
-
         delta = build_multifield_index(
             new_corpus, key_cols, index.field_cols,
             primary=index.primary_name, **build_kw,
         )
         fields = {
-            name: _shift_union(
-                index.fields[name], delta.fields[name], shift,
-                index.fields[name].tombstones,
-            )
-            for name in index.fields
+            name: union(sub, delta.fields[name], name == index.primary_name)
+            for name, sub in index.fields.items()
         }
-        merged = MultiFieldIndex(
-            fields, index.primary_name, field_cols=index.field_cols
+        merged = (
+            dataclasses.replace(index, fields=fields)
+            if isinstance(index, ServingMultiIndex)
+            else MultiFieldIndex(
+                fields, index.primary_name, field_cols=index.field_cols
+            )
         )
         return delete_documents(merged, old_ids)
 
     delta = build_index(new_corpus, key_cols, content_col, **build_kw)
-    merged = _shift_union(index, delta, shift, index.tombstones)
-    return delete_documents(merged, old_ids)
+    return delete_documents(union(index, delta, True), old_ids)
 
 
 def tombstone_density(index: BuiltIndex) -> float:
@@ -265,11 +447,16 @@ def compact(index, force: bool = False, cache: bool = True):
     docids; stats recomputed from survivors (keeper.rs:4219-4253).
 
     No-op below the 20% density threshold unless ``force``.  Multi-field
-    indexes fold the (primary-held) tombstone set into EVERY field."""
+    indexes fold the (primary-held) tombstone set into EVERY field.  A
+    serving index is decoded back to builder form first
+    (:func:`serving_to_built`) — the one lifecycle op that touches the
+    committed store."""
     if index.tombstones is None:
         return index
     if not force and tombstone_density(index) <= TOMBSTONE_COMPACT_THRESHOLD:
         return index
+    if isinstance(index, (ServingIndex, ServingMultiIndex)):
+        index = serving_to_built(index)
     if isinstance(index, MultiFieldIndex):
         ts = index.tombstones
         fields = {}

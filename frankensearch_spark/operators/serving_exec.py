@@ -725,8 +725,9 @@ def serving_search_bits(index: ServingIndex, query, k: int = 10,
     mixed shapes — runs the batch executor's bucket-lane kernel.  Under
     the local-lane cap that kernel runs on the driver over ONE collect
     of the candidate blocks (batchexec.bucket_lane_local: one Spark
-    job); over the cap, with tombstones, or with every lane slot busy
-    the query runs as a batch of ONE (round 4): its candidate blocks
+    job; preloaded tombstones drop in-process); over the cap, with a
+    tombstone set past its bound, or with every lane slot busy the
+    query runs as a batch of ONE (round 4): its candidate blocks
     cross one docid-colocating exchange still compressed and decode
     exactly once.  Measured at 2M docs warm: nested boolean 7.7 → 1.6
     s, mega-phrase 3.2 → 1.9 s against the old decode→explode→pivot

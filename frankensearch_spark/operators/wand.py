@@ -66,6 +66,13 @@ def external_id(row, key_cols) -> str:
     return "/".join(str(row[c]) for c in key_cols)
 
 
+# Row bound of every driver-resident cache a serving index preloads
+# (term dfs, bucket coverage, the id map, the tombstone set): a driver
+# OOM guard, not a ranking choice — past it each consumer falls back to
+# its Spark-side route.
+PRELOAD_MAX_ROWS = 2_000_000
+
+
 @dataclass(frozen=True)
 class IdMap:
     """Preloaded docid -> external id map of one serving index.
@@ -75,6 +82,34 @@ class IdMap:
     key_cols: tuple[str, ...]
     ext: dict[int, str]
     complete: bool
+
+
+@dataclass(frozen=True)
+class TombSet:
+    """Preloaded tombstoned docids of one serving index: sorted, unique
+    int64.  ``complete`` is False past ``PRELOAD_MAX_ROWS`` (``ids`` is
+    then empty); the local lane then declines and queries keep the
+    distributed cogroup route."""
+
+    ids: np.ndarray
+    complete: bool
+
+    @staticmethod
+    def of(ids) -> "TombSet":
+        arr = np.unique(np.asarray(ids, dtype=np.int64))
+        if arr.size > PRELOAD_MAX_ROWS:
+            return TombSet(np.empty(0, dtype=np.int64), False)
+        return TombSet(arr, True)
+
+    def extended(self, ids) -> "TombSet":
+        if not self.complete:
+            return self
+        return self.of(
+            np.concatenate([self.ids, np.asarray(ids, dtype=np.int64)])
+        )
+
+
+NO_TOMBSTONES = TombSet(np.empty(0, dtype=np.int64), True)
 
 
 @dataclass
@@ -117,6 +152,12 @@ class ServingIndex:
     # preload_idmap() docid -> external id (Quiver's idmap section) — a
     # declared field so tombstone deletes (dataclasses.replace) keep it
     _idmap: IdMap | None = None
+    # the tombstone set as the local lane reads it (preload_tombstones,
+    # or extended on the driver by delete_documents / upsert); None
+    # while not yet preloaded
+    _tombset: TombSet | None = None
+    # largest docid in docmeta: upserts lease their docids above it
+    _max_docid: int | None = None
 
     def stats(self) -> tuple[int, int]:
         if self._cached_stats is None:
@@ -124,7 +165,7 @@ class ServingIndex:
             self._cached_stats = (int(row["doc_count"]), int(row["total_tokens"]))
         return self._cached_stats
 
-    def preload_termstats(self, max_terms: int = 2_000_000) -> int:
+    def preload_termstats(self, max_terms: int = PRELOAD_MAX_ROWS) -> int:
         """Serving amortization: (term -> df) collected once per process,
         BOUNDED at the top-``max_terms`` by df — a 100-TB vocabulary is
         O(10^8-10^9) terms and a full collect is a driver OOM (see
@@ -138,7 +179,8 @@ class ServingIndex:
         self._term_df_complete = len(rows) < max_terms
         return len(self._term_df_cache)
 
-    def preload_bucket_coverage(self, max_terms: int = 2_000_000) -> int:
+    def preload_bucket_coverage(self,
+                                max_terms: int = PRELOAD_MAX_ROWS) -> int:
         """Long-lived-serving planning statistic, one grouped pass over
         the block table per process: per term, (a) docid-bucket coverage
         and (b) bound FLATNESS — the q25/max ratio of the term's
@@ -234,7 +276,7 @@ class ServingIndex:
         return len(self._bucket_cov)
 
     def preload_idmap(self, key_cols: list[str],
-                      max_rows: int = 2_000_000) -> int:
+                      max_rows: int = PRELOAD_MAX_ROWS) -> int:
         """docid -> external id collected once per process, so
         ``engine.search`` resolves hits without a Spark job.  BOUNDED
         like the other preloads (the lowest ``max_rows`` docids — a
@@ -254,7 +296,31 @@ class ServingIndex:
             {int(r["docid"]): external_id(r, key_cols) for r in rows},
             complete,
         )
+        if complete:
+            self._max_docid = max(self._idmap.ext, default=-1)
         return len(rows)
+
+    def preload_tombstones(self) -> int:
+        """The tombstoned docids collected once (bounded at
+        ``PRELOAD_MAX_ROWS``), so the driver-local lane drops them
+        in-process instead of declining."""
+        rows = (
+            self.tombstones.select(F.col("docid").cast("long"))
+            .distinct()
+            .limit(PRELOAD_MAX_ROWS + 1)
+            .collect()
+        )
+        self._tombset = TombSet.of([r[0] for r in rows])
+        return len(rows)
+
+    def high_watermark(self) -> int:
+        """Largest docid in docmeta (-1 when empty): tracked on the
+        driver once known — preload_idmap and upserts set it — else one
+        aggregate."""
+        if self._max_docid is None:
+            m = self.docmeta.agg(F.max("docid")).collect()[0][0]
+            self._max_docid = -1 if m is None else int(m)
+        return self._max_docid
 
     def df_of_terms(self, terms: list[str]) -> dict[str, int]:
         if not terms:
@@ -332,6 +398,16 @@ class ServingMultiIndex:
 
     def preload_idmap(self, key_cols: list[str]) -> int:
         return self.primary.preload_idmap(key_cols)
+
+    @property
+    def _tombset(self) -> TombSet | None:
+        return self.primary._tombset
+
+    def preload_tombstones(self) -> int:
+        return self.primary.preload_tombstones()
+
+    def high_watermark(self) -> int:
+        return self.primary.high_watermark()
 
 
 def serving_from_built(built, bucket_shift: int = DEFAULT_BUCKET_SHIFT,
@@ -1098,37 +1174,55 @@ LOCAL_LANE_MAX_INFLIGHT = 2
 _local_lane_slots = threading.BoundedSemaphore(LOCAL_LANE_MAX_INFLIGHT)
 
 
+def lane_tombstones(index) -> np.ndarray | None:
+    """The docids the driver-local lane must drop: empty without
+    tombstones, the preloaded set with them, or None when the set is not
+    preloaded or past its bound (the lane then declines)."""
+    if index.tombstones is None:
+        return NO_TOMBSTONES.ids
+    ts = getattr(index, "_tombset", None)
+    return ts.ids if ts is not None and ts.complete else None
+
+
 def local_lane_topk(blocks_df: DataFrame, score_bucket, want: int,
-                    volume: int, tombstones) -> list | None:
+                    volume: int, dead: np.ndarray | None,
+                    bucket_shift: int) -> list | None:
     """Driver-local top-``want`` over candidate block rows, or None when
-    the lane declines: tombstones present, ``volume`` (postings the scan
-    carries) over ``LOCAL_LANE_MAX_POSTINGS``, or every
-    ``_local_lane_slots`` slot held — the caller then runs its
-    distributed plan.
+    the lane declines: ``dead`` (the :func:`lane_tombstones` set) is
+    None, ``volume`` (postings the scan carries) is over
+    ``LOCAL_LANE_MAX_POSTINGS``, or every ``_local_lane_slots`` slot is
+    held — the caller then runs its distributed plan.
 
     ONE collect of the still-compressed candidate block rows, grouped by
-    bucket, each group through ``score_bucket`` (a per-bucket kernel
-    returning ``docid``/``score`` rows, the same closure the distributed
-    plan hands to applyInPandas) — no bucket exchange, no Python-worker
-    stage.  This is the reference's in-process serving shape (argus.rs
-    runs the whole cursor tree in one thread) and the same driver-local
-    twin discipline as hybrid fusion.  Bit parity is structural: the
-    per-bucket kernel is byte-for-byte the distributed one, and the
-    final merge in ``score_total_order_key`` order equals
+    bucket, each group through ``score_bucket(pdf, tomb)`` (a per-bucket
+    kernel returning ``docid``/``score`` rows, the same closure the
+    distributed plan hands to applyInPandas / cogroup) — no bucket
+    exchange, no Python-worker stage.  ``tomb`` is the bucket's slice of
+    ``dead`` as a ``docid`` frame, exactly the right side the cogroup
+    route delivers, or None when the bucket holds no tombstone.  This is
+    the reference's in-process serving shape (argus.rs runs the whole
+    cursor tree in one thread) and the same driver-local twin discipline
+    as hybrid fusion.  Bit parity is structural: the per-bucket kernel
+    is byte-for-byte the distributed one, and the final merge in
+    ``score_total_order_key`` order equals
     ``orderBy(desc score, asc docid).limit(want)``."""
     if (
-        tombstones is not None
+        dead is None
         or volume > LOCAL_LANE_MAX_POSTINGS
         or not _local_lane_slots.acquire(blocking=False)
     ):
         return None
     try:
         pdf_all = blocks_df.toPandas()
-        outs = [
-            out
-            for _b, g in pdf_all.groupby("bucket", sort=False)
-            if len(out := score_bucket(g))
-        ]
+        outs = []
+        for b, g in pdf_all.groupby("bucket", sort=False):
+            lo, hi = np.searchsorted(
+                dead, [int(b) << bucket_shift, (int(b) + 1) << bucket_shift]
+            )
+            tomb = pd.DataFrame({"docid": dead[lo:hi]}) if hi > lo else None
+            out = score_bucket(g, tomb)
+            if len(out):
+                outs.append(out)
         if not outs:
             return []
         merged = pd.concat(outs, ignore_index=True)
@@ -1431,7 +1525,18 @@ def wand_topk(
         else None
     )
     must_frac = must_info[0] if must_info is not None else None
-    if must_frac is not None and must_frac <= MUST_RESTRICT_MAX_FRAC:
+    # at the default cost floor a query under the local-lane cap is
+    # answered by ONE collect, where the kernel's own Must rule drops
+    # the same buckets — the semi-join would only add its jobs
+    lane_first = (
+        min_cost >= WAND_MIN_COST
+        and collect_cost <= LOCAL_LANE_MAX_POSTINGS
+    )
+    if (
+        must_frac is not None
+        and must_frac <= MUST_RESTRICT_MAX_FRAC
+        and not lane_first
+    ):
         _f, rarest, rarest_nb = must_info
         mb = cand.filter(F.col("term") == rarest).select("bucket").distinct()
         if receipt is not None:
@@ -1466,6 +1571,7 @@ def wand_topk(
             prune = False
     out_schema = "docid long, score float"
     tomb = index.tombstones
+    dead = lane_tombstones(index)
 
     def kernel(theta: float = -math.inf, non_essential: set | None = None):
         return _score_buckets_kernel(
@@ -1476,7 +1582,9 @@ def wand_topk(
     def run_topk(blocks_df, theta: float = -math.inf,
                  non_essential: set | None = None) -> list[tuple[int, np.float32]]:
         score_one, score_cog = kernel(theta, non_essential)
-        local = local_lane_topk(blocks_df, score_one, want, collect_cost, tomb)
+        local = local_lane_topk(
+            blocks_df, score_cog, want, collect_cost, dead, shift
+        )
         if local is not None:
             return local
         if tomb is None:
@@ -1527,7 +1635,7 @@ def wand_topk(
             # kernel's single-clause score IS w·tf/(tf+norm) with no
             # additions.
             winners = local_lane_topk(
-                cand, kernel()[0], want, collect_cost, tomb
+                cand, kernel()[1], want, collect_cost, dead, shift
             )
             if winners is None:
                 (fname, t), w = next(iter(weights.items()))

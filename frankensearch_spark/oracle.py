@@ -27,6 +27,10 @@ from frankensearch_spark.contract import (
     term_weight,
 )
 
+# expand_glob's default limit: the pinned GLOB_EXPANSION_LIMIT cap
+# (``limit=None`` means every match)
+PINNED_CAP = object()
+
 
 class OracleIndex:
     """In-memory exhaustive BM25 index over one text field."""
@@ -211,17 +215,21 @@ class OracleIndex:
             meta=meta,
         )
 
-    def expand_glob(self, pattern: str, limit: int | None = None) -> list[str]:
+    def expand_glob(self, pattern: str,
+                    limit: int | None | object = PINNED_CAP) -> list[str]:
         """Sorted term-dictionary glob expansion (grimoire.rs:1374-1460).
 
-        ``limit=None`` uses the shared pinned cap
-        (``query_ast.GLOB_EXPANSION_LIMIT``, config.rs:33) so this
+        By default the expansion takes the shared pinned cap
+        (``query_ast.GLOB_EXPANSION_LIMIT``, config.rs:33), so this
         entry point can never desynchronize from the Spark executors'
-        ``cap_glob_expansion`` sites."""
-        from frankensearch_spark.query_ast import GLOB_EXPANSION_LIMIT
-
+        ``cap_glob_expansion`` sites; ``limit=None`` returns every
+        match, and an int caps at that many."""
         hits = self.glob_matches(pattern)
-        return hits[: (GLOB_EXPANSION_LIMIT if limit is None else limit)]
+        if limit is PINNED_CAP:
+            from frankensearch_spark.query_ast import GLOB_EXPANSION_LIMIT
+
+            limit = GLOB_EXPANSION_LIMIT
+        return hits if limit is None else hits[:limit]
 
     def glob_matches(self, pattern: str) -> list[str]:
         from frankensearch_spark.query_ast import glob_match

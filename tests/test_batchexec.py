@@ -414,11 +414,15 @@ def test_bucket_lane_local_twin_multifield_phrase(spark, tmp_path,
     )
 
 
-def test_bucket_lane_local_twin_spills_and_skips_tombstones(loaded,
-                                                           monkeypatch):
+def test_bucket_lane_local_twin_spills_and_applies_tombstones(
+        spark, loaded, monkeypatch):
     """With every lane slot held the twin declines and the query runs
-    the distributed lane, bit-equal; a tombstoned index never enters
-    the twin (no slot is even tried)."""
+    the distributed lane, bit-equal.  On a tombstoned engine and on a
+    post-upsert engine the local lane applies the preloaded tombstone
+    set in-process: both the bucket-lane twin and wand_topk's lane stay
+    bit-equal to the distributed cogroup route."""
+    import dataclasses
+
     import frankensearch_spark.operators.wand as W
     from frankensearch_spark.operators.batchexec import bucket_lane_local
     from frankensearch_spark.operators.serving_exec import (
@@ -441,20 +445,44 @@ def test_bucket_lane_local_twin_spills_and_skips_tombstones(loaded,
 
     dead = [d for d, _ in base[:2]]
     tomb = loaded.delete_documents(dead).index
-    tried = []
-
-    class Probe:
-        def acquire(self, blocking=True):
-            tried.append(1)
-            return False
-
-        def release(self):  # pragma: no cover - never held
-            pass
-
-    monkeypatch.setattr(W, "_local_lane_slots", Probe())
-    assert bucket_lane_local(tomb, text, 25) is None
-    got = serving_search_bits(tomb, text, 25)
-    assert tried == []
     # tombstones leave df/N (and so every score) untouched
     want = [h for h in base if h[0] not in dead]
-    assert got[: len(want)] == want
+    assert serving_search_bits(tomb, text, 25)[: len(want)] == want
+
+    keys = loaded.index.docmeta.select(*CORPUS_KEY).limit(4).collect()
+    batch = spark.createDataFrame(
+        [
+            (r["repo"], r["path"], r["commit"], "rust",
+             '"generated record" fn term00003 snake_case_identifier')
+            for r in keys
+        ],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    upserted = FrankensearchSpark(
+        dataclasses.replace(loaded.index), loaded.key_cols,
+        schema=loaded.schema,
+    ).upsert(batch).index
+
+    ran = []
+    lane = W.local_lane_topk
+
+    def spy(*a, **k):
+        out = lane(*a, **k)
+        ran.append(out is not None)
+        return out
+
+    monkeypatch.setattr(W, "local_lane_topk", spy)
+    wand_shapes = ["fn", "fn import term00005",
+                   "+term00001 -term00002 term00003"]
+    for index in (tomb, upserted):
+        assert len(W.lane_tombstones(index)) > 0
+        _lane_parity(index, BUCKET_POINT_SHAPES, monkeypatch)
+        for q in wand_shapes:
+            ran.clear()
+            local = serving_search_bits(index, q, 25)
+            assert ran == [True], q
+            monkeypatch.setattr(W, "LOCAL_LANE_MAX_POSTINGS", -1)
+            dist = serving_search_bits(index, q, 25)
+            monkeypatch.setattr(W, "LOCAL_LANE_MAX_POSTINGS", 1_000_000)
+            assert local and local == dist, q

@@ -8,6 +8,18 @@ from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 N_DOCS = 150
 
 
+# every bounded point-query shape the driver-local lane serves
+POINT_SHAPES = {
+    "single term": "fn",
+    "natural language": "fn import term00005",
+    "flat boolean": "+term00001 -term00002 term00003",
+    "root phrase": '"term00001 term00002"',
+    "mixed phrase": '"generated record" fn',
+    "nested boolean": "(fn OR import) AND term00003",
+    "split identifier": "snake_case_identifier",
+}
+
+
 @pytest.fixture(scope="module")
 def eng(spark):
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=3)
@@ -28,15 +40,7 @@ def test_warm_point_search_is_one_spark_job(spark, loaded):
     warm() preloaded."""
     sc = spark.sparkContext
     eng = loaded.warm()
-    shapes = {
-        "single term": "fn",
-        "natural language": "fn import term00005",
-        "flat boolean": "+term00001 -term00002 term00003",
-        "root phrase": '"term00001 term00002"',
-        "mixed phrase": '"generated record" fn',
-        "nested boolean": "(fn OR import) AND term00003",
-        "split identifier": "snake_case_identifier",
-    }
+    shapes = POINT_SHAPES
 
     def jobs(group, call):
         sc.setJobGroup(group, group)

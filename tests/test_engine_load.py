@@ -431,3 +431,103 @@ def test_bounded_idmap_falls_back_for_misses(spark, loaded):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("idmap-miss")) == 1
     assert [e for e, _ in got] == _docmeta_ids(eng, hits)
+
+
+def _fresh(loaded):
+    """An engine over a copy of the loaded index: warming it leaves the
+    module fixture's caches alone."""
+    import dataclasses
+
+    return FrankensearchSpark(
+        dataclasses.replace(loaded.index), loaded.key_cols,
+        schema=loaded.schema,
+    )
+
+
+def _replace_batch(spark, built, sentinel, n=3):
+    """New revisions of ``n`` existing documents carrying ``sentinel``."""
+    keys = built.index.docmeta.select(*CORPUS_KEY).limit(n).collect()
+    return spark.createDataFrame(
+        [
+            (r["repo"], r["path"], r["commit"], "rust",
+             f"{sentinel} fn import")
+            for r in keys
+        ],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+
+
+def _jobs(spark, group, call):
+    """(call(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_one_job_per_point_search(spark, eng, shapes, tag):
+    for name, q in shapes.items():
+        hits, n_ids = _jobs(
+            spark, f"{tag}:docids:{name}", lambda: eng.search_docids(q)
+        )
+        assert hits, name
+        assert n_ids == 1, (name, n_ids)
+        ext, n_ext = _jobs(
+            spark, f"{tag}:search:{name}", lambda: eng.search(q)
+        )
+        assert len(ext) == len(hits)
+        assert n_ext == 0, (name, n_ext)
+
+
+def test_loaded_upsert_never_decodes_the_store(spark, built, loaded,
+                                               monkeypatch):
+    """An upsert on a warmed loaded engine blockifies only the new rows:
+    the block store is never decoded, and the engine it returns stays
+    in serving form."""
+    import frankensearch_spark.operators.serving_exec as SE
+    from frankensearch_spark.operators.wand import ServingIndex
+
+    eng = _fresh(loaded).warm()
+
+    def no_decode(*_a, **_k):
+        raise AssertionError("upsert decoded the block store")
+
+    monkeypatch.setattr(SE, "blocks_to_postings", no_decode)
+    up = eng.upsert(_replace_batch(spark, built, "nodecode_sentinel"))
+    assert isinstance(up.index, ServingIndex)
+    assert len(up.search_docids("nodecode_sentinel", limit=10)) == 3
+
+
+def test_upserted_loaded_engine_is_warm_and_one_job(spark, built, loaded):
+    """The engine upsert() returns is warm at birth (warm() runs no job),
+    and every bounded point shape, plus the sentinel-marker search, is
+    ONE Spark job in search_docids() and none more in search()."""
+    from tests.test_engine import POINT_SHAPES
+
+    up = _fresh(loaded).warm().upsert(
+        _replace_batch(spark, built, "warmbirth_sentinel")
+    )
+    _, n_warm = _jobs(spark, "upserted:warm", up.warm)
+    assert n_warm == 0
+    shapes = dict(POINT_SHAPES, marker="warmbirth_sentinel")
+    _assert_one_job_per_point_search(spark, up, shapes, "upserted")
+    assert len(up.search("warmbirth_sentinel", limit=10)) == 3
+
+
+def test_deleted_loaded_engine_stays_one_job(spark, loaded):
+    """Tombstones no longer push a loaded engine off the one-job lane:
+    the deleted docids drop in-process from the preloaded set."""
+    from tests.test_engine import POINT_SHAPES
+
+    eng = _fresh(loaded).warm()
+    victims = [int(d) for d, _ in eng.search_docids("fn import", limit=2)]
+    gone = eng.delete_documents(victims)
+    _assert_one_job_per_point_search(spark, gone, POINT_SHAPES, "deleted")
+    for q in POINT_SHAPES.values():
+        assert not set(victims) & {
+            int(d) for d, _ in gone.search_docids(q, limit=50)
+        }, q

@@ -112,3 +112,96 @@ def test_lifecycle_sequence_fuzz(spark, tmp_path, seed):
             # compact steps then run against the serving->built
             # reconstruction path, pinning its bit-parity in sequence
             eng = loaded
+
+
+@pytest.mark.parametrize("seed", [7, 1301])
+def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed):
+    """The seeded delete / upsert / compact / save+load sequence on a
+    built engine and on its saved-then-loaded twin, in lockstep: after
+    every step both answer every query bit-equal (docids and f32 score
+    bits), the twin through point search and search_batch alike.  A loaded twin's upsert stays in serving form, and a
+    post-upsert query forced through the θ path (min_cost=0) equals the
+    exhaustive answer — the MaxScore bounds stay conservative after the
+    upsert moved avgdl.  The sequence ends with one more save+load (if
+    the twin left serving form) and upsert, so that check always runs."""
+    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import ServingIndex, wand_bits
+
+    rng = random.Random(seed)
+    corpus = synthetic_corpus_df(spark, N_DOCS, partitions=3)
+    path = str(tmp_path / f"twin{seed}")
+    eng = FrankensearchSpark.build(corpus, CORPUS_KEY)
+    eng.save(path)
+    pair = {"eng": eng, "twin": FrankensearchSpark.load(spark, path)}
+
+    def lockstep(tag):
+        twin = pair["twin"]
+        # the batch runs first, on its own snapshot cache: each point
+        # search below then really executes on a fresh engine object
+        batched = twin.search_batch(QUERIES, limit=K)
+        point = FrankensearchSpark(twin.index, twin.key_cols,
+                                   schema=twin.schema)
+        for q, hits in zip(QUERIES, batched):
+            want = _bits(pair["eng"].search_docids(q, limit=K))
+            assert _bits(point.search_docids(q, limit=K)) == want, (tag, q)
+            assert _bits(hits) == want, ("batch", tag, q)
+
+    def upsert(step):
+        sentinel = f"twinsentinel{seed}s{step}"
+        keys = pair["eng"].index.docmeta.select(*CORPUS_KEY).limit(
+            40
+        ).collect()
+        picked = rng.sample(keys, min(4, len(keys)))
+        batch = spark.createDataFrame(
+            [
+                (r["repo"], r["path"], r["commit"], "rust",
+                 f"{sentinel} fn common_fuzz_term")
+                for r in picked
+            ],
+            "repo string, path string, commit string, lang string, "
+            "content string",
+        )
+        was_serving = pair["twin"]._is_serving()
+        for side in pair:
+            pair[side] = pair[side].upsert(batch)
+        twin = pair["twin"]
+        assert twin._is_serving() == was_serving
+        assert len(twin.search_docids(sentinel, limit=10)) == len(picked)
+        if was_serving:
+            assert isinstance(twin.index, ServingIndex)
+            spec = QuerySpec.from_text(f"{sentinel} fn import")
+            assert wand_bits(twin.index, spec, K, min_cost=0) == (
+                wand_bits(twin.index, spec, K, prune=False)
+            ), step
+
+    def saveload(step):
+        for side in pair:
+            p = str(tmp_path / f"twin{seed}_{step}_{side}")
+            pair[side].save(p)
+            pair[side] = FrankensearchSpark.load(spark, p)
+
+    lockstep("load")
+    for step in range(6):
+        op = rng.choice(["delete", "upsert", "compact", "saveload"])
+        if op == "delete":
+            pool = [
+                int(d)
+                for d, _ in pair["eng"].search_docids("fn import", limit=K + 4)
+            ]
+            if not pool:
+                continue
+            victims = sorted(rng.sample(pool, min(3, len(pool))))
+            for side in pair:
+                pair[side] = pair[side].delete_documents(victims)
+        elif op == "upsert":
+            upsert(step)
+        elif op == "compact":
+            for side in pair:
+                pair[side] = pair[side].compact()
+        else:
+            saveload(step)
+        lockstep((op, step))
+    if not pair["twin"]._is_serving():
+        saveload("end")
+    upsert("end")
+    lockstep(("upsert", "end"))

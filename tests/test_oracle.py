@@ -89,3 +89,17 @@ def test_corpus_determinism():
     h1 = idx.search_bits("fn import term00000", k=10)
     h2 = OracleIndex(b).search_bits("fn import term00000", k=10)
     assert h1 == h2
+
+
+def test_expand_glob_default_cap_and_unlimited_none(monkeypatch):
+    """expand_glob caps at the pinned GLOB_EXPANSION_LIMIT by default;
+    limit=None returns every match; an int caps at that many."""
+    import frankensearch_spark.query_ast as Q
+
+    monkeypatch.setattr(Q, "GLOB_EXPANSION_LIMIT", 3)
+    idx = OracleIndex([(0, "gx01 gx02 gx03 gx04 gx05 other")])
+    assert idx.expand_glob("gx*") == ["gx01", "gx02", "gx03"]
+    assert idx.expand_glob("gx*", limit=None) == [
+        "gx01", "gx02", "gx03", "gx04", "gx05",
+    ]
+    assert idx.expand_glob("gx*", limit=2) == ["gx01", "gx02"]
