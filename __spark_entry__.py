@@ -21,10 +21,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build the inverted index over sf0.001 documents and serve
     a top-10 BM25 query through the rank-exact f32 scorer."""
     from frankensearch_spark.driver_queries import documents_index
-    from frankensearch_spark.operators.query import QuerySpec, topk
+    from frankensearch_spark.operators.astexec import topk_ast
 
     idx = documents_index(spark, "/root/testdata/sf0.001")
-    return topk(idx, QuerySpec.from_text("key order merge"), k=10)
+    return topk_ast(idx, "key order merge", k=10)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -123,8 +123,8 @@ def main() -> None:
     )
     n_build = max(min(n_build, 2_000_000), n_docs)
 
+    from frankensearch_spark.operators.astexec import topk_ast
     from frankensearch_spark.operators.build import build_index
-    from frankensearch_spark.operators.query import QuerySpec, topk
     from frankensearch_spark.plans.manifest import write_index
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY
@@ -206,10 +206,9 @@ def main() -> None:
     queries: dict[str, float] = {}
     lat: list[float] = []
     for name, text in BENCH_QUERIES.items():
-        spec = QuerySpec.from_text(text)
-        topk(idx, spec, k=10).collect()  # warm (plan compile)
+        topk_ast(idx, text, k=10).collect()  # warm (plan compile)
         t0 = time.perf_counter()
-        topk(idx, spec, k=10).collect()
+        topk_ast(idx, text, k=10).collect()
         secs = time.perf_counter() - t0
         queries[name] = round(secs, 4)
         lat.append(secs)
@@ -303,7 +302,6 @@ def main() -> None:
     # per-class p50 over the frozen query set (AST path: booleans,
     # phrases, globs all supported); classes come from the Q2 classifier
     # (query_class.rs heuristics), not hand labels
-    from frankensearch_spark.operators.astexec import topk_ast
     from frankensearch_spark.query_class import perf_class
 
     by_class: dict[str, list[float]] = {}

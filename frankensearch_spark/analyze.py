@@ -127,11 +127,6 @@ def tokenize_fast(text: str) -> list[tuple[str, int]]:
     return out
 
 
-def tokenize_terms(text: str) -> list[str]:
-    """Terms only (no positions) — for df/tf aggregation paths."""
-    return [t for t, _ in tokenize_fast(text)]
-
-
 # --- code-aware extension (north-star addition; NOT in the Tantivy parity
 # path — gate with code_aware=True).  snake_case already splits in the
 # default analyzer ('_' is non-alphanumeric); this stage adds camelCase /

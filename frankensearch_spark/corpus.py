@@ -116,6 +116,18 @@ def corpus_docs(n_docs: int, seed: int = 42, zipf_s: float = ZIPF_EXPONENT):
     return [(docid, rows[i][4]) for docid, i in enumerate(ordered)]
 
 
+def multifield_docs(n_docs: int, seed: int = 42):
+    """(docid, {"content": ..., "title": ...}) pairs: the same corpus as a
+    two-field one whose ``title`` is the document's path; docids as in
+    :func:`corpus_docs`."""
+    rows = make_corpus(n_docs, seed)
+    ordered = sorted(range(len(rows)), key=lambda i: rows[i][:3])
+    return [
+        (docid, {"content": rows[i][4], "title": rows[i][1]})
+        for docid, i in enumerate(ordered)
+    ]
+
+
 # Frozen query set — 16 per class shape of QG-6 (FIXTURES.md §2), adapted to
 # the corpus vocabulary; includes guaranteed-miss controls.
 FROZEN_QUERIES = {

@@ -9,9 +9,12 @@ re-expressed over the Spark index:
     eng = eng.delete_documents([...]).compact()
     eng.save(path) / FrankensearchSpark.load(spark, path)
 
-Exhaustive scorer by default (rank/bit-exact vs the numpy oracle); the
-compressed block-max WAND path serves via :meth:`serving` for flat
-bag-of-words queries.
+An in-session ``build()`` engine serves through the exhaustive scorer
+(``operators/astexec.py``, rank/bit-exact vs the numpy oracle).  An engine
+from :meth:`FrankensearchSpark.load` (or ``upsert()`` on one) serves the
+compressed block store: flat bag-of-words shapes through block-max WAND,
+the rest through the batch executor's bucket lane — one Spark job per
+warmed point search (``operators/serving_exec.py``).
 """
 
 from __future__ import annotations
@@ -471,13 +474,8 @@ class FrankensearchSpark:
         ]
 
     def count(self, query: str) -> int:
-        """exact_count collector variant (E9)."""
-        if self._is_serving():
-            from frankensearch_spark.operators.serving_exec import (
-                serving_score_ast,
-            )
-
-            return serving_score_ast(self.index, query, self.schema).count()
+        """exact_count collector variant (E9): the exhaustive scorer's
+        match count, over either index form."""
         from frankensearch_spark.operators.astexec import score_ast
 
         return score_ast(self.index, query, self.schema).count()

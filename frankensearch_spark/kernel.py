@@ -1,8 +1,11 @@
 """Shared AST scoring kernel — ONE numpy implementation for both sides.
 
 The oracle (:mod:`frankensearch_spark.oracle`) evaluates it over dense
-full-corpus arrays; the Spark path (:mod:`operators.astexec`) evaluates it
-inside a pandas UDF over candidate-row batches.  Because both call the
+full-corpus arrays; the Spark executors evaluate it over candidate
+batches — the exhaustive scorer (:mod:`operators.astexec`, both index
+forms) over pivoted candidate rows inside a ``mapInPandas`` pass, the
+batch executor's bucket lane (:mod:`operators.batchexec`) over dense
+per-bucket spans of decoded blocks.  Because both sides call the
 same f32 code, rank- and bit-parity between Spark and the oracle hold by
 construction; the pytest suite still asserts them explicitly.
 

@@ -1,11 +1,28 @@
-"""Spark execution of parsed query trees (SURVEY.md Q1-Q5, E1-E2, E7-E9).
+"""Exhaustive execution of parsed query trees (SURVEY.md Q1-Q5, E1-E2,
+E7-E9) — the one decode-and-score plan for every index form: in-session
+``BuiltIndex`` / ``MultiFieldIndex`` and durable ``ServingIndex`` /
+``ServingMultiIndex``.
 
-The plan keeps every relational step declarative — per-field posting-table
+The plan keeps every relational step declarative — per-field posting
 filters by the query's terms (partition-prunable), one pivot shuffle per
-queried field, an optional positions join for phrase clauses — and runs
-the *scoring* through the same numpy kernel the oracle uses
+queried field, a positions pivot for phrase clauses — and runs the
+*scoring* through the same numpy kernel the oracle uses
 (:mod:`frankensearch_spark.kernel`), inside one ``mapInPandas`` pass.
 Rank/bit parity with the oracle is therefore structural, not coincidental.
+
+Each piece exists once, and the batch executor's pivot lane reuses them:
+
+* :func:`prepare_query` — parse, glob expansion, the metadata-field and
+  per-field positions capability checks;
+* :func:`_field_postings` — the per-field posting source, the only code
+  that knows the index form: a built field filters its posting frames and
+  carries ``doclen``; a serving field decodes its candidate blocks
+  (:func:`serving_exec.field_postings`) and carries ``fieldnorm_id``;
+* :func:`candidates` — one tf/positions pivot per queried field
+  (:func:`_field_pivot`), the full-outer field join, the docmeta join for
+  All/metadata shapes, the tombstone anti-join;
+* :meth:`Layout.context` — a pandas batch of that frame as the kernel's
+  ``FieldView``/``EvalContext``.
 
 Multi-field queries (the reference's default ``content^1 + title^2``
 expansion, quill/index.rs:11168-11191) join the per-field candidate
@@ -21,24 +38,28 @@ exactly like the reference's lowering.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from frankensearch_spark.contract import compute_avgdl, compute_tf_cache
-from frankensearch_spark.operators.build import BuiltIndex
+from frankensearch_spark.operators.wand import _wand_fields
 from frankensearch_spark.query_ast import (
     ENGINE_SCHEMA,
     KEYWORD,
     MUST,
     MUST_NOT,
     NUMERIC,
+    TEXT,
     Boolean,
     Boost,
     Clause,
     ParserSchema,
+    Phrase,
     Query,
     RangeI64,
     RangeStr,
@@ -56,21 +77,13 @@ from frankensearch_spark.query_ast import (
 )
 
 
-def _field_indexes(index) -> tuple[dict[str, BuiltIndex], BuiltIndex]:
-    # duck-typed so the serving twins (ServingIndex / ServingMultiIndex)
-    # share glob expansion: anything with .fields is multi-field
-    if hasattr(index, "fields"):
-        return index.fields, index.primary
-    return {"content": index}, index
-
-
 def expand_globs(index, ast: Query) -> Query:
     globs = collect_globs(ast)
     if not globs:
         return ast
-    from frankensearch_spark.query_ast import KEYWORD, TEXT, Glob
+    from frankensearch_spark.query_ast import Glob
 
-    fidx, _primary = _field_indexes(index)
+    fidx, _primary = _wand_fields(index)
     expansion = {}
     for g in globs:
         names = [
@@ -188,52 +201,83 @@ def _as_ast(query, schema: ParserSchema = ENGINE_SCHEMA) -> Query:
     return query
 
 
-def score_ast(index, query, schema: ParserSchema = ENGINE_SCHEMA) -> DataFrame:
-    """(docid, score) for every matching document of a parsed query tree."""
-    fidx, primary = _field_indexes(index)
-    spark = primary.postings.sparkSession
-    out_schema = T.StructType(
-        [
-            T.StructField("docid", T.LongType()),
-            T.StructField("score", T.FloatType()),
-        ]
-    )
-    empty = spark.createDataFrame([], out_schema)
+def _phrase_fields(ast) -> list[str]:
+    """TEXT field names referenced by position-requiring (Phrase)
+    leaves only — the scope of the positions capability check."""
+    out: list[str] = []
 
+    def collect(node) -> None:
+        if isinstance(node, Phrase):
+            for f in node.fields:
+                if f.kind == TEXT and f.name not in out:
+                    out.append(f.name)
+        elif isinstance(node, Boolean):
+            for c in node.clauses:
+                collect(c.query)
+        elif isinstance(node, Boost):
+            collect(node.query)
+
+    collect(ast)
+    return out
+
+
+@dataclass
+class PreparedQuery:
+    """One query after the prologue; ``qid`` is its position in a batch.
+    The batch pivot lane also builds one over the UNION of its queries
+    (``ast`` None) to assemble their shared candidates."""
+
+    qid: int
+    ast: Query | None
+    terms: list[str]
+    qfields: list[str]
+    has_all: bool
+    phrase_terms: list[str] = field(default_factory=list)
+    meta_fields: list[str] = field(default_factory=list)
+    pfields: list[str] = field(default_factory=list)  # fields of phrase leaves
+
+
+def prepare_query(index, query, schema: ParserSchema = ENGINE_SCHEMA,
+                  qid: int = 0, where: str = "") -> PreparedQuery | None:
+    """The prologue of every exhaustive execution: parse, glob expansion,
+    the metadata-field check and the positions check.  None when nothing
+    can score (no text leaf and no All node).
+
+    The positions check covers only the fields of PHRASE leaves
+    (query.rs:699-752 checks per-field capability): a positions-less
+    field queried by plain terms must not reject the query — in a batch,
+    one such false rejection would abort the whole batch.  ``where``
+    suffixes error messages (the batch names the query)."""
+    fidx, primary = _wand_fields(index)
     ast = expand_globs(index, _as_ast(query, schema))
     leaves = walk_leaf_terms(ast)
     has_all = contains_all_node(ast)
-    meta_fields = walk_metadata_fields(ast)
+    meta_fields = list(walk_metadata_fields(ast))
     for mf in meta_fields:
         if mf not in primary.docmeta.columns:
             raise ValueError(
-                f"metadata field {mf!r} not present in docmeta"
+                f"metadata field {mf!r} not present in docmeta{where}"
             )  # capability validation (query.rs:699-752)
-    if not leaves and not has_all:
-        return empty
-
     terms = [t for t, _ in leaves]
+    if not terms and not has_all:
+        return None
     phrase_terms = [t for t, needs_pos in leaves if needs_pos]
+    pfields = _phrase_fields(ast) if phrase_terms else []
+    for f in pfields:
+        if f in fidx and not _has_positions(fidx[f]):
+            raise ValueError(
+                f"phrase query on field {f!r} without positions "
+                f"(build or save it with with_positions=True){where}"
+            )
     qfields = [f for f in walk_text_fields(ast) if f in fidx]
-    from frankensearch_spark.operators.serving_exec import _phrase_fields
+    return PreparedQuery(
+        qid, ast, terms, qfields, has_all, phrase_terms, meta_fields, pfields
+    )
 
-    pfields = set(_phrase_fields(ast))
-    if phrase_terms:
-        # scoped to the fields of PHRASE leaves only (query.rs:699-752
-        # checks per-field capability): a positions-less field queried
-        # by plain terms must not reject a query whose phrases never
-        # touch it — the serving_exec/batchexec rule
-        for f in pfields:
-            if f in fidx and fidx[f].positions is None:
-                raise ValueError(
-                    f"phrase query on field {f!r} built with with_positions=False"
-                )
 
-    doc_count, _tt = primary.stats()
-    if doc_count == 0:
-        return empty
-
-    # per-field snapshot statistics: df map + tf cache (field avgdl)
+def field_stats(fidx, qfields, terms, doc_count: int):
+    """Per-field snapshot statistics: (field -> df map, field -> tf cache
+    from that field's own avgdl)."""
     field_df: dict[str, dict[str, int]] = {}
     field_cache: dict[str, np.ndarray] = {}
     for f in qfields:
@@ -241,136 +285,210 @@ def score_ast(index, query, schema: ParserSchema = ENGINE_SCHEMA) -> DataFrame:
         field_df[f] = sub.df_of_terms(terms)
         _n, total_tokens = sub.stats()
         field_cache[f] = compute_tf_cache(compute_avgdl(total_tokens, doc_count))
+    return field_df, field_cache
 
-    # candidate assembly: one pivot per queried field, full-outer joined
+
+class FieldPostings(NamedTuple):
+    """One field's posting rows for the query terms, as the pivot takes
+    them: ``frame`` has (docid, <norm>, term, tf) columns, ``norm`` names
+    its length column — ``doclen`` (built) or ``fieldnorm_id``
+    (serving) — and ``positions`` is the (docid, term, positions) frame
+    the phrase pivot reads, or None.  ``fused``: ``frame`` itself
+    carries positions, so one pivot takes tf and positions together."""
+
+    frame: DataFrame
+    norm: str
+    positions: DataFrame | None
+    fused: bool = False
+
+
+def _has_positions(sub) -> bool:
+    if hasattr(sub, "blocks"):
+        return sub.has_positions
+    return sub.positions is not None
+
+
+def _field_postings(sub, f: str, q: PreparedQuery, field_df,
+                    root) -> FieldPostings:
+    """The per-field posting source — the only code that knows the
+    index form.  ``root``: the single query's tree, for the serving
+    form's root-phrase candidate restriction (None in a batch)."""
+    if hasattr(sub, "blocks"):
+        from frankensearch_spark.operators.serving_exec import field_postings
+
+        return field_postings(sub, f, q.terms, q.phrase_terms, field_df, root)
+    full = getattr(sub, "postings_full", None)
+    if q.phrase_terms and full is not None and set(q.terms) <= set(q.phrase_terms):
+        # pure-phrase query: ONE pivot over the fused frame carries
+        # tf AND positions together — no second shuffle, no join
+        return FieldPostings(
+            full.filter(F.col("term").isin(q.terms)), "doclen", None, True
+        )
+    # positions only for fields a phrase leaf touches: a plain-term-only
+    # field never reads them, and one built without positions has no
+    # positions frame at all (prepare_query guarantees pfields do)
+    return FieldPostings(
+        sub.postings.filter(F.col("term").isin(q.terms)),
+        "doclen",
+        sub.positions if f in q.pfields else None,
+    )
+
+
+@dataclass
+class _FieldCols:
+    """Where one field's cells sit in a candidate batch, and the stats
+    they score with.  ``doclen``: the norm column holds doclen (built
+    form), not a fieldnorm id."""
+
+    df: dict
+    tf_cache: np.ndarray
+    basic: bool
+    tf: dict = field(default_factory=dict)
+    pos: dict = field(default_factory=dict)
+    norm: str | None = None
+    doclen: bool = False
+
+
+@dataclass
+class Layout:
+    """The column layout of a candidate frame (:func:`candidates`)."""
+
+    doc_count: int
+    meta: list[str]
+    fields: dict = field(default_factory=dict)  # name -> _FieldCols
+
+    def context(self, pdf: pd.DataFrame):
+        """The kernel's EvalContext over one pandas batch of candidates."""
+        from frankensearch_spark.contract import fieldnorm_to_id
+        from frankensearch_spark.kernel import EvalContext, FieldView
+
+        n = len(pdf)
+
+        def dense(col: str, dtype) -> np.ndarray:
+            return np.nan_to_num(
+                pdf[col].to_numpy(dtype=np.float64), nan=0.0
+            ).astype(dtype)
+
+        views = {}
+        for f, c in self.fields.items():
+            if c.norm is None:
+                fnid = np.zeros(n, dtype=np.int64)
+            else:
+                fnid = dense(c.norm, np.int64)
+                if c.doclen:
+                    fnid = fieldnorm_to_id(fnid).astype(np.int64)
+            views[f] = FieldView(
+                n=n,
+                fieldnorm_id=fnid,
+                tf={t: dense(col, np.float32) for t, col in c.tf.items()},
+                positions={
+                    t: pdf[col].to_numpy(dtype=object)
+                    for t, col in c.pos.items()
+                },
+                df=c.df,
+                tf_cache=c.tf_cache,
+                basic=c.basic,
+            )
+        return EvalContext(
+            n=n,
+            views=views,
+            doc_count=self.doc_count,
+            meta={m: pdf[m].to_numpy(dtype=object) for m in self.meta},
+        )
+
+
+def _field_pivot(src: FieldPostings, fi: int, terms, phrase_terms,
+                 cols: _FieldCols) -> DataFrame:
+    """The per-field pivot: one row per candidate docid with the norm
+    column ``nm{fi}``, tf columns ``f{fi}t{j}`` and, for phrase terms,
+    positions columns ``f{fi}p{j}``; the names land in ``cols``."""
+    tcols = [f"f{fi}t{j}" for j in range(len(terms))]
+    cols.tf = dict(zip(terms, tcols))
+    cols.norm = f"nm{fi}"
+    cols.doclen = src.norm == "doclen"
+    grouped = src.frame.groupBy("docid", src.norm).pivot("term", terms)
+    if src.fused:
+        pcols = [f"f{fi}p{j}" for j in range(len(terms))]
+        cols.pos = dict(zip(terms, pcols))
+        names = [c for pair in zip(tcols, pcols) for c in pair]
+        return grouped.agg(
+            F.first("tf").alias("t"), F.first("positions").alias("p")
+        ).toDF("docid", cols.norm, *names)
+    pivot = grouped.agg(F.first("tf")).toDF("docid", cols.norm, *tcols)
+    if src.positions is None:
+        return pivot
+    pcols = [f"f{fi}p{j}" for j in range(len(phrase_terms))]
+    cols.pos = dict(zip(phrase_terms, pcols))
+    ppivot = (
+        src.positions.filter(F.col("term").isin(phrase_terms))
+        .groupBy("docid")
+        .pivot("term", phrase_terms)
+        .agg(F.first("positions"))
+        .toDF("docid", *pcols)
+    )
+    return pivot.join(ppivot, "docid", "left")
+
+
+def candidates(fidx, primary, q: PreparedQuery, schema: ParserSchema,
+               doc_count: int, root=None):
+    """Candidate assembly: one pivot per queried field, full-outer joined
+    on docid, the docmeta join for All/metadata shapes and the tombstone
+    anti-join.  Returns (frame, :class:`Layout`), or None when nothing can
+    score (every text leaf names a field absent from this index)."""
+    field_df, field_cache = field_stats(fidx, q.qfields, q.terms, doc_count)
+    basic_of = {fl.name: getattr(fl, "basic", False) for fl in schema.fields}
+    layout = Layout(doc_count, list(q.meta_fields))
     base: DataFrame | None = None
-    tf_col: dict[tuple[str, str], str] = {}
-    pos_col: dict[tuple[str, str], str] = {}
-    dl_col: dict[str, str] = {}
-    for fi, f in enumerate(qfields):
-        if not terms:
+    for fi, f in enumerate(q.qfields):
+        cols = _FieldCols(field_df[f], field_cache[f], basic_of.get(f, False))
+        layout.fields[f] = cols
+        if not q.terms:
             continue
-        sub = fidx[f]
-        tcols = [f"f{fi}t{j}" for j in range(len(terms))]
-        dl_col[f] = f"dl{fi}"
-        for j, t in enumerate(terms):
-            tf_col[(f, t)] = tcols[j]
-        full = getattr(sub, "postings_full", None)
-        if (
-            phrase_terms
-            and full is not None
-            and set(terms) <= set(phrase_terms)
-        ):
-            # pure-phrase query: ONE pivot over the fused frame carries
-            # tf AND positions together — no second shuffle, no join
-            names = ["docid", f"dl{fi}"]
-            for j in range(len(terms)):
-                names += [f"f{fi}t{j}", f"f{fi}p{j}"]
-            pivot = (
-                full.filter(F.col("term").isin(terms))
-                .groupBy("docid", "doclen")
-                .pivot("term", terms)
-                .agg(F.first("tf").alias("t"), F.first("positions").alias("p"))
-                .toDF(*names)
-            )
-            for j, t in enumerate(terms):
-                pos_col[(f, t)] = f"f{fi}p{j}"
-        else:
-            pivot = (
-                sub.postings.filter(F.col("term").isin(terms))
-                .groupBy("docid", "doclen")
-                .pivot("term", terms)
-                .agg(F.first("tf"))
-                .toDF("docid", f"dl{fi}", *tcols)
-            )
-            if phrase_terms and f in pfields:
-                # positions pivot only for fields a phrase leaf touches
-                # (pfields): a plain-term-only field never reads
-                # pos_col, and when persisted without positions it has
-                # no positions frame to pivot at all — the scoped
-                # capability check above guarantees pfields members do
-                pcols = [f"f{fi}p{j}" for j in range(len(phrase_terms))]
-                ppivot = (
-                    sub.positions.filter(F.col("term").isin(phrase_terms))
-                    .groupBy("docid")
-                    .pivot("term", phrase_terms)
-                    .agg(F.first("positions"))
-                    .toDF("docid", *pcols)
-                )
-                for j, t in enumerate(phrase_terms):
-                    pos_col[(f, t)] = pcols[j]
-                pivot = pivot.join(ppivot, "docid", "left")
+        src = _field_postings(fidx[f], f, q, field_df, root)
+        pivot = _field_pivot(src, fi, q.terms, q.phrase_terms, cols)
         base = pivot if base is None else base.join(pivot, "docid", "full_outer")
+    if base is None and not q.has_all:
+        return None
 
-    if base is None and not has_all:
-        # every text leaf references a field absent from this index:
-        # nothing can score — empty, not an AttributeError (same guard
-        # as serving_exec)
-        return empty
-
-    extra_meta = [c for c in meta_fields if c not in ("docid", "doclen")]
     # 'doclen' metadata leaves read the PRIMARY field's doclen
-    needs_primary_doclen = "doclen" in meta_fields
-    if has_all:
-        sel = ["docid"] + (["doclen"] if needs_primary_doclen else []) + extra_meta
+    extra = [c for c in q.meta_fields if c not in ("docid", "doclen")]
+    sel = ["docid"] + (["doclen"] if "doclen" in q.meta_fields else []) + extra
+    if q.has_all:
         meta = primary.docmeta.select(*sel)
         base = meta if base is None else meta.join(base, "docid", "left")
-    elif extra_meta or needs_primary_doclen:
-        sel = ["docid"] + (["doclen"] if needs_primary_doclen else []) + extra_meta
+    elif len(sel) > 1:
         base = base.join(primary.docmeta.select(*sel), "docid", "left")
-
     if primary.tombstones is not None:
-        base = base.join(primary.tombstones, "docid", "left_anti")
-    base = apply_metadata_pushdown(base, ast)
+        base = base.join(primary.tombstones.select("docid"), "docid", "left_anti")
+    return base, layout
 
-    ast_b = ast
-    meta_list = list(meta_fields)
-    basic_of = {f.name: getattr(f, "basic", False) for f in schema.fields}
+
+def score_ast(index, query, schema: ParserSchema = ENGINE_SCHEMA) -> DataFrame:
+    """(docid, score) for every matching document of a parsed query tree."""
+    fidx, primary = _wand_fields(index)
+    empty = primary.docmeta.sparkSession.createDataFrame(
+        [], "docid long, score float"
+    )
+    q = prepare_query(index, query, schema)
+    if q is None:
+        return empty
+    doc_count, _tt = primary.stats()
+    if doc_count == 0:
+        return empty
+    cand = candidates(fidx, primary, q, schema, doc_count, root=q.ast)
+    if cand is None:
+        return empty
+    base, layout = cand
+    base = apply_metadata_pushdown(base, q.ast)
+    ast = q.ast
 
     def run(batches):
-        from frankensearch_spark.contract import fieldnorm_to_id
-        from frankensearch_spark.kernel import EvalContext, FieldView, eval_query
+        from frankensearch_spark.kernel import eval_query
 
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            views = {}
-            for f in qfields:
-                tf = {
-                    t: np.nan_to_num(
-                        pdf[c].to_numpy(dtype=np.float64), nan=0.0
-                    ).astype(np.float32)
-                    for (ff, t), c in tf_col.items()
-                    if ff == f
-                }
-                positions = {
-                    t: pdf[c].to_numpy(dtype=object)
-                    for (ff, t), c in pos_col.items()
-                    if ff == f
-                }
-                if f in dl_col:
-                    dl = np.nan_to_num(
-                        pdf[dl_col[f]].to_numpy(dtype=np.float64), nan=0.0
-                    ).astype(np.int64)
-                else:
-                    dl = np.zeros(n, dtype=np.int64)
-                views[f] = FieldView(
-                    n=n,
-                    fieldnorm_id=fieldnorm_to_id(dl).astype(np.int64),
-                    tf=tf,
-                    positions=positions,
-                    df=field_df[f],
-                    tf_cache=field_cache[f],
-                    basic=basic_of.get(f, False),
-                )
-            ctx = EvalContext(
-                n=n,
-                views=views,
-                doc_count=doc_count,
-                meta={m: pdf[m].to_numpy(dtype=object) for m in meta_list},
-            )
-            mask, scores = eval_query(ast_b, ctx)
+            mask, scores = eval_query(ast, layout.context(pdf))
             rows = np.nonzero(mask)[0]
             if rows.size == 0:
                 continue

@@ -35,9 +35,10 @@ Three lanes, unioned before one tiny per-qid window (round 4):
   shape).  Phrase terms decode their pos_bytes sidecar per bucket;
   non-phrase blocks never read it.
 * **pivot lane** — the remainder (in-memory BuiltIndex fields, All
-  nodes, metadata predicates): scans/decodes each queried field's
-  postings ONCE filtered to the union of the lane's terms, pivots
-  candidates ONCE per field, evaluates every query's AST over the
+  nodes, metadata predicates): the exhaustive scorer's candidate
+  assembly (:func:`astexec.candidates`) over the union of the lane's
+  terms — each queried field's postings scanned/decoded ONCE, pivoted
+  ONCE per field — then evaluates every query's AST over the
   shared candidate batch inside one mapInPandas kernel pass with a
   per-query support mask.  Oversized batches are CHUNKED so no single
   pivot exceeds ``BATCH_PIVOT_CAP`` union terms per field — a 5k-query
@@ -65,23 +66,19 @@ north rule's cluster setting implies, not a reference operator.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from frankensearch_spark.contract import compute_avgdl, compute_tf_cache
-from frankensearch_spark.query_ast import (
-    ENGINE_SCHEMA,
-    ParserSchema,
-    Query,
-    contains_all_node,
-    walk_leaf_terms,
-    walk_metadata_fields,
-    walk_text_fields,
+from frankensearch_spark.operators.astexec import (
+    PreparedQuery,
+    candidates,
+    field_stats,
+    prepare_query,
 )
+from frankensearch_spark.operators.wand import _wand_fields
+from frankensearch_spark.query_ast import ENGINE_SCHEMA, ParserSchema
 
 # Max union pivot columns per (chunked) pivot-lane job: past a few
 # hundred explicit pivot values the generated plan/codegen size grows
@@ -89,75 +86,16 @@ from frankensearch_spark.query_ast import (
 BATCH_PIVOT_CAP = 512
 
 
-@dataclass
-class _QuerySpecB:
-    qid: int
-    ast: Query
-    terms: list[str]
-    qfields: list[str]
-    has_all: bool
-    phrase_terms: list[str] = field(default_factory=list)
-    meta_fields: list[str] = field(default_factory=list)
-
-
 def _prepare(index, queries, schema: ParserSchema):
-    """Parse/expand/validate every query; return (fidx, primary, specs)."""
-    from frankensearch_spark.operators.astexec import (
-        _as_ast,
-        _field_indexes,
-        expand_globs,
-    )
-
-    fidx, primary = _field_indexes(index)
-    specs: list[_QuerySpecB] = []
+    """Run the exhaustive scorer's prologue over every query; return
+    (fidx, primary, prepared queries).  A query that cannot score is
+    left out: its single-query execution is empty too."""
+    fidx, primary = _wand_fields(index)
+    specs: list[PreparedQuery] = []
     for qid, q in enumerate(queries):
-        ast = expand_globs(index, _as_ast(q, schema))
-        leaves = walk_leaf_terms(ast)
-        has_all = contains_all_node(ast)
-        meta_fields = walk_metadata_fields(ast)
-        for mf in meta_fields:
-            if mf not in primary.docmeta.columns:
-                raise ValueError(
-                    f"metadata field {mf!r} not present in docmeta "
-                    f"(batch query #{qid})"
-                )
-        terms = [t for t, _ in leaves]
-        if not terms and not has_all:
-            continue  # single-query path returns empty: emit nothing
-        phrase_terms = [t for t, needs_pos in leaves if needs_pos]
-        qfields = [f for f in walk_text_fields(ast) if f in fidx]
-        if phrase_terms:
-            # capability check scoped to the fields of PHRASE leaves
-            # only, the serving_exec/serving_score_ast rule
-            # (query.rs:699-752 checks per-field capability): a
-            # non-phrase field persisted without positions must not
-            # reject a query whose phrases never touch it — and in a
-            # batch, one such false rejection would abort the WHOLE
-            # batch
-            from frankensearch_spark.operators.serving_exec import (
-                _phrase_fields,
-            )
-
-            for f in _phrase_fields(ast):
-                sub = fidx.get(f)
-                if sub is None:
-                    continue
-                has_pos = (
-                    sub.has_positions
-                    if hasattr(sub, "has_positions")
-                    else sub.positions is not None
-                )
-                if not has_pos:
-                    raise ValueError(
-                        f"phrase query on field {f!r} without positions "
-                        f"(batch query #{qid})"
-                    )
-        specs.append(
-            _QuerySpecB(
-                qid, ast, terms, qfields, has_all,
-                phrase_terms, list(meta_fields),
-            )
-        )
+        s = prepare_query(index, q, schema, qid, f" (batch query #{qid})")
+        if s is not None:
+            specs.append(s)
     return fidx, primary, specs
 
 
@@ -179,7 +117,7 @@ def _stream_lane_split(index, fidx, primary, specs, doc_count):
     if not serving or index.tombstones is not None:
         return [], list(specs)
     stream: list[tuple[int, str, str, np.float32]] = []
-    rest: list[_QuerySpecB] = []
+    rest: list[PreparedQuery] = []
     for s in specs:
         if s.has_all or s.phrase_terms or s.meta_fields:
             rest.append(s)
@@ -243,13 +181,8 @@ def _stream_lane_scored(fidx, primary, stream_clauses, k: int) -> DataFrame:
     for qid, fname, t, w in stream_clauses:
         by_field.setdefault(fname, set()).add(t)
         clause_queries.setdefault((fname, t), []).append((qid, w))
-    field_caches = {}
     doc_count, _tt = primary.stats()
-    for fname in by_field:
-        _n, total_tokens = fidx[fname].stats()
-        field_caches[fname] = compute_tf_cache(
-            compute_avgdl(total_tokens, doc_count)
-        )
+    _df, field_caches = field_stats(fidx, list(by_field), [], doc_count)
 
     cand = None
     for fname, terms in by_field.items():
@@ -319,8 +252,8 @@ def _bucket_lane_split(fidx, specs):
     node, no metadata predicates.  Phrases, MustNot, boosts, ranges over
     TEXT fields and multi-field scopes all evaluate through the shared
     kernel from bucket-local dense views, so they stay in-lane."""
-    bucket: list[_QuerySpecB] = []
-    pivot: list[_QuerySpecB] = []
+    bucket: list[PreparedQuery] = []
+    pivot: list[PreparedQuery] = []
     for s in specs:
         ok = (
             bool(s.qfields)
@@ -372,15 +305,7 @@ def _bucket_lane_kernel(
     if not terms or not qfields:
         return None
 
-    field_df: dict[str, dict[str, int]] = {}
-    field_cache: dict[str, np.ndarray] = {}
-    for f in qfields:
-        sub = fidx[f]
-        field_df[f] = sub.df_of_terms(terms)
-        _n, total_tokens = sub.stats()
-        field_cache[f] = compute_tf_cache(
-            compute_avgdl(total_tokens, doc_count)
-        )
+    field_df, field_cache = field_stats(fidx, qfields, terms, doc_count)
 
     cand: DataFrame | None = None
     base_cols = (
@@ -611,8 +536,8 @@ def _chunk_by_union_terms(specs, cap: int):
     single query with more terms than cap gets its own chunk — its
     width is irreducible).  Order-preserving; chunking never changes
     results, only plan width."""
-    chunks: list[list[_QuerySpecB]] = []
-    cur: list[_QuerySpecB] = []
+    chunks: list[list[PreparedQuery]] = []
+    cur: list[PreparedQuery] = []
     cur_terms: set[str] = set()
     for s in specs:
         st = set(s.terms)
@@ -628,175 +553,40 @@ def _chunk_by_union_terms(specs, cap: int):
 
 def _pivot_lane_scored(
     fidx, primary, specs, schema: ParserSchema, k: int, doc_count: int,
-    tombstones,
 ) -> DataFrame | None:
-    """The shared-pivot kernel lane over one chunk of specs — the
-    round-3 batch plan, unchanged in shape: union-term pruned scan, one
-    pivot per field, one mapInPandas kernel pass with per-query support
-    masks, per-partition local top-k per query."""
-    u_terms: set[str] = set()
-    u_phrase: set[str] = set()
-    u_fields: set[str] = set()
-    u_meta: set[str] = set()
-    for s in specs:
-        u_terms.update(s.terms)
-        u_phrase.update(s.phrase_terms)
-        u_fields.update(s.qfields)
-        u_meta.update(s.meta_fields)
-
-    terms = sorted(u_terms)
-    phrase_terms = sorted(u_phrase)
-    qfields = [f for f in fidx if f in u_fields]
-    has_all_any = any(s.has_all for s in specs)
-
-    field_df: dict[str, dict[str, int]] = {}
-    field_cache: dict[str, np.ndarray] = {}
-    for f in qfields:
-        sub = fidx[f]
-        field_df[f] = sub.df_of_terms(terms)
-        _n, total_tokens = sub.stats()
-        field_cache[f] = compute_tf_cache(
-            compute_avgdl(total_tokens, doc_count)
-        )
-
-    base: DataFrame | None = None
-    tf_col: dict[tuple[str, str], str] = {}
-    pos_col: dict[tuple[str, str], str] = {}
-    norm_col: dict[str, str] = {}
-    serving_field: dict[str, bool] = {}
-    for fi, f in enumerate(qfields):
-        if not terms:
-            continue
-        sub = fidx[f]
-        is_serving = hasattr(sub, "blocks")
-        serving_field[f] = is_serving
-        tcols = [f"f{fi}t{j}" for j in range(len(terms))]
-        for j, t in enumerate(terms):
-            tf_col[(f, t)] = tcols[j]
-        norm_col[f] = f"nm{fi}"
-        if is_serving:
-            from frankensearch_spark.operators.serving_exec import (
-                blocks_to_postings,
-            )
-
-            postings = blocks_to_postings(
-                sub, terms, with_positions=bool(phrase_terms)
-            )
-            pivot = (
-                postings.groupBy("docid", "fieldnorm_id")
-                .pivot("term", terms)
-                .agg(F.first("tf"))
-                .toDF("docid", f"nm{fi}", *tcols)
-            )
-            pos_src = postings
-        else:
-            pivot = (
-                sub.postings.filter(F.col("term").isin(terms))
-                .groupBy("docid", "doclen")
-                .pivot("term", terms)
-                .agg(F.first("tf"))
-                .toDF("docid", f"nm{fi}", *tcols)
-            )
-            pos_src = sub.positions
-        if phrase_terms and pos_src is not None:
-            pcols = [f"f{fi}p{j}" for j in range(len(phrase_terms))]
-            ppivot = (
-                pos_src.filter(F.col("term").isin(phrase_terms))
-                .groupBy("docid")
-                .pivot("term", phrase_terms)
-                .agg(F.first("positions"))
-                .toDF("docid", *pcols)
-            )
-            for j, t in enumerate(phrase_terms):
-                pos_col[(f, t)] = pcols[j]
-            pivot = pivot.join(ppivot, "docid", "left")
-        base = (
-            pivot if base is None else base.join(pivot, "docid", "full_outer")
-        )
-
-    if base is None and not has_all_any:
+    """The shared-pivot kernel lane over one chunk of specs: the
+    exhaustive scorer's candidate assembly (``astexec.candidates``) over
+    the union of the chunk's terms, fields and metadata columns, then one
+    mapInPandas kernel pass with per-query support masks and a
+    per-partition local top-k per query."""
+    union = PreparedQuery(
+        qid=-1,
+        ast=None,
+        terms=sorted({t for s in specs for t in s.terms}),
+        qfields=[f for f in fidx if any(f in s.qfields for s in specs)],
+        has_all=any(s.has_all for s in specs),
+        phrase_terms=sorted({t for s in specs for t in s.phrase_terms}),
+        meta_fields=sorted({m for s in specs for m in s.meta_fields}),
+        pfields=sorted({f for s in specs for f in s.pfields}),
+    )
+    cand = candidates(fidx, primary, union, schema, doc_count)
+    if cand is None:
         return None
-
-    extra_meta = [c for c in u_meta if c not in ("docid", "doclen")]
-    needs_doclen = "doclen" in u_meta
-    if has_all_any:
-        sel = ["docid"] + (["doclen"] if needs_doclen else []) + sorted(
-            extra_meta
-        )
-        meta = primary.docmeta.select(*sel)
-        base = meta if base is None else meta.join(base, "docid", "left")
-    elif extra_meta or needs_doclen:
-        sel = ["docid"] + (["doclen"] if needs_doclen else []) + sorted(
-            extra_meta
-        )
-        base = base.join(primary.docmeta.select(*sel), "docid", "left")
-    if tombstones is not None:
-        base = base.join(
-            tombstones.select("docid"), "docid", "left_anti"
-        )
     # no metadata pushdown in batch: different queries carry different
     # predicates; the kernel re-checks every metadata leaf, so pushdown
     # is purely a single-query optimization
-
-    meta_list = sorted(u_meta)
-    basic_of = {fl.name: getattr(fl, "basic", False) for fl in schema.fields}
+    base, layout = cand
     specs_b = list(specs)
-    qfields_b = list(qfields)
     k_b = int(k)
 
     def run(batches):
-        from frankensearch_spark.contract import fieldnorm_to_id
-        from frankensearch_spark.kernel import (
-            EvalContext,
-            FieldView,
-            eval_query,
-        )
+        from frankensearch_spark.kernel import eval_query
 
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            views = {}
-            for f in qfields_b:
-                tf = {
-                    t: np.nan_to_num(
-                        pdf[c].to_numpy(dtype=np.float64), nan=0.0
-                    ).astype(np.float32)
-                    for (ff, t), c in tf_col.items()
-                    if ff == f
-                }
-                positions = {
-                    t: pdf[c].to_numpy(dtype=object)
-                    for (ff, t), c in pos_col.items()
-                    if ff == f
-                }
-                nm = norm_col.get(f)
-                if nm is not None and nm in pdf.columns:
-                    raw = np.nan_to_num(
-                        pdf[nm].to_numpy(dtype=np.float64), nan=0.0
-                    ).astype(np.int64)
-                    fnid = (
-                        raw
-                        if serving_field[f]
-                        else fieldnorm_to_id(raw).astype(np.int64)
-                    )
-                else:
-                    fnid = np.zeros(n, dtype=np.int64)
-                views[f] = FieldView(
-                    n=n,
-                    fieldnorm_id=fnid,
-                    tf=tf,
-                    positions=positions,
-                    df=field_df[f],
-                    tf_cache=field_cache[f],
-                    basic=basic_of.get(f, False),
-                )
-            ctx = EvalContext(
-                n=n,
-                views=views,
-                doc_count=doc_count,
-                meta={m: pdf[m].to_numpy(dtype=object) for m in meta_list},
-            )
+            ctx = layout.context(pdf)
             docids = pdf["docid"].to_numpy(dtype=np.int64)
             out_q, out_d, out_s = [], [], []
             for s in specs_b:
@@ -807,7 +597,7 @@ def _pivot_lane_scored(
                     # its fields
                     sup = np.zeros(n, dtype=bool)
                     for f in s.qfields:
-                        v = views.get(f)
+                        v = ctx.views.get(f)
                         if v is None:
                             continue
                         for t in s.terms:
@@ -885,9 +675,7 @@ def topk_ast_batch(
         if lane is not None:
             parts.append(lane)
     for chunk in _chunk_by_union_terms(pivot_specs, pivot_cap):
-        lane = _pivot_lane_scored(
-            fidx, primary, chunk, schema, k, doc_count, primary.tombstones
-        )
+        lane = _pivot_lane_scored(fidx, primary, chunk, schema, k, doc_count)
         if lane is not None:
             parts.append(lane)
     if not parts:

@@ -1,17 +1,21 @@
-"""Full-grammar query execution over the COMPRESSED serving index.
+"""Query execution over the COMPRESSED serving index.
 
 The durable index (``plans/manifest.py``) stores delta+vbyte posting
-blocks; this module decodes only the query's candidate blocks (tpart +
-term parquet pruning) back into posting rows inside a mapInPandas pass,
-then reuses the exact same candidate-pivot + numpy-kernel path as the
-primary executor — so boolean / phrase / metadata AST queries served
-from disk are bit-identical to the in-memory index and the oracle.
+blocks; :func:`blocks_to_postings` decodes only the query's candidate
+blocks (tpart + term parquet pruning) back into posting rows inside a
+mapInPandas pass.  :func:`field_postings` is the serving form's
+per-field posting source for the one exhaustive scorer
+(:mod:`operators.astexec`), so boolean / phrase / metadata AST queries
+served from disk run the same pivot + numpy-kernel plan as the
+in-memory index and are bit-identical to it and the oracle.
 
 Phrase queries decode the per-block POSITIONS sidecar (``pos_bytes``,
 the quiver.rs:3456-3530 section-kind-3 analogue) for the phrase terms
 only; indexes persisted without positions raise a capability error
-(query.rs:699-752 validation analogue).  Flat bag-of-words queries can
-also take the block-max WAND pruned path (:mod:`operators.wand`).
+(query.rs:699-752 validation analogue).  :func:`serving_search_bits`
+routes point queries: flat bag-of-words shapes take the block-max WAND
+pruned path (:mod:`operators.wand`), the rest the batch executor's
+bucket lane.
 """
 
 from __future__ import annotations
@@ -23,15 +27,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from frankensearch_spark.contract import compute_avgdl, compute_tf_cache
 from frankensearch_spark.operators.merge import decode_blocks_pdf, term_partition
 from frankensearch_spark.operators.wand import ServingIndex
 from frankensearch_spark.query_ast import (
     ENGINE_SCHEMA,
     ParserSchema,
     parse_lenient,
-    walk_leaf_terms,
-    walk_metadata_fields,
 )
 
 
@@ -250,288 +251,104 @@ def _rare_slot_whitelist(sub, rare_slot_terms: list[str], rare_df: int):
     return bc
 
 
-def _serving_fields(index):
-    # shared duck-typing rule with the pruned executor — one definition
-    from frankensearch_spark.operators.wand import _wand_fields
-
-    return _wand_fields(index)
-
-
-def _phrase_fields(ast) -> list[str]:
-    """TEXT field names referenced by position-requiring (Phrase)
-    leaves only — the scope of the positions capability check."""
-    from frankensearch_spark.query_ast import (
-        TEXT,
-        Boolean,
-        Boost,
-        Phrase,
-    )
-
-    out: list[str] = []
-
-    def collect(node) -> None:
-        if isinstance(node, Phrase):
-            for f in node.fields:
-                if f.kind == TEXT and f.name not in out:
-                    out.append(f.name)
-        elif isinstance(node, Boolean):
-            for c in node.clauses:
-                collect(c.query)
-        elif isinstance(node, Boost):
-            collect(node.query)
-
-    collect(ast)
-    return out
-
-
-def serving_score_ast(
-    index, query, schema: ParserSchema = ENGINE_SCHEMA
-) -> DataFrame:
-    """(docid, score) over the compressed index via the shared kernel.
-
-    Handles single-field ServingIndex and multi-field ServingMultiIndex
-    (the durable content + title^2 shape): one tf/positions pivot per
-    queried field from that field's blocks, full-outer joined on docid,
-    each field scored with its own df/avgdl/fieldnorms — mirroring the
-    primary executor, so served bits equal in-memory bits."""
-    fidx, primary = _serving_fields(index)
-    spark = primary.blocks.sparkSession
-    empty = spark.createDataFrame([], "docid long, score float")
-    ast = parse_lenient(query, schema).query if isinstance(query, str) else query
-    from frankensearch_spark.operators.astexec import expand_globs
-
-    ast = expand_globs(index, ast)  # duck-typed over .termstats
-
-    leaves = walk_leaf_terms(ast)
-    phrase_terms = [t for t, needs_pos in leaves if needs_pos]
-    from frankensearch_spark.query_ast import (
-        contains_all_node,
-        walk_text_fields,
-    )
-
-    qfields = [f for f in walk_text_fields(ast) if f in fidx]
-    if phrase_terms:
-        # capability check scoped to the fields of PHRASE leaves only:
-        # a non-phrase field persisted without positions must not block
-        # a query whose phrases never touch it (query.rs:699-752 checks
-        # per-field capability, not query-wide)
-        for f in _phrase_fields(ast):
-            if f in fidx and not fidx[f].has_positions:
-                raise ValueError(
-                    f"phrase queries need positions; field {f!r} was "
-                    "persisted without the pos_bytes sidecar "
-                    "(rebuild/save with with_positions=True)"
-                )
-    has_all = contains_all_node(ast)
-    meta_fields = walk_metadata_fields(ast)
-    terms = [t for t, _ in leaves]
-    if not terms and not has_all:
-        return empty
-
-    doc_count, _tt = primary.stats()
-    if doc_count == 0:
-        return empty
-    field_df: dict[str, dict[str, int]] = {}
-    field_cache: dict[str, np.ndarray] = {}
-    for f in qfields:
-        sub = fidx[f]
-        field_df[f] = sub.df_of_terms(terms)
-        _n, total_tokens = sub.stats()
-        field_cache[f] = compute_tf_cache(
-            compute_avgdl(total_tokens, doc_count)
-        )
-
-    # Root-phrase candidate restriction: when the WHOLE query is one
-    # phrase (possibly boosted), a scoring doc must contain every slot —
-    # so the per-field pivot can be semi-joined down to docs holding the
-    # RAREST slot's terms before any positions ride the exchange.  A
-    # "foo bar"-style phrase whose first term is a mega-term then ships
-    # ~df(rarest) rows instead of ~df(largest).  Rank-safe: docs dropped
-    # here can never have phrase freq > 0 in that field.
-    root = ast
+def _rare_slot_terms(root, field_df) -> list[str] | None:
+    """Root-phrase candidate restriction: when the WHOLE query is one
+    phrase (possibly boosted), a scoring doc must contain every slot —
+    so a field's postings can be cut down to docs holding the RAREST
+    slot's terms (df summed over the queried fields) before any
+    positions ride the exchange.  A "foo bar"-style phrase whose first
+    term is a mega-term then ships ~df(rarest) rows instead of
+    ~df(largest).  Rank-safe: docs dropped here can never have phrase
+    freq > 0 in that field.  None for every other shape."""
+    from frankensearch_spark.kernel import _phrase_slots
     from frankensearch_spark.query_ast import Boost, Phrase
 
     while isinstance(root, Boost):
         root = root.query
-    rare_slot_terms: list[str] | None = None
-    if isinstance(root, Phrase) and phrase_terms:
-        from frankensearch_spark.kernel import _phrase_slots
+    if not isinstance(root, Phrase):
+        return None
+    slots = _phrase_slots(root)
+    if len(slots) < 2:
+        return None
+    all_df: dict[str, int] = {}
+    for dfs in field_df.values():
+        for t, d in dfs.items():
+            all_df[t] = all_df.get(t, 0) + d
+    return min(
+        (s[1] for s in slots),
+        key=lambda ts: sum(all_df.get(t, 0) for t in ts),
+    )
 
-        slots = _phrase_slots(root)
-        if len(slots) >= 2:
-            all_df = {}
-            for f in qfields:
-                for t, d in field_df[f].items():
-                    all_df[t] = all_df.get(t, 0) + d
-            rare_slot_terms = min(
-                (s[1] for s in slots),
-                key=lambda ts: sum(all_df.get(t, 0) for t in ts),
-            )
 
-    base = None
-    tf_col: dict[tuple[str, str], str] = {}
-    pos_col: dict[tuple[str, str], str] = {}
-    fn_col: dict[str, str] = {}
-    for fi, f in enumerate(qfields):
-        if not terms:
-            continue
-        rare_df_f = (
-            sum(field_df[f].get(t, 0) for t in rare_slot_terms)
-            if rare_slot_terms is not None
-            else None
+def field_postings(sub: ServingIndex, f: str, terms: list[str],
+                   phrase_terms: list[str], field_df, root):
+    """The serving form of the exhaustive scorer's per-field posting
+    source (``astexec._field_postings``): ``sub``'s candidate blocks for
+    ``terms`` decoded to (docid, term, tf, fieldnorm_id[, positions])
+    rows.  ``field_df``: (field -> df map) of every queried field, ``f``
+    among them; ``root``: the single query's tree, for the root-phrase
+    restriction (None in a batch)."""
+    from frankensearch_spark.operators.astexec import FieldPostings
+
+    rare_slot_terms = (
+        _rare_slot_terms(root, field_df) if phrase_terms else None
+    )
+    rare_df = (
+        sum(field_df[f].get(t, 0) for t in rare_slot_terms)
+        if rare_slot_terms is not None
+        else None
+    )
+    # cap: past ~500k candidate docids the collect+broadcast costs
+    # more than the position slices it saves (and at 100-TB scale
+    # would be a driver OOM) — switch to the bucket-cogrouped LOCAL
+    # whitelist below instead of the old full pivot
+    if rare_df is not None and rare_df <= PHRASE_WL_CAP:
+        # one cheap tf-only decode of the rarest slot -> its docid
+        # set rides to executors as a broadcast whitelist, so the
+        # mega-terms' postings (and especially their per-posting
+        # position slices) are never materialized for docs that
+        # cannot match the phrase.  Whitelists are cached per
+        # (field index, slot terms) with bounded eviction —
+        # repeated phrases in a long-lived process skip the collect
+        # job AND broadcasts never accumulate unboundedly.
+        bc = _rare_slot_whitelist(sub, rare_slot_terms, rare_df)
+        postings = blocks_to_postings(
+            sub, terms, with_positions=True, docid_whitelist=bc
         )
-        # cap: past ~500k candidate docids the collect+broadcast costs
-        # more than the position slices it saves (and at 100-TB scale
-        # would be a driver OOM) — switch to the bucket-cogrouped LOCAL
-        # whitelist below instead of the old full pivot
-        if rare_df_f is not None and rare_df_f <= PHRASE_WL_CAP:
-            # one cheap tf-only decode of the rarest slot -> its docid
-            # set rides to executors as a broadcast whitelist, so the
-            # mega-terms' postings (and especially their per-posting
-            # position slices) are never materialized for docs that
-            # cannot match the phrase.  Whitelists are cached per
-            # (field index, slot terms) with bounded eviction —
-            # repeated phrases in a long-lived process skip the collect
-            # job AND broadcasts never accumulate unboundedly.
-            bc = _rare_slot_whitelist(fidx[f], rare_slot_terms, rare_df_f)
+    elif rare_df is not None:
+        # beyond the whitelist cap: same candidate restriction at
+        # BUCKET granularity, decoded task-locally (no driver
+        # collect, no broadcast — the 100-TB mega-phrase path); a
+        # bucket without the rare slot emits nothing at all
+        postings = blocks_to_postings(
+            sub, terms, with_positions=True,
+            local_whitelist_terms=rare_slot_terms,
+        )
+    else:
+        ph = [t for t in terms if t in set(phrase_terms)]
+        nonph = [t for t in terms if t not in set(phrase_terms)]
+        if ph and nonph:
+            # positions decode ONLY for the phrase terms (the
+            # bucket lane's rule, batchexec): a mixed non-root-
+            # phrase query ('+"foo bar" megaterm') must not scan
+            # the mega term's pos_bytes pages nor slice a LEB128
+            # buffer per posting that the phrase kernel never
+            # reads — the position pivot filters to phrase_terms
+            # anyway
             postings = blocks_to_postings(
-                fidx[f], terms, with_positions=True, docid_whitelist=bc
-            )
-        elif rare_df_f is not None:
-            # beyond the whitelist cap: same candidate restriction at
-            # BUCKET granularity, decoded task-locally (no driver
-            # collect, no broadcast — the 100-TB mega-phrase path); a
-            # bucket without the rare slot emits nothing at all
-            postings = blocks_to_postings(
-                fidx[f], terms, with_positions=True,
-                local_whitelist_terms=rare_slot_terms,
+                sub, ph, with_positions=True
+            ).unionByName(
+                blocks_to_postings(
+                    sub, nonph, with_positions=False
+                ).withColumn("positions", F.lit(None).cast("binary"))
             )
         else:
-            ph = [t for t in terms if t in set(phrase_terms)]
-            nonph = [t for t in terms if t not in set(phrase_terms)]
-            if ph and nonph:
-                # positions decode ONLY for the phrase terms (the
-                # bucket lane's rule, batchexec): a mixed non-root-
-                # phrase query ('+"foo bar" megaterm') must not scan
-                # the mega term's pos_bytes pages nor slice a LEB128
-                # buffer per posting that the phrase kernel never
-                # reads — the position pivot below filters to
-                # phrase_terms anyway
-                postings = blocks_to_postings(
-                    fidx[f], ph, with_positions=True
-                ).unionByName(
-                    blocks_to_postings(
-                        fidx[f], nonph, with_positions=False
-                    ).withColumn(
-                        "positions", F.lit(None).cast("binary")
-                    )
-                )
-            else:
-                postings = blocks_to_postings(
-                    fidx[f], terms, with_positions=bool(phrase_terms)
-                )
-        tcols = [f"f{fi}t{j}" for j in range(len(terms))]
-        pivot = (
-            postings.groupBy("docid", "fieldnorm_id")
-            .pivot("term", terms)
-            .agg(F.first("tf"))
-            .toDF("docid", f"fn{fi}", *tcols)
-        )
-        fn_col[f] = f"fn{fi}"
-        for j, t in enumerate(terms):
-            tf_col[(f, t)] = tcols[j]
-        if phrase_terms:
-            pcols = [f"f{fi}p{j}" for j in range(len(phrase_terms))]
-            ppivot = (
-                postings.filter(F.col("term").isin(phrase_terms))
-                .groupBy("docid")
-                .pivot("term", phrase_terms)
-                .agg(F.first("positions"))
-                .toDF("docid", *pcols)
+            postings = blocks_to_postings(
+                sub, terms, with_positions=bool(phrase_terms)
             )
-            for j, t in enumerate(phrase_terms):
-                pos_col[(f, t)] = pcols[j]
-            pivot = pivot.join(ppivot, "docid", "left")
-        base = pivot if base is None else base.join(pivot, "docid", "full_outer")
-
-    if base is None and not has_all:
-        # every text leaf references a field absent from this index (or
-        # the query has no text leaves at all): nothing can score —
-        # return empty instead of crashing, matching the pruned path's
-        # [] for the same shapes
-        return empty
-
-    extra_meta = [c for c in meta_fields if c not in ("docid", "doclen")]
-    needs_doclen = "doclen" in meta_fields
-    docmeta = primary.docmeta
-    if has_all:
-        sel = ["docid"] + (["doclen"] if needs_doclen else []) + extra_meta
-        meta = docmeta.select(*sel)
-        base = meta if base is None else meta.join(base, "docid", "left")
-    elif extra_meta or needs_doclen:
-        sel = ["docid"] + (["doclen"] if needs_doclen else []) + extra_meta
-        base = base.join(docmeta.select(*sel), "docid", "left")
-    tombstones = primary.tombstones
-    if tombstones is not None:
-        base = base.join(tombstones.select("docid"), "docid", "left_anti")
-    from frankensearch_spark.operators.astexec import apply_metadata_pushdown
-
-    base = apply_metadata_pushdown(base, ast)
-
-    meta_list = list(meta_fields)
-    basic_of = {f.name: getattr(f, "basic", False) for f in schema.fields}
-    qfields_b = list(qfields)
-
-    def run(batches):
-        from frankensearch_spark.kernel import EvalContext, FieldView, eval_query
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            views = {}
-            for f in qfields_b:
-                tf = {
-                    t: np.nan_to_num(
-                        pdf[c].to_numpy(dtype=np.float64), nan=0.0
-                    ).astype(np.float32)
-                    for (ff, t), c in tf_col.items()
-                    if ff == f
-                }
-                positions = {
-                    t: pdf[c].to_numpy(dtype=object)
-                    for (ff, t), c in pos_col.items()
-                    if ff == f
-                }
-                if f in fn_col and fn_col[f] in pdf.columns:
-                    fnid = np.nan_to_num(
-                        pdf[fn_col[f]].to_numpy(dtype=np.float64), nan=0.0
-                    ).astype(np.int64)
-                else:
-                    fnid = np.zeros(n, dtype=np.int64)
-                views[f] = FieldView(
-                    n=n, fieldnorm_id=fnid, tf=tf, positions=positions,
-                    df=field_df[f], tf_cache=field_cache[f],
-                    basic=basic_of.get(f, False),
-                )
-            ctx = EvalContext(
-                n=n,
-                views=views,
-                doc_count=doc_count,
-                meta={m: pdf[m].to_numpy(dtype=object) for m in meta_list},
-            )
-            mask, scores = eval_query(ast, ctx)
-            rows = np.nonzero(mask)[0]
-            if rows.size == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "docid": pdf["docid"].to_numpy(dtype=np.int64)[rows],
-                    "score": scores[rows],
-                }
-            )
-
-    return base.mapInPandas(run, "docid long, score float")
+    return FieldPostings(
+        postings, "fieldnorm_id", postings if phrase_terms else None
+    )
 
 
 def ast_to_queryspec_fields(ast):
@@ -552,7 +369,7 @@ def ast_to_queryspec_fields(ast):
     path.  The conversion is score-exact: QuerySpec clause order (Must
     then Should) matches the kernel's aggregation order, and both paths
     score f32 ``weight * tf / (tf + norm)`` per (clause, field)."""
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.query_ast import (
         MUST,
         MUST_NOT,
@@ -649,58 +466,6 @@ def ast_to_queryspec(ast):
     return spec
 
 
-def serving_topk_plan(
-    index, query, k: int = 10, schema: ParserSchema = ENGINE_SCHEMA,
-) -> DataFrame:
-    """The top-k as a LAZY DataFrame (docid long, score float) under the
-    pinned total order — the composable form of
-    :func:`serving_search_bits` for callers that fuse or join the
-    lexical tier into a larger plan (engine.search_hybrid): everything
-    downstream collects in ONE Spark action instead of
-    collect -> createDataFrame -> second job.
-
-    Single scored-clause shapes take the shuffle-free stream path
-    (:func:`wand._single_term_stream_plan` — bit-exact, no bucket
-    exchange); everything else decodes-and-scores through the shared
-    kernel + TakeOrderedAndProject.  The multi-collect WAND θ ceremony
-    cannot compose into one action, so prunable multi-term shapes run
-    exhaustive here — rank-identical by the conservative-bound theorem
-    (the pruned path's own invariant)."""
-    ast = (
-        parse_lenient(query, schema).query if isinstance(query, str) else query
-    )
-    from frankensearch_spark.operators.astexec import expand_globs
-
-    expanded = expand_globs(index, ast)
-    lowered = ast_to_queryspec_fields(expanded)
-    if lowered is not None and index.tombstones is None:
-        spec, term_fields = lowered
-        from frankensearch_spark.operators.wand import (
-            _prepare,
-            _single_term_stream_plan,
-            _wand_fields,
-        )
-
-        if not spec.must_not and len(spec.clause_terms()) == 1:
-            prep = _prepare(index, spec, term_fields)
-            if prep is not None:
-                weights, tf_caches, _avgdls, cand, _stats, _tfo = prep
-                if len(weights) == 1:
-                    (fname, _t), w = next(iter(weights.items()))
-                    _fidx, primary = _wand_fields(index)
-                    return _single_term_stream_plan(
-                        cand, w, tf_caches[fname], primary.bucket_shift, k
-                    )
-            else:
-                spark = _wand_fields(index)[1].blocks.sparkSession
-                return spark.createDataFrame([], "docid long, score float")
-    return (
-        serving_score_ast(index, expanded, schema)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-    )
-
-
 def serving_search_collect(
     index, query, k: int = 10, offset: int = 0,
     schema: ParserSchema = ENGINE_SCHEMA, prune: bool = True,
@@ -733,7 +498,9 @@ def serving_search_bits(index: ServingIndex, query, k: int = 10,
     s, mega-phrase 3.2 → 1.9 s against the old decode→explode→pivot
     chain, bit-identical (parity pinned by test_batchexec and the
     random-grammar fuzz).  All/metadata shapes fall back to the
-    decode-and-score pivot inside the batch executor itself."""
+    decode-and-score pivot inside the batch executor itself.
+    ``prune=False`` runs the exhaustive scorer (``astexec``) — the
+    parity reference for every routed path."""
     ast = parse_lenient(query, schema).query if isinstance(query, str) else query
     from frankensearch_spark.operators.astexec import expand_globs
 
@@ -760,13 +527,6 @@ def serving_search_bits(index: ServingIndex, query, k: int = 10,
         return [
             (int(d), int(np.float32(s).view(np.uint32))) for d, s in hits
         ]
-    rows = (
-        serving_score_ast(index, expanded, schema)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .collect()
-    )
-    return [
-        (int(r["docid"]), int(np.float32(r["score"]).view(np.uint32)))
-        for r in rows
-    ]
+    from frankensearch_spark.operators.astexec import search_ast_bits
+
+    return search_ast_bits(index, expanded, k, schema=schema)

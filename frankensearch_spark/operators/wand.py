@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import math
 import threading
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -58,7 +58,34 @@ from frankensearch_spark.operators.merge import (
     decode_blocks_pdf,
     term_partition,
 )
-from frankensearch_spark.operators.query import QuerySpec
+from frankensearch_spark.analyze import tokenize_fast
+
+
+@dataclass
+class QuerySpec:
+    """Flat boolean query the WAND planner consumes: Should union, Must
+    intersection, MustNot exclusion.
+
+    ``boosts``: optional per-term boost (default 1.0) — multiplies the
+    term's weight exactly like the reference's inherited boost
+    (argus.rs:1521-1523), so boosted flat/boolean shapes stay prunable.
+    A term must carry ONE boost across all its clauses."""
+
+    should: list[str] = field(default_factory=list)
+    must: list[str] = field(default_factory=list)
+    must_not: list[str] = field(default_factory=list)
+    boosts: dict = field(default_factory=dict)
+
+    @staticmethod
+    def from_text(text: str) -> "QuerySpec":
+        return QuerySpec(should=[t for t, _ in tokenize_fast(text)])
+
+    def clause_terms(self) -> list[str]:
+        """Scored clauses in accumulation order: Must first, then Should."""
+        return list(self.must) + list(self.should)
+
+    def boost_of(self, term: str) -> float:
+        return float(self.boosts.get(term, 1.0))
 
 
 def external_id(row, key_cols) -> str:
@@ -913,8 +940,8 @@ def _single_term_stream_plan(cand: DataFrame, weight, tf_cache,
     (the kernel's one-clause reduction) and no accumulation across
     blocks can occur.  Point queries reach it only for terms over the
     local-lane cap or when the lane is busy (bounded terms decode on
-    the driver, :func:`local_lane_topk`); ``serving_topk_plan`` uses it
-    as its composable single-clause form."""
+    the driver, :func:`local_lane_topk`); :func:`_single_term_stream_topk`
+    collects it."""
     w = np.float32(weight)
     tfc = tf_cache
 
@@ -1009,8 +1036,9 @@ def _block_prefilter(blocks_df: DataFrame, theta: float, weights: dict,
 
 
 def _wand_fields(index) -> tuple[dict, "ServingIndex"]:
-    """field name -> ServingIndex; single-field indexes expose their one
-    field as ``content`` (the engine schema's default)."""
+    """(field name -> per-field index, primary) for every index form:
+    anything with ``.fields`` is multi-field; a single-field index
+    exposes its one field as ``content`` (the engine schema's default)."""
     if hasattr(index, "fields"):
         return dict(index.fields), index.primary
     return {"content": index}, index

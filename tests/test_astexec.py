@@ -1,8 +1,8 @@
 """Parsed-query execution parity: Spark AST path ≡ numpy oracle, bit-exact.
 
-Covers the full frozen query set (including the boolean/phrase classes the
-flat QuerySpec path cannot express), plus globs, boosts, all-negative
-repair, and keyword-field constant-score filters (E8)."""
+Covers the full frozen query set (including the boolean/phrase classes),
+plus globs, boosts, all-negative repair, and keyword-field constant-score
+filters (E8)."""
 
 import numpy as np
 import pytest
@@ -87,17 +87,6 @@ def test_ast_pagination_matches(built, oracle):
     assert [(d, np.float32(s).view(np.uint32)) for d, s in got] == [
         (d, np.float32(s).view(np.uint32)) for d, s in exp
     ]
-
-
-def test_flat_and_ast_paths_agree(built):
-    """The legacy QuerySpec pivot path and the AST kernel path emit
-    identical bits for flat bag-of-terms queries."""
-    from frankensearch_spark.operators.query import search_bits
-
-    for text in ("term00001 term00007 generated record", "fn import"):
-        assert search_ast_bits(built, text, k=10) == search_bits(
-            built, text, k=10
-        )
 
 
 def test_keyword_field_filter(built):

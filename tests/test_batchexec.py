@@ -189,7 +189,7 @@ def test_stream_lane_split_routing(loaded):
     tombstone-free serving index go to the stream lane (no pivot, no
     bucket exchange); every other shape stays in the pivot lane; a
     tombstoned index disables the stream lane entirely."""
-    from frankensearch_spark.operators.astexec import _field_indexes
+    from frankensearch_spark.operators.wand import _wand_fields
     from frankensearch_spark.operators.batchexec import (
         _prepare,
         _stream_lane_split,
@@ -207,7 +207,7 @@ def test_stream_lane_split_routing(loaded):
         "missingkeywordalpha",   # absent term -> neither (empty result)
     ]
     idx = loaded.index
-    fidx, primary = _field_indexes(idx)
+    fidx, primary = _wand_fields(idx)
     _f, _p, specs = _prepare(idx, texts, ENGINE_SCHEMA)
     doc_count, _tt = primary.stats()
     stream, rest = _stream_lane_split(idx, fidx, primary, specs, doc_count)
@@ -215,7 +215,7 @@ def test_stream_lane_split_routing(loaded):
     assert sorted(s.qid for s in rest) == [3, 4, 5, 6]
 
     dead = loaded.delete_documents([0])
-    fidx2, primary2 = _field_indexes(dead.index)
+    fidx2, primary2 = _wand_fields(dead.index)
     _f2, _p2, specs2 = _prepare(dead.index, texts, ENGINE_SCHEMA)
     stream2, rest2 = _stream_lane_split(
         dead.index, fidx2, primary2, specs2, doc_count
@@ -238,7 +238,7 @@ def test_bucket_lane_split_routing(loaded):
     """Round-4 bucket lane: text-only multi-clause queries over a
     serving index leave the pivot lane for the bucket-kernel lane;
     All-repair and metadata shapes stay in the pivot lane."""
-    from frankensearch_spark.operators.astexec import _field_indexes
+    from frankensearch_spark.operators.wand import _wand_fields
     from frankensearch_spark.operators.batchexec import (
         _bucket_lane_split,
         _prepare,
@@ -254,7 +254,7 @@ def test_bucket_lane_split_routing(loaded):
         "-term00001",             # All repair -> pivot
     ]
     idx = loaded.index
-    fidx, primary = _field_indexes(idx)
+    fidx, primary = _wand_fields(idx)
     _f, _p, specs = _prepare(idx, texts, ENGINE_SCHEMA)
     doc_count, _tt = primary.stats()
     _stream, rest = _stream_lane_split(idx, fidx, primary, specs, doc_count)

@@ -107,8 +107,8 @@ def test_lease_mode_rank_invariance(spark):
     import numpy as np
 
     from frankensearch_spark.corpus import corpus_docs, make_corpus
+    from frankensearch_spark.operators.astexec import search_ast_bits
     from frankensearch_spark.operators.build import build_index
-    from frankensearch_spark.operators.query import search_bits
     from frankensearch_spark.oracle import OracleIndex
 
     n = 150
@@ -121,7 +121,7 @@ def test_lease_mode_rank_invariance(spark):
     for parts in (1, 5):
         corpus = synthetic_corpus_df(spark, n, partitions=parts)
         idx = build_index(corpus, CORPUS_KEY, cache=False)  # lease default
-        got = search_bits(idx, "fn import term00000", k=10)
+        got = search_ast_bits(idx, "fn import term00000", k=10)
         ext = {
             int(r["docid"]): (r["repo"], r["path"], r["commit"])
             for r in idx.docmeta.collect()

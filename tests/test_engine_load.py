@@ -316,9 +316,10 @@ def test_resume_refuses_mismatched_docid_assignment(spark, tmp_path):
 
 
 def test_loaded_hybrid_one_job_parity(spark, built, loaded):
-    """search_hybrid on a LOADED engine composes the lexical tier as a
-    lazy plan (serving_topk_plan) — its fused output must equal the
-    built engine's (whose lexical tier collects through astexec), for
+    """search_hybrid on a LOADED engine collects the lexical tier
+    through search_docids (the serving router) — its fused output must
+    equal the built engine's (whose lexical tier collects through
+    astexec), for
     both fusion strategies and for the single-clause fast-path shape
     ('fn') AND a multi-term shape ('fn import')."""
     sem = spark.range(0, 40).select(

@@ -118,7 +118,7 @@ def test_for_durable_roundtrip(spark, pair, oracle):
 def test_for_wand_pruned_parity(pair, oracle):
     """The block-max pruned path reads FOR blocks through the same
     decode dispatch — pruned == exhaustive == oracle."""
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import wand_topk
 
     _built, _vint, fo = pair
@@ -221,7 +221,7 @@ def test_bitmap_durable_roundtrip(spark, pair, oracle):
 
 
 def test_bitmap_wand_pruned_parity(bitmap_srv, oracle):
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import wand_topk
 
     spec = QuerySpec(should=["fn", "term00001", "term00002"])

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from frankensearch_spark.corpus import corpus_docs
+from frankensearch_spark.operators.astexec import search_ast_bits
 from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.operators.lifecycle import (
     compact,
@@ -21,7 +22,6 @@ from frankensearch_spark.operators.lifecycle import (
     tombstone_density,
     upsert_documents,
 )
-from frankensearch_spark.operators.query import search_bits
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
@@ -37,13 +37,13 @@ def built(spark):
 
 def test_delete_excludes_but_preserves_scores(built):
     oracle = OracleIndex(corpus_docs(N_DOCS))
-    baseline = search_bits(built, QUERY, k=5)
+    baseline = search_ast_bits(built, QUERY, k=5)
     victims = [d for d, _ in baseline[:2]]
 
     deleted = delete_documents(built, victims)
     oracle.delete(victims)
 
-    got = search_bits(deleted, QUERY, k=5)
+    got = search_ast_bits(deleted, QUERY, k=5)
     exp = oracle.search_bits(QUERY, k=5)
     assert got == exp
     assert not any(d in victims for d, _ in got)
@@ -63,7 +63,7 @@ def test_delete_by_key(built):
 
 
 def test_compaction_preserves_docids_and_matches_rebuilt_oracle(built):
-    baseline = search_bits(built, QUERY, k=10)
+    baseline = search_ast_bits(built, QUERY, k=10)
     victims = [d for d, _ in baseline[:3]]
     deleted = delete_documents(built, victims)
     assert tombstone_density(deleted) > 0
@@ -79,7 +79,7 @@ def test_compaction_preserves_docids_and_matches_rebuilt_oracle(built):
         (d, text) for d, text in corpus_docs(N_DOCS) if d not in set(victims)
     ]
     oracle = OracleIndex(survivors)
-    got = search_bits(compacted, QUERY, k=10)
+    got = search_ast_bits(compacted, QUERY, k=10)
     assert got == oracle.search_bits(QUERY, k=10)
 
 
@@ -103,13 +103,13 @@ def test_upsert_replaces_by_key(spark, built):
     )
     up = upsert_documents(built, new_corpus, CORPUS_KEY)
 
-    hits = search_bits(up, "zzupserted", k=5)
+    hits = search_ast_bits(up, "zzupserted", k=5)
     assert len(hits) == 2
     hwm = int(built.docmeta.agg(F.max("docid")).collect()[0][0])
     assert all(d > hwm for d, _ in hits)  # fresh docids above watermark
     # the old revision no longer matches queries
     old_id = int(row["docid"])
-    all_hits = search_bits(up, "term00001 term00002 fn", k=N_DOCS + 2)
+    all_hits = search_ast_bits(up, "term00001 term00002 fn", k=N_DOCS + 2)
     assert old_id not in {d for d, _ in all_hits}
 
 
@@ -128,8 +128,6 @@ def test_upsert_mixed_position_formats_serves_phrases(spark, built):
     )
     up = upsert_documents(built, new_corpus, CORPUS_KEY)
     assert dict(up.positions.dtypes)["positions"] == "binary"
-    from frankensearch_spark.operators.astexec import search_ast_bits
-
     hits = search_ast_bits(up, '"alphamix betamix gammamix"', k=5)
     assert len(hits) == 1
     miss = search_ast_bits(up, '"betamix alphamix"', k=5)

@@ -124,7 +124,7 @@ def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed):
     exhaustive answer — the MaxScore bounds stay conservative after the
     upsert moved avgdl.  The sequence ends with one more save+load (if
     the twin left serving form) and upsert, so that check always runs."""
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import ServingIndex, wand_bits
 
     rng = random.Random(seed)

@@ -8,7 +8,7 @@ import pytest
 
 from frankensearch_spark.corpus import corpus_docs
 from frankensearch_spark.operators.build import build_index
-from frankensearch_spark.operators.query import QuerySpec
+from frankensearch_spark.operators.wand import QuerySpec
 from frankensearch_spark.operators.wand import wand_bits
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.plans.manifest import (

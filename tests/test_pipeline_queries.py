@@ -204,3 +204,28 @@ def test_lsh_bucket_skew_pair_count_exact_above_2_pow_53(spark):
         for r in bucket_size_histogram(sizes).collect()
     }
     assert got == {s: (2, 2 * want), 3: (1, 3)}
+
+
+def test_spark_entry_flagship_matches_oracle(spark):
+    """``__spark_entry__.entry``'s flagship top-10 (the exhaustive scorer
+    over the documents table) equals the numpy oracle's: same docids,
+    same f32 score bits, same order."""
+    import numpy as np
+
+    import __spark_entry__
+    from frankensearch_spark.oracle import OracleIndex
+    from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
+
+    got = [
+        (int(r["docid"]), int(np.float32(r["score"]).view(np.uint32)))
+        for r in __spark_entry__.entry(spark).collect()
+    ]
+    docs = pd.read_parquet(f"{SF}/documents.parquet", columns=["doc_id", "text"])
+    oracle = OracleIndex(zip(docs["doc_id"].astype(int), docs["text"]))
+    ast = parse_lenient("key order merge", ENGINE_SCHEMA).query
+    exp = [
+        (d, int(np.float32(s).view(np.uint32)))
+        for d, s in oracle.search_ast(ast, 10)
+    ]
+    assert len(exp) == 10
+    assert got == exp

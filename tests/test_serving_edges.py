@@ -6,7 +6,7 @@ import pytest
 from frankensearch_spark.corpus import corpus_docs
 from frankensearch_spark.operators.astexec import search_ast_bits
 from frankensearch_spark.operators.build import build_index
-from frankensearch_spark.operators.query import QuerySpec
+from frankensearch_spark.operators.wand import QuerySpec
 from frankensearch_spark.operators.serving_exec import serving_search_bits
 from frankensearch_spark.operators.wand import serving_from_built, wand_topk
 from frankensearch_spark.oracle import OracleIndex

@@ -206,7 +206,7 @@ def test_unknown_text_field_returns_empty_not_crash(serving):
         ParserSchema,
         QueryField,
     )
-    from frankensearch_spark.operators.serving_exec import serving_score_ast
+    from frankensearch_spark.operators.astexec import score_ast
 
     schema = ParserSchema(
         fields=(
@@ -215,7 +215,7 @@ def test_unknown_text_field_returns_empty_not_crash(serving):
         ),
         default_names=("content",),
     )
-    out = serving_score_ast(serving, "title:foo", schema)
+    out = score_ast(serving, "title:foo", schema)
     assert out.count() == 0
     assert serving_search_bits(serving, "title:foo", k=5, schema=schema) == []
 
@@ -224,7 +224,7 @@ def test_phrase_capability_scoped_to_phrase_fields():
     """The positions capability check covers only fields of PHRASE
     leaves: a positions-less secondary field queried by a bare term
     must not block a phrase scoped to a positions-bearing field."""
-    from frankensearch_spark.operators.serving_exec import _phrase_fields
+    from frankensearch_spark.operators.astexec import _phrase_fields
     from frankensearch_spark.query_ast import (
         TEXT,
         ParserSchema,

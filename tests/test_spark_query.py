@@ -9,13 +9,13 @@ import numpy as np
 import pytest
 
 from frankensearch_spark.corpus import FROZEN_QUERIES, corpus_docs
-from frankensearch_spark.operators.build import build_index
-from frankensearch_spark.operators.query import (
-    QuerySpec,
-    search_bits,
-    search_collect,
+from frankensearch_spark.operators.astexec import (
+    search_ast_bits,
+    search_ast_collect,
 )
+from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.oracle import OracleIndex
+from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
 N_DOCS = 300
@@ -30,6 +30,14 @@ def built(spark):
 @pytest.fixture(scope="module")
 def oracle():
     return OracleIndex(corpus_docs(N_DOCS))
+
+
+def _ast_bits(oracle, text, k):
+    ast = parse_lenient(text, ENGINE_SCHEMA).query
+    return [
+        (d, int(np.float32(s).view(np.uint32)))
+        for d, s in oracle.search_ast(ast, k)
+    ]
 
 
 def test_docids_match_oracle_numbering(built, oracle):
@@ -60,32 +68,31 @@ def test_frozen_queries_rank_and_bits_exact(built, oracle, qid):
     if any(op in text for op in (" AND ", " OR ", " NOT ", "+", "-", '"')):
         pytest.skip("boolean/phrase grammar covered separately")
     for k in (10, 100):
-        assert search_bits(built, text, k=k) == oracle.search_bits(text, k=k), (
-            qid,
-            k,
-        )
+        assert search_ast_bits(built, text, k=k) == _ast_bits(
+            oracle, text, k
+        ), (qid, k)
 
 
 def test_boolean_semantics_match(built, oracle):
-    # AND
-    spec = QuerySpec(must=["term00001", "term00002"])
-    got = search_bits(built, spec, k=20)
-    exp = oracle.search_bits([], k=20, must=["term00001", "term00002"])
-    assert got == exp
-    # NOT
-    spec = QuerySpec(should=["term00001"], must_not=["term00002"])
-    got = search_bits(built, spec, k=20)
-    exp = oracle.search_bits(["term00001"], k=20, must_not=["term00002"])
-    assert got == exp
-    # OR with one missing term
-    spec = QuerySpec(should=["term00001", "zzznope"])
-    got = search_bits(built, spec, k=20)
-    exp = oracle.search_bits(["term00001", "zzznope"], k=20)
-    assert got == exp
+    """Must, MustNot and an absent Should term, each written as query
+    text: the bits equal both the oracle's parsed-tree scorer and its
+    flat must/must_not surface."""
+    cases = [
+        ("+term00001 +term00002", [], {"must": ["term00001", "term00002"]}),
+        ("term00001 -term00002", ["term00001"], {"must_not": ["term00002"]}),
+        ("term00001 zzznope", ["term00001", "zzznope"], {}),
+    ]
+    for text, should, kw in cases:
+        got = search_ast_bits(built, text, k=20)
+        assert got, text
+        assert got == _ast_bits(oracle, text, 20), text
+        assert got == oracle.search_bits(should, k=20, **kw), text
+    # a Must term absent from the index matches nothing
+    assert search_ast_bits(built, "+term00001 +zzznope", k=20) == []
 
 
 def test_pagination_matches(built, oracle):
-    got = search_collect(built, "term00000", k=10, offset=10)
+    got = search_ast_collect(built, "term00000", k=10, offset=10)
     exp = oracle.search("term00000", k=10, offset=10)
     assert [(d, np.float32(s).view(np.uint32)) for d, s in got] == [
         (d, np.float32(s).view(np.uint32)) for d, s in exp
@@ -110,13 +117,14 @@ def test_content_witness_sha256(built, spark):
 def test_warm_serving_parity(built, oracle):
     """Preloaded (term -> df) dictionary (long-lived serving) changes
     ZERO bits: warm results == cold results == oracle."""
-    cold = search_bits(built, "fn import term00000", k=10)
+    texts = ("fn import", "fn import term00000")
+    cold = [search_ast_bits(built, t, k=10) for t in texts]
     n = built.preload_termstats()
     assert n == built.termstats.count()
-    warm = search_bits(built, "fn import term00000", k=10)
-    assert warm == cold == oracle.search_bits("fn import term00000", k=10)
+    warm = [search_ast_bits(built, t, k=10) for t in texts]
+    assert warm == cold == [oracle.search_bits(t, k=10) for t in texts]
     # absent terms stay absent through the cache
-    assert search_bits(built, "zzznothere", k=5) == []
+    assert search_ast_bits(built, "zzznothere", k=5) == []
     built._term_df_cache = None  # restore cold mode for other tests
 
 
@@ -125,6 +133,6 @@ def test_partition_count_invariance(spark, oracle):
     for parts in (1, 7):
         corpus = synthetic_corpus_df(spark, N_DOCS, partitions=parts)
         idx = build_index(corpus, CORPUS_KEY, cache=False, docid_mode="global")
-        got = search_bits(idx, "fn import term00000", k=10)
+        got = search_ast_bits(idx, "fn import term00000", k=10)
         exp = oracle.search_bits("fn import term00000", k=10)
         assert got == exp, parts

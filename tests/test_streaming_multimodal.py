@@ -25,8 +25,8 @@ def stream_dirs():
 def test_incremental_equals_batch_scores(spark, stream_dirs):
     """Streamed mini-segments answer queries with the same scores as a
     one-shot batch build over the same docs (Q1-OB3 merge law)."""
+    from frankensearch_spark.operators.astexec import search_ast_collect
     from frankensearch_spark.operators.build import build_index
-    from frankensearch_spark.operators.query import search_collect
     from frankensearch_spark.streaming.incremental import (
         read_incremental_index,
         start_incremental_build,
@@ -52,8 +52,8 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
     assert (n_inc, tok_inc) == (n_b, tok_b)
 
     for text in ("fn import", "term00001 term00002"):
-        inc_hits = search_collect(inc, text, k=10)
-        b_hits = search_collect(batch, text, k=10)
+        inc_hits = search_ast_collect(inc, text, k=10)
+        b_hits = search_ast_collect(batch, text, k=10)
         # docid numbering differs (stream leases); scores must match as
         # multisets of f32 bits
         assert sorted(
@@ -62,8 +62,6 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
 
     # streamed mini-segments keep positions: phrase queries work
     # (round-1 gap — incremental.py dropped the positions column)
-    from frankensearch_spark.operators.astexec import search_ast_collect
-
     assert inc.positions is not None
     for text in ('"generated record"', '"term00001 term00002"'):
         inc_ph = search_ast_collect(inc, text, k=10)
@@ -83,7 +81,7 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
     n_before = len(list_segments(out))
     assert n_before > 1
     pre = {
-        text: search_collect(inc, text, k=10)
+        text: search_ast_collect(inc, text, k=10)
         for text in ("fn import", "term00001 term00002")
     }
     n_merges = compact_stream(spark, out, fanout=min(3, n_before))
@@ -92,7 +90,7 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
     assert len(segs_after) < n_before
     merged = read_inc(spark, out)
     for text, exp in pre.items():
-        got = search_collect(merged, text, k=10)
+        got = search_ast_collect(merged, text, k=10)
         assert [(d, np.float32(s).view(np.uint32)) for d, s in got] == [
             (d, np.float32(s).view(np.uint32)) for d, s in exp
         ], text

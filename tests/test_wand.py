@@ -10,7 +10,7 @@ import pytest
 from frankensearch_spark.corpus import FROZEN_QUERIES, corpus_docs
 from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.operators.merge import build_blocks, decode_blocks_pdf
-from frankensearch_spark.operators.query import QuerySpec
+from frankensearch_spark.operators.wand import QuerySpec
 from frankensearch_spark.operators.wand import (
     serving_from_built,
     wand_bits,
@@ -507,7 +507,7 @@ def test_maxscore_split_certification_guards(spark):
     the split cannot be certified: Must/MustNot present, <2 or >8 unique
     terms, θ not finite, or any scored term's shape max unknown (no
     preload)."""
-    from frankensearch_spark.operators.query import QuerySpec as QS
+    from frankensearch_spark.operators.wand import QuerySpec as QS
     from frankensearch_spark.operators.wand import _maxscore_split
 
     rows = [(i, "alpha beta gamma") for i in range(64)]

@@ -1,13 +1,15 @@
-"""Extended grammar fuzz: random query compositions through BOTH executor
-paths (durable serving + primary AST pivot) vs the numpy oracle, bit-exact.
+"""Extended grammar fuzz: random query compositions through every
+executor path vs the numpy oracle, bit-exact — durable serving (routed),
+the exhaustive AST scorer, multi-field (built and durable, content +
+title^2 over the generated corpus) and batched execution.
 
-The in-suite fuzz (tests/test_serving_exec.py, test_spark_query.py) runs
+The in-suite fuzz (tests/test_serving_exec.py, test_astexec.py) runs
 ~30 compositions per path to keep the suite fast; this tool runs an
 arbitrary budget for soak testing.  Usage:
 
-    python tools/fuzz_extended.py [n_serving] [n_ast] [seed]
+    python tools/fuzz_extended.py [n_serving] [n_ast] [seed] [n_multifield] [n_batches]
 
-Exits non-zero on the first mismatch, printing the offending query text.
+Prints one mismatch line per offending query and exits non-zero if any.
 """
 
 from __future__ import annotations
@@ -34,25 +36,25 @@ FRAGMENTS = [
 ]
 
 
-# multi-field fragment pool over the reference's 120-doc fixture corpus
-# (content + title^2) — field scopes, boosts, phrases, globs, booleans
+# multi-field fragment pool over the generated corpus as content + title
+# (the document's path, title^2) — field scopes, boosts, phrases, globs,
+# booleans
 MF_FRAGMENTS = [
-    "rust", "ownership", "borrowing", "search", "index", "embeddings",
-    "title:ownership", "title:rust^3", "content:search", "owner*",
-    '"error handling"', '"rust ownership"', "rust AND ownership",
-    "(search OR index)", "-rust", "+ownership", "NOT embeddings",
-    "transformer embeddings semantic", "title:owner*", "rust^0.5",
-    '"unclosed', "AND", "^", "missingzz",
+    "fn", "import", "term00001", "term00002", "src", "rs", "py",
+    "title:py", "title:rs^3", "content:fn", "file1*", "title:m1*",
+    '"term00001 term00002"', '"src m1"', "fn AND py", "(term00001 OR rs)",
+    "-rs", "+term00002", "NOT import", "generated record term00007",
+    "term00001^0.5", '"unclosed', "AND", "^", "missingzz",
 ]
 
 
-def _fuzz_multifield(spark, rng, n_mf: int) -> int:
+def _fuzz_multifield(spark, rng, n_mf: int, n_docs: int) -> int:
     """Random compositions through the multi-field primary AND durable
     serving paths vs OracleMultiIndex.  Returns mismatch count."""
-    import json
     import shutil
     import tempfile
 
+    from frankensearch_spark.corpus import multifield_docs
     from frankensearch_spark.operators.astexec import search_ast_bits
     from frankensearch_spark.operators.build import build_multifield_index
     from frankensearch_spark.operators.serving_exec import serving_search_bits
@@ -60,13 +62,7 @@ def _fuzz_multifield(spark, rng, n_mf: int) -> int:
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.query_ast import REFERENCE_SCHEMA, parse_lenient
 
-    with open("/root/reference/tests/fixtures/corpus.json") as fh:
-        docs = json.load(fh)["documents"]
-    ordered = sorted(docs, key=lambda d: d["doc_id"])
-    pairs = [
-        (i, {"content": d.get("content", ""), "title": d.get("title", "")})
-        for i, d in enumerate(ordered)
-    ]
+    pairs = multifield_docs(n_docs)
     corpus = spark.createDataFrame(
         [(i, t["title"], t["content"]) for i, t in pairs],
         "docid long, title string, content string",
@@ -178,7 +174,7 @@ def main() -> int:
             if (i + 1) % 50 == 0:
                 print(f"ast {i + 1}/{n_ast} ok={i + 1 - bad}")
 
-        bad += _fuzz_multifield(spark, rng, n_mf)
+        bad += _fuzz_multifield(spark, rng, n_mf, n_docs)
 
         # batched execution: random batches through ONE job each, every
         # member checked against the numpy oracle (bit-exact) — the

@@ -88,7 +88,7 @@ def clustered(n_docs: int) -> None:
     """Repo-local-vocabulary corpus where bucket pruning bites."""
     from frankensearch_spark.corpus import make_corpus
     from frankensearch_spark.operators.build import build_index
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY, CORPUS_SCHEMA
@@ -160,7 +160,7 @@ def zipf_clustered(n_docs: int) -> None:
     engage on natural multi-term shapes (the i.i.d. default is the
     adversarial control where honest gates keep them off)."""
     from frankensearch_spark.operators.build import build_index
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY
@@ -205,7 +205,7 @@ def main() -> None:
         zipf_clustered(int(sys.argv[2]) if len(sys.argv) > 2 else 200_000)
         return
     idx_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/fsx_vb_idx"
-    from frankensearch_spark.operators.query import QuerySpec
+    from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import PruningReceipt, wand_topk
     from frankensearch_spark.plans.manifest import read_index
     from frankensearch_spark.session import get_spark

@@ -37,7 +37,7 @@ def main() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from frankensearch_spark.operators.query import search_collect
+    from frankensearch_spark.operators.astexec import search_ast_collect
     from frankensearch_spark.plans.tiers import list_segments
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY, CORPUS_SCHEMA
@@ -101,7 +101,7 @@ def main() -> None:
             time.sleep(0.02)
         commit_lags.append(time.perf_counter() - t0)
         idx = read_incremental_index(spark, out)
-        hits = search_collect(idx, token, k=5)
+        hits = search_ast_collect(idx, token, k=5)
         assert hits, token
         search_lags.append(time.perf_counter() - t0)
 
