@@ -75,7 +75,10 @@ def _r(x: float, nd: int):
 # degraded boot and showed a concurrency collapse nobody could disprove
 # — so every bench record now classifies its own host FIRST (idle, before
 # any repo Spark work) and carries the verdict at headline level.
+# ``ncpu`` is the core count of the boot the band was pinned on: a probe
+# from any other core count is not comparable and reads UNKNOWN.
 HEALTHY_BAND = {
+    "ncpu": 32,
     "jvm_hash2b_secs": 1.10,
     "ipc_arrow64m_secs": 4.20,
     "shuffle_agg100m_secs": 3.30,
@@ -87,9 +90,14 @@ def classify_host(probe: dict) -> str:
 
     DEGRADED needs >=2 exceeded dimensions (any single one can be a
     transient co-tenant blip); all within band = HEALTHY; one exceeded =
-    UNKNOWN (interpret absolute seconds with care)."""
+    UNKNOWN (interpret absolute seconds with care).  A probe taken on a
+    core count other than the band's is UNKNOWN."""
+    if probe.get("ncpu") != HEALTHY_BAND["ncpu"]:
+        return "UNKNOWN"
     over = 0
     for k, lim in HEALTHY_BAND.items():
+        if k == "ncpu":
+            continue
         v = probe.get(k)
         if v is None:
             return "UNKNOWN"

@@ -261,6 +261,22 @@ def _eval_range(q: RangeStr | RangeI64, ctx: EvalContext, boost: np.float32):
     return mask, np.where(mask, np.float32(boost), np.float32(0.0))
 
 
+def leaf_weight(df, doc_count, boost, field_boost) -> np.float32:
+    """A text Term's f32 weight in one field: ``term_weight(df, N,
+    f32(inherited boost) * f32(field boost))`` — the op order every
+    scorer (WAND's bounds and the batch stream lane included) shares."""
+    return np.float32(
+        term_weight(df, doc_count, np.float32(boost) * np.float32(field_boost))
+    )
+
+
+def tf_score(w, tf: np.ndarray, norms: np.ndarray) -> np.ndarray:
+    """The one BM25 contribution ``w * tf / (tf + norm)`` in f32 — every
+    text leaf here and the batch stream lane's single-clause scores."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return (np.float32(w) * tf / (tf + norms)).astype(np.float32)
+
+
 def _eval_term(q: Term, ctx: EvalContext, boost: np.float32):
     mask, acc = _zeros(ctx.n)
     for f in q.fields:
@@ -296,10 +312,8 @@ def _eval_term(q: Term, ctx: EvalContext, boost: np.float32):
             # scorer sees tf=1 regardless of stored frequency
             tf = np.minimum(tf, np.float32(1.0)).astype(np.float32)
         norms = view.tf_cache[view.fieldnorm_id]
-        w = term_weight(df, ctx.doc_count, np.float32(boost) * np.float32(f.boost))
-        with np.errstate(invalid="ignore", divide="ignore"):
-            s = (np.float32(w) * tf / (tf + norms)).astype(np.float32)
-        s = np.where(hit, s, np.float32(0.0))
+        w = leaf_weight(df, ctx.doc_count, boost, f.boost)
+        s = np.where(hit, tf_score(w, tf, norms), np.float32(0.0))
         acc = (acc + s).astype(np.float32)
         mask |= hit
     return mask, np.where(mask, acc, np.float32(0.0))
@@ -459,9 +473,7 @@ def _eval_phrase(q: Phrase, ctx: EvalContext, boost: np.float32):
         w = np.float32(
             idf_sum * one_plus_k1 * np.float32(np.float32(boost) * np.float32(f.boost))
         )
-        with np.errstate(invalid="ignore", divide="ignore"):
-            s = (w * pf / (pf + norms)).astype(np.float32)
-        s = np.where(hit, s, np.float32(0.0))
+        s = np.where(hit, tf_score(w, pf, norms), np.float32(0.0))
         acc = (acc + s).astype(np.float32)
         mask |= hit
     return mask, np.where(mask, acc, np.float32(0.0))

@@ -354,8 +354,8 @@ def field_postings(sub: ServingIndex, f: str, terms: list[str],
 def ast_to_queryspec_fields(ast):
     """Lower a prunable AST shape to ``(QuerySpec, term_fields)``, else
     None.  ``term_fields``: term -> ordered tuple of (field name, f32
-    field boost) — the WAND kernels score each clause per field in this
-    order, mirroring the kernel's ``_eval_term`` nesting exactly.
+    field boost) — the field order of each clause's Term, which
+    ``QuerySpec.to_ast`` rebuilds for the kernel.
 
     Convertible: Terms over TEXT non-basic fields — single-field
     (``content`` queries) AND multi-field (the reference's default
@@ -367,8 +367,9 @@ def ast_to_queryspec_fields(ast):
     leaves, All, nested booleans, basic (tf=1) fields, and terms with
     CONFLICTING boosts or field scopes stay on the decode-and-score
     path.  The conversion is score-exact: QuerySpec clause order (Must
-    then Should) matches the kernel's aggregation order, and both paths
-    score f32 ``weight * tf / (tf + norm)`` per (clause, field)."""
+    then Should) matches the kernel's aggregation order, and
+    ``QuerySpec.to_ast`` rebuilds a tree the kernel scores bit-equal to
+    the original (pinned by test_serving_exec)."""
     from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.query_ast import (
         MUST,
@@ -444,26 +445,6 @@ def ast_to_queryspec_fields(ast):
     if not spec.must and not spec.should:
         return None  # pure-negative shapes need the All-repair path
     return spec, term_fields
-
-
-def ast_to_queryspec(ast):
-    """Single-field (content) form of :func:`ast_to_queryspec_fields`:
-    the flat QuerySpec alone, or None when the shape is unprunable or
-    spans fields other than bare ``content``."""
-    out = ast_to_queryspec_fields(ast)
-    if out is None:
-        return None
-    spec, term_fields = out
-    for t, flds in term_fields.items():
-        if len(flds) != 1 or flds[0][0] != "content":
-            return None
-        # fold the field boost into the per-term boost (the historical
-        # single-field contract: weight = w(df, N, clause_b * field_b))
-        spec.boosts[t] = float(
-            np.float32(np.float32(spec.boosts.get(t, 1.0))
-                       * np.float32(flds[0][1]))
-        )
-    return spec
 
 
 def serving_search_collect(

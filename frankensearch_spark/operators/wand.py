@@ -32,7 +32,8 @@ tombstones cogroup into their bucket's task — the driver only ever sees
 O(seed + k) rows, never per-bucket metadata or winner sets (the round-1
 driver-side collects are gone).
 
-Everything score-bearing is numpy float32 in the pinned op order.
+Every score comes from the shared kernel (:mod:`operators.bucketscore`
+→ ``kernel.eval_query``); pruning only decides which blocks decode.
 """
 
 from __future__ import annotations
@@ -51,14 +52,28 @@ from frankensearch_spark.contract import (
     compute_avgdl,
     compute_tf_cache,
     score_total_order_key,
-    term_weight,
 )
-from frankensearch_spark.operators.merge import (
-    DEFAULT_BUCKET_SHIFT,
-    decode_blocks_pdf,
-    term_partition,
+from frankensearch_spark.kernel import leaf_weight
+from frankensearch_spark.operators.bucketscore import (
+    _F32_EPS,
+    BlockPrune,
+    _block_keep_mask,
+    bucket_plan,
+    bucket_scorer,
+    candidate_blocks,
 )
+from frankensearch_spark.operators.merge import DEFAULT_BUCKET_SHIFT
 from frankensearch_spark.analyze import tokenize_fast
+from frankensearch_spark.query_ast import (
+    MUST,
+    MUST_NOT,
+    SHOULD,
+    Boolean,
+    Boost,
+    Clause,
+    QueryField,
+    Term,
+)
 
 
 @dataclass
@@ -86,6 +101,30 @@ class QuerySpec:
 
     def boost_of(self, term: str) -> float:
         return float(self.boosts.get(term, 1.0))
+
+    def to_ast(self, term_fields: dict | None = None) -> Boolean:
+        """The kernel's AST of this spec, the inverse of
+        :func:`serving_exec.ast_to_queryspec_fields`: Must, then Should,
+        then MustNot clauses, each a ``Boost(Term)`` over the term's
+        ordered (field, f32 boost) scopes — ``content`` at boost 1 when
+        ``term_fields`` is None.  Scores are bit-equal to the AST it was
+        lowered from: the kernel sums Must before Should, in clause
+        order, and folds boosts in the same f32 steps."""
+        def leaf(t: str) -> Boost:
+            scopes = (
+                (("content", 1.0),) if term_fields is None
+                else term_fields.get(t, ())
+            )
+            return Boost(
+                Term(tuple(QueryField(f, b) for f, b in scopes), t),
+                self.boost_of(t),
+            )
+
+        return Boolean(tuple(
+            [Clause(MUST, leaf(t)) for t in self.must]
+            + [Clause(SHOULD, leaf(t)) for t in self.should]
+            + [Clause(MUST_NOT, leaf(t)) for t in self.must_not]
+        ))
 
 
 def external_id(row, key_cols) -> str:
@@ -468,9 +507,6 @@ def _clause_mult(spec: QuerySpec) -> dict:
     return mult
 
 
-_F32_EPS = float(np.finfo(np.float32).eps)
-
-
 def _maxscore_split(spec: QuerySpec, weights: dict, tf_order: dict,
                     fidx: dict, theta: float) -> set:
     """Term-level MaxScore split (argus.rs:29,4463-4485): the set of
@@ -537,315 +573,6 @@ def _maxscore_split(spec: QuerySpec, weights: dict, tf_order: dict,
         # safe and keep at least the largest-bound term essential
         non_essential.discard(max(u, key=lambda t: (u[t], t)))
     return non_essential
-
-
-def _block_keep_mask(pdf: pd.DataFrame, theta: float, weights: dict,
-                     avgdls: dict, mult: dict,
-                     bucket_shift: int) -> np.ndarray:
-    """BLOCK-granular θ mask over one bucket's block rows — the
-    reference's native Block-Max-WAND granularity (argus.rs:4474-4520,
-    quiver.rs:1719-1930), which bucket-level bounds alone cannot reach:
-    a df≈N term on an i.i.d. corpus has flat BUCKET bounds but its
-    128-posting blocks still vary in (max_tf, min_fieldnorm).
-
-    Within the bucket each (field, term)'s blocks tile contiguous docid
-    sub-ranges ``[first_doc_i, first_doc_{i+1})`` (different segments'
-    docid leases are disjoint intervals, so sorting by first_doc only
-    OVER-covers inter-segment gaps — bound-safe).  The per-doc upper
-    bound is the f64 interval-sum of the covering blocks' conservative
-    bounds with clause multiplicity, inflated by the same ``n·eps``
-    envelope as :func:`contract.conservative_bound_sum` so it dominates
-    every f32 accumulation order.  ANY block — scored or not (must_not,
-    zero-weight) — whose covered region tops out below θ is dropped:
-    every doc it covers is provably below the certified kth score, so
-    losing its contributions (or its exclusions) cannot change the
-    top-k.  A dropped doc may still receive PARTIAL contributions from
-    kept blocks of other terms; its partial f32 score ≤ its true score
-    ≤ its bound < θ, and the final merge already holds k exact scores
-    ≥ θ from the seed phase, so the straggler is cut — rank identity is
-    preserved (pinned by test_wand's pruned ≡ exhaustive ≡ oracle).
-    """
-    m = len(pdf)
-    span = 1 << bucket_shift
-    base = int(pdf["bucket"].iat[0]) << bucket_shift
-    firsts = pdf["first_doc"].to_numpy(dtype=np.int64) - base
-    terms = pdf["term"].to_numpy(dtype=object)
-    fields = pdf["field"].to_numpy(dtype=object)
-    mtc = pdf["max_tf_code"].to_numpy(dtype=np.int64)
-    mfn = pdf["min_fieldnorm_id"].to_numpy(dtype=np.int64)
-
-    groups: dict = {}
-    for i in range(m):
-        groups.setdefault((fields[i], terms[i]), []).append(i)
-
-    diff = np.zeros(span + 1, dtype=np.float64)
-    n_contrib = 0
-    tiled: list = []  # (rows sorted by first, starts) for phase 2
-    for (f, t), rows_l in groups.items():
-        rows_a = np.asarray(rows_l, dtype=np.int64)
-        order = np.argsort(firsts[rows_a], kind="stable")
-        rows_a = rows_a[order]
-        starts = np.clip(firsts[rows_a], 0, span - 1)
-        degenerate = starts.size > 1 and bool(np.any(np.diff(starts) <= 0))
-        w = weights.get((f, t))
-        mm = mult.get(t, 0)
-        if w is not None and mm:
-            b = block_max_score(
-                mtc[rows_a], mfn[rows_a], avgdls[f], w
-            ).astype(np.float64) * mm
-            n_contrib += mm
-            if degenerate:
-                # overlapping first_docs (shouldn't happen for healthy
-                # segments): one flat max bound over the group's span
-                diff[int(starts[0])] += float(b.max())
-            else:
-                ends = np.append(starts[1:], span)
-                np.add.at(diff, starts, b)
-                np.add.at(diff, ends, -b)
-        if not degenerate:
-            tiled.append((rows_a, starts))
-    ub = np.cumsum(diff[:span])
-    # f32 any-order summation envelope (conservative_bound_sum's law)
-    ub += np.abs(ub) * (_F32_EPS * max(n_contrib, 1))
-    keep = np.ones(m, dtype=bool)
-    for rows_a, starts in tiled:
-        seg_max = np.maximum.reduceat(ub, starts)
-        keep[rows_a] = seg_max >= theta
-    return keep
-
-
-def _row_group_ids(part_pdf: pd.DataFrame, gid_of: dict) -> np.ndarray:
-    """Small-int (field, term) group id per BLOCK row, interned into the
-    shared ``gid_of`` dict — block rows are few (tens per bucket), so the
-    Python loop is cheap, and downstream posting selection becomes an
-    integer compare instead of two object-dtype string compares."""
-    ts = part_pdf["term"].to_numpy(dtype=object)
-    fs = part_pdf["field"].to_numpy(dtype=object)
-    out = np.empty(len(part_pdf), dtype=np.int32)
-    for i in range(len(part_pdf)):
-        key = (fs[i], ts[i])
-        g = gid_of.get(key)
-        if g is None:
-            g = len(gid_of)
-            gid_of[key] = g
-        out[i] = g
-    return out
-
-
-def _candidate_block_mask(ne_pdf: pd.DataFrame, cand_mask: np.ndarray,
-                          base: int, bucket_shift: int) -> np.ndarray:
-    """Keep mask over NON-essential block rows: a block decodes only when
-    its covered docid segment ``[first_doc_i, first_doc_{i+1})`` (per
-    (field, term) group, the same over-covering tiling as
-    :func:`_block_keep_mask`) contains at least one candidate doc.  A
-    candidate's own posting block always survives: postings are docid-
-    sorted, so the block holding docid d covers a segment containing d.
-    Degenerate tilings (overlapping first_docs) keep the whole group."""
-    m = len(ne_pdf)
-    if m == 0:
-        return np.ones(0, dtype=bool)
-    span = 1 << bucket_shift
-    pre = np.concatenate(([0], np.cumsum(cand_mask, dtype=np.int64)))
-    firsts = ne_pdf["first_doc"].to_numpy(dtype=np.int64) - base
-    terms = ne_pdf["term"].to_numpy(dtype=object)
-    fields = ne_pdf["field"].to_numpy(dtype=object)
-    keep = np.ones(m, dtype=bool)
-    groups: dict = {}
-    for i in range(m):
-        groups.setdefault((fields[i], terms[i]), []).append(i)
-    for rows_l in groups.values():
-        rows_a = np.asarray(rows_l, dtype=np.int64)
-        order = np.argsort(firsts[rows_a], kind="stable")
-        rows_a = rows_a[order]
-        starts = np.clip(firsts[rows_a], 0, span)
-        if starts.size > 1 and bool(np.any(np.diff(starts) <= 0)):
-            continue  # degenerate: keep all (safe)
-        ends = np.append(starts[1:], span)
-        keep[rows_a] = pre[ends] > pre[starts]
-    return keep
-
-
-def _score_buckets_kernel(spec: QuerySpec, weights: dict, tf_caches: dict,
-                          k: int, bucket_shift: int, term_fields: dict,
-                          theta: float = -math.inf,
-                          avgdls: dict | None = None,
-                          non_essential: set | None = None):
-    """Per-bucket scoring kernel -> local top-k rows.
-
-    Dense bucket-local accumulation (bucket span is bounded by
-    2**bucket_shift) mirrors the oracle's clause-ordered f32 arithmetic:
-    clause outer loop (Must then Should), field inner loop in the
-    query's field order — exactly the kernel's ``_eval_term`` nesting,
-    so multi-field (content + title^2) scores are bit-identical.
-    ``weights`` is keyed ``(field, term)``; ``tf_caches`` maps field ->
-    its snapshot tf cache; ``term_fields`` maps term -> ordered field
-    names.  Returned as (groupBy fn, cogroup fn): the cogroup variant
-    receives the bucket's tombstoned docids as the right frame — no
-    driver closure.
-    """
-    must = list(spec.must)
-    must_not = list(spec.must_not)
-    clause_terms = spec.clause_terms()
-    span = 1 << bucket_shift
-    mult = _clause_mult(spec)
-    ne_terms = set(non_essential or ())
-
-    def score_one(pdf, tomb=None):
-        if len(pdf) == 0:
-            return pd.DataFrame({"docid": [], "score": []})
-        if theta != -math.inf:
-            # block-granular θ skip BEFORE any decode: the mask is
-            # metadata-only, so a pruned block costs one bound compare
-            # instead of a vbyte decode + scoring pass
-            keepm = _block_keep_mask(
-                pdf, theta, weights, avgdls, mult, bucket_shift
-            )
-            if not keepm.all():
-                pdf = pdf[keepm]
-            if len(pdf) == 0:
-                return pd.DataFrame({"docid": [], "score": []})
-        base = int(pdf["bucket"].iat[0]) << bucket_shift
-        cand_mask = None
-        if ne_terms and theta != -math.inf:
-            # term-level MaxScore (argus.rs:4463-4485): candidates are
-            # generated ONLY from the essential lists — decode them
-            # first, then decode a non-essential block only when its
-            # covered docid segment holds at least one candidate (the
-            # distributed analogue of "seek the low-weight cursor to the
-            # next candidate" — blocks between candidates never decode).
-            # Docs with no essential posting score ≤ the split's
-            # inflated cumsum < θ, and the merge holds k exact scores
-            # ≥ θ from the seed phase, so the gating is rank-exact.
-            tarr = pdf["term"].to_numpy(dtype=object)
-            ne_sel = np.array([t in ne_terms for t in tarr], dtype=bool)
-            ess_pdf = pdf[~ne_sel]
-            if len(ess_pdf) == 0:
-                return pd.DataFrame({"docid": [], "score": []})
-            d1, t1, f1, r1 = decode_blocks_pdf(ess_pdf, bucket_shift)
-            if d1.size == 0:
-                return pd.DataFrame({"docid": [], "score": []})
-            cand_mask = np.zeros(span, dtype=bool)
-            cand_mask[(d1 - base).astype(np.int64)] = True
-            ne_pdf = pdf[ne_sel]
-            keep_ne = _candidate_block_mask(
-                ne_pdf, cand_mask, base, bucket_shift
-            )
-            if not keep_ne.all():
-                ne_pdf = ne_pdf[keep_ne]
-            if len(ne_pdf):
-                d2, t2, f2, r2 = decode_blocks_pdf(ne_pdf, bucket_shift)
-            else:
-                d2 = np.zeros(0, dtype=d1.dtype)
-                t2 = np.zeros(0, dtype=t1.dtype)
-                f2 = np.zeros(0, dtype=f1.dtype)
-                r2 = np.zeros(0, dtype=np.int64)
-            docids = np.concatenate([d1, d2])
-            tfs = np.concatenate([t1, t2])
-            fids = np.concatenate([f1, f2])
-            gid_of: dict = {}
-            post_gids = np.concatenate([
-                _row_group_ids(ess_pdf, gid_of)[r1],
-                _row_group_ids(ne_pdf, gid_of)[r2],
-            ])
-        else:
-            docids, tfs, fids, rows = decode_blocks_pdf(pdf, bucket_shift)
-            if docids.size == 0:
-                return pd.DataFrame({"docid": [], "score": []})
-            gid_of = {}
-            post_gids = _row_group_ids(pdf, gid_of)[rows]
-        offs = (docids - base).astype(np.int64)
-
-        acc = np.zeros(span, dtype=np.float32)
-        matched = np.zeros(span, dtype=bool)
-        must_ok = np.ones(span, dtype=bool) if must else None
-        seen = np.zeros(span, dtype=bool)
-        seen[offs] = True
-
-        def term_sel(term):
-            """Postings of ``term`` in any of ITS queried fields —
-            integer group-id compares (the object-dtype string compare
-            this replaces was the kernel's hottest line: ~2 object
-            compares per posting per clause term)."""
-            sel = np.zeros(len(post_gids), dtype=bool)
-            for f in term_fields.get(term, ()):
-                g = gid_of.get((f, term))
-                if g is not None:
-                    sel |= post_gids == g
-            return sel
-
-        for term in dict.fromkeys(must):
-            o = offs[term_sel(term)]
-            hit = np.zeros(span, dtype=bool)
-            hit[o] = True
-            must_ok &= hit
-        for term in clause_terms:
-            # EXACT kernel nesting (_eval_boolean -> _eval_term): each
-            # clause's multi-field subtotal accumulates in f32 FIRST,
-            # then the subtotal adds to the clause accumulator.  Folding
-            # fields straight into ``acc`` changes the f32 association —
-            # ((acc+s_content)+s_title) vs (acc+(s_content+s_title)) —
-            # and diverges from the oracle by 1 ULP on real corpora
-            # (caught by fuzz seed 7: 'search ownership' et al.)
-            term_acc = np.zeros(span, dtype=np.float32)
-            term_hit = False
-            for fname in term_fields.get(term, ()):
-                w = weights.get((fname, term))
-                if w is None:
-                    continue
-                g = gid_of.get((fname, term))
-                sel = post_gids == g if g is not None else None
-                if sel is None or not sel.any():
-                    continue
-                o = offs[sel]
-                f = tfs[sel].astype(np.float32)
-                norm = tf_caches[fname][fids[sel].astype(np.int64)]
-                s = (np.float32(w) * f / (f + norm)).astype(np.float32)
-                term_acc[o] = (term_acc[o] + s).astype(np.float32)
-                term_hit = True
-                if term in spec.should:
-                    matched[o] = True
-            if term_hit:
-                # dense add: x + 0.0 is exact in IEEE, so untouched docs
-                # keep their bits while matched docs get the kernel's
-                # (acc + term_subtotal) association
-                acc = (acc + term_acc).astype(np.float32)
-
-        ok = must_ok if must else matched
-        ok = ok & seen
-        if cand_mask is not None:
-            # MaxScore: only essential-list docs are candidates
-            ok = ok & cand_mask
-        for term in must_not:
-            ok = ok.copy()
-            ok[offs[term_sel(term)]] = False
-        if tomb is not None and len(tomb):
-            local = tomb["docid"].to_numpy(dtype=np.int64) - base
-            local = local[(local >= 0) & (local < span)]
-            if local.size:
-                ok = ok.copy()
-                ok[local] = False
-
-        hit_offs = np.nonzero(ok)[0]
-        if hit_offs.size == 0:
-            return pd.DataFrame({"docid": [], "score": []})
-        scores = acc[hit_offs]
-        out_docids = base + hit_offs
-        order = score_total_order_key(scores, out_docids)[:k]
-        return pd.DataFrame(
-            {
-                "docid": out_docids[order].astype(np.int64),
-                "score": scores[order],
-            }
-        )
-
-    def score_grouped(pdf):
-        # single-arg wrapper: a 2-arg fn would be read as (key, pdf)
-        return score_one(pdf)
-
-    def score_cogrouped(blocks_pdf, tomb_pdf):
-        return score_one(blocks_pdf, tomb_pdf)
-
-    return score_grouped, score_cogrouped
 
 
 def _jvm_bucket_bounds(meta: DataFrame, must_set: set, weights: dict,
@@ -927,57 +654,6 @@ def _jvm_bucket_bounds(meta: DataFrame, must_set: set, weights: dict,
         ).alias("bound"),
         "n_postings",
     )
-
-
-def _single_term_stream_plan(cand: DataFrame, weight, tf_cache,
-                             bucket_shift: int, want: int) -> DataFrame:
-    """Exhaustive single-clause top-k WITHOUT the bucket exchange:
-    decode + score each candidate block inside its scan partition, emit
-    a partition-local top-``want``, merge via orderBy().limit() (a
-    TakeOrderedAndProject — no full sort).  Valid only when one scored
-    (field, term) clause exists, no MustNot, and no tombstones: then a
-    doc's score is exactly its single posting's ``w·tf/(tf+norm)``
-    (the kernel's one-clause reduction) and no accumulation across
-    blocks can occur.  Point queries reach it only for terms over the
-    local-lane cap or when the lane is busy (bounded terms decode on
-    the driver, :func:`local_lane_topk`); :func:`_single_term_stream_topk`
-    collects it."""
-    w = np.float32(weight)
-    tfc = tf_cache
-
-    def score_stream(pdfs):
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            docids, tfs, fids, _rows = decode_blocks_pdf(pdf, bucket_shift)
-            if docids.size == 0:
-                continue
-            f = tfs.astype(np.float32)
-            norm = tfc[fids.astype(np.int64)]
-            s = (w * f / (f + norm)).astype(np.float32)
-            order = score_total_order_key(s, docids)[:want]
-            yield pd.DataFrame(
-                {
-                    "docid": docids[order].astype(np.int64),
-                    "score": s[order],
-                }
-            )
-
-    return (
-        cand.mapInPandas(score_stream, "docid long, score float")
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(want)
-    )
-
-
-def _single_term_stream_topk(cand: DataFrame, weight, tf_cache,
-                             bucket_shift: int, want: int):
-    """Collected form of :func:`_single_term_stream_plan` —
-    [(docid, f32 score)] in the pinned total order."""
-    rows = _single_term_stream_plan(
-        cand, weight, tf_cache, bucket_shift, want
-    ).collect()
-    return [(int(r["docid"]), np.float32(r["score"])) for r in rows]
 
 
 def _block_prefilter(blocks_df: DataFrame, theta: float, weights: dict,
@@ -1095,39 +771,14 @@ def _prepare(index, spec: QuerySpec, term_fields: dict | None = None):
             df = stats[fname].get(t)
             if not df:
                 continue
-            # exact kernel weight op order: term_weight(df, N,
-            # f32(clause boost) * f32(field boost))
-            weights[(fname, t)] = np.float32(
-                term_weight(
-                    df, doc_count,
-                    np.float32(np.float32(spec.boost_of(t))
-                               * np.float32(fboost)),
-                )
+            weights[(fname, t)] = leaf_weight(
+                df, doc_count, spec.boost_of(t), fboost
             )
-    cand = None
-    for f in field_names:
-        present = [t for t in uniq if stats[f].get(t) and f in tf_order[t]]
-        if not present:
-            continue
-        sub = fidx[f]
-        tparts = sorted(
-            {term_partition(t, sub.n_term_partitions) for t in present}
-        )
-        part = sub.blocks.filter(
-            F.col("tpart").isin(tparts) & F.col("term").isin(present)
-        )
-        # WAND never touches positions: prune pos_bytes (the HEAVIEST
-        # block column) so the parquet scan skips its pages and the
-        # bucket exchange never ships it
-        keep = [
-            c for c in (
-                "term", "bucket", "first_doc", "n", "doc_bytes",
-                "tf_bytes", "norm_bytes", "max_tf_code",
-                "min_fieldnorm_id", "codec",
-            ) if c in part.columns
-        ]
-        part = part.select(*keep).withColumn("field", F.lit(f))
-        cand = part if cand is None else cand.unionByName(part)
+    # WAND never touches positions: the scan carries no pos_bytes
+    cand = candidate_blocks(fidx, {
+        f: [t for t in uniq if stats[f].get(t) and f in tf_order[t]]
+        for f in field_names
+    })
     if cand is None:
         return None
     return weights, tf_caches, avgdls, cand, stats, tf_order
@@ -1177,14 +828,15 @@ WAND_MIN_COST = 16_384  # argus.rs:31 — prune only past this posting volume
 # query's exact posting volume — Σ df over every (field, term) pair its
 # candidate scan carries, MustNot and phrase terms included, known from
 # preloaded stats — fits under this cap, the candidate block rows
-# collect in ONE action and the query's own per-bucket kernel runs
-# in-process.  Its three callers: wand_topk's bucket kernel (run_topk),
-# wand_topk's single-term branch, and the bucket-lane twin
-# (batchexec.bucket_lane_local) that serves phrases, nested booleans
-# and split identifiers.  Byte bound at the cap, from the 5,000-doc
-# clustered benchmark corpus: doc/tf/norm bytes take 3.3 B per posting
-# (≈3.3 MB), and phrase terms add their pos_bytes, 1.2 B per position
-# or 2.0 B per posting — ≤ ~5.3 MB when every posting carries
+# collect in ONE action and the shared per-bucket scorer
+# (bucketscore.bucket_scorer) runs in-process.  Its two callers:
+# wand_topk's run_topk (every flat shape, single terms included) and
+# the bucket-lane twin (batchexec.bucket_lane_local) that serves
+# phrases, nested booleans and split identifiers.  Byte bound at the
+# cap, from the 5,000-doc clustered benchmark corpus: doc/tf/norm bytes
+# take 3.3 B per posting (≈3.3 MB; the block-max columns add 8 B per
+# 128-posting block), and phrase terms add their pos_bytes, 1.2 B per
+# position or 2.0 B per posting — ≤ ~5.3 MB when every posting carries
 # positions.  Measured 2M i.i.d.: the bucket exchange + Python-worker
 # stage cost more wall-clock than the whole kernel for such shapes.
 # Above the cap the distributed paths run unchanged; driver memory is
@@ -1222,16 +874,17 @@ def local_lane_topk(blocks_df: DataFrame, score_bucket, want: int,
     held — the caller then runs its distributed plan.
 
     ONE collect of the still-compressed candidate block rows, grouped by
-    bucket, each group through ``score_bucket(pdf, tomb)`` (a per-bucket
-    kernel returning ``docid``/``score`` rows, the same closure the
-    distributed plan hands to applyInPandas / cogroup) — no bucket
+    bucket, each group through ``score_bucket(pdf, tomb)`` (the
+    :func:`bucketscore.bucket_scorer` closure returning ``docid``/
+    ``score`` rows, the same one the distributed plan hands to
+    applyInPandas / cogroup) — no bucket
     exchange, no Python-worker stage.  ``tomb`` is the bucket's slice of
     ``dead`` as a ``docid`` frame, exactly the right side the cogroup
     route delivers, or None when the bucket holds no tombstone.  This is
     the reference's in-process serving shape (argus.rs runs the whole
     cursor tree in one thread) and the same driver-local twin discipline
-    as hybrid fusion.  Bit parity is structural: the per-bucket kernel
-    is byte-for-byte the distributed one, and the final merge in
+    as hybrid fusion.  Bit parity is structural: the per-bucket scorer
+    is the distributed one, and the final merge in
     ``score_total_order_key`` order equals
     ``orderBy(desc score, asc docid).limit(want)``."""
     if (
@@ -1498,13 +1151,21 @@ def wand_topk(
     scopes — see :func:`serving_exec.ast_to_queryspec_fields`).
     ``prune=False`` scores every candidate bucket (exhaustive-over-blocks);
     the pruned path is rank-identical by the conservative-bound theorem.
-    Plan shape (no driver-side materialization beyond O(seed + k) rows):
 
-      bounds   = cand.groupBy(bucket, field, term).agg(...)
-                     .groupBy(bucket).applyInPandas(bound)     # distributed
+    Every bucket scores through ONE closure,
+    :func:`bucketscore.bucket_scorer` over the kernel AST
+    :meth:`QuerySpec.to_ast` rebuilds — on the driver-local lane, the
+    bucket exchange (cogrouped with tombstones), or, for one scored
+    clause, the batch executor's shuffle-free stream lane.  θ and
+    MaxScore never score: they only drop block rows before decode
+    (:class:`bucketscore.BlockPrune`).  Plan shape (no driver-side
+    materialization beyond O(seed + k) rows):
+
+      bounds   = cand.groupBy(bucket, field, term).agg(...) + LUT joins
+                     (JVM codegen, no Python stage)            # distributed
       seeds    = bounds TakeOrderedAndProject(seed_scan_cap)   # tiny collect
-      θ        = kth of kernel(seed buckets) top-k             # k-row collect
-      winners  = kernel(buckets with bound ≥ θ) top-k          # k-row collect
+      θ        = kth of scorer(seed buckets) top-k             # k-row collect
+      winners  = scorer(buckets with bound ≥ θ, BlockPrune) top-k
     """
     prep = _prepare(index, spec, term_fields)
     if prep is None:
@@ -1597,37 +1258,42 @@ def wand_topk(
         gap = _coverage_gap(fidx, spec, tf_order, stats)
         if gap is not None and gap < COVERAGE_GAP_MIN:
             prune = False
-    out_schema = "docid long, score float"
     tomb = index.tombstones
     dead = lane_tombstones(index)
+    from frankensearch_spark.operators.astexec import PreparedQuery
 
-    def kernel(theta: float = -math.inf, non_essential: set | None = None):
-        return _score_buckets_kernel(
-            spec, weights, tf_caches, want, shift, tf_order,
-            theta=theta, avgdls=avgdls, non_essential=non_essential,
+    query = PreparedQuery(
+        0, spec.to_ast(term_fields),
+        list(dict.fromkeys(spec.clause_terms() + list(spec.must_not))),
+        list(tf_caches), False,
+    )
+    doc_count = primary.stats()[0]
+
+    def run_topk(blocks_df, prune: BlockPrune | None = None,
+                 stream: bool = False) -> list[tuple[int, np.float32]]:
+        """The shared per-bucket scorer over ``blocks_df``: on the
+        driver-local lane when its gate admits the query, else one
+        distributed plan — the bucket exchange, or for ``stream`` (one
+        scored clause) the batch executor's shuffle-free stream lane."""
+        score_bucket = bucket_scorer(
+            [query], stats, tf_caches, doc_count, want, shift, prune=prune,
         )
-
-    def run_topk(blocks_df, theta: float = -math.inf,
-                 non_essential: set | None = None) -> list[tuple[int, np.float32]]:
-        score_one, score_cog = kernel(theta, non_essential)
         local = local_lane_topk(
-            blocks_df, score_cog, want, collect_cost, dead, shift
+            blocks_df, score_bucket, want, collect_cost, dead, shift
         )
         if local is not None:
             return local
-        if tomb is None:
-            scored = blocks_df.groupBy("bucket").applyInPandas(
-                score_one, out_schema
+        if stream:
+            from frankensearch_spark.operators.batchexec import (
+                _stream_lane_scored,
+            )
+
+            (fname, t), w = next(iter(weights.items()))
+            scored = _stream_lane_scored(
+                fidx, primary, [(0, fname, t, w)], want, blocks_df
             )
         else:
-            tb = tomb.select(
-                F.col("docid").cast("long").alias("docid")
-            ).withColumn("bucket", F.shiftright(F.col("docid"), shift))
-            scored = (
-                blocks_df.groupBy("bucket")
-                .cogroup(tb.groupBy("bucket"))
-                .applyInPandas(score_cog, out_schema)
-            )
+            scored = bucket_plan(blocks_df, score_bucket, tomb, shift)
         rows = (
             scored.orderBy(F.desc("score"), F.asc("docid"))
             .limit(want)
@@ -1640,38 +1306,20 @@ def wand_topk(
         if any((f, t) in weights for f in tf_order.get(t, ()))
     ]
     if not prune or not scored_terms:
-        if (
+        # A single scored (field, term) clause — no MustNot, no
+        # tombstones — over the local-lane cap, or spilled by a busy
+        # lane, takes the SHUFFLE-FREE stream lane: every doc owns
+        # exactly one posting, so each block scores where it lies and
+        # TakeOrderedAndProject merges.  (An unscored Must term can't
+        # slip through: with ONE clause term and ONE weight entry, that
+        # term IS the scored clause; '+foo foo' multiplicity shapes fail
+        # the clause_terms()==1 check.)
+        winners = run_topk(cand, stream=(
             tomb is None
             and len(weights) == 1
             and not spec.must_not
             and len(spec.clause_terms()) == 1
-        ):
-            # (an unscored Must term can't slip through: with ONE clause
-            # term and ONE weight entry, that term IS the scored clause —
-            # a missing-from-corpus Must term would leave weights empty
-            # and fail the len check; '+foo foo' multiplicity shapes fail
-            # the clause_terms()==1 check)
-            # A term under the local-lane cap decodes on the driver like
-            # every other bounded shape (one collect, no Python-worker
-            # stage).  Mega-terms over the cap, and queries spilled by a
-            # busy lane, take the SHUFFLE-FREE single-term stream: with
-            # one scored (field, term) clause every doc owns exactly one
-            # posting, so no cross-block accumulation exists — score
-            # each block where it lies (mapInPandas, no bucket
-            # exchange), keep a partition-local top-k, and let
-            # TakeOrderedAndProject merge.  Both are bit-exact: the
-            # kernel's single-clause score IS w·tf/(tf+norm) with no
-            # additions.
-            winners = local_lane_topk(
-                cand, kernel()[1], want, collect_cost, dead, shift
-            )
-            if winners is None:
-                (fname, t), w = next(iter(weights.items()))
-                winners = _single_term_stream_topk(
-                    cand, w, tf_caches[fname], shift, want
-                )
-        else:
-            winners = run_topk(cand)
+        ))
     else:
         # Phase A: distributed per-bucket conservative bounds
         meta = cand.groupBy("bucket", "field", "term").agg(
@@ -1807,7 +1455,10 @@ def wand_topk(
                     spec, weights, tf_order, fidx, theta
                 )
             winners += run_topk(
-                pruned_rest, theta=theta, non_essential=ne_terms
+                pruned_rest,
+                None if theta == -math.inf else BlockPrune(
+                    theta, weights, avgdls, mult_map, frozenset(ne_terms)
+                ),
             )
             if receipt is not None:
                 # extra counting jobs — only on request (receipts)
@@ -1822,16 +1473,7 @@ def wand_topk(
                 # population _maxscore_split's 2..=8 gate and
                 # elimination actually operate on; an absent-from-
                 # corpus clause term would otherwise inflate the count
-                receipt.terms_scored = len(
-                    {
-                        t
-                        for t in dict.fromkeys(spec.clause_terms())
-                        if any(
-                            weights.get((f, t)) is not None
-                            for f in tf_order.get(t, ())
-                        )
-                    }
-                )
+                receipt.terms_scored = len(set(scored_terms))
                 receipt.terms_nonessential = len(ne_terms)
                 if theta != -math.inf:
                     # block-granular receipt: metadata-only replay of

@@ -532,3 +532,36 @@ def test_deleted_loaded_engine_stays_one_job(spark, loaded):
         assert not set(victims) & {
             int(d) for d, _ in gone.search_docids(q, limit=50)
         }, q
+
+
+def test_local_lane_shapes_score_through_the_kernel(built, loaded,
+                                                    monkeypatch):
+    """Every driver-local point shape of a warmed loaded engine — flat
+    multi-term, ``+a -b``, single term and phrase — scores its buckets
+    through ``kernel.eval_query`` (the one scorer, called on the driver)
+    and returns the in-session engine's bits."""
+    import frankensearch_spark.kernel as K
+
+    shapes = {
+        "flat": "fn import term00005",
+        "must/must-not": "+fn -import",
+        "single term": "term00001",
+        "phrase": '"term00001 term00002"',
+    }
+    exp = {name: _bits(built.search_docids(q, limit=10))
+           for name, q in shapes.items()}
+    eng = _fresh(loaded).warm()
+    calls = []
+    real = K.eval_query
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(K, "eval_query", counting)
+    for name, q in shapes.items():
+        calls.clear()
+        got = _bits(eng.search_docids(q, limit=10))
+        assert exp[name], name
+        assert calls, name
+        assert got == exp[name], name

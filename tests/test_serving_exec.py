@@ -90,23 +90,27 @@ def test_phrase_serves_from_durable_index(serving, oracle, text):
     assert got == exp, text
 
 
+ROUTED_SHAPES = [
+    "term00001 term00002 term00003",
+    "fn AND NOT import",
+    "+term00001 -term00002 term00003",
+    "term000*",  # glob expands to a flat Should union at the root
+    "term00042^2 term00100",        # boosted terms fold into the spec
+    "term00001^0.5 AND term00002",  # boosted Must
+]
+
+
 def test_prunable_shapes_route_through_wand(serving, oracle):
     """Flat/boolean content queries on the serving path now take the
     block-max WAND pruned route — results must be bit-identical to the
     decode-and-score route and the oracle (closes the round-1 gap:
     full-grammar serving always decoded every posting)."""
-    from frankensearch_spark.operators.serving_exec import ast_to_queryspec
+    from frankensearch_spark.operators.serving_exec import (
+        ast_to_queryspec_fields,
+    )
     from frankensearch_spark.query_ast import parse_lenient
 
-    routed = [
-        "term00001 term00002 term00003",
-        "fn AND NOT import",
-        "+term00001 -term00002 term00003",
-        "term000*",  # glob expands to a flat Should union at the root
-        "term00042^2 term00100",        # boosted terms fold into the spec
-        "term00001^0.5 AND term00002",  # boosted Must
-    ]
-    for text in routed:
+    for text in ROUTED_SHAPES:
         ast = parse_lenient(text, ENGINE_SCHEMA).query
         import numpy as np
 
@@ -122,7 +126,33 @@ def test_prunable_shapes_route_through_wand(serving, oracle):
     for text in ('"term00001 term00002"', "lang:rust fn",
                  "term00042^2 term00042"):  # conflicting per-term boosts
         ast = parse_lenient(text, ENGINE_SCHEMA).query
-        assert ast_to_queryspec(ast) is None, text
+        assert ast_to_queryspec_fields(ast) is None, text
+
+
+def test_queryspec_ast_round_trip_bit_equal(serving, oracle):
+    """Lowering a routed shape to (QuerySpec, term_fields) and rebuilding
+    the kernel's AST from it (QuerySpec.to_ast, the tree every WAND
+    bucket scores) is bit-equal to the original AST in the oracle."""
+    import numpy as np
+
+    from frankensearch_spark.operators.astexec import expand_globs
+    from frankensearch_spark.operators.serving_exec import (
+        ast_to_queryspec_fields,
+    )
+    from frankensearch_spark.query_ast import parse_lenient
+
+    def bits(ast):
+        return [
+            (d, int(np.float32(s).view(np.uint32)))
+            for d, s in oracle.search_ast(ast, 20)
+        ]
+
+    for text in ROUTED_SHAPES:
+        ast = expand_globs(serving, parse_lenient(text, ENGINE_SCHEMA).query)
+        spec, term_fields = ast_to_queryspec_fields(ast)
+        exp = bits(ast)
+        assert exp, text
+        assert bits(spec.to_ast(term_fields)) == exp, text
 
 
 def test_blocks_scan_pushes_term_filters(serving):

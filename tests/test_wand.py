@@ -545,7 +545,7 @@ def test_candidate_block_mask_laws():
     degenerate tilings keep the whole group."""
     import pandas as pd
 
-    from frankensearch_spark.operators.wand import _candidate_block_mask
+    from frankensearch_spark.operators.bucketscore import _candidate_block_mask
 
     shift = 5  # span 32
     pdf = pd.DataFrame({

@@ -135,32 +135,29 @@ def main() -> None:
         ))
 
         # 4b. single-clause shuffle-free fast path (round 3): the ONLY
-        # exchange in the whole plan is the final TakeOrderedAndProject
-        from frankensearch_spark.contract import (
-            compute_avgdl,
-            compute_tf_cache,
-            term_weight,
-        )
-        from frankensearch_spark.operators.merge import term_partition
-        from frankensearch_spark.operators.wand import (
-            _single_term_stream_plan,
+        # exchange in the whole plan is the final TakeOrderedAndProject.
+        # The point path hands wand_topk's candidate scan to the batch
+        # executor's stream lane with one clause.
+        import numpy as np
+
+        from frankensearch_spark.contract import term_weight
+        from frankensearch_spark.operators.batchexec import (
+            _stream_lane_scored,
         )
 
-        dc, tt = srv.stats()
-        one = srv.blocks.filter(
-            (F.col("tpart") == term_partition("fn", srv.n_term_partitions))
-            & (F.col("term") == "fn")
-        )
-        fast = _single_term_stream_plan(
-            one,
-            term_weight(srv.df_of_terms(["fn"]).get("fn", 1), dc),
-            compute_tf_cache(compute_avgdl(tt, dc)),
-            srv.bucket_shift,
-            10,
+        dc, _tt = srv.stats()
+        w = np.float32(term_weight(srv.df_of_terms(["fn"]).get("fn", 1), dc))
+        fast = (
+            _stream_lane_scored({"content": srv}, srv,
+                                [(0, "content", "fn", w)], 10)
+            .orderBy(F.desc("score"), F.asc("docid"))
+            .limit(10)
         )
         sections.append((
             "Single-clause fast path (mega-terms over the local-lane cap)",
-            "one scored clause means one posting per matching doc — no "
+            "The batch executor's stream lane with one clause "
+            "(batchexec._stream_lane_scored + orderBy().limit()).  "
+            "One scored clause means one posting per matching doc — no "
             "cross-block accumulation exists, so the bucket exchange the "
             "general kernel needs is pure overhead here.  Blocks decode "
             "and score inside their scan partitions (MapInPandas over the "
@@ -193,6 +190,49 @@ def main() -> None:
             "tiny per-qid window cut.  Measured 5.6× the concurrent-FAIR "
             "throughput at 2M docs (BENCH.md §3 round 4).",
             fmt(srv_batch),
+        ))
+        # 4d. Must-bucket pre-restriction (round-5 serving gate), from
+        # the plan wand_topk itself scores: a rare Must term at a
+        # reduced min_cost (so the local-lane-first shortcut is off) over
+        # a small-bucket copy of the index with preloaded coverage
+        import frankensearch_spark.operators.wand as W
+
+        tmp_b = os.path.join(tmp, "small_buckets")
+        write_index(idx, tmp_b, bucket_shift=5, n_groups=1)
+        sb = read_index(spark, tmp_b)
+        sb.preload_termstats()
+        sb.preload_bucket_coverage()
+        n_buckets = sb._total_buckets
+        rare = min(
+            (t for t, (nb, _f, _m) in sb._bucket_cov.items()
+             if nb <= n_buckets // 4),
+            key=lambda t: (-sb._bucket_cov[t][0], t),
+        )
+        seen = []
+        real_lane = W.local_lane_topk
+
+        def capture(blocks_df, *a, **kw):
+            seen.append(blocks_df)
+            return real_lane(blocks_df, *a, **kw)
+
+        W.local_lane_topk = capture
+        try:
+            W.wand_topk(sb, W.QuerySpec(must=[rare], should=["fn"]), k=10,
+                        prune=False, min_cost=1)
+        finally:
+            W.local_lane_topk = real_lane
+        sections.append((
+            "Must-bucket pre-restriction (round-5 serving gate)",
+            "Preloaded coverage puts the rarest Must term in ≤50% of "
+            "buckets, so wand_topk semi-joins the whole candidate scan "
+            f"down to its buckets first (`+{rare} fn`, {n_buckets} "
+            "buckets): a broadcast left-semi join — the term-pruned block "
+            "scan never shuffles, the build side is one term's distinct "
+            "buckets (hinted only up to MUST_BROADCAST_MAX_BUCKETS rows). "
+            "Every path downstream sees only Must-feasible blocks; under "
+            "the local-lane cap at the default cost floor the join is "
+            "skipped (the kernel's Must rule drops the same buckets).",
+            fmt(seen[0]),
         ))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -1,7 +1,11 @@
 """Extended grammar fuzz: random query compositions through every
 executor path vs the numpy oracle, bit-exact — durable serving (routed),
-the exhaustive AST scorer, multi-field (built and durable, content +
-title^2 over the generated corpus) and batched execution.
+block-max WAND in conformance mode (``min_cost=0``: θ, the block mask
+and MaxScore engage), the exhaustive AST scorer, multi-field (built and
+durable, content + title^2) and batched execution.  The serving, WAND
+and multi-field phases run on both the i.i.d. corpus and the clustered
+one (``make_corpus(clustered=True)``: repo-local vocabularies, the shape
+pruning exploits).
 
 The in-suite fuzz (tests/test_serving_exec.py, test_astexec.py) runs
 ~30 compositions per path to keep the suite fast; this tool runs an
@@ -9,7 +13,9 @@ arbitrary budget for soak testing.  Usage:
 
     python tools/fuzz_extended.py [n_serving] [n_ast] [seed] [n_multifield] [n_batches]
 
-Prints one mismatch line per offending query and exits non-zero if any.
+Per corpus: ``n_serving`` routed compositions, ``n_serving // 2`` flat
+WAND compositions and ``n_multifield`` multi-field ones.  Prints one
+mismatch line per offending query and exits non-zero if any.
 """
 
 from __future__ import annotations
@@ -48,53 +54,172 @@ MF_FRAGMENTS = [
 ]
 
 
-def _fuzz_multifield(spark, rng, n_mf: int, n_docs: int) -> int:
+# flat fragments for the WAND conformance phase: Should / Must / MustNot
+# terms (common, rare, absent), boosts and a glob that expands to a flat
+# Should union
+WAND_FRAGMENTS = [
+    "fn", "import", "term00000", "term00001", "term00002", "term00003",
+    "term00007", "term00042", "term00100", "term00250", "record",
+    "+term00001", "+fn", "+term00042", "-import", "-term00002",
+    "term00005^2", "term00001^0.5", "missingkeywordzz", "term0004?",
+]
+
+
+def _bits(hits):
+    return [(d, int(np.float32(s).view(np.uint32))) for d, s in hits]
+
+
+def _phase(tag: str, n: int, compose, got, exp) -> int:
+    """``n`` compositions, ``got(text)`` vs ``exp(text)`` bit for bit;
+    prints each mismatch and returns their count."""
+    bad = 0
+    for i in range(n):
+        text = compose()
+        g, e = got(text), exp(text)
+        if g != e:
+            bad += 1
+            print(f"{tag} MISMATCH: {text!r}\n  got {g}\n  exp {e}")
+        if (i + 1) % 50 == 0 or i + 1 == n:
+            print(f"{tag} {i + 1}/{n} bad={bad}", flush=True)
+    return bad
+
+
+def _corpus(spark, n_docs: int, clustered: bool, multifield: bool = False):
+    """(built index, oracle) over ``make_corpus(n_docs, clustered)``;
+    docids follow the natural key (repo, path, commit), as a global-docid
+    build assigns them.  ``multifield`` adds ``title`` = path (title^2
+    under the reference schema)."""
+    from frankensearch_spark.corpus import make_corpus
+    from frankensearch_spark.operators.build import (
+        build_index,
+        build_multifield_index,
+    )
+    from frankensearch_spark.oracle import OracleIndex, OracleMultiIndex
+    from frankensearch_spark.sources.corpus import CORPUS_KEY, CORPUS_SCHEMA
+
+    rows = make_corpus(n_docs, clustered=clustered)
+    ordered = sorted(range(len(rows)), key=lambda i: rows[i][:3])
+    if multifield:
+        pairs = [
+            (d, {"content": rows[i][4], "title": rows[i][1]})
+            for d, i in enumerate(ordered)
+        ]
+        corpus = spark.createDataFrame(
+            [(i, t["title"], t["content"]) for i, t in pairs],
+            "docid long, title string, content string",
+        )
+        return (
+            build_multifield_index(
+                corpus, ["docid"], {"content": "content", "title": "title"}
+            ),
+            OracleMultiIndex(pairs, ["content", "title"]),
+        )
+    meta = {
+        name: {d: rows[i][j] for d, i in enumerate(ordered)}
+        for j, name in ((0, "repo"), (1, "path"), (2, "commit"), (3, "lang"))
+    }
+    built = build_index(
+        spark.createDataFrame(rows, schema=CORPUS_SCHEMA).repartition(4),
+        CORPUS_KEY, docid_mode="global",
+    )
+    return built, OracleIndex(
+        [(d, rows[i][4]) for d, i in enumerate(ordered)], meta=meta
+    )
+
+
+def _fuzz_wand(spark, rng, n: int, clustered: bool) -> int:
+    """Flat compositions through ``wand_topk(..., min_cost=0,
+    seed_buckets=1)`` over a 2,000-doc index in 256-docid buckets (so a
+    common term spans several 128-posting blocks per bucket) with
+    preloaded coverage: the θ ceremony, the block mask and MaxScore
+    engage, and receipts count how often each did."""
+    from frankensearch_spark.operators.astexec import expand_globs
+    from frankensearch_spark.operators.serving_exec import (
+        ast_to_queryspec_fields,
+    )
+    from frankensearch_spark.operators.wand import (
+        PruningReceipt,
+        serving_from_built,
+        wand_topk,
+    )
+    from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
+
+    built, oracle = _corpus(spark, 2000, clustered)
+    serving = serving_from_built(built, bucket_shift=8, n_term_partitions=8,
+                                 with_positions=False)
+    serving.preload_termstats()
+    serving.preload_bucket_coverage()
+    seen = {"ran": 0, "theta": 0, "blocks skipped": 0, "maxscore": 0}
+
+    def ast_of(text):
+        return expand_globs(serving, parse_lenient(text, ENGINE_SCHEMA).query)
+
+    def got(text):
+        lowered = ast_to_queryspec_fields(ast_of(text))
+        if lowered is None:  # unprunable: not this phase's shape
+            return exp(text)
+        r = PruningReceipt()
+        hits = wand_topk(serving, lowered[0], k=10, min_cost=0,
+                         seed_buckets=1, receipt=r, term_fields=lowered[1])
+        seen["ran"] += 1
+        seen["theta"] += r.theta != float("-inf")
+        seen["blocks skipped"] += r.blocks_skipped > 0
+        seen["maxscore"] += r.terms_nonessential > 0
+        return _bits(hits)
+
+    def exp(text):
+        return _bits(oracle.search_ast(ast_of(text), 10))
+
+    def compose():
+        return " ".join(
+            rng.choice(WAND_FRAGMENTS) for _ in range(rng.randint(1, 6))
+        )
+
+    bad = _phase("WAND", n, compose, got, exp)
+    print(f"wand receipts: {seen}", flush=True)
+    serving.blocks.unpersist()
+    return bad
+
+
+def _fuzz_multifield(spark, rng, n_mf: int, n_docs: int,
+                     clustered: bool) -> int:
     """Random compositions through the multi-field primary AND durable
     serving paths vs OracleMultiIndex.  Returns mismatch count."""
     import shutil
     import tempfile
 
-    from frankensearch_spark.corpus import multifield_docs
     from frankensearch_spark.operators.astexec import search_ast_bits
-    from frankensearch_spark.operators.build import build_multifield_index
     from frankensearch_spark.operators.serving_exec import serving_search_bits
-    from frankensearch_spark.oracle import OracleMultiIndex
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.query_ast import REFERENCE_SCHEMA, parse_lenient
 
-    pairs = multifield_docs(n_docs)
-    corpus = spark.createDataFrame(
-        [(i, t["title"], t["content"]) for i, t in pairs],
-        "docid long, title string, content string",
-    )
-    built = build_multifield_index(
-        corpus, ["docid"], {"content": "content", "title": "title"}
-    )
-    oracle = OracleMultiIndex(pairs, ["content", "title"])
+    built, oracle = _corpus(spark, n_docs, clustered, multifield=True)
     path = tempfile.mkdtemp(prefix="fsx_fuzz_mf_")
-    bad = 0
     try:
         write_index(built, path, bucket_shift=6, n_term_partitions=8, n_groups=1)
         srv = read_index(spark, path)
-        for i in range(n_mf):
-            text = " ".join(
+
+        def compose():
+            return " ".join(
                 rng.choice(MF_FRAGMENTS) for _ in range(rng.randint(1, 4))
             )
-            ast = parse_lenient(text, REFERENCE_SCHEMA).query
-            exp = oracle.search_ast_bits(ast, k=10)
-            got_p = search_ast_bits(built, ast, k=10, schema=REFERENCE_SCHEMA)
-            got_s = serving_search_bits(srv, text, k=10, schema=REFERENCE_SCHEMA)
-            if got_p != exp:
-                bad += 1
-                print(f"MF PRIMARY MISMATCH: {text!r}\n  got {got_p}\n  exp {exp}")
-            if got_s != exp:
-                bad += 1
-                print(f"MF SERVING MISMATCH: {text!r}\n  got {got_s}\n  exp {exp}")
-            if (i + 1) % 50 == 0:
-                print(f"multifield {i + 1}/{n_mf} bad={bad}")
+
+        def both(text):
+            return (
+                search_ast_bits(built, text, k=10, schema=REFERENCE_SCHEMA),
+                serving_search_bits(srv, text, k=10, schema=REFERENCE_SCHEMA),
+            )
+
+        def exp(text):
+            e = oracle.search_ast_bits(
+                parse_lenient(text, REFERENCE_SCHEMA).query, k=10
+            )
+            return e, e
+
+        return _phase("MULTIFIELD (primary, serving)", n_mf, compose, both,
+                      exp)
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return bad
 
 
 def main() -> int:
@@ -102,110 +227,71 @@ def main() -> int:
     n_ast = int(sys.argv[2]) if len(sys.argv) > 2 else 150
     seed = int(sys.argv[3]) if len(sys.argv) > 3 else 0xF00D
     n_mf = int(sys.argv[4]) if len(sys.argv) > 4 else 100
+    n_batch = int(sys.argv[5]) if len(sys.argv) > 5 else 10
     n_docs = 250
 
     import shutil
     import tempfile
 
-    from frankensearch_spark.corpus import corpus_docs, make_corpus
     from frankensearch_spark.operators.astexec import search_ast_bits
-    from frankensearch_spark.operators.build import build_index
+    from frankensearch_spark.operators.batchexec import search_batch_collect
     from frankensearch_spark.operators.serving_exec import serving_search_bits
-    from frankensearch_spark.oracle import OracleIndex
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
     from frankensearch_spark.session import get_spark
-    from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
     spark = get_spark("fuzz-ext", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    rng = random.Random(seed)
 
-    corpus = synthetic_corpus_df(spark, n_docs, partitions=4)
-    built = build_index(corpus, CORPUS_KEY, docid_mode="global")
+    def compose() -> str:
+        n = rng.randint(1, 5)
+        return " ".join(rng.choice(FRAGMENTS) for _ in range(n))
+
+    bad = 0
     path = tempfile.mkdtemp(prefix="fsx_fuzz_ext_")
     try:
-        write_index(built, path, n_groups=2, source="fuzz")
-        serving = read_index(spark, path)
-        serving.preload_termstats()
-        serving.preload_bucket_coverage()
+        for clustered in (False, True):
+            label = "clustered" if clustered else "iid"
+            built, oracle = _corpus(spark, n_docs, clustered)
 
-        rows = make_corpus(n_docs)
-        ordered = sorted(range(len(rows)), key=lambda i: rows[i][:3])
-        meta = {
-            name: {d: rows[i][j] for d, i in enumerate(ordered)}
-            for j, name in ((0, "repo"), (1, "path"), (2, "commit"), (3, "lang"))
-        }
-        oracle = OracleIndex(corpus_docs(n_docs), meta=meta)
-
-        rng = random.Random(seed)
-
-        def compose() -> str:
-            n = rng.randint(1, 5)
-            return " ".join(rng.choice(FRAGMENTS) for _ in range(n))
-
-        bad = 0
-        for i in range(n_serving):
-            text = compose()
-            ast = parse_lenient(text, ENGINE_SCHEMA).query
-            exp = [
-                (d, int(np.float32(s).view(np.uint32)))
-                for d, s in oracle.search_ast(ast, 10)
-            ]
-            got = serving_search_bits(serving, text, k=10)
-            if got != exp:
-                bad += 1
-                print(f"SERVING MISMATCH: {text!r}")
-                print(f"  got {got}\n  exp {exp}")
-            if (i + 1) % 100 == 0:
-                print(f"serving {i + 1}/{n_serving} ok={i + 1 - bad}")
-
-        for i in range(n_ast):
-            text = compose()
-            ast = parse_lenient(text, ENGINE_SCHEMA).query
-            exp = [
-                (d, int(np.float32(s).view(np.uint32)))
-                for d, s in oracle.search_ast(ast, 10)
-            ]
-            got = search_ast_bits(built, text, k=10)
-            if got != exp:
-                bad += 1
-                print(f"AST MISMATCH: {text!r}")
-                print(f"  got {got}\n  exp {exp}")
-            if (i + 1) % 50 == 0:
-                print(f"ast {i + 1}/{n_ast} ok={i + 1 - bad}")
-
-        bad += _fuzz_multifield(spark, rng, n_mf, n_docs)
-
-        # batched execution: random batches through ONE job each, every
-        # member checked against the numpy oracle (bit-exact) — the
-        # support-mask / shared-pivot logic must hold under arbitrary
-        # grammar mixes, not just the frozen set
-        n_batch = int(sys.argv[5]) if len(sys.argv) > 5 else 10
-        from frankensearch_spark.operators.batchexec import (
-            search_batch_collect,
-        )
-
-        for i in range(n_batch):
-            texts = [compose() for _ in range(12)]
-            got_lists = search_batch_collect(serving, texts, k=10)
-            for text, hits in zip(texts, got_lists):
+            def exp(text):
                 ast = parse_lenient(text, ENGINE_SCHEMA).query
-                exp = [
-                    (d, int(np.float32(s).view(np.uint32)))
-                    for d, s in oracle.search_ast(ast, 10)
-                ]
-                got = [
-                    (d, int(np.float32(s).view(np.uint32))) for d, s in hits
-                ]
-                if got != exp:
-                    bad += 1
-                    print(f"BATCH MISMATCH: {text!r}")
-                    print(f"  got {got}\n  exp {exp}")
-            print(f"batch {i + 1}/{n_batch} ok={'yes' if not bad else bad}")
+                return _bits(oracle.search_ast(ast, 10))
+
+            write_index(built, f"{path}/{label}", n_groups=2, source="fuzz")
+            serving = read_index(spark, f"{path}/{label}")
+            serving.preload_termstats()
+            serving.preload_bucket_coverage()
+            bad += _phase(
+                f"SERVING ({label})", n_serving, compose,
+                lambda t: serving_search_bits(serving, t, k=10), exp,
+            )
+            bad += _fuzz_wand(spark, rng, n_serving // 2, clustered)
+            if not clustered:
+                bad += _phase(
+                    "AST", n_ast, compose,
+                    lambda t: search_ast_bits(built, t, k=10), exp,
+                )
+                # batched execution: random batches through ONE job
+                # each, every member checked against the oracle — the
+                # support-mask / shared-pivot logic must hold under
+                # arbitrary grammar mixes, not just the frozen set
+                bad += _phase(
+                    "BATCH", n_batch,
+                    lambda: tuple(compose() for _ in range(12)),
+                    lambda ts: [
+                        _bits(h)
+                        for h in search_batch_collect(serving, ts, k=10)
+                    ],
+                    lambda ts: [exp(t) for t in ts],
+                )
+            bad += _fuzz_multifield(spark, rng, n_mf, n_docs, clustered)
 
         print(
-            f"done: {n_serving} serving + {n_ast} ast + {n_mf} multifield "
-            f"+ {n_batch} batches, {bad} mismatches"
+            f"done: per corpus (iid, clustered) {n_serving} serving + "
+            f"{n_serving // 2} wand + {n_mf} multifield; {n_ast} ast + "
+            f"{n_batch} batches of 12 on iid; {bad} mismatches"
         )
         return 1 if bad else 0
     finally:

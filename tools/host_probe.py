@@ -13,6 +13,9 @@ never change with repo code, so their throughput tracks host state only:
             degraded on 2026-08-19 while raw CPU stayed healthy)
   * numpy:  pinned 1-proc and 8-proc np.sort loops      (raw CPU + memory)
 
+plus ``ncpu``, the cores this process may run on: bench.py's pinned
+band only classifies probes from the core count it was pinned on.
+
 Usage:  python tools/host_probe.py            # spark-submit local[8] probe
         python tools/host_probe.py --inline   # reuse caller's JVM (faster,
                                               # less isolated)
@@ -115,6 +118,7 @@ def spark_probe(spark) -> dict:
 
 def run(inline: bool = False) -> dict:
     out: dict = {
+        "ncpu": len(os.sched_getaffinity(0)),
         "numpy_sort2m_per_sec_1p": numpy_rate(1),
         "numpy_sort2m_per_sec_8p": numpy_rate(8),
     }

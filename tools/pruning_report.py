@@ -30,13 +30,28 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _bits_crc(hits) -> str:
+    """crc32 of the top-k (docid, f32 bit pattern) pairs, to compare
+    two runs' answers bit for bit."""
+    import zlib
+
+    import numpy as np
+
+    raw = b"".join(
+        int(d).to_bytes(8, "little") + np.float32(s).tobytes()
+        for d, s in hits
+    )
+    return f"{zlib.crc32(raw):08x}"
+
+
 def _run(srv, queries: dict) -> None:
     from frankensearch_spark.operators.wand import PruningReceipt, wand_topk
 
     print(f"{'query':<18} {'total':>7} {'unmatch':>8} {'scored':>7} "
           f"{'skipped':>8} {'skip%':>6} {'blk_tot':>8} {'blk_skip':>8} "
           f"{'blk%':>6} {'t_sc':>5} {'t_ne':>5} "
-          f"{'gated(s)':>9} {'pruned(s)':>10} {'exhaust(s)':>11}")
+          f"{'gated(s)':>9} {'pruned(s)':>10} {'exhaust(s)':>11} "
+          f"{'bits crc32':>10}")
     for name, spec in queries.items():
         wand_topk(srv, spec, k=10)  # warm (plan + caches)
         # receipts add 3-4 counting jobs — take the counts from an
@@ -81,7 +96,8 @@ def _run(srv, queries: dict) -> None:
               f"{skip_pct:>5.1f}% {r.blocks_total:>8} {r.blocks_skipped:>8} "
               f"{blk_pct:>5.1f}% (pre {pre_pct:>4.1f}%) "
               f"{r.terms_scored:>5} {r.terms_nonessential:>5} "
-              f"{t_gated:>9.3f} {t_pruned:>10.3f} {t_exh:>11.3f}")
+              f"{t_gated:>9.3f} {t_pruned:>10.3f} {t_exh:>11.3f} "
+              f"{_bits_crc(pruned):>10}")
 
 
 def clustered(n_docs: int) -> None:
