@@ -3,8 +3,8 @@
 Prints ONE compact JSON headline line (≤ ~1.9 kB — the driver captures
 only the first ~2,000 chars of stdout):
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-and writes the full record (all arms, the rows-layout arm, scaling
-levels) to BENCH_DETAIL.json next to this file.
+and writes the full record (all arms, scaling levels) to
+BENCH_DETAIL.json next to this file.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32),
@@ -60,12 +60,6 @@ def _corpus_parquet(n_docs: int) -> str:
     from scaling_bench import ensure_corpus
 
     return ensure_corpus(n_docs, f"/tmp/fsx_bench_corpus_{n_docs}.parquet")
-
-
-def _r(x: float, nd: int):
-    """NaN-safe round: a failed arm emits null, never literal NaN (which
-    is not valid JSON for the driver's parser)."""
-    return None if x != x else round(x, nd)
 
 
 # Pinned HEALTHY-boot probe band (tools/host_probe.py, measured idle on
@@ -339,10 +333,10 @@ def main() -> None:
     zpath = make_zip(os.path.join(os.path.dirname(
         os.path.abspath(__file__)), "dist"))
 
-    def _submit_arm(layout: str, repeat: int) -> dict:
+    def _submit_arm(repeat: int) -> dict:
         import subprocess
 
-        out_dir = f"/tmp/fsx_bench_arm_{layout}"
+        out_dir = "/tmp/fsx_bench_arm"
         cmd = [
             "spark-submit",
             "--master", f"local[{cpus}]",
@@ -356,7 +350,7 @@ def main() -> None:
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "tools", "submit_build.py"),
             "--corpus", build_corpus_path, "--out", out_dir,
-            "--repeat", str(repeat), "--layout", layout,
+            "--repeat", str(repeat),
         ]
         proc = subprocess.run(
             cmd, capture_output=True, text=True, timeout=1800, check=False
@@ -367,7 +361,7 @@ def main() -> None:
             if line.startswith("{"):
                 return json.loads(line)
         raise RuntimeError(
-            f"no JSON from build arm {layout}:\n{proc.stderr[-2000:]}"
+            f"no JSON from the build arm:\n{proc.stderr[-2000:]}"
         )
 
     # the parent session has served its purpose (latency/serving arms);
@@ -376,24 +370,17 @@ def main() -> None:
     # run while the idle parent JVM still holds memory
     spark.stop()
 
-    # every arm runs the default analyzer (ASCII docs through the
+    # the build arm runs the default analyzer (ASCII docs through the
     # Arrow-C++ kernel, the rest through the contract analyzer —
-    # contract-exact everywhere).  Each arm degrades independently: a
-    # timeout/crash in one late arm must not discard the latency/serving
-    # measurements already taken
+    # contract-exact everywhere) and the one (grouped) layout.  It
+    # degrades on its own: a timeout/crash there must not discard the
+    # latency/serving measurements already taken
     arm_errors: dict[str, str] = {}
-
-    def _try_arm(layout: str, repeat: int) -> dict | None:
-        try:
-            return _submit_arm(layout, repeat)
-        except Exception as e:  # noqa: BLE001 — recorded, not swallowed
-            arm_errors[layout] = repr(e)
-            return None
-
-    # headline arm: GROUPED postings layout (the durable fast path — one
-    # row per (batch, term), concat-only merge; measured -60%% write
-    # phase at 2M/local[8], bit-parity pinned)
-    arm = _try_arm("grouped", repeat=8)
+    try:
+        arm = _submit_arm(repeat=8)
+    except Exception as e:  # noqa: BLE001 — recorded, not swallowed
+        arm_errors["grouped"] = repr(e)
+        arm = None
     if arm is not None:
         build_secs = arm["build_secs"]
         build_cold_fresh_secs = arm["build_cold_secs"]
@@ -407,13 +394,6 @@ def main() -> None:
         build_secs = build_cold_secs
         build_cold_fresh_secs = build_cold_secs
         build_write_secs = write_secs
-    # comparative arm isolating the LAYOUT variable: repeat=4 -> median
-    # of THREE warm runs (the VM's ±25% run variance makes a single-run
-    # ranking meaningless)
-    arm_rows = _try_arm("rows", repeat=4)
-    build_rows_secs = (arm_rows or {}).get("build_secs") or float("nan")
-    write_rows_secs = (arm_rows or {}).get("write_secs") or float("nan")
-
     p50 = statistics.median(lat)
     out = {
         "metric": "bm25_topk_p50_latency",
@@ -429,9 +409,7 @@ def main() -> None:
         "build_cold_fresh_jvm_secs": round(build_cold_fresh_secs, 3),
         "build_warm_runs": arm.get("build_warm_runs"),
         "build_tokenizer": "auto",
-        "build_layout": arm.get("layout", "rows"),
-        "build_rows_layout_secs": _r(build_rows_secs, 3),
-        "build_rows_layout_write_secs": _r(write_rows_secs, 3),
+        "build_layout": "grouped",
         "build_arm_errors": arm_errors or None,
         "build_write_secs": round(build_write_secs, 3),
         "durable_write_secs": round(write_secs, 3),

@@ -11,7 +11,9 @@ Scale design notes (100 TB / 1000 executors):
   disjoint per-shard leases, quill/scribe.rs:77-83) maps to two modes:
   ``mode="lease"`` (the DEFAULT — no global sort) range-partitions by the
   natural key and assigns ``partition_id * LEASE + local_ordinal`` —
-  disjoint, never reused, monotone with the key; ``mode="global"`` uses a
+  disjoint, never reused, monotone with the key; the build cuts one lease
+  per docid bucket of input, up to the core count
+  (:func:`fused_lease_count`); ``mode="global"`` uses a
   global ``row_number`` over the natural key (dense ordinals, but the
   window funnels the key projection through ONE task — test-scale only).
 * **Skew** — posting-list construction groups by ``(term, docid bucket)``
@@ -32,6 +34,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
+
+from frankensearch_spark.operators.merge import DEFAULT_BUCKET_SHIFT
 
 DOC_ORDS_PER_LEASE = 1 << 33  # scale-mode lease width (Q1 analogue)
 
@@ -139,12 +143,26 @@ def assign_docids(
     return corpus.join(renamed, cond).drop(*[f"__k_{c}" for c in key_cols])
 
 
+def fused_lease_count(corpus: DataFrame) -> int:
+    """Leases for :func:`assign_docids_fused_spans`: one per
+    ``2^DEFAULT_BUCKET_SHIFT`` input rows, at least 1 and at most
+    ``defaultParallelism``.  No lease is smaller than a docid bucket, so
+    a small corpus (or an upsert delta) lands in one bucket instead of
+    one sparse bucket per core; a large one still tokenizes on every
+    core.  One count job, capped: no partition reads more rows than the
+    cap needs."""
+    cap = corpus.sparkSession.sparkContext.defaultParallelism
+    n = corpus.limit(cap << DEFAULT_BUCKET_SHIFT).count()
+    return max(1, min(n >> DEFAULT_BUCKET_SHIFT, cap))
+
+
 def assign_docids_fused_spans(
-    corpus: DataFrame, key_cols: list[str], n_parts: int
+    corpus: DataFrame, key_cols: list[str], n_parts: int | None = None
 ) -> DataFrame:
-    """Lease docids assigned INSIDE the span arrangement (the grouped
-    layout's fast path).  ONE range exchange of the corpus by external
-    key both co-locates and orders each lease's rows; the docid column
+    """Lease docids assigned INSIDE the span arrangement (the build's
+    default docid path).  ONE range exchange of the corpus by external
+    key into ``n_parts`` leases (default: :func:`fused_lease_count`)
+    both co-locates and orders each lease's rows; the docid column
     is then computed per partition as ``lease·DOC_ORDS_PER_LEASE +
     rank`` — the same (lease, rank) law as
     :func:`assign_docids`(mode="lease") (rank order follows the global
@@ -165,6 +183,8 @@ def assign_docids_fused_spans(
     values depend on this plan's sampled range bounds; one
     materialization freezes them — the round-1 double-evaluation
     pitfall class)."""
+    if n_parts is None:
+        n_parts = fused_lease_count(corpus)
     arranged = corpus.repartitionByRange(
         n_parts, *[F.col(c) for c in key_cols]
     ).sortWithinPartitions(*[F.col(c) for c in key_cols])
@@ -256,8 +276,8 @@ def build_docmeta(
         meta_cols = [c for c in corpus_with_docid.columns if c not in skip]
     if lens is None:
         # recover per-doc doclen from the per-posting view (first() per
-        # docid); layouts that carry a cheaper per-doc doclen source
-        # (grouped DOCLEN pseudo-rows) pass it via ``lens`` instead
+        # docid); the build passes its cheaper per-doc source (the
+        # grouped DOCLEN pseudo-rows) via ``lens`` instead
         lens = postings.groupBy("docid").agg(
             F.first("doclen").alias("doclen")
         )
@@ -334,7 +354,7 @@ def build_postings(
     Reference path from token rows; ``groupBy(term, docid)`` keys are
     near-unique so Catalyst's partial aggregation absorbs skewed terms
     before shuffle.  The production build uses the fused zero-shuffle
-    :func:`build_postings_fused` — this one remains as the differential
+    :func:`build_postings_grouped` — this one remains as the differential
     check (tests assert both produce identical postings).
     """
     aggs = [
@@ -350,8 +370,8 @@ def build_postings(
 # doclen (contract.rs:291-295) and is derived in numpy inside whichever
 # kernel needs it.  Storing it per posting forced a 13M-row Python eval
 # stage into the JVM build path; deriving it per batch is free.
-POSTINGS_SCHEMA = "docid long, term string, tf int, positions array<int>, doclen int"
-# vbyte positions variant: each posting's positions pre-encoded as ONE
+#
+# Positions: each posting's positions pre-encoded as ONE
 # canonical-LEB128 buffer at tokenize time (quiver.rs POSITIONS wire
 # format, section kind 3).  The merge exchange then ships ~1 byte per
 # position instead of a 4-byte array slot, and blockify CONCATENATES
@@ -359,7 +379,7 @@ POSTINGS_SCHEMA = "docid long, term string, tf int, positions array<int>, doclen
 # because LEB128 is per-value (concat of per-posting encodes == one
 # segmented encode of the flat stream).
 POSTINGS_VB_SCHEMA = "docid long, term string, tf int, positions binary, doclen int"
-# grouped layout (the durable build's wire format): ONE row per
+# grouped layout (the build's wire format): ONE row per
 # (tokenize-batch, term) with array payloads instead of one row per
 # posting.  At 2M docs this is ~1.6M rows instead of ~102M through
 # every Arrow boundary and the merge shuffle — per-row conversion
@@ -377,7 +397,7 @@ POSTINGS_GROUPED_NOPOS_SCHEMA = (
 )
 
 
-def _contract_batch(rb, tok_fn, with_positions: bool, vbyte: bool):
+def _contract_batch(rb, tok_fn, with_positions: bool):
     """Per-batch kernel of :func:`build_postings_fused` (contract
     analyzer in Python, numpy aggregation).  Returns a RecordBatch of
     postings or ``None`` when the batch yields no tokens."""
@@ -424,7 +444,7 @@ def _contract_batch(rb, tok_fn, with_positions: bool, vbyte: bool):
     term_arr = pa.array(uniq_terms, type=pa.string()).take(
         pa.array(c_s[starts], type=pa.int64())
     )
-    if with_positions and vbyte:
+    if with_positions:
         # zero-materialization binary assembly: ONE encoded
         # buffer + int32 offsets via from_buffers — building a
         # Python bytes object per posting instead measured +50%
@@ -439,16 +459,8 @@ def _contract_batch(rb, tok_fn, with_positions: bool, vbyte: bool):
                 pa.py_buffer(data.tobytes()),
             ],
         )
-    elif with_positions:
-        offsets = np.append(starts, len(p_s)).astype(np.int32)
-        pos_arr = pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int32()),
-            pa.array(p_s, type=pa.int32()),
-        )
-    elif vbyte:
-        pos_arr = pa.nulls(len(starts), type=pa.binary())
     else:
-        pos_arr = pa.nulls(len(starts), type=pa.list_(pa.int32()))
+        pos_arr = pa.nulls(len(starts), type=pa.binary())
     return pa.RecordBatch.from_arrays(
         [
             pa.array(docid_in[head_rows], type=pa.int64()),
@@ -466,7 +478,6 @@ def build_postings_fused(
     content_col: str = "content",
     code_aware: bool = False,
     with_positions: bool = True,
-    pos_format: str = "vbyte",
 ) -> DataFrame:
     """Fused tokenize→aggregate: one mapInArrow pass, ZERO shuffles.
 
@@ -479,29 +490,23 @@ def build_postings_fused(
 
     Inner aggregation is vectorized numpy (factorize + argsort +
     run-length boundaries), and the output batch is assembled directly in
-    Arrow.  ``pos_format="vbyte"`` (default) emits each posting's
-    positions as a pre-encoded LEB128 ``binary`` buffer — the canonical
-    on-wire form every downstream wants: the merge exchange ships ~4x
-    fewer position bytes and blockify degenerates to buffer
-    concatenation.  ``pos_format="array"`` keeps the ``array<int>`` form
-    (``ListArray.from_arrays(offsets, values)``, O(1)) for differential
-    tests against the groupBy reference path.
+    Arrow.  Each posting's positions come out as a pre-encoded LEB128
+    ``binary`` buffer — the canonical on-wire form every downstream
+    wants: the merge exchange ships ~4x fewer position bytes and
+    blockify degenerates to buffer concatenation.
     """
     from frankensearch_spark.analyze import tokenize_code_aware, tokenize_fast
 
-    if pos_format not in ("vbyte", "array"):
-        raise ValueError(f"unknown pos_format {pos_format!r}")
     tok_fn = tokenize_code_aware if code_aware else tokenize_fast
-    vbyte = pos_format == "vbyte"
 
     def gen(batches):
         for rb in batches:
-            out = _contract_batch(rb, tok_fn, with_positions, vbyte)
+            out = _contract_batch(rb, tok_fn, with_positions)
             if out is not None:
                 yield out
 
     return corpus_with_docid.select("docid", content_col).mapInArrow(
-        gen, POSTINGS_VB_SCHEMA if vbyte else POSTINGS_SCHEMA
+        gen, POSTINGS_VB_SCHEMA
     )
 
 
@@ -570,8 +575,8 @@ def build_postings_grouped(
 ) -> DataFrame:
     """Fused tokenize→aggregate→GROUP: one mapInArrow pass emitting the
     grouped postings layout (one row per (batch, term), array payloads).
-    The posting batch kernels of the rows layout (the ASCII router, or
-    the contract analyzer under ``code_aware``) run unchanged; a
+    The per-batch posting kernels (the ASCII router, or the contract
+    analyzer under ``code_aware``) run unchanged; a
     per-batch regroup adapter folds their output into grouped rows, so
     the bit-parity of the kernels carries over.
 
@@ -585,9 +590,7 @@ def build_postings_grouped(
         from frankensearch_spark.analyze import tokenize_code_aware
 
         def kernel(rb):
-            out = _contract_batch(
-                rb, tokenize_code_aware, with_positions, True
-            )
+            out = _contract_batch(rb, tokenize_code_aware, with_positions)
             return [out] if out is not None else []
     else:
         def kernel(rb):
@@ -668,7 +671,7 @@ def grouped_doclens(grouped: DataFrame) -> DataFrame:
 def explode_grouped_postings(grouped: DataFrame) -> DataFrame:
     """Grouped layout -> the standard per-posting view (lazy, pure JVM
     generate — no Python stage).  Column order matches
-    POSTINGS_VB_SCHEMA so every rows-layout consumer works unchanged."""
+    POSTINGS_VB_SCHEMA so every per-posting consumer works unchanged."""
     with_pos = "positions" in grouped.columns
     zip_cols = ["docids", "tfs", "doclens"] + (
         ["positions"] if with_pos else []
@@ -803,35 +806,10 @@ def _auto_batches(rb, with_positions: bool) -> list:
             _vector_batch(rb.filter(mask), with_positions)
             if n_ascii else None,
             _contract_batch(
-                rb.filter(pc.invert(mask)), tokenize_fast, with_positions,
-                True,
+                rb.filter(pc.invert(mask)), tokenize_fast, with_positions
             ),
         ]
     return [out for out in outs if out is not None]
-
-
-def build_postings_fused_auto(
-    corpus_with_docid: DataFrame,
-    content_col: str = "content",
-    with_positions: bool = True,
-) -> DataFrame:
-    """The default analyzer: ASCII fast path, contract-exact everywhere.
-
-    The reference tokenizes with an ASCII fast path and falls back to
-    full Unicode handling per chunk; the Spark analogue routes PER
-    DOCUMENT inside one mapInArrow pass (:func:`_auto_batches`).
-    Non-ASCII documents never reach the RE2 kernel, so the output equals
-    :func:`build_postings_fused` bit-for-bit on EVERY corpus while the
-    cheap kernel runs for the (dominant, for source code) ASCII share."""
-
-    def gen(batches):
-        for rb in batches:
-            if rb.num_rows:
-                yield from _auto_batches(rb, with_positions)
-
-    return corpus_with_docid.select("docid", content_col).mapInArrow(
-        gen, POSTINGS_VB_SCHEMA
-    )
 
 
 def positions_as_array(pos_df: DataFrame) -> DataFrame:
@@ -994,7 +972,9 @@ class BuiltIndex:
     # rows) — lets the block-store writer skip the (docid, term) re-join
     postings_grouped: DataFrame | None = None  # grouped layout (one row
     # per (batch, term), array payloads, disjoint docid spans per term) —
-    # when present the durable writer takes merge.build_blocks_grouped
+    # every build_index() sets it and the durable writer and the serving
+    # upsert blockify it (merge.build_blocks_grouped); indexes rebuilt
+    # from other forms (compaction, a decoded store) leave it None
     _cached_stats: tuple[int, int] | None = None
     _term_df_cache: dict | None = None
     # declared as a FIELD (not a plain attribute) so lifecycle's
@@ -1148,57 +1128,68 @@ def build_multifield_index(
     return MultiFieldIndex(out, primary, field_cols=dict(field_cols))
 
 
-def _build_index_grouped(
-    with_docid: DataFrame,
+def build_index(
+    corpus: DataFrame,
     key_cols: list[str],
-    content_col: str,
-    with_positions: bool,
-    code_aware: bool,
-    cache: bool,
-    n_build_partitions: int,
-    meta_cols: list[str] | None,
-    pre_arranged: bool = False,
-    aux_caches: tuple = (),
+    content_col: str = "content",
+    docid_mode: str = "lease",
+    with_positions: bool = True,
+    code_aware: bool = False,
+    cache: bool = True,
+    meta_cols: list[str] | None = None,
 ) -> BuiltIndex:
-    """Grouped-layout build (the durable fast path).
+    """Full batch build: corpus -> postings/docmeta/termstats/fieldstats.
 
-    Arrangement: persist the docid assignment FIRST (range sampling
-    re-evaluates its child; lease docids must be frozen before any
-    sampling pass — the round-1 AQE docid-collision pitfall), then
-    range-partition by docid and locally sort — every tokenize batch
-    then covers a contiguous docid span, which is what licenses the
-    grouped layout's concat-only merge.  With ``pre_arranged`` (the
-    fused lease path, :func:`assign_docids_fused_spans`) the input is
-    ALREADY docid-range-partitioned and locally sorted, so the only
-    materialization is the persist that freezes the sampled lease
-    bounds.  The per-posting ``postings`` view is a lazy JVM explode of
-    the cached grouped frame; docmeta / termstats / the in-memory query
-    path consume it unchanged."""
-    # ALWAYS persist the docid assignment here, even under cache=False:
-    # the span exchange's range-sampling pass is an extra evaluation of
-    # the child, and lease docids must be frozen before ANY second
-    # evaluation (the round-1 AQE docid-collision pitfall class)
-    with_docid = with_docid.persist()
-    if pre_arranged:
-        spans = with_docid
+    One layout, the grouped one: every tokenize batch covers a
+    contiguous docid span and emits one row per (batch, term) with array
+    payloads (:func:`build_postings_grouped`), which is what licenses
+    the block writer's concat-only merge (``merge.build_blocks_grouped``).
+    The per-posting ``postings`` view is a lazy JVM explode of the
+    cached grouped frame; docmeta, termstats and the in-memory query
+    path consume it unchanged.
+
+    Docids: by default the span arrangement IS the lease assignment
+    (:func:`assign_docids_fused_spans`, lease count sized to the input).
+    A corpus that already carries a ``docid`` column (e.g. the driver
+    testdata's ``doc_id``, or a multi-field build's shared assignment)
+    is trusted as the global docid, and ``docid_mode="global"`` takes
+    :func:`assign_docids`; both are then range-partitioned by docid and
+    locally sorted.  Either way the docid assignment is persisted
+    before the span exchange samples it (range sampling re-evaluates
+    its child, and lease docids must be frozen first — the round-1 AQE
+    docid-collision pitfall class), even under ``cache=False``.
+
+    The analyzer follows from the input: ``code_aware=True`` runs the
+    contract analyzer with code-aware splitting; every other build
+    routes ASCII documents through the Arrow-C++ kernel and the rest
+    through the contract analyzer (:func:`_auto_batches`) —
+    contract-exact postings on every corpus."""
+    aux: list = []
+    if "docid" not in corpus.columns and docid_mode == "lease":
+        with_docid = spans = assign_docids_fused_spans(
+            corpus, key_cols
+        ).persist()
     else:
+        if "docid" not in corpus.columns:
+            corpus = assign_docids(
+                corpus, key_cols, docid_mode, aux_caches=aux
+            )
+        with_docid = corpus.persist()
         spans = with_docid.repartitionByRange(
-            n_build_partitions, "docid"
+            corpus.sparkSession.sparkContext.defaultParallelism, "docid"
         ).sortWithinPartitions("docid")
     grouped = build_postings_grouped(
         spans, content_col, code_aware, with_positions
     )
     if cache:
         grouped = grouped.persist()
-    postings_src = explode_grouped_postings(grouped)
+    postings = explode_grouped_postings(grouped)
     positions = None
     postings_full = None
     if with_positions:
-        postings_full = postings_src
+        postings_full = postings
         positions = postings_full.select("docid", "term", "positions")
         postings = postings_full.drop("positions")
-    else:
-        postings = postings_src
     docmeta = build_docmeta(
         with_docid, key_cols, postings, content_col, meta_cols,
         lens=grouped_doclens(grouped),
@@ -1211,113 +1202,9 @@ def _build_index_grouped(
     termstats = build_termstats_grouped(grouped)
     if cache:
         termstats = termstats.persist()
-    fieldstats = build_fieldstats(docmeta)
     return BuiltIndex(
-        postings, docmeta, termstats, fieldstats, positions,
+        postings, docmeta, termstats, build_fieldstats(docmeta), positions,
         postings_full=postings_full,
         postings_grouped=grouped,
-        aux_caches=aux_caches,
-    )
-
-
-def build_index(
-    corpus: DataFrame,
-    key_cols: list[str],
-    content_col: str = "content",
-    docid_mode: str = "lease",
-    with_positions: bool = True,
-    code_aware: bool = False,
-    cache: bool = True,
-    n_build_partitions: int | None = None,
-    meta_cols: list[str] | None = None,
-    layout: str = "rows",
-) -> BuiltIndex:
-    """Full batch build: corpus -> postings/docmeta/termstats/fieldstats.
-
-    The analyzer follows from the input: ``code_aware=True`` runs the
-    contract analyzer with code-aware splitting
-    (:func:`build_postings_fused`); every other build routes ASCII
-    documents through the Arrow-C++ kernel and the rest through the
-    contract analyzer — contract-exact postings on every corpus,
-    vectorized on the ASCII share (:func:`build_postings_fused_auto`).
-    If the corpus already carries a ``docid`` column it is trusted as the
-    global docid (e.g. the driver testdata's ``doc_id``)."""
-    spark = corpus.sparkSession
-    if n_build_partitions is None:
-        n_build_partitions = spark.sparkContext.defaultParallelism
-    if layout == "grouped":
-        if "docid" not in corpus.columns and docid_mode == "lease":
-            # fused fast path: the span arrangement IS the assignment
-            spans = assign_docids_fused_spans(
-                corpus, key_cols, n_build_partitions
-            )
-            return _build_index_grouped(
-                spans, key_cols, content_col, with_positions, code_aware,
-                cache, n_build_partitions, meta_cols, pre_arranged=True,
-            )
-        aux: list = []
-        with_docid = (
-            corpus if "docid" in corpus.columns
-            else assign_docids(corpus, key_cols, docid_mode, aux_caches=aux)
-        )
-        return _build_index_grouped(
-            with_docid, key_cols, content_col, with_positions, code_aware,
-            cache, n_build_partitions, meta_cols, aux_caches=tuple(aux),
-        )
-    aux = []
-    if "docid" in corpus.columns:
-        with_docid = corpus
-    else:
-        with_docid = assign_docids(corpus, key_cols, docid_mode, aux_caches=aux)
-    if layout != "rows":
-        raise ValueError(f"unknown layout {layout!r}")
-    # Explicit repartition before tokenization: AQE coalesces the upstream
-    # scan/join partitions by SIZE (a few hundred MB of text -> ~5 tasks),
-    # which would leave most cores idle through the CPU-heavy tokenize
-    # stage.  An explicit numbered repartition is exempt from coalescing,
-    # so the build fans out to every core (measured 4x at local[32]).
-    # Hashing by docid keeps the tokenize stage perfectly BALANCED.
-    with_docid = with_docid.repartition(n_build_partitions, "docid")
-    if cache:
-        # docmeta re-reads this frame; without a persist the docid
-        # assignment and repartition would run twice
-        with_docid = with_docid.persist()
-    if code_aware:
-        # code-aware splitting only exists in the contract analyzer
-        postings_src = build_postings_fused(
-            with_docid, content_col, code_aware, with_positions
-        )
-    else:
-        postings_src = build_postings_fused_auto(
-            with_docid, content_col, with_positions
-        )
-    positions = None
-    postings_full = None
-    if with_positions:
-        # ONE cached copy of the fused frame; the query-facing postings
-        # view and the phrase-path positions view are projections of it.
-        # InMemoryTableScan prunes columns, so tf-only scans never
-        # decompress the positions buffers, and the durable writer gets
-        # postings+positions in the SAME rows with no (docid, term)
-        # re-join (which measured 2.5x durable-write cost).
-        postings_full = postings_src.persist() if cache else postings_src
-        positions = postings_full.select("docid", "term", "positions")
-        postings = postings_full.drop("positions")
-    else:
-        # both analyzers emit a positions column (null here) — drop it
-        # so the documented 4-column postings schema holds and
-        # format-sniffing consumers never see a no-positions build as
-        # positions-bearing
-        postings = postings_src.drop("positions")
-        if cache:
-            postings = postings.persist()
-    docmeta = build_docmeta(with_docid, key_cols, postings, content_col, meta_cols)
-    if cache:
-        docmeta = docmeta.persist()
-    termstats = build_termstats(postings)
-    fieldstats = build_fieldstats(docmeta)
-    return BuiltIndex(
-        postings, docmeta, termstats, fieldstats, positions,
-        postings_full=postings_full,
         aux_caches=tuple(aux),
     )

@@ -53,7 +53,7 @@ from frankensearch_spark.operators.build import (
 )
 from frankensearch_spark.operators.merge import (
     DEFAULT_BUCKET_SHIFT,
-    build_blocks,
+    build_blocks_grouped,
 )
 from frankensearch_spark.operators.wand import (
     NO_TOMBSTONES,
@@ -242,7 +242,9 @@ def _extend_bucket_cov(sub, delta_nb: dict, n_buckets: int) -> dict:
 
 def _serving_union(sub, delta: BuiltIndex, shift: int, key_cols):
     """``sub`` ⊕ ``delta`` with the delta's docids shifted by the lease
-    offset, in serving form.  Only the delta is blockified; its blocks
+    offset, in serving form.  Only the delta is blockified, from its
+    grouped postings (the build's own layout, docids shifted in the
+    arrays — no per-posting explode); its blocks
     and docmeta are materialized once as local checkpoints (lineage
     cut, so a read plans a plain scan of them, not the delta's build),
     then read by ONE collect of the blocks' per-(term, bucket) posting
@@ -251,16 +253,19 @@ def _serving_union(sub, delta: BuiltIndex, shift: int, key_cols):
     extends the stats, the df cache, bucket coverage and (``key_cols``:
     the primary field) the id map, so the returned index is warm at
     birth.  Tombstones carry over unchanged."""
-    if sub.has_positions and delta.postings_full is None:
+    grouped = delta.postings_grouped
+    if sub.has_positions and "positions" not in grouped.columns:
         raise ValueError(
             "the index carries positions but the upsert delta lacks them; "
             "upsert with with_positions=True"
         )
-    src = delta.postings_full if sub.has_positions else delta.postings
-    src = src.withColumn("docid", F.col("docid") + F.lit(shift))
-    blocks = build_blocks(
-        src, sub.bucket_shift, sub.n_term_partitions,
-        positions=src if sub.has_positions else None,
+    if not sub.has_positions:
+        grouped = grouped.drop("positions")
+    blocks = build_blocks_grouped(
+        grouped.withColumn(
+            "docids", F.transform("docids", lambda d: d + shift)
+        ),
+        sub.bucket_shift, sub.n_term_partitions,
     ).localCheckpoint()
     delta_df: dict = {}
     delta_nb: dict = {}

@@ -7,6 +7,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(mem_total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a local session: ``SPARK_DRIVER_MEM``
+    when set, else a quarter of the host's physical memory capped at 8g.
+    A fixed 8g heap let two sessions on a 15 GB host grow past its RAM
+    together, and the kernel killed one JVM."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    if mem_total_bytes is None:
+        try:
+            mem_total_bytes = (
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            )
+        except (AttributeError, ValueError, OSError):
+            return "8g"
+    return f"{min(mem_total_bytes >> 22, 8192)}m"
+
+
 def get_spark(
     app_name: str = "frankensearch_spark",
     master: str | None = None,
@@ -30,7 +47,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     # ephemeral shuffle/spill on tmpfs when available: shuffle I/O must not

@@ -4,7 +4,9 @@ from frankensearch_spark.operators.build import (
     assign_docids,
     build_postings,
     build_postings_fused,
+    build_postings_grouped,
     build_token_rows,
+    explode_grouped_postings,
 )
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
@@ -31,6 +33,12 @@ def canon(df):
         )
         for r in rows
     )
+
+
+def auto_postings(corpus):
+    """The default analyzer's postings (the ASCII router inside the
+    build's grouped kernel), exploded to one row per posting."""
+    return explode_grouped_postings(build_postings_grouped(corpus))
 
 
 def test_fused_equals_reference_postings(spark):
@@ -162,14 +170,12 @@ def test_vector_path_equals_arrow_postings(spark):
     incl. positions, admission, and per-doc doclen.  The kernel runs
     through the auto router, which on all-ASCII input takes only the
     RE2 leg."""
-    from frankensearch_spark.operators.build import build_postings_fused_auto
-
     corpus = assign_docids(
         synthetic_corpus_df(spark, 120, partitions=3), CORPUS_KEY
     )
     _assert_all_ascii(corpus)
     arrow = canon(build_postings_fused(corpus))
-    vec = canon(build_postings_fused_auto(corpus))
+    vec = canon(auto_postings(corpus))
     assert vec == arrow
 
 
@@ -178,7 +184,6 @@ def test_vector_path_edge_contents(spark):
     router runs only its RE2 leg): empty/null docs, leading and trailing
     separators, oversized-token admission with position gaps."""
     from frankensearch_spark.contract import MAX_TERM_BYTES
-    from frankensearch_spark.operators.build import build_postings_fused_auto
 
     big = "x" * (MAX_TERM_BYTES + 1)
     corpus = spark.createDataFrame(
@@ -192,7 +197,7 @@ def test_vector_path_edge_contents(spark):
         "docid long, content string",
     )
     _assert_all_ascii(corpus)
-    rows = canon(build_postings_fused_auto(corpus))
+    rows = canon(auto_postings(corpus))
     exp = canon(build_postings_fused(corpus))
     assert rows == exp
     by_doc = {(d, t): p for d, t, _tf, p, _dl in rows}
@@ -204,8 +209,6 @@ def test_auto_equals_contract_on_mixed_corpus(spark):
     contract analyzer) must equal the contract path BIT-FOR-BIT on a
     corpus that mixes ASCII docs with Unicode shapes where RE2's
     \\pL\\pN classes could diverge from Rust char::is_alphanumeric."""
-    from frankensearch_spark.operators.build import build_postings_fused_auto
-
     base = synthetic_corpus_df(spark, 60, partitions=2)
     extra = base.sparkSession.createDataFrame(
         [
@@ -220,7 +223,7 @@ def test_auto_equals_contract_on_mixed_corpus(spark):
         "repo string, path string, commit string, lang string, content string",
     )
     corpus = assign_docids(base.unionByName(extra), CORPUS_KEY)
-    auto = canon(build_postings_fused_auto(corpus))
+    auto = canon(auto_postings(corpus))
     contract = canon(build_postings_fused(corpus))
     assert auto == contract
 

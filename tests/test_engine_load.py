@@ -503,6 +503,40 @@ def test_loaded_upsert_never_decodes_the_store(spark, built, loaded,
     assert len(up.search_docids("nodecode_sentinel", limit=10)) == 3
 
 
+def test_loaded_upsert_delta_fills_one_bucket(spark, loaded):
+    """A 250-doc upsert on a loaded engine leases ONE docid bucket: the
+    delta's docids, docmeta rows and block rows all sit in the bucket
+    that starts at ``lease_offset`` above the high-watermark."""
+    from frankensearch_spark.operators.lifecycle import lease_offset
+
+    eng = _fresh(loaded)
+    shift = eng.index.bucket_shift
+    start = lease_offset(eng.index.high_watermark(), shift)
+    batch = spark.createDataFrame(
+        [
+            ("delta", f"src/d{i:04d}.rs", "c1", "rust",
+             f"onebucket_sentinel fn import term{i:05d}")
+            for i in range(250)
+        ],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    up = eng.upsert(batch)
+    ids = sorted(
+        r["docid"] for r in up.index.docmeta.filter(F.col("docid") >= start)
+        .select("docid").collect()
+    )
+    assert ids == list(range(start, start + 250))
+    new_buckets = (
+        up.index.blocks.filter(F.col("bucket") >= start >> shift)
+        .select("bucket").distinct().collect()
+    )
+    assert [r["bucket"] for r in new_buckets] == [start >> shift]
+    assert sorted(
+        d for d, _ in up.search_docids("onebucket_sentinel", limit=300)
+    ) == ids
+
+
 def test_upserted_loaded_engine_is_warm_and_one_job(spark, built, loaded):
     """The engine upsert() returns is warm at birth (warm() runs no job),
     and every bounded point shape, plus the sentinel-marker search, is

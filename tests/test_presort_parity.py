@@ -1,9 +1,12 @@
-"""Block writer parity (operators/merge.build_blocks, build_blocks_grouped).
+"""Block writer and build parity (operators/merge.build_blocks,
+build_blocks_grouped, build.build_index).
 
-The non-grouped writer range-partitions raw postings on ONE composed 8-byte
+The per-posting writer range-partitions raw postings on ONE composed 8-byte
 key and numpy-lexsorts inside the blockify kernel.  Decoding its blocks per
 (term, bucket) must give back the source postings — docids, tfs, fieldnorm
 ids, positions — and every row's tpart must be the term's stable partition.
+The default build's grouped postings and blocks must equal the reference
+tokenize path keyed by external key.
 """
 
 import numpy as np
@@ -13,6 +16,7 @@ from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.operators.merge import (
     DEFAULT_BUCKET_SHIFT,
     build_blocks,
+    build_blocks_grouped,
     decode_blocks_pdf,
     term_partition,
 )
@@ -63,86 +67,108 @@ def test_kernel_presort_blocks_decode_to_postings(built):
     )
 
 
-def test_grouped_layout_matches_rows_layout(spark, built):
-    """layout='grouped' (batch-term array rows, concat-only merge) must
-    reproduce the rows layout MODULO the lease docid relabeling: the
-    fused span assignment (assign_docids_fused_spans) samples its own
-    lease bounds, so docid VALUES may differ from the map-based path,
-    but the docid ORDER must follow the same global key sort, and the
-    per-key postings (tf, fieldnorm, positions, doclen), decoded blocks
-    and termstats must be identical."""
-    corpus = synthetic_corpus_df(spark, 3000)
-    bg = build_index(corpus, CORPUS_KEY, docid_mode="lease", layout="grouped")
-    from frankensearch_spark.operators.merge import build_blocks_grouped
+def test_default_build_matches_reference_postings(spark, built):
+    """The default build (fused lease spans, grouped batch-term rows,
+    concat-only merge) must reproduce the reference path
+    ``build_postings(build_token_rows(...))`` keyed by external key:
+    docid ORDER follows the key sort, and the per-key postings (tf,
+    positions, doclen), the decoded blocks (tf, fieldnorm, positions),
+    docmeta and termstats are identical."""
+    from frankensearch_spark.contract import fieldnorm_to_id
+    from frankensearch_spark.functions.vbyte import vbyte_decode
+    from frankensearch_spark.operators.build import (
+        assign_docids,
+        build_docmeta,
+        build_postings,
+        build_termstats,
+        build_token_rows,
+    )
 
-    key_of_r = {
-        r["docid"]: (r["repo"], r["path"], r["commit"])
-        for r in built.docmeta.collect()
-    }
-    key_of_g = {
-        r["docid"]: (r["repo"], r["path"], r["commit"])
-        for r in bg.docmeta.collect()
-    }
-    # rank invariance: ascending docids visit the keys in the same order
-    assert [key_of_r[d] for d in sorted(key_of_r)] == [
-        key_of_g[d] for d in sorted(key_of_g)
-    ]
+    corpus = synthetic_corpus_df(spark, 3000)
+    ref_corpus = assign_docids(corpus, CORPUS_KEY).persist()
+    ref = build_postings(build_token_rows(ref_corpus)).persist()
+
+    def key_map(docmeta):
+        return {
+            r["docid"]: (r["repo"], r["path"], r["commit"])
+            for r in docmeta.collect()
+        }
+
+    key_of_b = key_map(built.docmeta)
+    key_of_r = key_map(ref_corpus)
+    # rank invariance: ascending docids visit the keys in key order
+    order_b = [key_of_b[d] for d in sorted(key_of_b)]
+    assert order_b == [key_of_r[d] for d in sorted(key_of_r)]
+    assert order_b == sorted(order_b)
 
     # exploded postings parity (keyed)
     def norm(df, key_of):
         pdf = df.toPandas()
         pdf["key"] = pdf["docid"].map(key_of)
         pdf["positions"] = pdf["positions"].map(
-            lambda b: bytes(b) if b is not None else None
+            lambda p: tuple(int(x) for x in (
+                vbyte_decode(bytes(p))
+                if isinstance(p, (bytes, bytearray)) else p
+            ))
         )
         return (
             pdf.sort_values(["term", "key"]).reset_index(drop=True)
             [["key", "term", "tf", "positions", "doclen"]]
         )
 
-    assert norm(built.postings_full, key_of_r).equals(
-        norm(bg.postings_full, key_of_g)
-    )
+    want = norm(ref, key_of_r)
+    assert norm(built.postings_full, key_of_b).equals(want)
 
-    # block decode parity: per-key posting streams (bucket boundaries
-    # follow the docids, so compare the flattened keyed multiset)
-    def decoded_by_key(pdf_blocks, key_of):
-        rows = []
-        for (t, _bk), grp in pdf_blocks.groupby(["term", "bucket"], sort=True):
-            docs, tfs, fids, _r, pos = decode_blocks_pdf(
-                grp.sort_values("first_doc"), with_positions=True
-            )
-            for d, tf, fid, p in zip(
-                docs.tolist(), tfs.tolist(), fids.tolist(), pos
-            ):
-                rows.append(
-                    (t, key_of[d], tf, fid,
-                     None if p is None else tuple(p))
-                )
-        return sorted(rows)
-
-    a_blocks = build_blocks(
-        built.postings_full, positions=built.positions
-    ).toPandas()
-    g_blocks = build_blocks_grouped(bg.postings_grouped).toPandas()
-    assert decoded_by_key(a_blocks, key_of_r) == decoded_by_key(
-        g_blocks, key_of_g
+    # block decode parity: the grouped writer's blocks decode to the
+    # reference postings (bucket boundaries follow the docids, so
+    # compare the flattened keyed multiset)
+    blocks = build_blocks_grouped(built.postings_grouped).toPandas()
+    got = []
+    for (t, _bk), grp in blocks.groupby(["term", "bucket"], sort=True):
+        docs, tfs, fids, _r, pos = decode_blocks_pdf(
+            grp.sort_values("first_doc"), with_positions=True
+        )
+        for d, tf, fid, p in zip(
+            docs.tolist(), tfs.tolist(), fids.tolist(), pos
+        ):
+            got.append((t, key_of_b[d], tf, fid, tuple(p)))
+    fids_want = fieldnorm_to_id(want["doclen"].to_numpy(np.int64)).tolist()
+    assert sorted(got) == sorted(
+        (t, k, tf, fid, p)
+        for t, k, tf, fid, p in zip(
+            want["term"], want["key"], want["tf"], fids_want,
+            want["positions"],
+        )
     )
 
     # docmeta parity modulo docid; termstats exactly
-    dr = (
-        built.docmeta.toPandas()
-        .sort_values(["repo", "path", "commit"]).reset_index(drop=True)
+    def by_key(dm):
+        return (
+            dm.toPandas().sort_values(["repo", "path", "commit"])
+            .drop(columns=["docid"]).reset_index(drop=True)
+        )
+
+    ref_meta = build_docmeta(ref_corpus, CORPUS_KEY, ref)
+    assert by_key(built.docmeta).equals(
+        by_key(ref_meta.select(*built.docmeta.columns))
     )
-    dgm = (
-        bg.docmeta.toPandas()
-        .sort_values(["repo", "path", "commit"]).reset_index(drop=True)
-    )
-    assert dr.drop(columns=["docid"]).equals(dgm.drop(columns=["docid"]))
     assert (
         built.termstats.orderBy("term").toPandas()
-        .equals(bg.termstats.orderBy("term").toPandas())
+        .equals(build_termstats(ref).orderBy("term").toPandas())
     )
+    ref.unpersist()
+    ref_corpus.unpersist()
+
+
+def test_default_build_fills_one_bucket(built):
+    """3,000 docs at local[4]: the lease count is sized to the input
+    (one lease per docid bucket of rows), so the whole build lands in
+    bucket 0 — not one sparse bucket per core."""
+    ids = [r["docid"] for r in built.docmeta.select("docid").collect()]
+    assert sorted(ids) == list(range(3000))
+    blocks = build_blocks_grouped(built.postings_grouped)
+    assert [r["bucket"] for r in blocks.select("bucket").distinct()
+            .collect()] == [0]
 
 
 def test_fused_lease_contract(spark):
@@ -181,7 +207,7 @@ def test_grouped_auto_vector_match_rows_on_mixed_corpus(spark):
     actually run."""
     from frankensearch_spark.operators.build import (
         assign_docids,
-        build_postings_fused_auto,
+        build_postings_fused,
         build_postings_grouped,
         explode_grouped_postings,
     )
@@ -211,9 +237,9 @@ def test_grouped_auto_vector_match_rows_on_mixed_corpus(spark):
                 .itertuples(index=False))
         )
 
-    rows_auto = canon(build_postings_fused_auto(corpus))
+    contract = canon(build_postings_fused(corpus))
     grp_auto = canon(explode_grouped_postings(build_postings_grouped(spans)))
-    assert grp_auto == rows_auto
+    assert grp_auto == contract
     corpus.unpersist()
 
 

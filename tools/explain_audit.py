@@ -62,7 +62,7 @@ def main() -> None:
         fmt(fused),
     ))
 
-    # 1b. grouped durable fast path with FUSED lease assignment (round 3)
+    # 1b. the build's own plan: FUSED lease assignment + grouped rows
     from frankensearch_spark.operators.build import (
         assign_docids_fused_spans,
         build_postings_grouped,
@@ -73,7 +73,7 @@ def main() -> None:
     sections.append((
         "Grouped build with fused lease assignment "
         "(assign_docids_fused_spans → build_postings_grouped)",
-        "The durable fast path's WHOLE pre-write plan: ONE range exchange "
+        "The build's WHOLE pre-write plan: ONE range exchange "
         "of the corpus by external key both co-locates and orders each "
         "lease's rows (sampling pass + exchange), docids materialize as "
         "lease·2^33 + rank inside the same mapInArrow pass that "

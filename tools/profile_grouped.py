@@ -1,4 +1,4 @@
-"""Phase decomposition of the grouped-layout durable build.
+"""Phase decomposition of the durable build.
 
 Phases timed in one session:
   p_assign   : docid assignment persist + count (skinny)

@@ -78,7 +78,7 @@ def ensure_corpus(n_docs: int, path: str, clustered: bool = False) -> str:
     return path
 
 
-def _level_cmd(ncpu: int, corpus: str, zpath: str, layout: str,
+def _level_cmd(ncpu: int, corpus: str, zpath: str,
                cores: str | None, out_suffix: str = "") -> list:
     out = f"/tmp/fsx_scaling_idx_{ncpu}{out_suffix}"
     cmd = [
@@ -92,7 +92,7 @@ def _level_cmd(ncpu: int, corpus: str, zpath: str, layout: str,
         "--conf", "spark.ui.enabled=false",
         "--py-files", zpath,
         os.path.join(REPO, "tools", "submit_build.py"),
-        "--corpus", corpus, "--out", out, "--layout", layout,
+        "--corpus", corpus, "--out", out,
     ]
     if cores is not None:
         # cluster-faithful binding: "N executors" means N cores TOTAL.
@@ -112,10 +112,10 @@ def _parse_json_line(stdout: str, label: str, stderr: str = "") -> dict:
     raise RuntimeError(f"no JSON from {label}:\n{stderr[-2000:]}")
 
 
-def run_level(ncpu: int, corpus: str, zpath: str, layout: str = "rows",
+def run_level(ncpu: int, corpus: str, zpath: str,
               pin: bool = False) -> dict:
     cores = (f"0-{ncpu - 1}" if ncpu > 1 else "0") if pin else None
-    cmd = _level_cmd(ncpu, corpus, zpath, layout, cores)
+    cmd = _level_cmd(ncpu, corpus, zpath, cores)
     proc = subprocess.run(
         cmd, capture_output=True, text=True, timeout=3600, check=False
     )
@@ -124,8 +124,8 @@ def run_level(ncpu: int, corpus: str, zpath: str, layout: str = "rows",
     )
 
 
-def run_pair_coscheduled(a: int, b: int, corpus: str, zpath: str,
-                         layout: str) -> tuple[dict, dict]:
+def run_pair_coscheduled(a: int, b: int, corpus: str,
+                         zpath: str) -> tuple[dict, dict]:
     """Run BOTH levels of an N→4N pair SIMULTANEOUSLY on disjoint pinned
     core sets (level a on cores 0..a-1, level b on cores a..a+b-1).
 
@@ -139,9 +139,9 @@ def run_pair_coscheduled(a: int, b: int, corpus: str, zpath: str,
     run; any residual contention slows the small level MORE (it holds
     fewer bandwidth lanes), which biases the ratio DOWNWARD — the
     conservative direction for a ≥0.8 criterion."""
-    cmd_a = _level_cmd(a, corpus, zpath, layout,
+    cmd_a = _level_cmd(a, corpus, zpath,
                        f"0-{a - 1}" if a > 1 else "0", out_suffix="_co")
-    cmd_b = _level_cmd(b, corpus, zpath, layout,
+    cmd_b = _level_cmd(b, corpus, zpath,
                        f"{a}-{a + b - 1}", out_suffix="_co")
     # Both processes write to TEMP FILES, not PIPEs: a sequential
     # communicate() drain leaves the other process's ~64KB pipe buffers
@@ -179,7 +179,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=2_000_000)
     ap.add_argument("--pairs", nargs="*", default=["2,8", "8,32"])
-    ap.add_argument("--layout", default="rows", choices=["rows", "grouped"])
     ap.add_argument("--corpus", default=None)
     ap.add_argument("--pin", action="store_true",
                     help="taskset each level to exactly N cores "
@@ -198,10 +197,11 @@ def main() -> None:
     zpath = make_zip(os.path.join(REPO, "dist"))
 
     results: dict = {}
-    # every build runs the default analyzer; older records measured the
-    # contract analyzer ("arrow") and must not merge with these
+    # every build runs the default analyzer and the one (grouped)
+    # layout; older records measured the contract analyzer ("arrow") or
+    # the removed rows layout and must not merge with these
     report = {"docs": args.docs, "tokenizer": "auto",
-              "layout": args.layout
+              "layout": "grouped"
               + ("+cosched" if args.coschedule
                  else "+pinned" if args.pin else ""),
               "levels": results,
@@ -209,9 +209,7 @@ def main() -> None:
     if args.coschedule:
         for p in args.pairs:
             a, b = (int(x) for x in p.split(","))
-            ra, rb = run_pair_coscheduled(
-                a, b, corpus, zpath, args.layout
-            )
+            ra, rb = run_pair_coscheduled(a, b, corpus, zpath)
             # keep per-pair level records distinct: the same level count
             # co-scheduled against a different partner is a different
             # measurement context
@@ -232,8 +230,7 @@ def main() -> None:
     else:
         levels = sorted({int(x) for p in args.pairs for x in p.split(",")})
         for n in levels:
-            results[n] = run_level(n, corpus, zpath, args.layout,
-                                   pin=args.pin)
+            results[n] = run_level(n, corpus, zpath, pin=args.pin)
             if args.pin:
                 results[n]["pinned_cores"] = n
             print(f"local[{n}]: {json.dumps(results[n])}", flush=True)
@@ -252,10 +249,10 @@ def main() -> None:
 
     # merge into the repo-root scaling record (bench.py folds this into
     # its one-line JSON so the driver's BENCH_r{N}.json carries it).
-    # The record is LAYOUT-KEYED: each postings layout keeps its own
-    # levels/pairs sub-record, so measuring one layout never destroys
-    # the other's evidence (the north-rule pair lives under whichever
-    # layout currently meets it; see top-level "met_by").
+    # The record is LAYOUT-KEYED: each measurement context keeps its own
+    # levels/pairs sub-record, so a new run never overwrites the older
+    # records of other contexts (the north-rule pair lives under
+    # whichever one currently meets it; see top-level "met_by").
     record_path = os.path.join(REPO, "BENCH_SCALING.json")
     record = {}
     if os.path.exists(record_path):

@@ -5,7 +5,7 @@ Usage (what tools/scaling_bench.py invokes):
     spark-submit --master local[N] \
         --py-files dist/frankensearch_spark.zip \
         tools/submit_build.py --corpus /path/corpus.parquet \
-        --out /path/index [--layout grouped] [--no-warm]
+        --out /path/index [--no-warm]
 
 Prints ONE JSON line: {"cpus": N, "docs": D, "build_secs": S,
 "docs_per_sec": R, "write_secs": W, ...}.
@@ -33,10 +33,6 @@ def main() -> None:
     ap.add_argument("--codec", default="vint",
                     choices=["vint", "for", "bitmap"],
                     help="posting block codec for the durable write")
-    ap.add_argument("--layout", default="rows", choices=["rows", "grouped"],
-                    help="postings layout: 'grouped' = one row per "
-                         "(batch, term) with array payloads (the durable "
-                         "fast path)")
     ap.add_argument("--no-warm", action="store_true")
     ap.add_argument("--skip-write", action="store_true",
                     help="stop after in-memory index materialization")
@@ -79,15 +75,12 @@ def main() -> None:
         # would otherwise time a cache scan, not the pipeline
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        b = build_index(
-            corpus, CORPUS_KEY, docid_mode="lease", layout=args.layout,
-        )
-        # materialize the index the way its layout serves it: the grouped
-        # layout's cache IS the grouped frame (every consumer explodes it
-        # lazily), so counting the exploded view would add a 165M-row
-        # generate pass that no real consumer pays at build time
-        g = getattr(b, "postings_grouped", None)
-        (g if g is not None else b.postings).count()
+        b = build_index(corpus, CORPUS_KEY)
+        # materialize the index the way it serves: its cache IS the
+        # grouped frame (every consumer explodes it lazily), so counting
+        # the exploded view would add a 165M-row generate pass that no
+        # real consumer pays at build time
+        b.postings_grouped.count()
         b.docmeta.count()
         b.termstats.count()
         nd, tt = b.stats()
@@ -129,7 +122,7 @@ def main() -> None:
                 "cpus": cpus,
                 "docs": n_docs,
                 "total_tokens": total_tokens,
-                "layout": args.layout,
+                "layout": "grouped",
                 "build_cold_secs": round(cold_secs, 2),
                 "build_warm_runs": [round(s, 2) for s in warm],
                 "build_secs": round(build_secs, 2),
