@@ -140,11 +140,15 @@ class FrankensearchSpark:
         high-watermark, and every older docid with a replaced key is
         tombstoned (lifecycle.upsert_documents).  On a LOADED engine the
         committed block store is never decoded: the new rows are
-        blockified as a small delta, materialized once, and the engine
-        returned is a serving engine over base ⊕ delta — warm at birth
-        (stats, df cache, bucket coverage, id map and tombstone set are
-        extended on the driver), so its point searches stay one Spark
-        job."""
+        blockified as a small delta, and the engine returned is a
+        serving engine over base ⊕ delta — warm at birth (stats, df
+        cache, bucket coverage, id map and tombstone set are extended on
+        the driver), so its point searches stay one Spark job.  A delta
+        that fits one docid bucket (``2^bucket_shift`` rows) and
+        ``LOCAL_LANE_MAX_POSTINGS`` postings is built on the driver,
+        its superseded docids read from the preloaded id map: the call
+        is then one Spark job.  A larger one is built by Spark and kept
+        as local checkpoints."""
         from frankensearch_spark.operators.lifecycle import upsert_documents
 
         corpus = self.corpus
@@ -346,23 +350,26 @@ class FrankensearchSpark:
             # the docid IS the external id (joining zero columns would
             # label every hit with the empty string)
             return [(str(int(d)), np.float32(s)) for d, s in hits]
+        from frankensearch_spark.operators.wand import external_id
+
         ids = [int(d) for d, _ in hits]
         idm = self._preloaded_ids()
-        ext = {} if idm is None else {
+        keys = {} if idm is None else {
             d: idm.ext[d] for d in ids if d in idm.ext
         }
-        missing = [d for d in ids if d not in ext]
+        missing = [d for d in ids if d not in keys]
         if missing and (idm is None or not idm.complete):
-            from frankensearch_spark.operators.wand import external_id
-
             rows = self.index.docmeta.filter(
                 F.col("docid").isin(missing)
             ).select("docid", *self.key_cols).collect()
-            ext.update(
-                (int(r["docid"]), external_id(r, self.key_cols))
+            keys.update(
+                (int(r["docid"]), tuple(r[c] for c in self.key_cols))
                 for r in rows
             )
-        return [(ext.get(int(d), str(d)), np.float32(s)) for d, s in hits]
+        return [
+            (external_id(keys[d]) if d in keys else str(d), np.float32(s))
+            for d, (_, s) in zip(ids, hits)
+        ]
 
     def search_with_snippets(self, query: str, limit: int = 10,
                              content_col: str = "content"):

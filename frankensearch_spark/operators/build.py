@@ -27,6 +27,7 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass
 
 import pandas as pd
@@ -50,6 +51,37 @@ def fieldnorm_id_udf(doclen: pd.Series) -> pd.Series:
     return pd.Series(
         fieldnorm_to_id(doclen.to_numpy(dtype=np.int64)).astype("int32")
     )
+
+
+def duplicate_key_error(key: tuple) -> ValueError:
+    return ValueError(
+        f"duplicate external key {key!r}: the reference's external-id "
+        "contract requires unique keys (upsert replaces by id) — "
+        "deduplicate or upsert instead"
+    )
+
+
+def check_sorted_keys_unique(keys: list) -> None:
+    """Raise :func:`duplicate_key_error` when two adjacent rows of the
+    key-sorted Arrow columns ``keys`` are equal (null-safe): in a sorted
+    stream every duplicate pair is adjacent."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(keys[0])
+    if n < 2:
+        return
+    dup = None
+    for k in keys:
+        a, b = k.slice(0, n - 1), k.slice(1, n)
+        eq = pc.or_kleene(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
+        )
+        dup = eq if dup is None else pc.and_(dup, eq)
+    if pc.any(dup).as_py():
+        i = int(np.nonzero(dup.to_numpy(zero_copy_only=False))[0][0])
+        raise duplicate_key_error(tuple(k[i].as_py() for k in keys))
 
 
 def assign_docids(
@@ -92,12 +124,7 @@ def assign_docids(
         dup = kc.filter(F.col("__kn") > 1).limit(1).collect()
         if dup:
             kc.unpersist()
-            raise ValueError(
-                "duplicate external key "
-                f"{tuple(dup[0][c] for c in key_cols)!r}: the reference's "
-                "external-id contract requires unique keys (upsert replaces "
-                "by id) — deduplicate or upsert instead"
-            )
+            raise duplicate_key_error(tuple(dup[0][c] for c in key_cols))
         if aux_caches is not None:
             aux_caches.append(kc)
         keys = kc.drop("__kn")
@@ -141,6 +168,20 @@ def assign_docids(
         eq = corpus[c].eqNullSafe(renamed[f"__k_{c}"])
         cond = eq if cond is None else cond & eq
     return corpus.join(renamed, cond).drop(*[f"__k_{c}" for c in key_cols])
+
+
+def persist_owned(df: DataFrame, owned: list) -> DataFrame:
+    """``df.persist()``, appending it to ``owned`` only when this call
+    created the cache entry.  Spark keys its cache by plan, so an equal
+    plan another live index already persisted is shared, and
+    unpersisting it would pull that index's frozen docids out from
+    under it."""
+    level = df.storageLevel
+    fresh = not (level.useMemory or level.useDisk or level.useOffHeap)
+    df = df.persist()
+    if fresh:
+        owned.append(df)
+    return df
 
 
 def fused_lease_count(corpus: DataFrame) -> int:
@@ -194,7 +235,6 @@ def assign_docids_fused_spans(
     def gen(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         base = TaskContext.get().partitionId() * DOC_ORDS_PER_LEASE
@@ -205,32 +245,10 @@ def assign_docids_fused_spans(
             if n == 0:
                 continue
             keys = [rb.column(i) for i in key_idx]
-            # adjacent-pair duplicate check (null-safe equality)
-            if n > 1:
-                dup = None
-                for k in keys:
-                    a, b = k.slice(0, n - 1), k.slice(1, n)
-                    eq = pc.or_kleene(
-                        pc.fill_null(pc.equal(a, b), False),
-                        pc.and_(pc.is_null(a), pc.is_null(b)),
-                    )
-                    dup = eq if dup is None else pc.and_(dup, eq)
-                if pc.any(dup).as_py():
-                    i = int(np.nonzero(dup.to_numpy(zero_copy_only=False))[0][0])
-                    raise ValueError(
-                        "duplicate external key "
-                        f"{tuple(k[i].as_py() for k in keys)!r}: the "
-                        "reference's external-id contract requires unique "
-                        "keys (upsert replaces by id) — deduplicate or "
-                        "upsert instead"
-                    )
+            check_sorted_keys_unique(keys)
             first = tuple(k[0].as_py() for k in keys)
             if prev_last is not None and first == prev_last:
-                raise ValueError(
-                    f"duplicate external key {first!r}: the reference's "
-                    "external-id contract requires unique keys (upsert "
-                    "replaces by id) — deduplicate or upsert instead"
-                )
+                raise duplicate_key_error(first)
             prev_last = tuple(k[n - 1].as_py() for k in keys)
             ids = pa.array(
                 np.arange(base + seen, base + seen + n, dtype=np.int64),
@@ -567,6 +585,22 @@ def _regroup_posting_batch(rbs: list, with_positions: bool):
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
+def posting_kernel(code_aware: bool, with_positions: bool):
+    """The build's per-batch posting kernel: a (docid, text) RecordBatch
+    -> a list of posting-layout RecordBatches over its docid span — the
+    contract analyzer under ``code_aware``, else the ASCII router."""
+    if code_aware:
+        from frankensearch_spark.analyze import tokenize_code_aware
+
+        def kernel(rb):
+            out = _contract_batch(rb, tokenize_code_aware, with_positions)
+            return [out] if out is not None else []
+    else:
+        def kernel(rb):
+            return _auto_batches(rb, with_positions)
+    return kernel
+
+
 def build_postings_grouped(
     corpus_with_docid: DataFrame,
     content_col: str = "content",
@@ -586,15 +620,7 @@ def build_postings_grouped(
     the downstream block writer then merges by concatenation in
     first-docid order, never by decode (keeper.rs:4166-4206 theorem,
     carried to the map side)."""
-    if code_aware:
-        from frankensearch_spark.analyze import tokenize_code_aware
-
-        def kernel(rb):
-            out = _contract_batch(rb, tokenize_code_aware, with_positions)
-            return [out] if out is not None else []
-    else:
-        def kernel(rb):
-            return _auto_batches(rb, with_positions)
+    kernel = posting_kernel(code_aware, with_positions)
 
     def gen(batches):
         for rb in batches:
@@ -987,6 +1013,13 @@ class BuiltIndex:
     # CacheManager pins them until an explicit unpersist, so long-lived
     # processes call release_aux_caches() after materializing
     aux_caches: tuple = ()
+    # the frames whose cache this build created (persist_owned), the
+    # docid assignment included: a caller that copies the index out
+    # (the serving upsert's delta, once checkpointed) unpersists them.
+    # An index still served from these frames must keep the docid
+    # assignment cached (lease docids are frozen by its first
+    # materialization)
+    persisted: tuple = ()
 
     def stats(self) -> tuple[int, int]:
         if self._cached_stats is None:
@@ -1110,10 +1143,13 @@ def build_multifield_index(
     ``field_cols``: field name -> source column (e.g. {"content":
     "content", "title": "title"}).  Missing/null field values index as
     empty documents (doclen 0), keeping N global across fields."""
+    owned: list = []
     if "docid" in corpus.columns:
         with_docid = corpus
     else:
-        with_docid = assign_docids(corpus, key_cols, docid_mode).persist()
+        with_docid = persist_owned(
+            assign_docids(corpus, key_cols, docid_mode), owned
+        )
     primary = primary or next(iter(field_cols))
     sources = set(field_cols.values())
     skip = set(key_cols) | sources | {"docid"}
@@ -1125,6 +1161,10 @@ def build_multifield_index(
             meta_cols=primary_meta if fname == primary else [],
             **kw,
         )
+    # the primary field owns the shared docid assignment's cache
+    out[primary] = dataclasses.replace(
+        out[primary], persisted=out[primary].persisted + tuple(owned)
+    )
     return MultiFieldIndex(out, primary, field_cols=dict(field_cols))
 
 
@@ -1165,16 +1205,17 @@ def build_index(
     through the contract analyzer (:func:`_auto_batches`) —
     contract-exact postings on every corpus."""
     aux: list = []
+    owned: list = []
     if "docid" not in corpus.columns and docid_mode == "lease":
-        with_docid = spans = assign_docids_fused_spans(
-            corpus, key_cols
-        ).persist()
+        with_docid = spans = persist_owned(
+            assign_docids_fused_spans(corpus, key_cols), owned
+        )
     else:
         if "docid" not in corpus.columns:
             corpus = assign_docids(
                 corpus, key_cols, docid_mode, aux_caches=aux
             )
-        with_docid = corpus.persist()
+        with_docid = persist_owned(corpus, owned)
         spans = with_docid.repartitionByRange(
             corpus.sparkSession.sparkContext.defaultParallelism, "docid"
         ).sortWithinPartitions("docid")
@@ -1182,7 +1223,7 @@ def build_index(
         spans, content_col, code_aware, with_positions
     )
     if cache:
-        grouped = grouped.persist()
+        grouped = persist_owned(grouped, owned)
     postings = explode_grouped_postings(grouped)
     positions = None
     postings_full = None
@@ -1195,16 +1236,17 @@ def build_index(
         lens=grouped_doclens(grouped),
     )
     if cache:
-        docmeta = docmeta.persist()
+        docmeta = persist_owned(docmeta, owned)
     # termstats from the grouped rows directly (no per-posting explode),
     # persisted: the durable write re-reads it (a tiny table) instead of
     # re-running the aggregation
     termstats = build_termstats_grouped(grouped)
     if cache:
-        termstats = termstats.persist()
+        termstats = persist_owned(termstats, owned)
     return BuiltIndex(
         postings, docmeta, termstats, build_fieldstats(docmeta), positions,
         postings_full=postings_full,
         postings_grouped=grouped,
         aux_caches=tuple(aux),
+        persisted=tuple(owned),
     )

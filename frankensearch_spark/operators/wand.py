@@ -127,9 +127,9 @@ class QuerySpec:
         ))
 
 
-def external_id(row, key_cols) -> str:
-    """A document's external id: its key columns joined by '/'."""
-    return "/".join(str(row[c]) for c in key_cols)
+def external_id(key: tuple) -> str:
+    """A document's external id: its key tuple joined by '/'."""
+    return "/".join(str(v) for v in key)
 
 
 # Row bound of every driver-resident cache a serving index preloads
@@ -141,13 +141,44 @@ PRELOAD_MAX_ROWS = 2_000_000
 
 @dataclass(frozen=True)
 class IdMap:
-    """Preloaded docid -> external id map of one serving index.
-    ``complete`` is False when the preload hit its row bound: a docid
-    the map lacks may then still exist in docmeta."""
+    """Preloaded docid -> key tuple map of one serving index, and its
+    reverse (key tuple -> every docid that carries it, superseded
+    revisions included).  Keys stay tuples: a '/'-joined string is
+    ambiguous once a key column holds '/'.  ``complete`` is False when
+    the preload hit its row bound: a docid or key the map lacks may
+    then still exist in docmeta."""
 
     key_cols: tuple[str, ...]
-    ext: dict[int, str]
+    ext: dict[int, tuple]
+    rev: dict[tuple, tuple[int, ...]]
     complete: bool
+
+    @staticmethod
+    def of(key_cols, pairs, complete: bool) -> "IdMap":
+        return IdMap(tuple(key_cols), {}, {}, True).extended(pairs, complete)
+
+    def extended(self, pairs, complete: bool) -> "IdMap":
+        """This map plus ``(docid, key)`` pairs, under
+        ``PRELOAD_MAX_ROWS``.  Both dicts are copied, so the snapshot
+        that holds this map keeps it unchanged."""
+        ext, rev = dict(self.ext), dict(self.rev)
+        for d, k in pairs:
+            if len(ext) >= PRELOAD_MAX_ROWS:
+                complete = False
+                break
+            ext[d] = k
+            rev[k] = rev.get(k, ()) + (d,)
+        return IdMap(self.key_cols, ext, rev, self.complete and complete)
+
+    def superseded(self, keys) -> list[int] | None:
+        """Sorted docids carrying any of ``keys``, or None when the map
+        is incomplete.  A key with a null column matches nothing, like
+        the docmeta semi-join this replaces."""
+        if not self.complete:
+            return None
+        return sorted({
+            d for k in keys if None not in k for d in self.rev.get(k, ())
+        })
 
 
 @dataclass(frozen=True)
@@ -215,7 +246,7 @@ class ServingIndex:
     _bucket_cov_min_nb: int | None = None
     _total_buckets: int | None = None
     _phrase_wl_cache: dict | None = None  # rare-slot docid whitelists (FIFO)
-    # preload_idmap() docid -> external id (Quiver's idmap section) — a
+    # preload_idmap() docid <-> key tuple (Quiver's idmap section) — a
     # declared field so tombstone deletes (dataclasses.replace) keep it
     _idmap: IdMap | None = None
     # the tombstone set as the local lane reads it (preload_tombstones,
@@ -343,8 +374,9 @@ class ServingIndex:
 
     def preload_idmap(self, key_cols: list[str],
                       max_rows: int = PRELOAD_MAX_ROWS) -> int:
-        """docid -> external id collected once per process, so
-        ``engine.search`` resolves hits without a Spark job.  BOUNDED
+        """docid <-> key tuple collected once per process, so
+        ``engine.search`` resolves hits, and ``upsert()`` finds the
+        docids it supersedes, without a Spark job.  BOUNDED
         like the other preloads (the lowest ``max_rows`` docids — a
         driver OOM guard, not a ranking choice): past the bound only
         the docids the map lacks fall back to a filtered collect."""
@@ -357,9 +389,9 @@ class ServingIndex:
         if not complete:
             plan = plan.orderBy("docid").limit(max_rows)
         rows = plan.collect()
-        self._idmap = IdMap(
-            tuple(key_cols),
-            {int(r["docid"]): external_id(r, key_cols) for r in rows},
+        self._idmap = IdMap.of(
+            key_cols,
+            ((int(r["docid"]), tuple(r[c] for c in key_cols)) for r in rows),
             complete,
         )
         if complete:

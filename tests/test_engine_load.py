@@ -599,3 +599,265 @@ def test_local_lane_shapes_score_through_the_kernel(built, loaded,
         assert exp[name], name
         assert calls, name
         assert got == exp[name], name
+
+
+# --- the driver-local write lane against the Spark path -------------------
+
+CORPUS_DDL = (
+    "repo string, path string, commit string, lang string, content string"
+)
+
+
+def _upsert_both_paths(eng, batch, monkeypatch):
+    """(lane engine, Spark-path engine): ``eng.upsert(batch)`` with the
+    driver-local write lane on — asserted to have run — and forced off
+    by patching its posting bound below zero."""
+    import frankensearch_spark.operators.lifecycle as L
+
+    ran = []
+    real = L._local_deltas
+
+    def spy(*a, **kw):
+        ran.append(real(*a, **kw))
+        return ran[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(L, "_local_deltas", spy)
+        lane = eng.upsert(batch)
+        assert ran and ran[-1] is not None, "the lane declined"
+        m.setattr(L, "LOCAL_LANE_MAX_POSTINGS", -1)
+        spark_path = eng.upsert(batch)
+        assert ran[-1] is None, "the lane ran past its bound"
+    return lane, spark_path
+
+
+def _delta_tables(up, start: int):
+    """The upsert delta's block and docmeta rows (docids from
+    ``start``), the merged termstats and the tombstone set, as plain
+    values in a fixed order."""
+    ix = up.index
+    return {
+        "blocks": sorted(
+            tuple(r) for r in ix.blocks.filter(
+                F.col("bucket") >= start >> ix.bucket_shift
+            ).collect()
+        ),
+        "docmeta": {
+            r["docid"]: r.asDict()
+            for r in ix.docmeta.filter(F.col("docid") >= start).collect()
+        },
+        "termstats": sorted(tuple(r) for r in ix.termstats.collect()),
+        "tombstones": sorted(int(r[0]) for r in ix.tombstones.collect()),
+        "tombset": ix._tombset.ids.tolist(),
+    }
+
+
+def _delta_rows(built, kind: str):
+    """Three new revisions of existing keys plus 40 new documents, in
+    the shape ``kind`` names."""
+    from frankensearch_spark.corpus import make_corpus
+
+    keys = built.index.docmeta.select(*CORPUS_KEY).limit(3).collect()
+    gen = make_corpus(40, seed=11, clustered=kind == "clustered")
+    rows = [
+        (r["repo"], r["path"], r["commit"], "rust",
+         f"lanesentinel fn import {gen[i][4]}")
+        for i, r in enumerate(keys)
+    ] + [(f"new/{r[0]}", *r[1:4], f"lanesentinel {r[4]}") for r in gen]
+    if kind == "non_ascii":
+        rows = [
+            (*r[:4], f"{r[4]} café Größe 日本語 naïve-{i}")
+            if i % 2 else r
+            for i, r in enumerate(rows)
+        ]
+    elif kind == "null_content":
+        rows = [(*r[:4], None) if i % 7 == 3 else r
+                for i, r in enumerate(rows)]
+    elif kind == "null_key":
+        rows[4] = (rows[4][0], rows[4][1], None, *rows[4][3:])
+        rows[5] = (None, rows[5][1], rows[5][2], *rows[5][3:])
+    return rows
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["iid", "clustered", "non_ascii", "null_content", "null_key",
+     "no_positions"],
+)
+def test_write_lane_equals_spark_path(spark, built, loaded, monkeypatch,
+                                      tmp_path, kind):
+    """The driver-local delta — blocks, docmeta, merged termstats — and
+    the tombstone set are byte-equal to the Spark path's, and the two
+    engines answer alike.  ``null_key`` upserts its batch twice, so the
+    second round's superseded-docid lookup meets keys with a null
+    column (which supersede nothing, as in the docmeta semi-join);
+    ``no_positions`` runs on an index saved without positions."""
+    from frankensearch_spark.operators.lifecycle import lease_offset
+
+    src, eng = built, _fresh(loaded).warm()
+    queries = ["lanesentinel", "fn import", "café OR 日本語"]
+    if kind == "no_positions":
+        src = FrankensearchSpark.build(
+            synthetic_corpus_df(spark, 60, partitions=2), CORPUS_KEY,
+            with_positions=False,
+        )
+        src.save(str(tmp_path / "nopos"))
+        eng = FrankensearchSpark.load(spark, str(tmp_path / "nopos")).warm()
+        assert not eng.index.has_positions
+    else:
+        queries.append('"term00001 term00002"')
+    batch = spark.createDataFrame(_delta_rows(src, kind), CORPUS_DDL)
+    if kind == "null_key":
+        eng = eng.upsert(batch)
+    start = lease_offset(eng.index.high_watermark(), eng.index.bucket_shift)
+    lane, spark_path = _upsert_both_paths(eng, batch, monkeypatch)
+    got, want = _delta_tables(lane, start), _delta_tables(spark_path, start)
+    assert got.keys() == want.keys()
+    for part in want:
+        assert got[part] == want[part], part
+    assert len(got["docmeta"]) == 43
+    # the second null_key round supersedes the 41 keys without a null
+    assert len(got["tombset"]) == (3 + 41 if kind == "null_key" else 3)
+    if kind == "no_positions":
+        assert all(r[10] is None for r in got["blocks"])
+    for q in queries:
+        assert lane.search(q, limit=50) == spark_path.search(q, limit=50), q
+
+
+def test_write_lane_duplicate_key_raises(spark, built, loaded, monkeypatch):
+    """A batch that repeats a key fails on both paths with the build's
+    duplicate-key error."""
+    import frankensearch_spark.operators.lifecycle as L
+
+    eng = _fresh(loaded).warm()
+    rows = _delta_rows(built, "iid")
+    batch = spark.createDataFrame(rows + [rows[7]], CORPUS_DDL)
+    with pytest.raises(ValueError, match="duplicate external key"):
+        eng.upsert(batch)
+    monkeypatch.setattr(L, "LOCAL_LANE_MAX_POSTINGS", -1)
+    with pytest.raises(Exception, match="duplicate external key"):
+        eng.upsert(batch)
+
+
+def test_write_lane_multifield_equals_spark_path(spark, monkeypatch,
+                                                 tmp_path):
+    """A loaded multi-field engine: the lane and the Spark path give the
+    same per-field delta rows once docids are mapped to external keys,
+    and the same answers by external key.  (The Spark path leases its
+    docids through assign_docids' range partitions, so the docid values
+    themselves may differ.)"""
+    corpus = synthetic_corpus_df(spark, 40, partitions=2).withColumn(
+        "title", F.col("path")
+    )
+    eng = FrankensearchSpark.build_multifield(
+        corpus, CORPUS_KEY, {"content": "content", "title": "title"},
+    )
+    eng.save(str(tmp_path / "mf"))
+    ld = FrankensearchSpark.load(spark, str(tmp_path / "mf")).warm()
+    rows = [(*r, f"{r[1]}/title") for r in _delta_rows(eng, "non_ascii")]
+    batch = spark.createDataFrame(rows, CORPUS_DDL + ", title string")
+    lane, spark_path = _upsert_both_paths(ld, batch, monkeypatch)
+
+    def by_key(up):
+        key_of = {
+            int(r["docid"]): tuple(r[c] for c in CORPUS_KEY)
+            for r in up.index.docmeta.collect()
+        }
+        out = {}
+        for name, sub in up.index.fields.items():
+            out[name, "docmeta"] = sorted(
+                (key_of[r["docid"]], r["content_sha256"], r["doclen"],
+                 r["fieldnorm_id"])
+                for r in sub.docmeta.collect()
+            )
+            out[name, "termstats"] = sorted(
+                tuple(r) for r in sub.termstats.collect()
+            )
+        out["tombstones"] = sorted(
+            key_of[int(r[0])] for r in up.index.tombstones.collect()
+        )
+        return out
+
+    assert by_key(lane) == by_key(spark_path)
+    for q in ("lanesentinel", "fn import", "café", "file1"):
+        assert sorted(lane.search(q, limit=100)) == sorted(
+            spark_path.search(q, limit=100)
+        ), q
+
+
+def test_bounded_upsert_runs_at_most_two_jobs(spark, loaded):
+    """A 250-doc upsert on a warmed loaded engine is the lane's one
+    Arrow collect: the delta is built on the driver and its superseded
+    docids come from the preloaded id map."""
+    eng = _fresh(loaded).warm()
+    keys = eng.index.docmeta.select(*CORPUS_KEY).limit(50).collect()
+    rows = [
+        (r["repo"], r["path"], r["commit"], "rust", f"twojob fn term{i:05d}")
+        for i, r in enumerate(keys)
+    ] + [
+        ("delta", f"src/t{i:04d}.rs", "c2", "rust", f"twojob import {i}")
+        for i in range(200)
+    ]
+    up, n_jobs = _jobs(
+        spark, "lane:upsert",
+        lambda: eng.upsert(spark.createDataFrame(rows, CORPUS_DDL)),
+    )
+    assert n_jobs <= 2, n_jobs
+    assert len(up.search("twojob", limit=300)) == 250
+    assert len(up.index._tombset.ids) == 50
+
+
+def test_spark_path_upsert_releases_build_caches(spark, built, loaded,
+                                                 monkeypatch):
+    """Past the lane's bound, the delta build persists its frames only
+    until the delta's local checkpoints materialize: three chained
+    upserts leave no more persisted RDDs than before, local checkpoints
+    (the deltas the engines serve) aside."""
+    import frankensearch_spark.operators.lifecycle as L
+
+    sc = spark.sparkContext
+
+    def cached():
+        return sum(
+            1 for rdd in sc._jsc.getPersistentRDDs().values()
+            if not rdd.rdd().isLocallyCheckpointed()
+        )
+
+    monkeypatch.setattr(L, "LOCAL_LANE_MAX_POSTINGS", -1)
+    eng = _fresh(loaded).warm()
+    before = cached()
+    for i in range(3):
+        eng = eng.upsert(_replace_batch(spark, built, f"release{i}"))
+        assert len(eng.search_docids(f"release{i}", limit=10)) == 3
+    assert cached() <= before
+
+
+def test_idmap_keeps_key_tuples(spark, tmp_path):
+    """Keys that collide once joined by '/' — ("a/b", "c") and
+    ("a", "b/c") — stay apart in the id map: upserting one tombstones
+    only its own docid, while search() still returns '/'-joined ids."""
+    corpus = spark.createDataFrame(
+        [("a/b", "c", "tuplekey first"), ("a", "b/c", "tuplekey second"),
+         ("x", "y", "filler doc")],
+        "k1 string, k2 string, content string",
+    )
+    FrankensearchSpark.build(corpus, ["k1", "k2"]).save(str(tmp_path / "t"))
+    ld = FrankensearchSpark.load(spark, str(tmp_path / "t")).warm()
+    idm = ld.index._idmap
+    assert sorted(idm.ext.values()) == [("a", "b/c"), ("a/b", "c"),
+                                        ("x", "y")]
+    assert sorted(e for e, _ in ld.search("tuplekey", limit=5)) == [
+        "a/b/c", "a/b/c"
+    ]
+    old = {k: d for d, k in idm.ext.items()}
+    up = ld.upsert(spark.createDataFrame(
+        [("a/b", "c", "tuplekey third")],
+        "k1 string, k2 string, content string",
+    ))
+    assert up.index._tombset.ids.tolist() == [old["a/b", "c"]]
+    hits = up.search_docids("tuplekey", limit=5)
+    assert old["a", "b/c"] in {int(d) for d, _ in hits}
+    assert old["a/b", "c"] not in {int(d) for d, _ in hits}
+    assert [e for e, _ in up.search("tuplekey", limit=5)] == [
+        "a/b/c", "a/b/c"
+    ]

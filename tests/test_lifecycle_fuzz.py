@@ -10,6 +10,8 @@ durability):
   is findable by its sentinel term.
 * compact(): match SET per query unchanged (scores may move — df/N fold).
 * save+load: loaded engine's top-k is bit-identical to the live one.
+* upsert on a loaded (serving) engine: the driver-local write lane and
+  the Spark path give bit-identical answers.
 
 Deterministic: one seed drives the whole op sequence."""
 
@@ -35,8 +37,24 @@ def _results(eng, k=K):
     return {q: eng.search_docids(q, limit=k) for q in QUERIES}
 
 
+def _upsert(eng, batch, sentinel, monkeypatch):
+    """``eng.upsert(batch)``.  On a serving engine it runs twice — the
+    driver-local write lane forced on and forced off — and both engines
+    must answer every query bit-equal; the lane's engine is returned."""
+    from tests.test_engine_load import _upsert_both_paths
+
+    if not eng._is_serving():
+        return eng.upsert(batch)
+    on, off = _upsert_both_paths(eng, batch, monkeypatch)
+    for q in QUERIES + [sentinel]:
+        assert _bits(on.search_docids(q, limit=K)) == _bits(
+            off.search_docids(q, limit=K)
+        ), ("lane on/off", q)
+    return on
+
+
 @pytest.mark.parametrize("seed", [7, 1301])
-def test_lifecycle_sequence_fuzz(spark, tmp_path, seed):
+def test_lifecycle_sequence_fuzz(spark, tmp_path, seed, monkeypatch):
     rng = random.Random(seed)
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=3)
     eng = FrankensearchSpark.build(corpus, CORPUS_KEY)
@@ -81,7 +99,7 @@ def test_lifecycle_sequence_fuzz(spark, tmp_path, seed):
                 "repo string, path string, commit string, lang string, "
                 "content string",
             )
-            eng = eng.upsert(batch)
+            eng = _upsert(eng, batch, sentinel, monkeypatch)
             hits = eng.search_docids(sentinel, limit=10)
             assert len(hits) == len(picked), (op, step)
             assert not (old_ids & {int(d) for d, _ in hits})
@@ -115,7 +133,8 @@ def test_lifecycle_sequence_fuzz(spark, tmp_path, seed):
 
 
 @pytest.mark.parametrize("seed", [7, 1301])
-def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed):
+def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed,
+                                            monkeypatch):
     """The seeded delete / upsert / compact / save+load sequence on a
     built engine and on its saved-then-loaded twin, in lockstep: after
     every step both answer every query bit-equal (docids and f32 score
@@ -163,7 +182,7 @@ def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed):
         )
         was_serving = pair["twin"]._is_serving()
         for side in pair:
-            pair[side] = pair[side].upsert(batch)
+            pair[side] = _upsert(pair[side], batch, sentinel, monkeypatch)
         twin = pair["twin"]
         assert twin._is_serving() == was_serving
         assert len(twin.search_docids(sentinel, limit=10)) == len(picked)
