@@ -9,12 +9,12 @@ re-expressed over the Spark index:
     eng = eng.delete_documents([...]).compact()
     eng.save(path) / FrankensearchSpark.load(spark, path)
 
-An in-session ``build()`` engine serves through the exhaustive scorer
-(``operators/astexec.py``, rank/bit-exact vs the numpy oracle).  An engine
-from :meth:`FrankensearchSpark.load` (or ``upsert()`` on one) serves the
-compressed block store: flat bag-of-words shapes through block-max WAND,
-the rest through the batch executor's bucket lane — one Spark job per
-warmed point search (``operators/serving_exec.py``).
+Every engine holds one index form, the compressed block store
+(``ServingIndex`` / ``ServingMultiIndex``) — whether it came from
+:meth:`FrankensearchSpark.build`, :meth:`FrankensearchSpark.load` or a
+lifecycle operation on either.  Flat bag-of-words shapes serve through
+block-max WAND, the rest through the batch executor's bucket lane — one
+Spark job per warmed point search (``operators/serving_exec.py``).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from frankensearch_spark.operators.build import BuiltIndex, build_index
+from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.query_ast import ENGINE_SCHEMA, ParserSchema, parse_lenient
 
 
@@ -78,9 +78,9 @@ def _cache_put(cache: dict, key, value) -> None:
 
 
 class FrankensearchSpark:
-    """One built index + its query surface."""
+    """One serving index + its query surface."""
 
-    def __init__(self, index: BuiltIndex, key_cols: list[str],
+    def __init__(self, index, key_cols: list[str],
                  corpus: DataFrame | None = None,
                  schema: ParserSchema = ENGINE_SCHEMA):
         self.index = index
@@ -100,8 +100,17 @@ class FrankensearchSpark:
     @classmethod
     def build(cls, corpus: DataFrame, key_cols: list[str],
               content_col: str = "content", **kw) -> "FrankensearchSpark":
-        idx = build_index(corpus, key_cols, content_col, **kw)
-        return cls(idx, key_cols, corpus)
+        """Build a serving engine: ``build_index``, whose grouped frame
+        is blockified once under the writer's default layout
+        (``wand.serving_from_built``, blocks persisted).  The engine is
+        the same form a later ``load`` returns, so it self-warms and
+        serves point searches in one Spark job, and ``save`` writes its
+        blocks as they are."""
+        from frankensearch_spark.operators.wand import serving_from_built
+
+        built = build_index(corpus, key_cols, content_col, **kw)
+        built.release_aux_caches()
+        return cls(serving_from_built(built), key_cols, corpus)
 
     @classmethod
     def build_multifield(cls, corpus: DataFrame, key_cols: list[str],
@@ -109,11 +118,14 @@ class FrankensearchSpark:
                          **kw) -> "FrankensearchSpark":
         """Multi-field build (e.g. {"content": "content", "title":
         "title"}) — bare terms then expand over every schema default
-        field with its boost, like the reference's content^1 + title^2."""
+        field with its boost, like the reference's content^1 + title^2.
+        The engine serves a ``ServingMultiIndex`` carrying
+        ``field_cols``, converted like :meth:`build`."""
         from frankensearch_spark.operators.build import build_multifield_index
+        from frankensearch_spark.operators.wand import serving_from_built
 
         idx = build_multifield_index(corpus, key_cols, field_cols, **kw)
-        eng = cls(idx, key_cols, corpus)
+        eng = cls(serving_from_built(idx), key_cols, corpus)
         if schema is not None:
             eng.schema = schema
         return eng
@@ -138,8 +150,8 @@ class FrankensearchSpark:
         """Replace-by-external-key.  Only the new rows are built: their
         docids lease from the first docid-bucket boundary above the
         high-watermark, and every older docid with a replaced key is
-        tombstoned (lifecycle.upsert_documents).  On a LOADED engine the
-        committed block store is never decoded: the new rows are
+        tombstoned (lifecycle.upsert_documents).  The committed block
+        store is never decoded: the new rows are
         blockified as a small delta, and the engine returned is a
         serving engine over base ⊕ delta — warm at birth (stats, df
         cache, bucket coverage, id map and tombstone set are extended on
@@ -148,7 +160,8 @@ class FrankensearchSpark:
         ``LOCAL_LANE_MAX_POSTINGS`` postings is built on the driver,
         its superseded docids read from the preloaded id map: the call
         is then one Spark job.  A larger one is built by Spark and kept
-        as local checkpoints."""
+        as local checkpoints.  In-session and loaded engines take the
+        same paths."""
         from frankensearch_spark.operators.lifecycle import upsert_documents
 
         corpus = self.corpus
@@ -161,7 +174,7 @@ class FrankensearchSpark:
                 self.key_cols, "left_anti",
             ).unionByName(new_corpus, allowMissingColumns=True)
         # the delta extends the warm planning state, so warm the base
-        # first (a no-op once warm; loaded engines self-warm anyway)
+        # first (a no-op once warm)
         self._ensure_warm()
         return FrankensearchSpark(
             upsert_documents(self.index, new_corpus, self.key_cols),
@@ -169,8 +182,10 @@ class FrankensearchSpark:
         )
 
     def compact(self, force: bool = True) -> "FrankensearchSpark":
-        """Fold tombstones (lifecycle.compact); a loaded engine decodes
-        its block store back to builder form to do so."""
+        """Fold tombstones (lifecycle.compact): the block store is
+        decoded once, dead docs dropped, the survivors re-blockified and
+        their stats recomputed — a serving engine again, cold until its
+        first search warms it."""
         from frankensearch_spark.operators.lifecycle import compact
 
         out = compact(self.index, force=force)
@@ -180,24 +195,15 @@ class FrankensearchSpark:
 
     # --- read path --------------------------------------------------------
 
-    def _is_serving(self) -> bool:
-        from frankensearch_spark.operators.wand import (
-            ServingIndex,
-            ServingMultiIndex,
-        )
-
-        return isinstance(self.index, (ServingIndex, ServingMultiIndex))
-
     def warm(self) -> "FrankensearchSpark":
-        """Long-lived serving mode: preload snapshot stats + the bounded
-        (term -> df) dictionary so per-query planning runs ZERO extra
-        Spark jobs.  Loaded serving indexes additionally preload bucket
-        coverage for the WAND routing gates, the bounded docid ->
-        external id map and the bounded tombstone set, so a bounded
-        point :meth:`search` is ONE Spark job (the candidate-block
-        collect of the driver-local lane) and id materialization runs
-        none.  Idempotent per underlying index
-        (loaded serving engines also self-warm on first search — see
+        """Long-lived serving mode: preload snapshot stats, the bounded
+        (term -> df) dictionary and bucket coverage for the WAND routing
+        gates, the bounded docid -> external id map and the bounded
+        tombstone set, so per-query planning runs ZERO extra Spark
+        jobs: a bounded point :meth:`search` is ONE Spark job (the
+        candidate-block collect of the driver-local lane) and id
+        materialization runs none.  Idempotent per underlying index
+        (every engine also self-warms on first search — see
         :meth:`_ensure_warm` — so an explicit warm() after a search
         costs nothing); a refresh is never needed because mutations
         return a NEW engine over a new snapshot."""
@@ -207,7 +213,7 @@ class FrankensearchSpark:
             else [self.index]
         )
         # serialize concurrent warms (the self-warm path means N first
-        # searches on a cold loaded engine race here — without the lock
+        # searches on a cold engine race here — without the lock
         # each would run the full preload jobs redundantly; results are
         # identical either way, the lock only removes the wasted jobs)
         with _warm_lock(self.index):
@@ -216,46 +222,37 @@ class FrankensearchSpark:
                 # earlier warm (termstats landed, coverage didn't) must
                 # not strand the missing half behind one already-warm
                 # flag
-                if getattr(sub, "_term_df_cache", None) is None:
+                if sub._term_df_cache is None:
                     sub.stats()
                     sub.preload_termstats()
-                if (
-                    hasattr(sub, "preload_bucket_coverage")
-                    and getattr(sub, "_bucket_cov", None) is None
-                ):
+                if sub._bucket_cov is None:
                     sub.preload_bucket_coverage()
-            if self._is_serving():
-                if self.key_cols and self._preloaded_ids() is None:
-                    self.index.preload_idmap(self.key_cols)
-                if (
-                    self.index.tombstones is not None
-                    and self.index._tombset is None
-                ):
-                    self.index.preload_tombstones()
+            if self.key_cols and self._preloaded_ids() is None:
+                self.index.preload_idmap(self.key_cols)
+            if self.index.tombstones is not None and self.index._tombset is None:
+                self.index.preload_tombstones()
         return self
 
     def _preloaded_ids(self):
         """The index's preloaded id map, if it was built for this
         engine's key columns."""
-        idm = getattr(self.index, "_idmap", None)
+        idm = self.index._idmap
         if idm is not None and idm.key_cols == tuple(self.key_cols):
             return idm
         return None
 
     def _ensure_warm(self) -> None:
-        """Self-warm a LOADED serving engine on its first search (the
-        QG-9 cold-open analogue, quill-perf-gates.toml — the reference
-        lazy-faults mmap'd sections on first touch).  Measured on the 2M
-        durable index: an un-warmed engine pays per-query planning
-        collects (termstats + coverage) FOREVER — 2.2-2.7 s steady-state
-        vs 0.57 s warm — while one bounded preload (5.6 s) amortizes
-        them away after the first query.  Idempotent per underlying
-        field index (the caches live on the index, so engines sharing a
-        snapshot — with_corpus, upsert chains — warm once); built
-        in-session engines skip (their frames are already resident and
-        the explicit warm() stays available)."""
-        if self._is_serving():
-            self.warm()
+        """Self-warm on the first search, in-session and loaded engines
+        alike (the QG-9 cold-open analogue, quill-perf-gates.toml — the
+        reference lazy-faults mmap'd sections on first touch).  Measured
+        on the 2M durable index: an un-warmed engine pays per-query
+        planning collects (termstats + coverage) FOREVER — 2.2-2.7 s
+        steady-state vs 0.57 s warm — while one bounded preload (5.6 s)
+        amortizes them away after the first query.  Idempotent per
+        underlying field index (the caches live on the index, so
+        engines sharing a snapshot — with_corpus, upsert chains — warm
+        once)."""
+        self.warm()
 
     def with_corpus(self, corpus: DataFrame) -> "FrankensearchSpark":
         """Re-attach the source corpus (needed only for snippets) — a
@@ -280,23 +277,14 @@ class FrankensearchSpark:
         hit = self._query_cache.get(key)
         if hit is not None:
             return list(hit)
-        if self._is_serving():
-            from frankensearch_spark.operators.serving_exec import (
-                serving_search_collect,
-            )
+        from frankensearch_spark.operators.serving_exec import (
+            serving_search_collect,
+        )
 
-            self._ensure_warm()
-            out = serving_search_collect(
-                self.index, query, limit, offset, self.schema
-            )
-        else:
-            from frankensearch_spark.operators.astexec import (
-                search_ast_collect,
-            )
-
-            out = search_ast_collect(
-                self.index, query, limit, offset, self.schema
-            )
+        self._ensure_warm()
+        out = serving_search_collect(
+            self.index, query, limit, offset, self.schema
+        )
         _cache_put(self._query_cache, key, list(out))
         return out
 
@@ -337,11 +325,10 @@ class FrankensearchSpark:
         """[(external_id, np.float32)] — docids materialized through the
         IDMAP analogue (E12), external id = key cols joined by '/'.
 
-        A warmed loaded engine reads the ids from the id map preloaded
-        by :meth:`warm`, so ``search`` runs no Spark job beyond
-        :meth:`search_docids`; docids past the map's row bound, and
-        in-session engines, resolve through one filtered docmeta
-        collect."""
+        Every engine self-warms, so the ids come from the id map
+        :meth:`warm` preloaded and ``search`` runs no Spark job beyond
+        :meth:`search_docids`; only docids past the map's row bound
+        resolve through one filtered docmeta collect."""
         hits = self.search_docids(query, limit, offset)
         if not hits:
             return []
@@ -489,38 +476,26 @@ class FrankensearchSpark:
 
     # --- persistence ------------------------------------------------------
 
-    def save(self, path: str, **kw):
-        """Persist the index durably.  A builder engine runs the staged,
-        resumable merge+write; a loaded serving engine (whose blocks are
-        already compressed) rewrites its tables — so delete -> save ->
-        load round-trips tombstones either way.
+    def save(self, path: str):
+        """Persist the index durably through the one writer
+        (``manifest.write_index``): the blocks are written as they are,
+        under the index's own layout, with the docid fingerprint and the
+        committed-group/table resume — so delete -> save -> load
+        round-trips tombstones, and a crashed save re-run on the same
+        path resumes.
 
         Snapshots are IMMUTABLE once committed: saving over a path that
         already holds a completed index raises (a silent resume-no-op
         would resurrect deleted docs; an overwrite could delete files a
         loaded engine is lazily reading).  Save each new state to a
         fresh path."""
-        from frankensearch_spark.plans.manifest import _require_fresh_target
+        from frankensearch_spark.plans.manifest import (
+            _require_fresh_target,
+            write_index,
+        )
 
         _require_fresh_target(path)
-        if self._is_serving():
-            from frankensearch_spark.plans.manifest import (
-                write_serving_index,
-            )
-
-            out = write_serving_index(
-                self.index, path, key_cols=self.key_cols, **kw
-            )
-            self._save_schema(path)
-            return out
-        from frankensearch_spark.plans.manifest import write_index
-
-        out = write_index(self.index, path, key_cols=self.key_cols, **kw)
-        # the durable write materialized every index frame; transient
-        # build persists (duplicate-key aggregate) are no longer needed
-        release = getattr(self.index, "release_aux_caches", None)
-        if release is not None:
-            release()
+        out = write_index(self.index, path, key_cols=self.key_cols)
         self._save_schema(path)
         return out
 
@@ -559,10 +534,3 @@ class FrankensearchSpark:
             os.path.join(path, "engine.json"),
             {"schema": _schema_to_dict(self.schema)},
         )
-
-    @staticmethod
-    def load_serving(spark: SparkSession, path: str):
-        """Compressed serving index (block-max WAND path) from disk."""
-        from frankensearch_spark.plans.manifest import read_index
-
-        return read_index(spark, path)

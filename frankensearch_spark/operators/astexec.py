@@ -1,7 +1,9 @@
 """Exhaustive execution of parsed query trees (SURVEY.md Q1-Q5, E1-E2,
-E7-E9) — the one decode-and-score plan for every index form: in-session
-``BuiltIndex`` / ``MultiFieldIndex`` and durable ``ServingIndex`` /
-``ServingMultiIndex``.
+E7-E9) — the one decode-and-score plan for every index form: the
+serving form every engine holds (``ServingIndex`` /
+``ServingMultiIndex``), and the builder form (``BuiltIndex`` /
+``MultiFieldIndex``), which remains only for streamed indexes
+(``streaming.incremental.read_incremental_index``) and tests.
 
 The plan keeps every relational step declarative — per-field posting
 filters by the query's terms (partition-prunable), one pivot shuffle per

@@ -38,8 +38,8 @@ Three lanes, unioned before one tiny per-qid window (round 4):
   (:func:`bucketscore.bucket_plan`).  Phrase terms decode their
   pos_bytes sidecar per bucket;
   non-phrase blocks never read it.
-* **pivot lane** — the remainder (in-memory BuiltIndex fields, All
-  nodes, metadata predicates): the exhaustive scorer's candidate
+* **pivot lane** — the remainder (builder-form fields of streamed
+  indexes, All nodes, metadata predicates): the exhaustive scorer's candidate
   assembly (:func:`astexec.candidates`) over the union of the lane's
   terms — each queried field's postings scanned/decoded ONCE, pivoted
   ONCE per field — then evaluates every query's AST over the

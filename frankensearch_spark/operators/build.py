@@ -226,24 +226,29 @@ def assign_docids_fused_spans(
     pitfall class)."""
     if n_parts is None:
         n_parts = fused_lease_count(corpus)
+    # the lease id is materialized as a COLUMN in the stage that reads
+    # the range exchange (the rule of assign_docids' lease mode): the
+    # task's own partition id is the final RDD's, which a union or a
+    # coalesce downstream shifts whenever this frame is recomputed
     arranged = corpus.repartitionByRange(
         n_parts, *[F.col(c) for c in key_cols]
-    ).sortWithinPartitions(*[F.col(c) for c in key_cols])
+    ).sortWithinPartitions(*[F.col(c) for c in key_cols]).withColumn(
+        "__lease", F.spark_partition_id()
+    )
     names = list(corpus.columns)
     key_idx = [names.index(c) for c in key_cols]
 
     def gen(batches):
         import numpy as np
         import pyarrow as pa
-        from pyspark import TaskContext
 
-        base = TaskContext.get().partitionId() * DOC_ORDS_PER_LEASE
         seen = 0
         prev_last = None
         for rb in batches:
             n = rb.num_rows
             if n == 0:
                 continue
+            base = rb.column(len(names))[0].as_py() * DOC_ORDS_PER_LEASE
             keys = [rb.column(i) for i in key_idx]
             check_sorted_keys_unique(keys)
             first = tuple(k[0].as_py() for k in keys)
@@ -256,7 +261,7 @@ def assign_docids_fused_spans(
             )
             seen += n
             yield pa.RecordBatch.from_arrays(
-                [ids, *rb.columns], ["docid", *names]
+                [ids, *rb.columns[:len(names)]], ["docid", *names]
             )
 
     out_schema = T.StructType(
@@ -983,43 +988,18 @@ def build_fieldstats(docmeta: DataFrame) -> DataFrame:
     )
 
 
-@dataclass
-class BuiltIndex:
-    """In-memory handle over the four index tables."""
+# Row bound of every driver-resident cache an index preloads (term dfs;
+# on a serving index also bucket coverage, the id map, the tombstone
+# set): a driver OOM guard, not a ranking choice — past it each consumer
+# falls back to its Spark-side route.
+PRELOAD_MAX_ROWS = 2_000_000
 
-    postings: DataFrame  # serving table: docid, term, tf, doclen
-    docmeta: DataFrame
-    termstats: DataFrame
-    fieldstats: DataFrame
-    positions: DataFrame | None = None  # (docid, term, positions) — phrase path
-    tombstones: DataFrame | None = None  # (docid) — excluded from results,
-    # NOT from stats (grimoire.rs:68-71 rule; folded by lifecycle.compact)
-    postings_full: DataFrame | None = None  # postings WITH positions (same
-    # rows) — lets the block-store writer skip the (docid, term) re-join
-    postings_grouped: DataFrame | None = None  # grouped layout (one row
-    # per (batch, term), array payloads, disjoint docid spans per term) —
-    # every build_index() sets it and the durable writer and the serving
-    # upsert blockify it (merge.build_blocks_grouped); indexes rebuilt
-    # from other forms (compaction, a decoded store) leave it None
-    _cached_stats: tuple[int, int] | None = None
-    _term_df_cache: dict | None = None
-    # declared as a FIELD (not a plain attribute) so lifecycle's
-    # dataclasses.replace() clones keep it — a dropped completeness flag
-    # over a partial cache would silently lose tail terms (see
-    # ServingIndex._term_df_complete)
-    _term_df_complete: bool = False
-    # transient build-time persists (the duplicate-key aggregate) whose
-    # cache is only needed until the index frames first materialize;
-    # CacheManager pins them until an explicit unpersist, so long-lived
-    # processes call release_aux_caches() after materializing
-    aux_caches: tuple = ()
-    # the frames whose cache this build created (persist_owned), the
-    # docid assignment included: a caller that copies the index out
-    # (the serving upsert's delta, once checkpointed) unpersists them.
-    # An index still served from these frames must keep the docid
-    # assignment cached (lease docids are frozen by its first
-    # materialization)
-    persisted: tuple = ()
+
+class TermStats:
+    """The snapshot stats and the bounded (term -> df) cache, shared by
+    both index forms (:class:`BuiltIndex`, ``wand.ServingIndex``); each
+    declares the ``_cached_stats``, ``_term_df_cache`` and
+    ``_term_df_complete`` fields these read."""
 
     def stats(self) -> tuple[int, int]:
         if self._cached_stats is None:
@@ -1027,18 +1007,7 @@ class BuiltIndex:
             self._cached_stats = (int(row["doc_count"]), int(row["total_tokens"]))
         return self._cached_stats
 
-    def release_aux_caches(self) -> None:
-        """Unpersist transient build-time caches (NOT the index's own
-        postings/docmeta/termstats persists).  Call after the index
-        frames have materialized — the aux data is re-derivable, so a
-        later rescan merely recomputes."""
-        for df in self.aux_caches:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — best-effort release
-                pass
-
-    def preload_termstats(self, max_terms: int = 2_000_000) -> int:
+    def preload_termstats(self, max_terms: int = PRELOAD_MAX_ROWS) -> int:
         """Long-lived-serving amortization: collect the (term -> df)
         dictionary ONCE so per-query planning never runs a Spark job for
         stats (the reference holds TERMDICT mmap'd for the same reason).
@@ -1091,6 +1060,56 @@ class BuiltIndex:
             r["term"]: int(r["df"])
             for r in self.termstats.filter(F.col("term").isin(terms)).collect()
         }
+
+
+@dataclass
+class BuiltIndex(TermStats):
+    """In-memory handle over the four index tables."""
+
+    postings: DataFrame  # serving table: docid, term, tf, doclen
+    docmeta: DataFrame
+    termstats: DataFrame
+    fieldstats: DataFrame
+    positions: DataFrame | None = None  # (docid, term, positions) — phrase path
+    tombstones: DataFrame | None = None  # (docid) — excluded from results,
+    # NOT from stats (grimoire.rs:68-71 rule; folded by lifecycle.compact)
+    postings_full: DataFrame | None = None  # postings WITH positions (same
+    # rows) — lets the block-store writer skip the (docid, term) re-join
+    postings_grouped: DataFrame | None = None  # grouped layout (one row
+    # per (batch, term), array payloads, disjoint docid spans per term) —
+    # every build_index() sets it and the durable writer and the serving
+    # upsert blockify it (merge.build_blocks_grouped); indexes rebuilt
+    # from other forms (compaction, a decoded store) leave it None
+    _cached_stats: tuple[int, int] | None = None
+    _term_df_cache: dict | None = None
+    # declared as a FIELD (not a plain attribute) so lifecycle's
+    # dataclasses.replace() clones keep it — a dropped completeness flag
+    # over a partial cache would silently lose tail terms (see
+    # ServingIndex._term_df_complete)
+    _term_df_complete: bool = False
+    # transient build-time persists (the duplicate-key aggregate) whose
+    # cache is only needed until the index frames first materialize;
+    # CacheManager pins them until an explicit unpersist, so long-lived
+    # processes call release_aux_caches() after materializing
+    aux_caches: tuple = ()
+    # the frames whose cache this build created (persist_owned), the
+    # docid assignment included: a caller that copies the index out
+    # (the serving upsert's delta, once checkpointed) unpersists them.
+    # An index still served from these frames must keep the docid
+    # assignment cached (lease docids are frozen by its first
+    # materialization)
+    persisted: tuple = ()
+
+    def release_aux_caches(self) -> None:
+        """Unpersist transient build-time caches (NOT the index's own
+        postings/docmeta/termstats persists).  Call after the index
+        frames have materialized — the aux data is re-derivable, so a
+        later rescan merely recomputes."""
+        for df in self.aux_caches:
+            try:
+                df.unpersist()
+            except Exception:  # noqa: BLE001 — best-effort release
+                pass
 
 
 @dataclass

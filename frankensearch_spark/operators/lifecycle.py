@@ -9,17 +9,21 @@ Reference semantics carried over exactly:
   (``df``, ``N``, ``total_tokens``) keep counting them until compaction
   (grimoire.rs:68-71, argus.rs:1327-1344 — scores of surviving docs do
   NOT change when a neighbour is deleted).
+Every operation takes and returns the serving form (``ServingIndex`` /
+``ServingMultiIndex``) — what every engine holds, in-session ``build()``
+engines included.  The builder form remains only for streamed indexes
+and tests, and never reaches these operations.
+
 * Upsert = index the new revision under a fresh docid + tombstone every
   older docid with the same external key (new internal docid + tombstone,
-  COMPREHENSIVE_PLAN.md:274-276).  Docids are never reused.  ONE lease
-  rule serves built and serving indexes alike (keeper.rs:1567-1610): the
-  new ids start at the first ``2^bucket_shift`` boundary above the
-  current high-watermark (:func:`lease_offset`), so the new rows fill
-  docid buckets of their own and no existing block changes.
-* On a serving (loaded) index an upsert never decodes the committed
-  block store: only the new rows are built and blockified — a small
-  delta — and the result is a serving index over base ⊕ delta (the
-  Keeper's mutable delta segment, delta.rs).  Its planning state (stats,
+  COMPREHENSIVE_PLAN.md:274-276).  Docids are never reused.  The new ids
+  start at the first ``2^bucket_shift`` boundary above the current
+  high-watermark (:func:`lease_offset`, keeper.rs:1567-1610), so the new
+  rows fill docid buckets of their own and no existing block changes.
+* An upsert never decodes the committed block store: only the new rows
+  are built and blockified — a small delta — and the result is a
+  serving index over base ⊕ delta (the Keeper's mutable delta segment,
+  delta.rs).  Its planning state (stats,
   the df cache, bucket coverage, the id map, the tombstone set) is
   extended on the driver by ONE function (:func:`_serving_union`) for
   either write path:
@@ -36,11 +40,11 @@ Reference semantics carried over exactly:
     a lost executor loses it), and its superseded docids come from a
     docmeta semi-join.
 
-  Only compaction decodes the store (:func:`serving_to_built`).
-* Compaction folds tombstones: drop dead rows from postings/docmeta,
-  recompute stats, PRESERVE surviving docids (gaps are fine,
-  keeper.rs:4219-4253).  After compaction scores MAY change (df/N drop) —
-  same as the reference.
+* Compaction folds tombstones — the one operation that decodes the
+  store: decode every block, drop dead postings and docmeta rows,
+  re-blockify, recompute stats from the survivors, PRESERVE surviving
+  docids (gaps are fine, keeper.rs:4219-4253).  After compaction scores
+  MAY change (df/N drop) — same as the reference.
 
 Spark shapes: the tombstone set is a DataFrame of docids (cogrouped or
 anti-joined at query time); compaction is an anti-join rewrite job.  A
@@ -59,8 +63,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from frankensearch_spark.operators.build import (
-    BuiltIndex,
-    MultiFieldIndex,
     _doclen_pseudo_batch,
     _regroup_posting_batch,
     build_fieldstats,
@@ -74,6 +76,7 @@ from frankensearch_spark.operators.merge import (
     BLOCKS_SCHEMA,
     DEFAULT_BUCKET_SHIFT,
     _blockify_grouped_arrow,
+    build_blocks,
     build_blocks_grouped,
 )
 from frankensearch_spark.operators.wand import (
@@ -89,10 +92,7 @@ TOMBSTONE_COMPACT_THRESHOLD = 0.20  # config.rs:29
 
 
 def _tombstone_df(index, docids) -> DataFrame:
-    df = getattr(index, "postings", None)
-    if df is None:  # ServingIndex carries blocks, not postings
-        df = index.blocks
-    spark = df.sparkSession
+    spark = index.docmeta.sparkSession
     if isinstance(docids, DataFrame):
         return docids.select(F.col(docids.columns[0]).cast("long").alias("docid"))
     import numpy as np
@@ -113,46 +113,30 @@ def delete_documents(index, docids):
     "df/N include tombstoned docs until compaction" rule.  Multi-field
     indexes tombstone on the PRIMARY field (the one query-time anti-join
     source shared by every field)."""
-    if isinstance(index, MultiFieldIndex):
-        fields = dict(index.fields)
-        fields[index.primary_name] = delete_documents(index.primary, docids)
-        # field_cols must survive: upsert ends in delete_documents, and
-        # the NEXT upsert needs the field->source-column map
-        return MultiFieldIndex(
-            fields, index.primary_name,
-            field_cols=getattr(index, "field_cols", None),
-        )
     if isinstance(index, ServingMultiIndex):
         fields = dict(index.fields)
         fields[index.primary_name] = delete_documents(index.primary, docids)
         return dataclasses.replace(index, fields=fields)
-    if isinstance(index, ServingIndex):
-        tombset = None
-        if not isinstance(docids, DataFrame):
-            docids = [int(d) for d in docids]
-            prev = index._tombset
-            if index.tombstones is None:
-                prev = NO_TOMBSTONES
-            if prev is not None:
-                tombset = prev.extended(docids)
-        ts = _tombstone_df(index, docids)
-        if index.tombstones is not None:
-            ts = index.tombstones.unionByName(ts).distinct()
-        # replace() keeps every other field — including the warm()
-        # planning state (_term_df_cache, _bucket_cov): tombstones don't
-        # change term stats or bucket coverage, only result filtering.
-        # A driver-side docid list extends the preloaded set; a
-        # DataFrame leaves it for warm() to preload
-        return dataclasses.replace(index, tombstones=ts, _tombset=tombset)
+    tombset = None
+    if not isinstance(docids, DataFrame):
+        docids = [int(d) for d in docids]
+        prev = index._tombset
+        if index.tombstones is None:
+            prev = NO_TOMBSTONES
+        if prev is not None:
+            tombset = prev.extended(docids)
     ts = _tombstone_df(index, docids)
     if index.tombstones is not None:
         ts = index.tombstones.unionByName(ts).distinct()
-    # replace() keeps every other field incl. the preload_termstats()
-    # warm planning cache — tombstones only change result filtering
-    return dataclasses.replace(index, tombstones=ts)
+    # replace() keeps every other field — including the warm()
+    # planning state (_term_df_cache, _bucket_cov): tombstones don't
+    # change term stats or bucket coverage, only result filtering.
+    # A driver-side docid list extends the preloaded set; a
+    # DataFrame leaves it for warm() to preload
+    return dataclasses.replace(index, tombstones=ts, _tombset=tombset)
 
 
-def delete_by_key(index: BuiltIndex, key_predicate) -> BuiltIndex:
+def delete_by_key(index, key_predicate):
     """Tombstone by external key predicate over docmeta (delete_documents
     by id, index.rs:9254)."""
     ids = index.docmeta.filter(key_predicate).select("docid")
@@ -163,55 +147,6 @@ def lease_offset(hwm: int, bucket_shift: int = DEFAULT_BUCKET_SHIFT) -> int:
     """The first docid an upsert leases: the first ``2^bucket_shift``
     boundary above the high-watermark ``hwm`` (0 on an empty index)."""
     return ((hwm >> bucket_shift) + 1) << bucket_shift
-
-
-def _shift_union(old: BuiltIndex, delta: BuiltIndex,
-                 shift: int) -> BuiltIndex:
-    """Union ``delta`` into ``old`` with the delta's docids shifted by
-    the lease offset; per-field stats recomputed over the union."""
-    shifted_postings = delta.postings.withColumn(
-        "docid", F.col("docid") + F.lit(shift)
-    )
-    shifted_docmeta = delta.docmeta.withColumn(
-        "docid", F.col("docid") + F.lit(shift)
-    )
-    if (delta.positions is None) != (old.positions is None):
-        # silently dropping one side's positions would leave a PARTIAL
-        # positions table: phrase queries then silently miss the docs of
-        # the positionless side — fail loudly instead
-        missing = "delta" if delta.positions is None else "existing index"
-        raise ValueError(
-            "positions present on only one side of the upsert (the "
-            f"{missing} lacks them); rebuild/upsert with matching "
-            "with_positions"
-        )
-    shifted_positions = (
-        delta.positions.withColumn("docid", F.col("docid") + F.lit(shift))
-        if delta.positions is not None
-        else None
-    )
-    # every build path (fused arrow, vector, auto, SQL) emits positions
-    # as per-posting LEB128 binary — one wire format, no normalization;
-    # only durable segments sealed by pre-unification writers still carry
-    # array<int> (handled at load in streaming/incremental.py)
-    old_positions = old.positions
-    postings = old.postings.unionByName(shifted_postings)
-    docmeta = old.docmeta.unionByName(
-        shifted_docmeta.select(*old.docmeta.columns)
-    )
-    positions = (
-        old_positions.unionByName(shifted_positions)
-        if shifted_positions is not None
-        else old_positions
-    )
-    return BuiltIndex(
-        postings=postings,
-        docmeta=docmeta,
-        termstats=build_termstats(postings),
-        fieldstats=build_fieldstats(docmeta),
-        positions=positions,
-        tombstones=old.tombstones,
-    )
 
 
 def _extend_df_cache(sub, delta_df: dict) -> tuple[dict | None, bool]:
@@ -371,7 +306,7 @@ def _spark_deltas(fields: dict, built: dict, shift: int, key_cols,
             grouped.withColumn(
                 "docids", F.transform("docids", lambda d: d + shift)
             ),
-            sub.bucket_shift, sub.n_term_partitions,
+            sub.bucket_shift, sub.n_term_partitions, codec=sub.codec,
         ).localCheckpoint()
         docmeta = delta.docmeta.withColumn(
             "docid", F.col("docid") + F.lit(shift)
@@ -533,7 +468,8 @@ def _local_deltas(index, fields: dict, new_corpus: DataFrame, key_cols,
         blocks, terms, counts = [], [], []
         if grouped is not None:
             blocks = pa.Table.from_batches(list(_blockify_grouped_arrow(
-                [grouped], sub.bucket_shift, sub.n_term_partitions
+                [grouped], sub.bucket_shift, sub.n_term_partitions,
+                sub.codec,
             )))
             per = blocks.group_by(["term", "bucket"]).aggregate(
                 [("n", "sum")]
@@ -568,51 +504,6 @@ def _local_deltas(index, fields: dict, new_corpus: DataFrame, key_cols,
     return out, key_tuples
 
 
-def serving_to_built(index):
-    """Reconstruct builder form from a durable serving index: ONE
-    distributed decode pass over the whole block store (no driver
-    materialization), doclen re-joined from docmeta (fieldnorm
-    quantization is idempotent, so re-derived ids equal the stored
-    ones bit-for-bit).  This is what lets a LOADED engine run
-    upsert/compact with full reference semantics (index.rs:9104-9270
-    over a committed snapshot).
-
-    Cost note: linear in index size — fine for compaction-sized jobs;
-    for high-rate appends at very large corpora prefer streamed
-    mini-segments (streaming.incremental), which never decode the base."""
-    if isinstance(index, ServingMultiIndex):
-        return MultiFieldIndex(
-            {n: serving_to_built(f) for n, f in index.fields.items()},
-            index.primary_name,
-            field_cols=index.field_cols,
-        )
-    assert isinstance(index, ServingIndex)
-    from frankensearch_spark.operators.serving_exec import blocks_to_postings
-
-    decoded = blocks_to_postings(
-        index, None, with_positions=index.has_positions
-    )
-    doclens = index.docmeta.select("docid", "doclen")
-    post = decoded.drop("fieldnorm_id").join(doclens, "docid")
-    if index.has_positions:
-        postings_full = post.select("docid", "term", "tf", "positions", "doclen")
-        postings = postings_full.drop("positions")
-        positions = postings_full.select("docid", "term", "positions")
-    else:
-        postings_full = None
-        postings = post.select("docid", "term", "tf", "doclen")
-        positions = None
-    return BuiltIndex(
-        postings=postings,
-        docmeta=index.docmeta,
-        termstats=index.termstats,
-        fieldstats=index.fieldstats,
-        positions=positions,
-        tombstones=index.tombstones,
-        postings_full=postings_full,
-    )
-
-
 def upsert_documents(
     index,
     new_corpus: DataFrame,
@@ -624,21 +515,20 @@ def upsert_documents(
     tombstone every existing docid sharing the key.
 
     The fresh docids start at :func:`lease_offset` above the current
-    high-watermark — never reused, monotone (Q1 docid discipline).  A
-    serving index (loaded engine) tracks its high-watermark on the
-    driver and stays in serving form (:func:`_serving_union`); a built
-    index stays in builder form.  Multi-field indexes upsert every field
+    high-watermark — never reused, monotone (Q1 docid discipline),
+    tracked on the driver — and the result stays in serving form
+    (:func:`_serving_union`).  Multi-field indexes upsert every field
     from the same delta corpus (requires the ``field_cols`` mapping the
     index was built with).
 
-    On a serving index a delta within the driver-local lane's bound
+    A delta within the driver-local lane's bound
     (:func:`_local_deltas`: one docid bucket of rows, at most
     ``LOCAL_LANE_MAX_POSTINGS`` postings) is built in-process with the
     build's kernels, and its superseded docids come from the preloaded
     id map: one Spark job in all.  Past the bound, or with an
     incomplete map, the Spark path's build and docmeta semi-join run."""
     multi = hasattr(index, "fields")
-    if multi and not getattr(index, "field_cols", None):
+    if multi and not index.field_cols:
         raise ValueError(
             "multi-field upsert needs the index's field_cols mapping "
             "(build via build_multifield_index)"
@@ -649,30 +539,6 @@ def upsert_documents(
         new_corpus.select(*key_cols).distinct(), key_cols, "left_semi"
     ).select("docid")
 
-    def built_deltas() -> dict:
-        if multi:
-            return build_multifield_index(
-                new_corpus, key_cols, index.field_cols, primary=primary,
-                **build_kw,
-            ).fields
-        return {"content": build_index(
-            new_corpus, key_cols, content_col, **build_kw
-        )}
-
-    if not isinstance(index, (ServingIndex, ServingMultiIndex)):
-        hwm = index.docmeta.agg(F.max("docid")).collect()[0][0]
-        shift = lease_offset(-1 if hwm is None else int(hwm))
-        built = built_deltas()
-        unions = {
-            name: _shift_union(sub, built[name], shift)
-            for name, sub in fields.items()
-        }
-        merged = (
-            MultiFieldIndex(unions, primary, field_cols=index.field_cols)
-            if multi else unions["content"]
-        )
-        return delete_documents(merged, old_ids)
-
     shift = lease_offset(index.high_watermark(), primary_sub.bucket_shift)
     local = _local_deltas(
         index, fields, new_corpus, key_cols,
@@ -681,9 +547,17 @@ def upsert_documents(
     )
     superseded = None
     if local is None:
-        deltas = _spark_deltas(
-            fields, built_deltas(), shift, key_cols, primary
+        built = (
+            build_multifield_index(
+                new_corpus, key_cols, index.field_cols, primary=primary,
+                **build_kw,
+            ).fields
+            if multi
+            else {"content": build_index(
+                new_corpus, key_cols, content_col, **build_kw
+            )}
         )
+        deltas = _spark_deltas(fields, built, shift, key_cols, primary)
     else:
         deltas, new_keys = local
         idm = index._idmap
@@ -706,7 +580,7 @@ def upsert_documents(
     return delete_documents(merged, superseded)
 
 
-def tombstone_density(index: BuiltIndex) -> float:
+def tombstone_density(index) -> float:
     if index.tombstones is None:
         return 0.0
     n_docs, _ = index.stats()
@@ -715,62 +589,64 @@ def tombstone_density(index: BuiltIndex) -> float:
     return index.tombstones.count() / n_docs
 
 
-def compact(index, force: bool = False, cache: bool = True):
-    """Fold tombstones: rewrite without dead docs, preserving surviving
-    docids; stats recomputed from survivors (keeper.rs:4219-4253).
+def _compact_field(sub, ts: DataFrame, cache: bool):
+    """One field of :func:`compact`: its postings decoded, dead docs
+    anti-joined out of them and out of docmeta, the survivors
+    re-blockified under the field's layout, termstats and fieldstats
+    recomputed from them.  Under ``cache`` the survivors are decoded
+    once: held while the new blocks and termstats materialize, then
+    released.  The result is cold: warm() preloads it."""
+    from frankensearch_spark.operators.serving_exec import blocks_to_postings
 
-    No-op below the 20% density threshold unless ``force``.  Multi-field
-    indexes fold the (primary-held) tombstone set into EVERY field.  A
-    serving index is decoded back to builder form first
-    (:func:`serving_to_built`) — the one lifecycle op that touches the
-    committed store."""
-    if index.tombstones is None:
-        return index
-    if not force and tombstone_density(index) <= TOMBSTONE_COMPACT_THRESHOLD:
-        return index
-    if isinstance(index, (ServingIndex, ServingMultiIndex)):
-        index = serving_to_built(index)
-    if isinstance(index, MultiFieldIndex):
-        ts = index.tombstones
-        fields = {}
-        for name, sub in index.fields.items():
-            with_ts = BuiltIndex(
-                postings=sub.postings,
-                docmeta=sub.docmeta,
-                termstats=sub.termstats,
-                fieldstats=sub.fieldstats,
-                positions=sub.positions,
-                tombstones=ts,
-            )
-            fields[name] = compact(with_ts, force=True, cache=cache)
-        return MultiFieldIndex(
-            fields, index.primary_name,
-            field_cols=getattr(index, "field_cols", None),
-        )
-    ts = index.tombstones
-    postings = index.postings.join(ts, "docid", "left_anti")
-    docmeta = index.docmeta.join(ts, "docid", "left_anti")
-    positions = (
-        index.positions.join(ts, "docid", "left_anti")
-        if index.positions is not None
-        else None
+    docmeta = sub.docmeta.join(ts, "docid", "left_anti")
+    postings = (
+        blocks_to_postings(sub, None, with_positions=sub.has_positions)
+        .join(ts, "docid", "left_anti")
+        .drop("fieldnorm_id")
+        .join(docmeta.select("docid", "doclen"), "docid")
     )
+    if cache:
+        postings = postings.persist()
+    blocks = build_blocks(
+        postings, sub.bucket_shift, sub.n_term_partitions,
+        positions=postings if sub.has_positions else None, codec=sub.codec,
+    )
+    termstats = build_termstats(postings)
     if cache:
         # the SUPERSEDED index's persisted frames are deliberately left
         # alone: engines are immutable and the caller may still hold
         # (and query) the pre-compact engine.  Spark persists at
         # MEMORY_AND_DISK, so abandoned generations are LRU-evicted
-        # under pressure rather than leaking unboundedly; a long-lived
-        # process that compacts in a loop and wants the memory back NOW
-        # can `old_engine.index.postings.unpersist()` once it drops its
-        # last reference.
-        postings = postings.persist()
-        docmeta = docmeta.persist()
-    return BuiltIndex(
-        postings=postings,
-        docmeta=docmeta,
-        termstats=build_termstats(postings),
-        fieldstats=build_fieldstats(docmeta),
-        positions=positions,
-        tombstones=None,
+        # under pressure rather than leaking unboundedly
+        blocks, termstats, docmeta = (
+            blocks.persist(), termstats.persist(), docmeta.persist()
+        )
+        blocks.count()
+        termstats.count()
+        postings.unpersist()
+    return ServingIndex(
+        blocks, termstats, docmeta, build_fieldstats(docmeta),
+        sub.bucket_shift, sub.n_term_partitions,
+        has_positions=sub.has_positions, codec=sub.codec,
     )
+
+
+def compact(index, force: bool = False, cache: bool = True):
+    """Fold tombstones: rewrite without dead docs, preserving surviving
+    docids; stats recomputed from survivors (keeper.rs:4219-4253).
+
+    No-op below the 20% density threshold unless ``force``.  Serving
+    form in, serving form out (:func:`_compact_field` per field); a
+    multi-field index folds its (primary-held) tombstone set into
+    EVERY field."""
+    if index.tombstones is None:
+        return index
+    if not force and tombstone_density(index) <= TOMBSTONE_COMPACT_THRESHOLD:
+        return index
+    ts = index.tombstones
+    if isinstance(index, ServingMultiIndex):
+        return dataclasses.replace(index, fields={
+            name: _compact_field(sub, ts, cache)
+            for name, sub in index.fields.items()
+        })
+    return _compact_field(index, ts, cache)

@@ -73,7 +73,7 @@ def blocks_to_postings(
     """Decode the candidate blocks of ``terms`` into posting rows
     (docid, term, tf, fieldnorm_id[, positions]) — parquet-pruned by
     tpart + term.  ``terms=None`` decodes the WHOLE block store (the
-    serving->builder reconstruction path).  Positions are NOT decoded
+    compaction's decode, ``lifecycle.compact``).  Positions are NOT decoded
     here: the sidecar is sliced into per-posting LEB128 buffers
     (``binary``), so they stay compressed through the pivot exchange and
     the phrase kernel decodes only the candidate cells it actually

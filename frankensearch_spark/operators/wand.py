@@ -62,7 +62,11 @@ from frankensearch_spark.operators.bucketscore import (
     bucket_scorer,
     candidate_blocks,
 )
-from frankensearch_spark.operators.merge import DEFAULT_BUCKET_SHIFT
+from frankensearch_spark.operators.build import PRELOAD_MAX_ROWS, TermStats
+from frankensearch_spark.operators.merge import (
+    DEFAULT_BUCKET_SHIFT,
+    DEFAULT_TERM_PARTITIONS,
+)
 from frankensearch_spark.analyze import tokenize_fast
 from frankensearch_spark.query_ast import (
     MUST,
@@ -130,13 +134,6 @@ class QuerySpec:
 def external_id(key: tuple) -> str:
     """A document's external id: its key tuple joined by '/'."""
     return "/".join(str(v) for v in key)
-
-
-# Row bound of every driver-resident cache a serving index preloads
-# (term dfs, bucket coverage, the id map, the tombstone set): a driver
-# OOM guard, not a ranking choice — past it each consumer falls back to
-# its Spark-side route.
-PRELOAD_MAX_ROWS = 2_000_000
 
 
 @dataclass(frozen=True)
@@ -210,7 +207,7 @@ NO_TOMBSTONES = TombSet(np.empty(0, dtype=np.int64), True)
 
 
 @dataclass
-class ServingIndex:
+class ServingIndex(TermStats):
     """Compressed, query-ready index: block table + stats + idmap."""
 
     blocks: DataFrame
@@ -218,9 +215,13 @@ class ServingIndex:
     docmeta: DataFrame
     fieldstats: DataFrame
     bucket_shift: int = DEFAULT_BUCKET_SHIFT
-    n_term_partitions: int = 64
+    n_term_partitions: int = DEFAULT_TERM_PARTITIONS
     tombstones: DataFrame | None = None
     has_positions: bool = False  # pos_bytes sidecar present in blocks
+    # the block writer's codec family (manifest.BuildManifest.codec):
+    # from the manifest at load, from the blockify at build; upsert
+    # deltas and compaction write new blocks with it
+    codec: str = "vint"
     _cached_stats: tuple[int, int] | None = None
     _term_df_cache: dict | None = None
     # MUST be a declared field: lifecycle ops clone the index via
@@ -255,26 +256,6 @@ class ServingIndex:
     _tombset: TombSet | None = None
     # largest docid in docmeta: upserts lease their docids above it
     _max_docid: int | None = None
-
-    def stats(self) -> tuple[int, int]:
-        if self._cached_stats is None:
-            row = self.fieldstats.collect()[0]
-            self._cached_stats = (int(row["doc_count"]), int(row["total_tokens"]))
-        return self._cached_stats
-
-    def preload_termstats(self, max_terms: int = PRELOAD_MAX_ROWS) -> int:
-        """Serving amortization: (term -> df) collected once per process,
-        BOUNDED at the top-``max_terms`` by df — a 100-TB vocabulary is
-        O(10^8-10^9) terms and a full collect is a driver OOM (see
-        BuiltIndex.preload_termstats for the head/tail routing law)."""
-        rows = (
-            self.termstats.orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_terms)
-            .collect()
-        )
-        self._term_df_cache = {r["term"]: int(r["df"]) for r in rows}
-        self._term_df_complete = len(rows) < max_terms
-        return len(self._term_df_cache)
 
     def preload_bucket_coverage(self,
                                 max_terms: int = PRELOAD_MAX_ROWS) -> int:
@@ -420,34 +401,6 @@ class ServingIndex:
             self._max_docid = -1 if m is None else int(m)
         return self._max_docid
 
-    def df_of_terms(self, terms: list[str]) -> dict[str, int]:
-        if not terms:
-            return {}
-        cache = self._term_df_cache
-        if cache is not None:
-            if self._term_df_complete:
-                return {t: cache[t] for t in terms if t in cache}
-            # bounded preload: tail terms fall back to ONE filtered
-            # collect and are folded in (df==0 negative-caches misses)
-            hits = {t: cache[t] for t in terms if cache.get(t)}
-            missing = [t for t in terms if t not in cache]
-            if not missing:
-                return hits
-            fetched = {
-                r["term"]: int(r["df"])
-                for r in self.termstats.filter(
-                    F.col("term").isin(missing)
-                ).collect()
-            }
-            for t in missing:
-                cache[t] = fetched.get(t, 0)
-            hits.update(fetched)
-            return hits
-        return {
-            r["term"]: int(r["df"])
-            for r in self.termstats.filter(F.col("term").isin(terms)).collect()
-        }
-
 
 @dataclass
 class ServingMultiIndex:
@@ -509,24 +462,55 @@ class ServingMultiIndex:
 
 
 def serving_from_built(built, bucket_shift: int = DEFAULT_BUCKET_SHIFT,
-                       n_term_partitions: int = 64, cache: bool = True,
-                       with_positions: bool = True,
-                       codec: str = "vint") -> ServingIndex:
-    from frankensearch_spark.operators.merge import build_blocks
-
-    positions = built.positions if with_positions else None
-    full = getattr(built, "postings_full", None)
-    blocks = build_blocks(
-        built.postings if (full is None or positions is None) else full,
-        bucket_shift, n_term_partitions, positions=positions,
-        codec=codec,
+                       n_term_partitions: int = DEFAULT_TERM_PARTITIONS,
+                       cache: bool = True, with_positions: bool = True,
+                       codec: str = "vint"):
+    """The one conversion of a built index (``BuiltIndex`` or
+    ``MultiFieldIndex``) into serving form (``ServingIndex`` or
+    ``ServingMultiIndex``): each field's postings are blockified under
+    the given layout — from the build's grouped frame when it has one
+    (``merge.build_blocks_grouped``: whole rows, no per-posting
+    explode), else from its posting rows (``merge.build_blocks``) — and
+    the blocks persisted under ``cache``.  Docmeta, the stats tables and
+    the tombstones are carried over as they are."""
+    from frankensearch_spark.operators.merge import (
+        build_blocks,
+        build_blocks_grouped,
     )
+
+    if hasattr(built, "fields"):
+        return ServingMultiIndex(
+            {
+                name: serving_from_built(
+                    sub, bucket_shift, n_term_partitions, cache,
+                    with_positions, codec,
+                )
+                for name, sub in built.fields.items()
+            },
+            built.primary_name,
+            field_cols=built.field_cols,
+        )
+    positions = built.positions if with_positions else None
+    grouped = built.postings_grouped
+    if grouped is not None:
+        if positions is None and "positions" in grouped.columns:
+            grouped = grouped.drop("positions")
+        blocks = build_blocks_grouped(
+            grouped, bucket_shift, n_term_partitions, codec=codec
+        )
+    else:
+        full = built.postings_full
+        blocks = build_blocks(
+            built.postings if (full is None or positions is None) else full,
+            bucket_shift, n_term_partitions, positions=positions,
+            codec=codec,
+        )
     if cache:
         blocks = blocks.persist()
     return ServingIndex(
         blocks, built.termstats, built.docmeta, built.fieldstats,
         bucket_shift, n_term_partitions, built.tombstones,
-        has_positions=positions is not None,
+        has_positions=positions is not None, codec=codec,
     )
 
 

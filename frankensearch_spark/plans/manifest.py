@@ -10,10 +10,16 @@ Layout on disk:
       docmeta/  termstats/  fieldstats/   # parquet tables
       _COMMITTED               # final atomic completion marker
 
+Every save goes through ONE writer, :func:`write_index`: a serving
+index (what ``FrankensearchSpark.build``/``load``/``upsert`` hold)
+writes its blocks as they are; the builder form — which remains only
+for streamed indexes (``streaming.incremental``), tools and tests — is
+blockified inside the writer under the manifest's layout.
+
 The block table is written in ``n_groups`` staged jobs (group = tpart %
 n_groups).  After each group lands, its manifest entry is committed
 (temp-file + atomic rename — the two-slot publication analogue).  A
-re-run of :func:`write_index` skips committed groups, so a build killed
+re-run of :func:`write_index` skips committed groups, so a write killed
 mid-flight resumes where it stopped; the final marker makes readers see
 only complete indexes.
 """
@@ -31,9 +37,12 @@ from pyspark.sql import functions as F
 from frankensearch_spark.operators.merge import (
     DEFAULT_BUCKET_SHIFT,
     DEFAULT_TERM_PARTITIONS,
-    build_blocks,
 )
-from frankensearch_spark.operators.wand import ServingIndex
+from frankensearch_spark.operators.wand import (
+    ServingIndex,
+    ServingMultiIndex,
+    serving_from_built,
+)
 
 MANIFEST_VERSION = 1
 
@@ -50,7 +59,7 @@ class BuildManifest:
     version: int = MANIFEST_VERSION
     bucket_shift: int = DEFAULT_BUCKET_SHIFT
     n_term_partitions: int = DEFAULT_TERM_PARTITIONS
-    n_groups: int = 4
+    n_groups: int = 1
     source: str = ""
     committed_groups: dict[str, dict] = field(default_factory=dict)
     tables: dict[str, dict] = field(default_factory=dict)
@@ -145,11 +154,11 @@ def load_manifest(path: str) -> BuildManifest | None:
     return m
 
 
-def _docid_fingerprint(built) -> str:
+def _docid_fingerprint(index) -> str:
     """Deterministic digest of the docid assignment (order-free; XOR
     cannot overflow under ANSI mode and rows are docid-unique)."""
-    cols = [c for c in built.docmeta.columns if c != "content_sha256"]
-    row = built.docmeta.select(
+    cols = [c for c in index.docmeta.columns if c != "content_sha256"]
+    row = index.docmeta.select(
         F.xxhash64(*[F.col(c) for c in cols]).alias("h")
     ).agg(
         F.count("*").alias("n"), F.expr("bit_xor(h)").alias("x")
@@ -158,44 +167,74 @@ def _docid_fingerprint(built) -> str:
 
 
 def write_index(
-    built,
+    index,
     path: str,
     bucket_shift: int = DEFAULT_BUCKET_SHIFT,
     n_term_partitions: int = DEFAULT_TERM_PARTITIONS,
-    n_groups: int = 4,
+    n_groups: int = 1,
     source: str = "",
     key_cols: list[str] | None = None,
     codec: str = "vint",
-) -> BuildManifest:
-    """Persist a BuiltIndex as a compressed serving index, resumably.
+):
+    """Persist an index as a compressed serving index, resumably — the
+    one durable writer.
 
-    Idempotent: committed groups/tables are skipped on re-run (the
-    bulk-load crash-resume rule, index.rs:6085-6090).  A
-    MultiFieldIndex dispatches to :func:`write_multifield_index`."""
-    from frankensearch_spark.operators.build import MultiFieldIndex
+    A serving index (``ServingIndex``) writes its blocks as they are,
+    under its own layout (bucket shift, term partitions, codec; the
+    layout arguments are then unused).  A built index (``BuiltIndex``:
+    streamed indexes, tools, tests) is blockified here
+    (``wand.serving_from_built``) under the manifest's layout.  A
+    multi-field index writes one such index per field under
+    ``fields/<name>/`` and then its root manifest.
 
-    if isinstance(built, MultiFieldIndex):
-        return write_multifield_index(
-            built, path, bucket_shift, n_term_partitions, n_groups, source,
-            key_cols=key_cols, codec=codec,
-        )
+    Idempotent: a completed target is returned as it is, and committed
+    groups/tables are skipped on re-run (the bulk-load crash-resume
+    rule, index.rs:6085-6090).  A partial target resumes only under the
+    same docid assignment (fingerprint) and, for a serving index, the
+    same block layout; either mismatch raises ValueError.  A manifest
+    with nothing committed is re-pinned to this write, and block groups
+    it does not list as committed are removed before anything is
+    written."""
     os.makedirs(path, exist_ok=True)
+    if hasattr(index, "fields"):
+        for name, sub in index.fields.items():
+            write_index(
+                sub, os.path.join(path, "fields", name),
+                bucket_shift, n_term_partitions, n_groups, source,
+                codec=codec,
+            )
+        root = {
+            "version": MANIFEST_VERSION,
+            "multifield": True,
+            "fields": list(index.fields.keys()),
+            "primary": index.primary_name,
+            "source": source,
+            "key_cols": list(key_cols or []),
+            # field -> source column map: persisted so a LOADED
+            # multifield engine can still upsert (delta builds need it)
+            "field_cols": dict(index.field_cols or {}),
+        }
+        _atomic_json(_mf_manifest_path(path), root)
+        _mark_committed(path)
+        return root
     manifest = load_manifest(path)
     if manifest is not None and manifest.completed:
         return manifest
-    fp = _docid_fingerprint(built)
+    serving = isinstance(index, ServingIndex)
+    if serving:
+        bucket_shift = index.bucket_shift
+        n_term_partitions = index.n_term_partitions
+        codec = index.codec
+    fp = _docid_fingerprint(index)
     if manifest is None:
         manifest = BuildManifest(
             bucket_shift=bucket_shift,
             n_term_partitions=n_term_partitions,
             n_groups=n_groups,
             source=source,
-            with_positions=getattr(built, "positions", None) is not None,
             key_cols=list(key_cols or []),
             codec=codec,
-            docid_fingerprint=fp,
         )
-        _publish(path, manifest)
     elif manifest.committed_groups or manifest.tables:
         # RESUME of a partial write: refuse to mix docid assignments
         if manifest.docid_fingerprint not in (None, fp):
@@ -206,50 +245,61 @@ def write_index(
                 "parallelism/session can shift lease boundaries) — "
                 "delete the partial index and rebuild"
             )
-    elif manifest.docid_fingerprint != fp:
-        # manifest exists but NOTHING committed yet (a prior session
-        # published and crashed before its first group): re-pin the
-        # fingerprint to THIS session's assignment before writing —
-        # leaving the stale one would validate a later resume against
-        # the wrong session's assignment (session B writes groups under
-        # fp_B while the manifest says fp_A; session C with fp_C == fp_A
-        # then passes the check and mixes assignments — the exact silent
-        # corruption the fingerprint exists to prevent)
-        manifest.docid_fingerprint = fp
-        _publish(path, manifest)
-    bucket_shift = manifest.bucket_shift
-    n_term_partitions = manifest.n_term_partitions
+        layout = (manifest.bucket_shift, manifest.n_term_partitions,
+                  manifest.codec)
+        if serving and layout != (bucket_shift, n_term_partitions, codec):
+            raise ValueError(
+                f"resume layout mismatch: the partial index was written "
+                f"under {layout}, the index being saved has "
+                f"{(bucket_shift, n_term_partitions, codec)} — delete "
+                "the partial index or save to a fresh path"
+            )
+    elif serving:
+        # nothing committed yet: this write's own layout replaces the
+        # crashed one's
+        manifest.bucket_shift = bucket_shift
+        manifest.n_term_partitions = n_term_partitions
+        manifest.codec = codec
     n_groups = manifest.n_groups
-    codec = manifest.codec
-
-    spark = built.postings.sparkSession
-    grouped = getattr(built, "postings_grouped", None)
-    if grouped is not None:
-        from frankensearch_spark.operators.merge import build_blocks_grouped
-
-        blocks = build_blocks_grouped(
-            grouped, bucket_shift, n_term_partitions, codec=codec
+    # a built index is blockified once, here; with more than one group
+    # its blocks are persisted for the group filters
+    owned = not serving and n_groups > 1
+    if not serving:
+        index = serving_from_built(
+            index, manifest.bucket_shift, manifest.n_term_partitions,
+            cache=owned, codec=manifest.codec,
         )
-    else:
-        full = getattr(built, "postings_full", None)
-        blocks = build_blocks(
-            built.postings if full is None else full,
-            bucket_shift, n_term_partitions,
-            positions=getattr(built, "positions", None),
-            codec=codec,
-        )
-    # with one group the block stream writes straight through (no second
-    # pass, no cache); staged builds pay one persist for the group filters
-    if n_groups > 1:
-        blocks = blocks.persist()
+    manifest.with_positions = index.has_positions
+    # a manifest with nothing committed (a prior session published and
+    # crashed before its first group) is re-pinned to THIS session's
+    # assignment: leaving the stale one would validate a later resume
+    # against the wrong session's assignment (session B writes groups
+    # under fp_B while the manifest says fp_A; session C with fp_C ==
+    # fp_A then passes the check and mixes assignments — the exact
+    # silent corruption the fingerprint exists to prevent)
+    manifest.docid_fingerprint = fp
+    _publish(path, manifest)
+    # read_index unions every blocks/group=* directory, so staged groups
+    # a crashed write left uncommitted must not survive this one
+    blocks_dir = os.path.join(path, "blocks")
+    if os.path.isdir(blocks_dir):
+        import shutil
+
+        for entry in os.listdir(blocks_dir):
+            if entry.split("=", 1)[-1] not in manifest.committed_groups:
+                shutil.rmtree(
+                    os.path.join(blocks_dir, entry), ignore_errors=True
+                )
+
+    spark = index.blocks.sparkSession
     for g in range(n_groups):
         key = str(g)
         if key in manifest.committed_groups:
             continue
         part = (
-            blocks.filter(F.col("tpart") % n_groups == g)
+            index.blocks.filter(F.col("tpart") % n_groups == g)
             if n_groups > 1
-            else blocks
+            else index.blocks
         )
         dest = os.path.join(path, "blocks", f"group={g}")
         t0 = time.time()
@@ -259,8 +309,8 @@ def write_index(
         # (TERMDICT block-first-key analogue) without the dynamic-
         # partition writer's per-directory fan-out
         part.write.mode("overwrite").option(
-        "compression", PARQUET_COMPRESSION
-    ).parquet(dest)
+            "compression", PARQUET_COMPRESSION
+        ).parquet(dest)
         manifest.committed_groups[key] = {
             # row count from parquet footers — metadata-only, no recompute
             "rows": spark.read.parquet(dest).count(),
@@ -269,27 +319,27 @@ def write_index(
         _publish(path, manifest)  # checkpoint after every group
 
     tables = [
-        ("docmeta", built.docmeta),
-        ("termstats", built.termstats),
-        ("fieldstats", built.fieldstats),
+        ("docmeta", index.docmeta),
+        ("termstats", index.termstats),
+        ("fieldstats", index.fieldstats),
     ]
     # tombstones are part of the durable state (the reference's MANIFEST
     # tracks per-segment tombstone sets, keeper.rs:929): without this,
     # delete -> save -> load silently resurrects deleted documents
-    if getattr(built, "tombstones", None) is not None:
-        tables.append(("tombstones", built.tombstones))
+    if index.tombstones is not None:
+        tables.append(("tombstones", index.tombstones))
     for name, df in tables:
         if name in manifest.tables:
             continue
         dest = os.path.join(path, name)
         df.write.mode("overwrite").option(
-        "compression", PARQUET_COMPRESSION
-    ).parquet(dest)
+            "compression", PARQUET_COMPRESSION
+        ).parquet(dest)
         manifest.tables[name] = {"rows": spark.read.parquet(dest).count()}
         _publish(path, manifest)
 
-    if n_groups > 1:
-        blocks.unpersist()
+    if owned:
+        index.blocks.unpersist()
     manifest.completed = True
     _publish(path, manifest)
     _mark_committed(path)
@@ -300,46 +350,7 @@ def _mf_manifest_path(path: str) -> str:
     return os.path.join(path, "multifield.json")
 
 
-def write_multifield_index(
-    mfi,
-    path: str,
-    bucket_shift: int = DEFAULT_BUCKET_SHIFT,
-    n_term_partitions: int = DEFAULT_TERM_PARTITIONS,
-    n_groups: int = 4,
-    source: str = "",
-    key_cols: list[str] | None = None,
-    codec: str = "vint",
-) -> dict:
-    """Persist a MultiFieldIndex: one serving index per field under
-    ``fields/<name>/`` plus a tiny root manifest.  Per-field writes reuse
-    :func:`write_index`'s checkpointed resume; the root commit marker
-    lands only after every field completed (same two-step discipline)."""
-    os.makedirs(path, exist_ok=True)
-    root = {
-        "version": MANIFEST_VERSION,
-        "multifield": True,
-        "fields": list(mfi.fields.keys()),
-        "primary": mfi.primary_name,
-        "source": source,
-        "key_cols": list(key_cols or []),
-        # field -> source column map: persisted so a LOADED multifield
-        # engine can still upsert (delta builds need it)
-        "field_cols": dict(getattr(mfi, "field_cols", None) or {}),
-    }
-    for name, built in mfi.fields.items():
-        write_index(
-            built, os.path.join(path, "fields", name),
-            bucket_shift, n_term_partitions, n_groups, source,
-            codec=codec,
-        )
-    _atomic_json(_mf_manifest_path(path), root)
-    _mark_committed(path)
-    return root
-
-
 def read_multifield_index(spark: SparkSession, path: str):
-    from frankensearch_spark.operators.wand import ServingMultiIndex
-
     mp = _mf_manifest_path(path)
     if not os.path.exists(mp):
         raise FileNotFoundError(f"no multifield index at {path}")
@@ -438,103 +449,6 @@ def read_key_cols(path: str) -> list[str]:
     return list(manifest.key_cols) if manifest is not None else []
 
 
-def write_serving_index(sidx, path: str, key_cols: list[str] | None = None,
-                        source: str = "", **_layout_kw) -> None:
-    """Persist an already-serving index (e.g. a loaded index whose
-    tombstone set grew via delete) to a FRESH location.  The block table
-    is already in its compressed durable form, so this is a table copy
-    plus a fresh manifest — no re-merge.  delete -> save -> load
-    round-trips without resurrecting deleted documents (keeper.rs:929
-    tombstone durability rule).
-
-    Refuses a target that already holds a committed index: the lazily
-    read source DataFrames may point INTO that target, and an overwrite
-    would delete the files mid-scan (snapshots are immutable).  Builder
-    layout kwargs (``n_groups`` etc.) are accepted and ignored — the
-    block layout is inherited from the source store."""
-    from frankensearch_spark.operators.wand import (
-        ServingIndex,
-        ServingMultiIndex,
-    )
-
-    _require_fresh_target(path)
-    # the target may hold a CRASHED partial build (uncommitted manifest +
-    # staged block groups); read_index unions every blocks/group=* dir,
-    # so clear the leftovers before laying down the n_groups=1 layout
-    stale_blocks = os.path.join(path, "blocks")
-    if os.path.isdir(stale_blocks):
-        import shutil
-
-        shutil.rmtree(stale_blocks, ignore_errors=True)
-    stale_manifest = _manifest_path(path)
-    if os.path.exists(stale_manifest):
-        os.unlink(stale_manifest)
-    os.makedirs(path, exist_ok=True)
-    if isinstance(sidx, ServingMultiIndex):
-        for name, sub in sidx.fields.items():
-            fdir = os.path.join(path, "fields", name)
-            if is_completed_index(fdir):
-                continue  # committed by a crashed earlier attempt
-            write_serving_index(sub, fdir)
-        root = {
-            "version": MANIFEST_VERSION,
-            "multifield": True,
-            "fields": list(sidx.fields.keys()),
-            "primary": sidx.primary_name,
-            "source": source,
-            "key_cols": list(key_cols or []),
-            "field_cols": dict(getattr(sidx, "field_cols", None) or {}),
-        }
-        _atomic_json(_mf_manifest_path(path), root)
-        _mark_committed(path)
-        return
-    assert isinstance(sidx, ServingIndex)
-    spark = sidx.blocks.sparkSession
-    codec = "vint"
-    if "codec" in sidx.blocks.columns:
-        # the manifest's codec names the DISPATCH FAMILY the index was
-        # written with: "for" and "bitmap" both imply the three-kind
-        # writer (tails stay vint rows either way), so the max block
-        # kind identifies it — 2=bitmap ⊃ 1=for ⊃ 0=vint.  Readers
-        # dispatch per ROW on the codec column; this field is
-        # observability + rebuild parameterization and must not
-        # mislabel a bitmap index as "for".
-        mx = sidx.blocks.agg(F.max("codec").alias("m")).collect()[0]["m"]
-        codec = {0: "vint", 1: "for", 2: "bitmap"}.get(int(mx or 0), "vint")
-    manifest = BuildManifest(
-        bucket_shift=sidx.bucket_shift,
-        n_term_partitions=sidx.n_term_partitions,
-        n_groups=1,
-        source=source,
-        with_positions=sidx.has_positions,
-        key_cols=list(key_cols or []),
-        codec=codec,
-    )
-    dest = os.path.join(path, "blocks", "group=0")
-    sidx.blocks.write.mode("overwrite").option(
-        "compression", PARQUET_COMPRESSION
-    ).parquet(dest)
-    manifest.committed_groups["0"] = {
-        "rows": spark.read.parquet(dest).count(), "seconds": 0.0,
-    }
-    tables = [
-        ("docmeta", sidx.docmeta),
-        ("termstats", sidx.termstats),
-        ("fieldstats", sidx.fieldstats),
-    ]
-    if sidx.tombstones is not None:
-        tables.append(("tombstones", sidx.tombstones))
-    for name, df in tables:
-        tdest = os.path.join(path, name)
-        df.write.mode("overwrite").option(
-        "compression", PARQUET_COMPRESSION
-    ).parquet(tdest)
-        manifest.tables[name] = {"rows": spark.read.parquet(tdest).count()}
-    manifest.completed = True
-    _publish(path, manifest)
-    _mark_committed(path)
-
-
 def read_index(spark: SparkSession, path: str):
     if os.path.exists(_mf_manifest_path(path)):
         return read_multifield_index(spark, path)
@@ -554,6 +468,7 @@ def read_index(spark: SparkSession, path: str):
         n_term_partitions=manifest.n_term_partitions,
         tombstones=tombstones,
         has_positions=manifest.with_positions,
+        codec=manifest.codec,
     )
 
 

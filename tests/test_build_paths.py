@@ -143,6 +143,31 @@ def test_lease_mode_rank_invariance(spark):
     assert results[0] == exp
 
 
+def test_fused_lease_docids_survive_a_recompute_under_union(spark):
+    """Lease docids are a property of the range exchange, not of the
+    task that reads it: once a build's persisted frames are dropped, a
+    docmeta recomputed inside a union (its partitions numbered after the
+    other side's) carries the same docids and doclens."""
+    import pyspark.sql.functions as F
+
+    from frankensearch_spark.operators.build import build_index
+
+    a = build_index(synthetic_corpus_df(spark, 40, seed=3), CORPUS_KEY)
+    b = build_index(synthetic_corpus_df(spark, 90, partitions=4), CORPUS_KEY)
+    cols = ["docid", *CORPUS_KEY, "doclen"]
+    want = sorted(tuple(r) for r in b.docmeta.select(*cols).collect())
+    assert want[0][0] == 0
+    for df in b.persisted:
+        df.unpersist()
+    union = a.docmeta.select(*cols, F.lit("a").alias("side")).repartition(
+        8
+    ).unionByName(b.docmeta.select(*cols, F.lit("b").alias("side")))
+    got = sorted(
+        tuple(r)[:-1] for r in union.collect() if r["side"] == "b"
+    )
+    assert got == want
+
+
 def test_fused_handles_empty_and_null_content(spark):
     corpus = spark.createDataFrame(
         [(0, "a b a"), (1, ""), (2, None), (3, "b")],

@@ -1,11 +1,17 @@
 """Facade surface: build/search/snippets/count/lifecycle round-trip."""
 
+import numpy as np
 import pytest
 
 from frankensearch_spark.engine import FrankensearchSpark
+from frankensearch_spark.oracle import OracleIndex
+from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
 N_DOCS = 150
+CORPUS_DDL = (
+    "repo string, path string, commit string, lang string, content string"
+)
 
 
 # every bounded point-query shape the driver-local lane serves
@@ -33,30 +39,95 @@ def loaded(spark, eng, tmp_path_factory):
     return FrankensearchSpark.load(spark, path)
 
 
-def test_warm_point_search_is_one_spark_job(spark, loaded):
-    """On a warmed loaded engine every bounded point-query shape runs
-    ONE Spark job in search_docids() (the driver-local lane's candidate
-    collect), and search() adds none: external ids come from the id map
-    warm() preloaded."""
+def _jobs(spark, group, call):
+    """(call(), number of Spark jobs it ran)."""
     sc = spark.sparkContext
-    eng = loaded.warm()
-    shapes = POINT_SHAPES
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def jobs(group, call):
-        sc.setJobGroup(group, group)
-        try:
-            out = call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    for name, q in shapes.items():
-        hits, n_ids = jobs(f"docids:{name}", lambda: eng.search_docids(q))
+def _bits(hits):
+    return [(int(d), int(np.float32(s).view(np.uint32))) for d, s in hits]
+
+
+def oracle_of(eng, text_by_key: dict, texts: dict) -> OracleIndex:
+    """The numpy oracle over ``eng``'s state: every docmeta row with its
+    text (tombstoned docs still count in the stats until compaction),
+    the tombstones deleted.  ``texts`` (docid -> text) takes the text of
+    each docid it lacks from ``text_by_key`` (the newest revision of
+    each key), so older revisions keep theirs; docids compacted away
+    leave it."""
+    live = {
+        int(r["docid"]): texts.get(
+            int(r["docid"]), text_by_key[tuple(r[c] for c in CORPUS_KEY)]
+        )
+        for r in eng.index.docmeta.select("docid", *CORPUS_KEY).collect()
+    }
+    texts.clear()
+    texts.update(live)
+    oracle = OracleIndex(sorted(live.items()))
+    if eng.index.tombstones is not None:
+        oracle.delete(int(r[0]) for r in eng.index.tombstones.collect())
+    return oracle
+
+
+def oracle_bits(oracle: OracleIndex, q: str, k: int):
+    return oracle.search_ast_bits(parse_lenient(q, ENGINE_SCHEMA).query, k=k)
+
+
+@pytest.mark.parametrize(
+    "form", [pytest.param("eng", id="built"), pytest.param("loaded", id="loaded")]
+)
+def test_warm_point_search_is_one_spark_job(spark, request, form):
+    """On a warmed engine — in-session build() or loaded — every bounded
+    point-query shape runs ONE Spark job in search_docids() (the
+    driver-local lane's candidate collect), and search() adds none:
+    external ids come from the id map warm() preloaded."""
+    eng = request.getfixturevalue(form).warm()
+    for name, q in POINT_SHAPES.items():
+        hits, n_ids = _jobs(
+            spark, f"docids:{form}:{name}", lambda: eng.search_docids(q)
+        )
         assert hits, name
         assert n_ids == 1, (name, n_ids)
-        ext, n_ext = jobs(f"search:{name}", lambda: eng.search(q))
+        ext, n_ext = _jobs(spark, f"search:{form}:{name}", lambda: eng.search(q))
         assert len(ext) == len(hits)
         assert n_ext == 0, (name, n_ext)
+
+
+def test_built_upsert_search_matches_oracle_in_one_job(spark):
+    """build() -> upsert() -> search() in one session: the upserted
+    engine answers like the numpy oracle over its documents (replaced
+    revisions tombstoned), one Spark job per point search and none for
+    the ids."""
+    from frankensearch_spark.corpus import make_corpus
+
+    rows = make_corpus(80)
+    eng = FrankensearchSpark.build(
+        spark.createDataFrame(rows, CORPUS_DDL), CORPUS_KEY
+    )
+    text_by_key = {tuple(r[:3]): r[4] for r in rows}
+    texts: dict = {}
+    oracle_of(eng, text_by_key, texts)  # pins the replaced revisions' text
+    batch = [
+        (*rows[i][:4], f"zzupserted fn import term0000{i % 3}")
+        for i in (3, 17, 41)
+    ] + [("neworg/new", f"src/n{i}.rs", "c1", "rust",
+          f"zzupserted term00002 term00001 fn {i}") for i in range(5)]
+    up = eng.upsert(spark.createDataFrame(batch, CORPUS_DDL))
+    text_by_key.update((tuple(r[:3]), r[4]) for r in batch)
+    oracle = oracle_of(up, text_by_key, texts)
+    for q in [*POINT_SHAPES.values(), "zzupserted", "term0000*"]:
+        hits, n = _jobs(spark, f"upserted:{q}", lambda: up.search_docids(q))
+        assert _bits(hits) == oracle_bits(oracle, q, 10), q
+        if q != "term0000*":  # a glob expands through a termstats scan
+            assert n == 1, (q, n)
+        _, n_ext = _jobs(spark, f"upserted-ids:{q}", lambda: up.search(q))
+        assert n_ext == 0, (q, n_ext)
 
 
 def test_search_returns_external_ids(eng):
@@ -187,12 +258,13 @@ def test_result_cache_eviction_is_thread_safe(monkeypatch):
     import threading
 
     import frankensearch_spark.engine as engine_mod
-    from frankensearch_spark.operators import astexec, batchexec
+    from frankensearch_spark.operators import batchexec, serving_exec
 
     monkeypatch.setattr(engine_mod, "QUERY_CACHE_MAX", 2)
     monkeypatch.setattr(
-        astexec, "search_ast_collect", lambda idx, q, *a: [(1, 1.0)]
+        serving_exec, "serving_search_collect", lambda idx, q, *a: [(1, 1.0)]
     )
+    monkeypatch.setattr(FrankensearchSpark, "_ensure_warm", lambda self: None)
     monkeypatch.setattr(
         batchexec, "search_batch_collect",
         lambda idx, qs, *a: [[(1, 1.0)] for _ in qs],
@@ -233,6 +305,9 @@ def test_warm_lock_is_per_index():
     started = threading.Event()
 
     class FakeIndex:
+        tombstones = None
+        _bucket_cov = {}
+
         def __init__(self, block):
             self.block = block
             self._term_df_cache = None

@@ -92,9 +92,9 @@ def test_loaded_self_warms_on_first_search(spark, built, loaded,
     assert sub._term_df_cache is not None
     assert sub._bucket_cov is not None
     assert got == _bits(built.search_docids("fn error import", limit=10))
-    # built in-session engines do NOT self-warm (frames already
-    # resident; the explicit warm() remains available)
-    assert getattr(built.index, "_term_df_cache", None) is None
+    # in-session build() engines self-warm the same way
+    assert built.index._term_df_cache is not None
+    assert built.index._idmap is not None
 
 
 def test_delete_save_load_round_trip(spark, loaded, tmp_path_factory):
@@ -136,8 +136,8 @@ def test_multifield_snippets(spark):
 
 
 def test_loaded_upsert_parity(spark, built, loaded):
-    """upsert on a loaded engine (whole-store decode, serving_to_built)
-    is bit-identical to upsert on the original builder engine."""
+    """upsert on a loaded engine is bit-identical to upsert on the
+    original build() engine."""
     keys = built.index.docmeta.select(*CORPUS_KEY).limit(3).collect()
     batch = spark.createDataFrame(
         [

@@ -22,6 +22,7 @@ from frankensearch_spark.operators.lifecycle import (
     tombstone_density,
     upsert_documents,
 )
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
@@ -32,7 +33,9 @@ QUERY = "term00001 term00002 fn"
 @pytest.fixture(scope="module")
 def built(spark):
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=4)
-    return build_index(corpus, CORPUS_KEY, docid_mode="global")
+    return serving_from_built(
+        build_index(corpus, CORPUS_KEY, docid_mode="global")
+    )
 
 
 def test_delete_excludes_but_preserves_scores(built):
@@ -114,10 +117,10 @@ def test_upsert_replaces_by_key(spark, built):
 
 
 def test_upsert_mixed_position_formats_serves_phrases(spark, built):
-    """A delta built by the default analyzer upserts into a built index
-    in the one positions wire format (per-posting vbyte binary, no
-    normalization shim), and the upserted doc serves an exact phrase
-    query."""
+    """A delta built by the default analyzer upserts into the index in
+    the one positions wire format (the blocks' vbyte ``pos_bytes``
+    sidecar, no normalization shim), and the upserted doc serves an
+    exact phrase query."""
     new_rows = [
         ("mixorg/mixrepo", "src/mix.rs", "d" * 40, "rust",
          "alphamix betamix gammamix"),
@@ -127,41 +130,8 @@ def test_upsert_mixed_position_formats_serves_phrases(spark, built):
         "repo string, path string, commit string, lang string, content string",
     )
     up = upsert_documents(built, new_corpus, CORPUS_KEY)
-    assert dict(up.positions.dtypes)["positions"] == "binary"
+    assert dict(up.blocks.dtypes)["pos_bytes"] == "binary"
     hits = search_ast_bits(up, '"alphamix betamix gammamix"', k=5)
     assert len(hits) == 1
     miss = search_ast_bits(up, '"betamix alphamix"', k=5)
     assert miss == []
-
-
-def test_serving_to_built_reconstruction_law(built):
-    """Round-tripping builder -> serving blocks -> builder reproduces the
-    posting table EXACTLY (rows, tfs, positions bytes) — the decode
-    inverse of blockify, pinned directly rather than through query
-    parity."""
-    from frankensearch_spark.operators.lifecycle import serving_to_built
-    from frankensearch_spark.operators.wand import serving_from_built
-
-    sidx = serving_from_built(built, cache=False)
-    back = serving_to_built(sidx)
-    want = [
-        (int(r["docid"]), r["term"], int(r["tf"]), int(r["doclen"]))
-        for r in built.postings.collect()
-    ]
-    got = [
-        (int(r["docid"]), r["term"], int(r["tf"]), int(r["doclen"]))
-        for r in back.postings.collect()
-    ]
-    assert sorted(got) == sorted(want)
-    if built.positions is not None:
-        from frankensearch_spark.operators.build import positions_as_vbyte
-
-        wp = {
-            (int(r["docid"]), r["term"]): bytes(r["positions"])
-            for r in positions_as_vbyte(built.positions).collect()
-        }
-        gp = {
-            (int(r["docid"]), r["term"]): bytes(r["positions"])
-            for r in back.positions.collect()
-        }
-        assert gp == wp

@@ -10,8 +10,11 @@ durability):
   is findable by its sentinel term.
 * compact(): match SET per query unchanged (scores may move — df/N fold).
 * save+load: loaded engine's top-k is bit-identical to the live one.
-* upsert on a loaded (serving) engine: the driver-local write lane and
-  the Spark path give bit-identical answers.
+* upsert: the driver-local write lane and the Spark path give
+  bit-identical answers.
+* after every step, every engine — in-session build() and loaded twin
+  alike, both serving engines — answers bit-equal to the numpy oracle
+  over its documents.
 
 Deterministic: one seed drives the whole op sequence."""
 
@@ -21,8 +24,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from frankensearch_spark.corpus import make_corpus
 from frankensearch_spark.engine import FrankensearchSpark
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
+from tests.test_engine import oracle_bits, oracle_of
 
 N_DOCS = 90
 K = 12
@@ -37,14 +42,20 @@ def _results(eng, k=K):
     return {q: eng.search_docids(q, limit=k) for q in QUERIES}
 
 
+def _check_oracle(eng, text_by_key, texts, tag):
+    oracle = oracle_of(eng, text_by_key, texts)
+    for q in QUERIES:
+        assert _bits(eng.search_docids(q, limit=K)) == oracle_bits(
+            oracle, q, K
+        ), ("oracle", tag, q)
+
+
 def _upsert(eng, batch, sentinel, monkeypatch):
-    """``eng.upsert(batch)``.  On a serving engine it runs twice — the
-    driver-local write lane forced on and forced off — and both engines
-    must answer every query bit-equal; the lane's engine is returned."""
+    """``eng.upsert(batch)``, run twice — the driver-local write lane
+    forced on and forced off — and both engines must answer every query
+    bit-equal; the lane's engine is returned."""
     from tests.test_engine_load import _upsert_both_paths
 
-    if not eng._is_serving():
-        return eng.upsert(batch)
     on, off = _upsert_both_paths(eng, batch, monkeypatch)
     for q in QUERIES + [sentinel]:
         assert _bits(on.search_docids(q, limit=K)) == _bits(
@@ -58,6 +69,9 @@ def test_lifecycle_sequence_fuzz(spark, tmp_path, seed, monkeypatch):
     rng = random.Random(seed)
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=3)
     eng = FrankensearchSpark.build(corpus, CORPUS_KEY)
+    text_by_key = {tuple(r[:3]): r[4] for r in make_corpus(N_DOCS)}
+    texts: dict = {}
+    _check_oracle(eng, text_by_key, texts, "build")
     upsert_gen = 0
 
     for step in range(6):
@@ -100,6 +114,11 @@ def test_lifecycle_sequence_fuzz(spark, tmp_path, seed, monkeypatch):
                 "content string",
             )
             eng = _upsert(eng, batch, sentinel, monkeypatch)
+            text_by_key.update(
+                (tuple(r[c] for c in CORPUS_KEY),
+                 f"{sentinel} fn common_fuzz_term")
+                for r in picked
+            )
             hits = eng.search_docids(sentinel, limit=10)
             assert len(hits) == len(picked), (op, step)
             assert not (old_ids & {int(d) for d, _ in hits})
@@ -127,22 +146,23 @@ def test_lifecycle_sequence_fuzz(spark, tmp_path, seed, monkeypatch):
                     eng.search_docids(q, limit=K)
                 ), (op, q, step)
             # CONTINUE from the reopened engine: later delete/upsert/
-            # compact steps then run against the serving->built
-            # reconstruction path, pinning its bit-parity in sequence
+            # compact steps then run on the loaded form
             eng = loaded
+        _check_oracle(eng, text_by_key, texts, (op, step))
 
 
 @pytest.mark.parametrize("seed", [7, 1301])
 def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed,
                                             monkeypatch):
     """The seeded delete / upsert / compact / save+load sequence on a
-    built engine and on its saved-then-loaded twin, in lockstep: after
-    every step both answer every query bit-equal (docids and f32 score
-    bits), the twin through point search and search_batch alike.  A loaded twin's upsert stays in serving form, and a
-    post-upsert query forced through the θ path (min_cost=0) equals the
-    exhaustive answer — the MaxScore bounds stay conservative after the
-    upsert moved avgdl.  The sequence ends with one more save+load (if
-    the twin left serving form) and upsert, so that check always runs."""
+    build() engine and on its saved-then-loaded twin — both serving
+    engines — in lockstep: after every step both answer every query
+    bit-equal to the numpy oracle (docids and f32 score bits), the twin
+    through point search and search_batch alike.  Every upsert stays in
+    serving form, and a post-upsert query forced through the θ path
+    (min_cost=0) equals the exhaustive answer — the MaxScore bounds
+    stay conservative after the upsert moved avgdl.  The sequence ends
+    with one more upsert, so that check always runs."""
     from frankensearch_spark.operators.wand import QuerySpec
     from frankensearch_spark.operators.wand import ServingIndex, wand_bits
 
@@ -152,8 +172,13 @@ def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed,
     eng = FrankensearchSpark.build(corpus, CORPUS_KEY)
     eng.save(path)
     pair = {"eng": eng, "twin": FrankensearchSpark.load(spark, path)}
+    text_by_key = {tuple(r[:3]): r[4] for r in make_corpus(N_DOCS)}
+    texts: dict = {}
 
     def lockstep(tag):
+        for side in pair:
+            assert isinstance(pair[side].index, ServingIndex), (side, tag)
+        _check_oracle(pair["eng"], text_by_key, texts, tag)
         twin = pair["twin"]
         # the batch runs first, on its own snapshot cache: each point
         # search below then really executes on a fresh engine object
@@ -180,18 +205,19 @@ def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed,
             "repo string, path string, commit string, lang string, "
             "content string",
         )
-        was_serving = pair["twin"]._is_serving()
         for side in pair:
             pair[side] = _upsert(pair[side], batch, sentinel, monkeypatch)
+        text_by_key.update(
+            (tuple(r[c] for c in CORPUS_KEY),
+             f"{sentinel} fn common_fuzz_term")
+            for r in picked
+        )
         twin = pair["twin"]
-        assert twin._is_serving() == was_serving
         assert len(twin.search_docids(sentinel, limit=10)) == len(picked)
-        if was_serving:
-            assert isinstance(twin.index, ServingIndex)
-            spec = QuerySpec.from_text(f"{sentinel} fn import")
-            assert wand_bits(twin.index, spec, K, min_cost=0) == (
-                wand_bits(twin.index, spec, K, prune=False)
-            ), step
+        spec = QuerySpec.from_text(f"{sentinel} fn import")
+        assert wand_bits(twin.index, spec, K, min_cost=0) == (
+            wand_bits(twin.index, spec, K, prune=False)
+        ), step
 
     def saveload(step):
         for side in pair:
@@ -220,7 +246,5 @@ def test_lifecycle_fuzz_loaded_twin_lockstep(spark, tmp_path, seed,
         else:
             saveload(step)
         lockstep((op, step))
-    if not pair["twin"]._is_serving():
-        saveload("end")
     upsert("end")
     lockstep(("upsert", "end"))

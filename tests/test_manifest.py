@@ -80,10 +80,11 @@ def test_tombstones_survive_save_load(built, spark, tmp_path_factory):
     """delete -> save -> load must NOT resurrect deleted docs (the
     reference's MANIFEST durably records tombstone sets, keeper.rs:929)."""
     from frankensearch_spark.operators.lifecycle import delete_documents
+    from frankensearch_spark.operators.wand import serving_from_built
 
     oracle = OracleIndex(corpus_docs(N_DOCS))
     victims = [d for d, _ in oracle.search_bits("fn", k=2)]
-    deleted = delete_documents(built, victims)
+    deleted = delete_documents(serving_from_built(built), victims)
     path = str(tmp_path_factory.mktemp("idx5"))
     write_index(deleted, path, bucket_shift=7, n_term_partitions=8, n_groups=2)
 
@@ -108,12 +109,10 @@ def test_boolean_query_on_persisted_index(built, spark, tmp_path_factory):
 
 def test_serving_save_clears_crashed_partial_target(built, spark, tmp_path_factory):
     """A target holding a CRASHED partial builder write (uncommitted
-    manifest + staged block groups) is cleared before a serving save —
-    read_index unions every blocks/group=* dir, so stale groups would
-    silently duplicate postings."""
-    from frankensearch_spark.operators.wand import serving_from_built
-    from frankensearch_spark.plans.manifest import write_serving_index
-
+    manifest + staged block groups) under the same docid assignment and
+    layout is resumed by a serving save, not duplicated — read_index
+    unions every blocks/group=* dir, so stale groups would silently
+    duplicate postings."""
     good = str(tmp_path_factory.mktemp("src"))
     write_index(built, good, n_groups=2)
     sidx = read_index(spark, good)
@@ -129,7 +128,7 @@ def test_serving_save_clears_crashed_partial_target(built, spark, tmp_path_facto
     _publish(crash, m)
     os.unlink(os.path.join(crash, "_COMMITTED"))
 
-    write_serving_index(sidx, crash, key_cols=CORPUS_KEY)
+    write_index(sidx, crash, key_cols=CORPUS_KEY)
     reopened = read_index(spark, crash)
     assert reopened.blocks.count() == sidx.blocks.count()  # no stale dup groups
     spec = QuerySpec(should=["fn", "import"])
@@ -172,6 +171,47 @@ def test_resume_repins_fingerprint_when_nothing_committed(
     assert m2.docid_fingerprint != "stale-session-fingerprint"
 
     idx = read_index(spark, path)
+    oracle = OracleIndex(corpus_docs(N_DOCS))
+    assert wand_bits(idx, "fn import", k=10) == oracle.search_bits(
+        "fn import", k=10
+    )
+
+
+def test_serving_save_refuses_partial_target_of_another_layout(
+    built, tmp_path_factory
+):
+    """A serving index writes its blocks as they are, so a partial
+    target whose committed groups were written under another block
+    layout cannot be resumed: the save refuses it."""
+    from frankensearch_spark.operators.wand import serving_from_built
+    from frankensearch_spark.plans.manifest import _publish
+
+    path = str(tmp_path_factory.mktemp("idx_layout"))
+    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=2)
+    m = load_manifest(path)
+    m.completed = False
+    m.tables = {}
+    _publish(path, m)
+    os.unlink(os.path.join(path, "_COMMITTED"))
+    with pytest.raises(ValueError, match="layout mismatch"):
+        write_index(serving_from_built(built), path)
+
+
+def test_write_clears_uncommitted_block_groups(built, spark, tmp_path_factory):
+    """Block groups a crashed write staged but never committed (here its
+    manifest never landed) are removed before the next write, so
+    read_index's union of every group directory sees no stale rows."""
+    clean = str(tmp_path_factory.mktemp("idx_clean"))
+    write_index(built, clean, bucket_shift=7, n_term_partitions=8)
+    path = str(tmp_path_factory.mktemp("idx_stale"))
+    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=3)
+    for name in ("manifest.json", "_COMMITTED"):
+        os.unlink(os.path.join(path, name))
+
+    m = write_index(built, path, bucket_shift=7, n_term_partitions=8)
+    assert set(m.committed_groups) == {"0"}
+    idx = read_index(spark, path)
+    assert idx.blocks.count() == read_index(spark, clean).blocks.count()
     oracle = OracleIndex(corpus_docs(N_DOCS))
     assert wand_bits(idx, "fn import", k=10) == oracle.search_bits(
         "fn import", k=10

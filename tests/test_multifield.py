@@ -127,13 +127,15 @@ def test_multifield_lifecycle(built, oracle, spark):
         delete_documents,
         upsert_documents,
     )
+    from frankensearch_spark.operators.wand import serving_from_built
 
     text = "rust ownership borrowing"
     ast = parse_lenient(text, REFERENCE_SCHEMA).query
     baseline = search_ast_bits(built, ast, k=5, schema=REFERENCE_SCHEMA)
     victims = [d for d, _ in baseline[:2]]
 
-    deleted = delete_documents(built, victims)
+    srv = serving_from_built(built)
+    deleted = delete_documents(srv, victims)
     orc = copy.deepcopy(oracle)
     orc.delete(victims)
     got = search_ast_bits(deleted, ast, k=5, schema=REFERENCE_SCHEMA)
@@ -163,7 +165,7 @@ def test_multifield_lifecycle(built, oracle, spark):
     nc = spark.createDataFrame(
         new_rows, "docid long, title string, content string"
     )
-    up = upsert_documents(built, nc, ["docid"])
+    up = upsert_documents(srv, nc, ["docid"])
     hits = search_ast_bits(up, parse_lenient("zzfresh", REFERENCE_SCHEMA).query,
                            k=5, schema=REFERENCE_SCHEMA)
     assert len(hits) == 2

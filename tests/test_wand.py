@@ -6,6 +6,7 @@ for every fixture query."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from frankensearch_spark.corpus import FROZEN_QUERIES, corpus_docs
 from frankensearch_spark.operators.build import build_index
@@ -129,14 +130,14 @@ def test_wand_tombstones_cogrouped(built, oracle):
     match the oracle without shipping the tombstone set to the driver."""
     from frankensearch_spark.operators.lifecycle import delete_documents
 
-    base = wand_bits(serving_from_built(built, bucket_shift=SHIFT,
-                                        n_term_partitions=16,
-                                        with_positions=False),
-                     "fn", k=5)
+    live = serving_from_built(built, bucket_shift=SHIFT,
+                              n_term_partitions=16, with_positions=False)
+    base = wand_bits(live, "fn", k=5)
     victims = [d for d, _ in base[:2]]
-    deleted = delete_documents(built, victims)
-    srv = serving_from_built(deleted, bucket_shift=SHIFT,
-                             n_term_partitions=16, with_positions=False)
+    # a DataFrame of docids leaves no driver-side tombstone set
+    srv = delete_documents(
+        live, built.docmeta.filter(F.col("docid").isin(victims)).select("docid")
+    )
     import copy
 
     orc = copy.deepcopy(oracle)

@@ -75,10 +75,11 @@ def main() -> None:
         "(assign_docids_fused_spans → build_postings_grouped)",
         "The build's WHOLE pre-write plan: ONE range exchange "
         "of the corpus by external key both co-locates and orders each "
-        "lease's rows (sampling pass + exchange), docids materialize as "
-        "lease·2^33 + rank inside the same mapInArrow pass that "
-        "tokenizes, and the grouped (batch, term) array rows come out of "
-        "that pass directly.  Compare section 1: the separate skinny "
+        "lease's rows (sampling pass + exchange), the lease id is "
+        "materialized as a column (spark_partition_id) in the stage that "
+        "reads the exchange, docids materialize as lease·2^33 + rank "
+        "inside the mapInArrow pass that follows, and the grouped "
+        "(batch, term) array rows come out of that pass directly.  Compare section 1: the separate skinny "
         "ordering aggregation, the window sort, the (key→docid) "
         "broadcast map and the second content exchange are all gone — "
         "at 2M docs that removed ~180 MB of broadcast state and a full "
@@ -93,8 +94,9 @@ def main() -> None:
     sections.append((
         "Exhaustive BM25 top-k (topk_ast)",
         "term-filtered scan of the CACHED postings (InMemoryTableScan, "
-        "column-pruned) → ONE pivot exchange on near-unique (docid) keys "
-        "→ numpy f32 kernel in a single MapInPandas → TakeOrderedAndProject "
+        "column-pruned) → the pivot aggregation on near-unique (docid) "
+        "keys (one exchange; none here, where the index is one lease and "
+        "one partition) → numpy f32 kernel in a single MapInPandas → TakeOrderedAndProject "
         "(per-partition top-k + driver merge = the reference's collector "
         "fold, E9/E11). No other exchange; no driver-side loop.",
         fmt(q),

@@ -175,7 +175,7 @@ def main() -> None:
     deleted = eng.delete_documents(dead)
     t0 = time.perf_counter()
     compacted = deleted.compact(force=True)
-    compacted.index.postings.count()
+    compacted.index.blocks.count()
     compacted.index.docmeta.count()
     out["compact_secs"] = round(time.perf_counter() - t0, 2)
     out["compact_survivors"] = compacted.index.stats()[0]
