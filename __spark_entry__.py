@@ -22,9 +22,10 @@ def entry(spark: SparkSession) -> DataFrame:
     a top-10 BM25 query through the rank-exact f32 scorer."""
     from frankensearch_spark.driver_queries import documents_index
     from frankensearch_spark.operators.astexec import topk_ast
+    from frankensearch_spark.operators.wand import serving_from_built
 
     idx = documents_index(spark, "/root/testdata/sf0.001")
-    return topk_ast(idx, "key order merge", k=10)
+    return topk_ast(serving_from_built(idx), "key order merge", k=10)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -469,7 +469,7 @@ class FrankensearchSpark:
 
     def count(self, query: str) -> int:
         """exact_count collector variant (E9): the exhaustive scorer's
-        match count, over either index form."""
+        match count."""
         from frankensearch_spark.operators.astexec import score_ast
 
         return score_ast(self.index, query, self.schema).count()

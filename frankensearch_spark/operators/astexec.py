@@ -1,9 +1,7 @@
 """Exhaustive execution of parsed query trees (SURVEY.md Q1-Q5, E1-E2,
-E7-E9) — the one decode-and-score plan for every index form: the
-serving form every engine holds (``ServingIndex`` /
-``ServingMultiIndex``), and the builder form (``BuiltIndex`` /
-``MultiFieldIndex``), which remains only for streamed indexes
-(``streaming.incremental.read_incremental_index``) and tests.
+E7-E9) — the one decode-and-score plan, over the one index form every
+engine, load and stream read holds (``ServingIndex`` /
+``ServingMultiIndex``).
 
 The plan keeps every relational step declarative — per-field posting
 filters by the query's terms (partition-prunable), one pivot shuffle per
@@ -16,10 +14,9 @@ Each piece exists once, and the batch executor's pivot lane reuses them:
 
 * :func:`prepare_query` — parse, glob expansion, the metadata-field and
   per-field positions capability checks;
-* :func:`_field_postings` — the per-field posting source, the only code
-  that knows the index form: a built field filters its posting frames and
-  carries ``doclen``; a serving field decodes its candidate blocks
-  (:func:`serving_exec.field_postings`) and carries ``fieldnorm_id``;
+* :func:`serving_exec.field_postings` — the per-field posting source:
+  a field's candidate blocks decoded to (docid, fieldnorm_id, term, tf
+  [, positions]) rows;
 * :func:`candidates` — one tf/positions pivot per queried field
   (:func:`_field_pivot`), the full-outer field join, the docmeta join for
   All/metadata shapes, the tombstone anti-join;
@@ -49,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from frankensearch_spark.contract import compute_avgdl, compute_tf_cache
+from frankensearch_spark.operators.serving_exec import field_postings
 from frankensearch_spark.operators.wand import _wand_fields
 from frankensearch_spark.query_ast import (
     ENGINE_SCHEMA,
@@ -266,7 +264,7 @@ def prepare_query(index, query, schema: ParserSchema = ENGINE_SCHEMA,
     phrase_terms = [t for t, needs_pos in leaves if needs_pos]
     pfields = _phrase_fields(ast) if phrase_terms else []
     for f in pfields:
-        if f in fidx and not _has_positions(fidx[f]):
+        if f in fidx and not fidx[f].has_positions:
             raise ValueError(
                 f"phrase query on field {f!r} without positions "
                 f"(build or save it with with_positions=True){where}"
@@ -292,55 +290,18 @@ def field_stats(fidx, qfields, terms, doc_count: int):
 
 class FieldPostings(NamedTuple):
     """One field's posting rows for the query terms, as the pivot takes
-    them: ``frame`` has (docid, <norm>, term, tf) columns, ``norm`` names
-    its length column — ``doclen`` (built) or ``fieldnorm_id``
-    (serving) — and ``positions`` is the (docid, term, positions) frame
-    the phrase pivot reads, or None.  ``fused``: ``frame`` itself
-    carries positions, so one pivot takes tf and positions together."""
+    them: ``frame`` has (docid, fieldnorm_id, term, tf) columns, and
+    ``positions`` is the (docid, term, positions) frame the phrase pivot
+    reads, or None."""
 
     frame: DataFrame
-    norm: str
     positions: DataFrame | None
-    fused: bool = False
-
-
-def _has_positions(sub) -> bool:
-    if hasattr(sub, "blocks"):
-        return sub.has_positions
-    return sub.positions is not None
-
-
-def _field_postings(sub, f: str, q: PreparedQuery, field_df,
-                    root) -> FieldPostings:
-    """The per-field posting source — the only code that knows the
-    index form.  ``root``: the single query's tree, for the serving
-    form's root-phrase candidate restriction (None in a batch)."""
-    if hasattr(sub, "blocks"):
-        from frankensearch_spark.operators.serving_exec import field_postings
-
-        return field_postings(sub, f, q.terms, q.phrase_terms, field_df, root)
-    full = getattr(sub, "postings_full", None)
-    if q.phrase_terms and full is not None and set(q.terms) <= set(q.phrase_terms):
-        # pure-phrase query: ONE pivot over the fused frame carries
-        # tf AND positions together — no second shuffle, no join
-        return FieldPostings(
-            full.filter(F.col("term").isin(q.terms)), "doclen", None, True
-        )
-    # positions only for fields a phrase leaf touches: a plain-term-only
-    # field never reads them, and one built without positions has no
-    # positions frame at all (prepare_query guarantees pfields do)
-    return FieldPostings(
-        sub.postings.filter(F.col("term").isin(q.terms)),
-        "doclen",
-        sub.positions if f in q.pfields else None,
-    )
 
 
 @dataclass
 class _FieldCols:
     """Where one field's cells sit in a candidate batch, and the stats
-    they score with.  ``doclen``: the norm column holds doclen (built
-    form), not a fieldnorm id."""
+    they score with."""
 
     df: dict
     tf_cache: np.ndarray
@@ -348,7 +309,6 @@ class _FieldCols:
     tf: dict = field(default_factory=dict)
     pos: dict = field(default_factory=dict)
     norm: str | None = None
-    doclen: bool = False
 
 
 @dataclass
@@ -361,7 +321,6 @@ class Layout:
 
     def context(self, pdf: pd.DataFrame):
         """The kernel's EvalContext over one pandas batch of candidates."""
-        from frankensearch_spark.contract import fieldnorm_to_id
         from frankensearch_spark.kernel import EvalContext, FieldView
 
         n = len(pdf)
@@ -373,15 +332,12 @@ class Layout:
 
         views = {}
         for f, c in self.fields.items():
-            if c.norm is None:
-                fnid = np.zeros(n, dtype=np.int64)
-            else:
-                fnid = dense(c.norm, np.int64)
-                if c.doclen:
-                    fnid = fieldnorm_to_id(fnid).astype(np.int64)
             views[f] = FieldView(
                 n=n,
-                fieldnorm_id=fnid,
+                fieldnorm_id=(
+                    np.zeros(n, dtype=np.int64) if c.norm is None
+                    else dense(c.norm, np.int64)
+                ),
                 tf={t: dense(col, np.float32) for t, col in c.tf.items()},
                 positions={
                     t: pdf[col].to_numpy(dtype=object)
@@ -407,16 +363,12 @@ def _field_pivot(src: FieldPostings, fi: int, terms, phrase_terms,
     tcols = [f"f{fi}t{j}" for j in range(len(terms))]
     cols.tf = dict(zip(terms, tcols))
     cols.norm = f"nm{fi}"
-    cols.doclen = src.norm == "doclen"
-    grouped = src.frame.groupBy("docid", src.norm).pivot("term", terms)
-    if src.fused:
-        pcols = [f"f{fi}p{j}" for j in range(len(terms))]
-        cols.pos = dict(zip(terms, pcols))
-        names = [c for pair in zip(tcols, pcols) for c in pair]
-        return grouped.agg(
-            F.first("tf").alias("t"), F.first("positions").alias("p")
-        ).toDF("docid", cols.norm, *names)
-    pivot = grouped.agg(F.first("tf")).toDF("docid", cols.norm, *tcols)
+    pivot = (
+        src.frame.groupBy("docid", "fieldnorm_id")
+        .pivot("term", terms)
+        .agg(F.first("tf"))
+        .toDF("docid", cols.norm, *tcols)
+    )
     if src.positions is None:
         return pivot
     pcols = [f"f{fi}p{j}" for j in range(len(phrase_terms))]
@@ -446,7 +398,9 @@ def candidates(fidx, primary, q: PreparedQuery, schema: ParserSchema,
         layout.fields[f] = cols
         if not q.terms:
             continue
-        src = _field_postings(fidx[f], f, q, field_df, root)
+        src = field_postings(
+            fidx[f], f, q.terms, q.phrase_terms, field_df, root
+        )
         pivot = _field_pivot(src, fi, q.terms, q.phrase_terms, cols)
         base = pivot if base is None else base.join(pivot, "docid", "full_outer")
     if base is None and not q.has_all:

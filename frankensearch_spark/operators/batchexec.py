@@ -20,9 +20,9 @@ Three lanes, unioned before one tiny per-qid window (round 4):
   the mega-term queries take; the round-3 batch path pushed their full
   posting lists through the pivot shuffle the single-query path had
   already learned to skip (round-3 verdict, missing #1).
-* **bucket lane** — every other text-only query over a serving
-  (compressed durable) index: the union of the lane's candidate BLOCKS
-  rides ONE exchange to docid-colocated bucket groups still compressed
+* **bucket lane** — every other text-only query: the union of the
+  lane's candidate BLOCKS rides ONE exchange to docid-colocated bucket
+  groups still compressed
   (bucket = docid >> shift, so every term's postings for a doc land in
   the same group), each bucket task decodes each block ONCE, builds
   dense span-local FieldViews in numpy, and evaluates every query's
@@ -38,9 +38,9 @@ Three lanes, unioned before one tiny per-qid window (round 4):
   (:func:`bucketscore.bucket_plan`).  Phrase terms decode their
   pos_bytes sidecar per bucket;
   non-phrase blocks never read it.
-* **pivot lane** — the remainder (builder-form fields of streamed
-  indexes, All nodes, metadata predicates): the exhaustive scorer's candidate
-  assembly (:func:`astexec.candidates`) over the union of the lane's
+* **pivot lane** — the remainder (All nodes, metadata predicates):
+  the exhaustive scorer's candidate assembly
+  (:func:`astexec.candidates`) over the union of the lane's
   terms — each queried field's postings scanned/decoded ONCE, pivoted
   ONCE per field — then evaluates every query's AST over the
   shared candidate batch inside one mapInPandas kernel pass with a
@@ -121,8 +121,7 @@ def _stream_lane_split(index, fidx, primary, specs, doc_count):
         ast_to_queryspec_fields,
     )
 
-    serving = all(hasattr(sub, "blocks") for sub in fidx.values())
-    if not serving or index.tombstones is not None:
+    if index.tombstones is not None:
         return [], list(specs)
     stream: list[tuple[int, str, str, np.float32]] = []
     rest: list[PreparedQuery] = []
@@ -235,20 +234,14 @@ def _stream_lane_scored(fidx, primary, stream_clauses, k: int,
 def _bucket_lane_split(fidx, specs):
     """Partition specs into (bucket_specs, pivot_specs).
 
-    Bucket-lane eligible: every queried field is a serving field
-    (compressed block store), at least one queried field exists, no All
+    Bucket-lane eligible: at least one queried field exists, no All
     node, no metadata predicates.  Phrases, MustNot, boosts, ranges over
     TEXT fields and multi-field scopes all evaluate through the shared
     kernel from bucket-local dense views, so they stay in-lane."""
     bucket: list[PreparedQuery] = []
     pivot: list[PreparedQuery] = []
     for s in specs:
-        ok = (
-            bool(s.qfields)
-            and not s.has_all
-            and not s.meta_fields
-            and all(hasattr(fidx[f], "blocks") for f in s.qfields)
-        )
+        ok = bool(s.qfields) and not s.has_all and not s.meta_fields
         (bucket if ok else pivot).append(s)
     return bucket, pivot
 
@@ -440,12 +433,11 @@ def topk_ast_batch(
 
     ``qid`` is the position in ``queries``.  Queries whose single-query
     execution would be empty (no text leaves and no All node, or all
-    fields absent) simply emit no rows.  Works over both the in-memory
-    BuiltIndex family and the durable ServingIndex family (duck-typed
-    per field, exactly like the single-query executors).  Single scored-
-    clause queries over a tombstone-free serving index take the shared
-    shuffle-free stream lane; the rest share chunked pivot plans bounded
-    at ``pivot_cap`` union terms each."""
+    fields absent) simply emit no rows.  Single scored-clause queries
+    over a tombstone-free index take the shared shuffle-free stream
+    lane, the other text-only queries the bucket lane; All and metadata
+    shapes share chunked pivot plans bounded at ``pivot_cap`` union
+    terms each."""
     queries = list(queries)  # qid positions must survive re-iteration
     fidx, primary, specs = _prepare(index, queries, schema)
     spark = primary.docmeta.sparkSession

@@ -889,60 +889,6 @@ def positions_as_array(pos_df: DataFrame) -> DataFrame:
     return pos_df.mapInArrow(gen, out_schema)
 
 
-def positions_as_vbyte(pos_df: DataFrame) -> DataFrame:
-    """``positions array<int>`` → per-posting LEB128 ``binary`` (the
-    fused build's canonical form) — one vectorized mapInArrow encode.
-    Passthrough when already binary.  Used to normalize ``array<int>``
-    positions of pre-change durable segments at load."""
-    dtypes = dict(pos_df.dtypes)
-    if dtypes.get("positions") == "binary":
-        return pos_df
-    out_schema = ", ".join(
-        f"{c} binary" if c == "positions" else f"{c} {dtypes[c]}"
-        for c in pos_df.columns
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from frankensearch_spark.functions.vbyte import vbyte_encode_chunks
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            pidx = names.index("positions")
-            if n == 0:
-                continue
-            plist = rb.column(pidx)
-            flat = plist.flatten().to_numpy(zero_copy_only=False).astype(
-                np.uint64
-            )
-            import pyarrow.compute as pc
-
-            lens = pc.list_value_length(plist).to_numpy(zero_copy_only=False)
-            lens = np.nan_to_num(
-                lens.astype(np.float64), nan=0.0
-            ).astype(np.int64)
-            starts = np.zeros(n, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            data, bounds = vbyte_encode_chunks(flat, starts)
-            arr = pa.Array.from_buffers(
-                pa.binary(), n,
-                [
-                    None,
-                    pa.py_buffer(bounds.astype(np.int32).tobytes()),
-                    pa.py_buffer(data.tobytes()),
-                ],
-            )
-            cols = [
-                arr if i == pidx else rb.column(i) for i in range(len(names))
-            ]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return pos_df.mapInArrow(gen, out_schema)
-
-
 def build_termstats(postings: DataFrame) -> DataFrame:
     """(term, df, cf) — TERMDICT metadata analogue (B9).
 
@@ -1064,22 +1010,23 @@ class TermStats:
 
 @dataclass
 class BuiltIndex(TermStats):
-    """In-memory handle over the four index tables."""
+    """The build's product, a build intermediate only: nothing scores
+    or saves it — ``wand.serving_from_built`` converts it once into the
+    serving form every reader and the writer take.  Its ``postings`` and
+    ``positions`` frames stay for the relational pipeline queries
+    (``driver_queries``) and the tests."""
 
-    postings: DataFrame  # serving table: docid, term, tf, doclen
+    postings: DataFrame  # per-posting view: docid, term, tf, doclen
     docmeta: DataFrame
     termstats: DataFrame
     fieldstats: DataFrame
     positions: DataFrame | None = None  # (docid, term, positions) — phrase path
     tombstones: DataFrame | None = None  # (docid) — excluded from results,
     # NOT from stats (grimoire.rs:68-71 rule; folded by lifecycle.compact)
-    postings_full: DataFrame | None = None  # postings WITH positions (same
-    # rows) — lets the block-store writer skip the (docid, term) re-join
     postings_grouped: DataFrame | None = None  # grouped layout (one row
     # per (batch, term), array payloads, disjoint docid spans per term) —
-    # every build_index() sets it and the durable writer and the serving
-    # upsert blockify it (merge.build_blocks_grouped); indexes rebuilt
-    # from other forms (compaction, a decoded store) leave it None
+    # every build_index() sets it, and serving_from_built and the
+    # Spark-path upsert blockify it (merge.build_blocks_grouped)
     _cached_stats: tuple[int, int] | None = None
     _term_df_cache: dict | None = None
     # declared as a FIELD (not a plain attribute) so lifecycle's
@@ -1245,11 +1192,9 @@ def build_index(
         grouped = persist_owned(grouped, owned)
     postings = explode_grouped_postings(grouped)
     positions = None
-    postings_full = None
     if with_positions:
-        postings_full = postings
-        positions = postings_full.select("docid", "term", "positions")
-        postings = postings_full.drop("positions")
+        positions = postings.select("docid", "term", "positions")
+        postings = postings.drop("positions")
     docmeta = build_docmeta(
         with_docid, key_cols, postings, content_col, meta_cols,
         lens=grouped_doclens(grouped),
@@ -1264,7 +1209,6 @@ def build_index(
         termstats = persist_owned(termstats, owned)
     return BuiltIndex(
         postings, docmeta, termstats, build_fieldstats(docmeta), positions,
-        postings_full=postings_full,
         postings_grouped=grouped,
         aux_caches=tuple(aux),
         persisted=tuple(owned),

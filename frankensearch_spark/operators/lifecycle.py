@@ -11,8 +11,8 @@ Reference semantics carried over exactly:
   NOT change when a neighbour is deleted).
 Every operation takes and returns the serving form (``ServingIndex`` /
 ``ServingMultiIndex``) — what every engine holds, in-session ``build()``
-engines included.  The builder form remains only for streamed indexes
-and tests, and never reaches these operations.
+engines and streamed snapshots included.  The builder form is a build
+intermediate only and never reaches these operations.
 
 * Upsert = index the new revision under a fresh docid + tombstone every
   older docid with the same external key (new internal docid + tombstone,
@@ -43,8 +43,9 @@ and tests, and never reaches these operations.
 * Compaction folds tombstones — the one operation that decodes the
   store: decode every block, drop dead postings and docmeta rows,
   re-blockify, recompute stats from the survivors, PRESERVE surviving
-  docids (gaps are fine, keeper.rs:4219-4253).  After compaction scores
-  MAY change (df/N drop) — same as the reference.
+  docids (gaps are fine, keeper.rs:4219-4253) and the high-watermark
+  (so a compacted-away docid is never leased again).  After compaction
+  scores MAY change (df/N drop) — same as the reference.
 
 Spark shapes: the tombstone set is a DataFrame of docids (cogrouped or
 anti-joined at query time); compaction is an anti-join rewrite job.  A
@@ -589,13 +590,15 @@ def tombstone_density(index) -> float:
     return index.tombstones.count() / n_docs
 
 
-def _compact_field(sub, ts: DataFrame, cache: bool):
+def _compact_field(sub, ts: DataFrame, cache: bool, hwm: int):
     """One field of :func:`compact`: its postings decoded, dead docs
     anti-joined out of them and out of docmeta, the survivors
     re-blockified under the field's layout, termstats and fieldstats
     recomputed from them.  Under ``cache`` the survivors are decoded
     once: held while the new blocks and termstats materialize, then
-    released.  The result is cold: warm() preloads it."""
+    released.  The result is cold: warm() preloads it.  It carries the
+    pre-compaction high-watermark ``hwm``, so the docids compaction
+    dropped from the top are never leased again."""
     from frankensearch_spark.operators.serving_exec import blocks_to_postings
 
     docmeta = sub.docmeta.join(ts, "docid", "left_anti")
@@ -627,7 +630,7 @@ def _compact_field(sub, ts: DataFrame, cache: bool):
     return ServingIndex(
         blocks, termstats, docmeta, build_fieldstats(docmeta),
         sub.bucket_shift, sub.n_term_partitions,
-        has_positions=sub.has_positions, codec=sub.codec,
+        has_positions=sub.has_positions, codec=sub.codec, _max_docid=hwm,
     )
 
 
@@ -644,9 +647,10 @@ def compact(index, force: bool = False, cache: bool = True):
     if not force and tombstone_density(index) <= TOMBSTONE_COMPACT_THRESHOLD:
         return index
     ts = index.tombstones
+    hwm = index.high_watermark()
     if isinstance(index, ServingMultiIndex):
         return dataclasses.replace(index, fields={
-            name: _compact_field(sub, ts, cache)
+            name: _compact_field(sub, ts, cache, hwm)
             for name, sub in index.fields.items()
         })
-    return _compact_field(index, ts, cache)
+    return _compact_field(index, ts, cache, hwm)

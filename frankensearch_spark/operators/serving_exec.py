@@ -3,11 +3,10 @@
 The durable index (``plans/manifest.py``) stores delta+vbyte posting
 blocks; :func:`blocks_to_postings` decodes only the query's candidate
 blocks (tpart + term parquet pruning) back into posting rows inside a
-mapInPandas pass.  :func:`field_postings` is the serving form's
-per-field posting source for the one exhaustive scorer
-(:mod:`operators.astexec`), so boolean / phrase / metadata AST queries
-served from disk run the same pivot + numpy-kernel plan as the
-in-memory index and are bit-identical to it and the oracle.
+mapInPandas pass.  :func:`field_postings` is the per-field posting
+source of the one exhaustive scorer (:mod:`operators.astexec`), so
+boolean / phrase / metadata AST queries run one pivot + numpy-kernel
+plan and are bit-identical to the oracle.
 
 Phrase queries decode the per-block POSITIONS sidecar (``pos_bytes``,
 the quiver.rs:3456-3530 section-kind-3 analogue) for the phrase terms
@@ -282,8 +281,8 @@ def _rare_slot_terms(root, field_df) -> list[str] | None:
 
 def field_postings(sub: ServingIndex, f: str, terms: list[str],
                    phrase_terms: list[str], field_df, root):
-    """The serving form of the exhaustive scorer's per-field posting
-    source (``astexec._field_postings``): ``sub``'s candidate blocks for
+    """The exhaustive scorer's per-field posting source
+    (``astexec.candidates``): ``sub``'s candidate blocks for
     ``terms`` decoded to (docid, term, tf, fieldnorm_id[, positions])
     rows.  ``field_df``: (field -> df map) of every queried field, ``f``
     among them; ``root``: the single query's tree, for the root-phrase
@@ -346,9 +345,7 @@ def field_postings(sub: ServingIndex, f: str, terms: list[str],
             postings = blocks_to_postings(
                 sub, terms, with_positions=bool(phrase_terms)
             )
-    return FieldPostings(
-        postings, "fieldnorm_id", postings if phrase_terms else None
-    )
+    return FieldPostings(postings, postings if phrase_terms else None)
 
 
 def ast_to_queryspec_fields(ast):

@@ -254,7 +254,9 @@ class ServingIndex(TermStats):
     # or extended on the driver by delete_documents / upsert); None
     # while not yet preloaded
     _tombset: TombSet | None = None
-    # largest docid in docmeta: upserts lease their docids above it
+    # the high-watermark: the largest docid ever leased (docmeta's max,
+    # or above it once compaction dropped the top); upserts lease above
+    # it.  Carried through compaction and the manifest
     _max_docid: int | None = None
 
     def preload_bucket_coverage(self,
@@ -376,7 +378,13 @@ class ServingIndex(TermStats):
             complete,
         )
         if complete:
-            self._max_docid = max(self._idmap.ext, default=-1)
+            # the larger of the observed and the carried maxima: a
+            # compacted or loaded index carries docids its docmeta no
+            # longer holds, and those must never be leased again
+            self._max_docid = max(
+                max(self._idmap.ext, default=-1),
+                -1 if self._max_docid is None else self._max_docid,
+            )
         return len(rows)
 
     def preload_tombstones(self) -> int:
@@ -393,9 +401,9 @@ class ServingIndex(TermStats):
         return len(rows)
 
     def high_watermark(self) -> int:
-        """Largest docid in docmeta (-1 when empty): tracked on the
-        driver once known — preload_idmap and upserts set it — else one
-        aggregate."""
+        """Largest docid ever leased (-1 when empty): tracked on the
+        driver once known — load, compaction, preload_idmap and upserts
+        set it — else one aggregate over docmeta."""
         if self._max_docid is None:
             m = self.docmeta.agg(F.max("docid")).collect()[0][0]
             self._max_docid = -1 if m is None else int(m)
@@ -467,16 +475,12 @@ def serving_from_built(built, bucket_shift: int = DEFAULT_BUCKET_SHIFT,
                        codec: str = "vint"):
     """The one conversion of a built index (``BuiltIndex`` or
     ``MultiFieldIndex``) into serving form (``ServingIndex`` or
-    ``ServingMultiIndex``): each field's postings are blockified under
-    the given layout — from the build's grouped frame when it has one
+    ``ServingMultiIndex``), and the one place a layout is chosen: each
+    field's grouped frame is blockified under the given layout
     (``merge.build_blocks_grouped``: whole rows, no per-posting
-    explode), else from its posting rows (``merge.build_blocks``) — and
-    the blocks persisted under ``cache``.  Docmeta, the stats tables and
-    the tombstones are carried over as they are."""
-    from frankensearch_spark.operators.merge import (
-        build_blocks,
-        build_blocks_grouped,
-    )
+    explode) and the blocks persisted under ``cache``.  Docmeta, the
+    stats tables and the tombstones are carried over as they are."""
+    from frankensearch_spark.operators.merge import build_blocks_grouped
 
     if hasattr(built, "fields"):
         return ServingMultiIndex(
@@ -492,19 +496,11 @@ def serving_from_built(built, bucket_shift: int = DEFAULT_BUCKET_SHIFT,
         )
     positions = built.positions if with_positions else None
     grouped = built.postings_grouped
-    if grouped is not None:
-        if positions is None and "positions" in grouped.columns:
-            grouped = grouped.drop("positions")
-        blocks = build_blocks_grouped(
-            grouped, bucket_shift, n_term_partitions, codec=codec
-        )
-    else:
-        full = built.postings_full
-        blocks = build_blocks(
-            built.postings if (full is None or positions is None) else full,
-            bucket_shift, n_term_partitions, positions=positions,
-            codec=codec,
-        )
+    if positions is None and "positions" in grouped.columns:
+        grouped = grouped.drop("positions")
+    blocks = build_blocks_grouped(
+        grouped, bucket_shift, n_term_partitions, codec=codec
+    )
     if cache:
         blocks = blocks.persist()
     return ServingIndex(

@@ -10,11 +10,11 @@ Layout on disk:
       docmeta/  termstats/  fieldstats/   # parquet tables
       _COMMITTED               # final atomic completion marker
 
-Every save goes through ONE writer, :func:`write_index`: a serving
-index (what ``FrankensearchSpark.build``/``load``/``upsert`` hold)
-writes its blocks as they are; the builder form — which remains only
-for streamed indexes (``streaming.incremental``), tools and tests — is
-blockified inside the writer under the manifest's layout.
+Every save goes through ONE writer, :func:`write_index`, and it takes
+serving indexes only (what ``FrankensearchSpark.build``/``load``/
+``upsert`` hold, and what ``streaming.incremental`` reads): their blocks
+are written as they are, under their own layout.  A caller holding a
+build's product picks the layout once, at ``wand.serving_from_built``.
 
 The block table is written in ``n_groups`` staged jobs (group = tpart %
 n_groups).  After each group lands, its manifest entry is committed
@@ -38,11 +38,7 @@ from frankensearch_spark.operators.merge import (
     DEFAULT_BUCKET_SHIFT,
     DEFAULT_TERM_PARTITIONS,
 )
-from frankensearch_spark.operators.wand import (
-    ServingIndex,
-    ServingMultiIndex,
-    serving_from_built,
-)
+from frankensearch_spark.operators.wand import ServingIndex, ServingMultiIndex
 
 MANIFEST_VERSION = 1
 
@@ -84,6 +80,10 @@ class BuildManifest:
     # here for observability and so resumed builds keep one codec per
     # index
     codec: str = "vint"
+    # the largest docid the index ever leased, tombstoned and compacted
+    # ones included: a loaded index's upserts lease above it, so docids
+    # are never reused (None: written before this field existed)
+    high_watermark: int | None = None
 
 
 def _manifest_path(path: str) -> str:
@@ -154,54 +154,46 @@ def load_manifest(path: str) -> BuildManifest | None:
     return m
 
 
-def _docid_fingerprint(index) -> str:
+def _docid_fingerprint(index) -> tuple[str, int]:
     """Deterministic digest of the docid assignment (order-free; XOR
-    cannot overflow under ANSI mode and rows are docid-unique)."""
+    cannot overflow under ANSI mode and rows are docid-unique), and the
+    largest docid in docmeta (-1 when empty) from the same aggregate."""
     cols = [c for c in index.docmeta.columns if c != "content_sha256"]
     row = index.docmeta.select(
-        F.xxhash64(*[F.col(c) for c in cols]).alias("h")
+        "docid", F.xxhash64(*[F.col(c) for c in cols]).alias("h")
     ).agg(
-        F.count("*").alias("n"), F.expr("bit_xor(h)").alias("x")
+        F.count("*").alias("n"), F.expr("bit_xor(h)").alias("x"),
+        F.max("docid").alias("m"),
     ).collect()[0]
-    return f"{int(row['n'])}:{int(row['x'] or 0)}"
+    m = -1 if row["m"] is None else int(row["m"])
+    return f"{int(row['n'])}:{int(row['x'] or 0)}", m
 
 
 def write_index(
     index,
     path: str,
-    bucket_shift: int = DEFAULT_BUCKET_SHIFT,
-    n_term_partitions: int = DEFAULT_TERM_PARTITIONS,
     n_groups: int = 1,
     source: str = "",
     key_cols: list[str] | None = None,
-    codec: str = "vint",
 ):
-    """Persist an index as a compressed serving index, resumably — the
-    one durable writer.
-
-    A serving index (``ServingIndex``) writes its blocks as they are,
-    under its own layout (bucket shift, term partitions, codec; the
-    layout arguments are then unused).  A built index (``BuiltIndex``:
-    streamed indexes, tools, tests) is blockified here
-    (``wand.serving_from_built``) under the manifest's layout.  A
-    multi-field index writes one such index per field under
-    ``fields/<name>/`` and then its root manifest.
+    """Persist a serving index (``ServingIndex`` or
+    ``ServingMultiIndex``) resumably — the one durable writer.  Its
+    blocks are written as they are, under its own layout (bucket shift,
+    term partitions, codec); a multi-field index writes one such index
+    per field under ``fields/<name>/`` and then its root manifest.
 
     Idempotent: a completed target is returned as it is, and committed
     groups/tables are skipped on re-run (the bulk-load crash-resume
     rule, index.rs:6085-6090).  A partial target resumes only under the
-    same docid assignment (fingerprint) and, for a serving index, the
-    same block layout; either mismatch raises ValueError.  A manifest
-    with nothing committed is re-pinned to this write, and block groups
-    it does not list as committed are removed before anything is
-    written."""
+    same docid assignment (fingerprint) and the same block layout;
+    either mismatch raises ValueError.  A manifest with nothing
+    committed is re-pinned to this write, and block groups it does not
+    list as committed are removed before anything is written."""
     os.makedirs(path, exist_ok=True)
     if hasattr(index, "fields"):
         for name, sub in index.fields.items():
             write_index(
-                sub, os.path.join(path, "fields", name),
-                bucket_shift, n_term_partitions, n_groups, source,
-                codec=codec,
+                sub, os.path.join(path, "fields", name), n_groups, source
             )
         root = {
             "version": MANIFEST_VERSION,
@@ -220,20 +212,11 @@ def write_index(
     manifest = load_manifest(path)
     if manifest is not None and manifest.completed:
         return manifest
-    serving = isinstance(index, ServingIndex)
-    if serving:
-        bucket_shift = index.bucket_shift
-        n_term_partitions = index.n_term_partitions
-        codec = index.codec
-    fp = _docid_fingerprint(index)
+    layout = (index.bucket_shift, index.n_term_partitions, index.codec)
+    fp, max_docid = _docid_fingerprint(index)
     if manifest is None:
         manifest = BuildManifest(
-            bucket_shift=bucket_shift,
-            n_term_partitions=n_term_partitions,
-            n_groups=n_groups,
-            source=source,
-            key_cols=list(key_cols or []),
-            codec=codec,
+            n_groups=n_groups, source=source, key_cols=list(key_cols or []),
         )
     elif manifest.committed_groups or manifest.tables:
         # RESUME of a partial write: refuse to mix docid assignments
@@ -245,31 +228,22 @@ def write_index(
                 "parallelism/session can shift lease boundaries) — "
                 "delete the partial index and rebuild"
             )
-        layout = (manifest.bucket_shift, manifest.n_term_partitions,
-                  manifest.codec)
-        if serving and layout != (bucket_shift, n_term_partitions, codec):
+        written = (manifest.bucket_shift, manifest.n_term_partitions,
+                   manifest.codec)
+        if written != layout:
             raise ValueError(
                 f"resume layout mismatch: the partial index was written "
-                f"under {layout}, the index being saved has "
-                f"{(bucket_shift, n_term_partitions, codec)} — delete "
-                "the partial index or save to a fresh path"
+                f"under {written}, the index being saved has {layout} — "
+                "delete the partial index or save to a fresh path"
             )
-    elif serving:
-        # nothing committed yet: this write's own layout replaces the
-        # crashed one's
-        manifest.bucket_shift = bucket_shift
-        manifest.n_term_partitions = n_term_partitions
-        manifest.codec = codec
-    n_groups = manifest.n_groups
-    # a built index is blockified once, here; with more than one group
-    # its blocks are persisted for the group filters
-    owned = not serving and n_groups > 1
-    if not serving:
-        index = serving_from_built(
-            index, manifest.bucket_shift, manifest.n_term_partitions,
-            cache=owned, codec=manifest.codec,
-        )
+    # nothing committed yet: this write's own layout replaces a crashed
+    # one's (on a resume it is the same layout)
+    manifest.bucket_shift, manifest.n_term_partitions, manifest.codec = layout
     manifest.with_positions = index.has_positions
+    # carried past compaction (which drops the highest docids from
+    # docmeta), so a loaded index never leases them again
+    manifest.high_watermark = max(max_docid, index._max_docid or -1)
+    n_groups = manifest.n_groups
     # a manifest with nothing committed (a prior session published and
     # crashed before its first group) is re-pinned to THIS session's
     # assignment: leaving the stale one would validate a later resume
@@ -338,8 +312,6 @@ def write_index(
         manifest.tables[name] = {"rows": spark.read.parquet(dest).count()}
         _publish(path, manifest)
 
-    if owned:
-        index.blocks.unpersist()
     manifest.completed = True
     _publish(path, manifest)
     _mark_committed(path)
@@ -469,73 +441,5 @@ def read_index(spark: SparkSession, path: str):
         tombstones=tombstones,
         has_positions=manifest.with_positions,
         codec=manifest.codec,
+        _max_docid=manifest.high_watermark,
     )
-
-
-class LegacyPositionsError(RuntimeError):
-    """A committed mini-segment still carries the pre-round-4
-    ``positions array<int>`` wire format.  The per-read normalization
-    shim is retired (ONE wire format end-to-end: per-posting canonical
-    LEB128 ``binary``, quiver.rs:395-430); run
-    :func:`migrate_segment_positions` once over the index directory."""
-
-
-def migrate_segment_positions(spark: SparkSession, out_dir: str) -> int:
-    """One-shot, idempotent migration of legacy mini-segments to the
-    canonical LEB128-binary positions wire format.
-
-    Each committed segment whose postings footer shows a non-binary
-    ``positions`` column is rewritten through the same commit protocol
-    as a tier merge: the migrated copy commits with a ``replaces`` entry
-    naming the legacy segment (readers atomically flip), then the legacy
-    member retires marker-first (failed rmtree cannot resurrect it).
-    The legacy segment's own ``replaces`` chain is carried forward so a
-    crash-stranded pre-migration member can never resurrect either.
-    Returns the number of segments migrated; 0 on an already-canonical
-    index (re-running is free — one parquet footer read per segment)."""
-    import shutil
-
-    from frankensearch_spark.operators.build import positions_as_vbyte
-    from frankensearch_spark.plans.tiers import (
-        SegmentInfo,
-        list_segments,
-        segments_dir,
-        write_segment_meta,
-    )
-
-    root = segments_dir(out_dir)
-    n = 0
-    for seg in list_segments(out_dir):
-        src_dir = os.path.join(root, seg.seg_id)
-        src = os.path.join(src_dir, "postings")
-        fmt = dict(spark.read.parquet(src).dtypes).get("positions", "<none>")
-        if fmt in ("binary", "<none>"):
-            continue  # canonical, or predates positions (nulls at read)
-        new_id = f"g{seg.seg_id}"
-        dest = os.path.join(root, new_id)
-        if os.path.isdir(dest):
-            shutil.rmtree(dest)  # crashed earlier attempt, uncommitted
-        positions_as_vbyte(spark.read.parquet(src)).write.option(
-            "compression", PARQUET_COMPRESSION
-        ).parquet(os.path.join(dest, "postings"))
-        shutil.copytree(
-            os.path.join(src_dir, "docmeta"), os.path.join(dest, "docmeta")
-        )
-        write_segment_meta(
-            dest,
-            SegmentInfo(
-                new_id,
-                seg.lease_lo,
-                seg.lease_hi,
-                seg.n_docs,
-                replaces=tuple(seg.replaces) + (seg.seg_id,),
-                pos_format="binary",  # the migration's whole point
-            ),
-        )  # commit point
-        try:
-            os.remove(os.path.join(src_dir, "segmeta.json"))
-        except OSError:
-            pass
-        shutil.rmtree(src_dir, ignore_errors=True)
-        n += 1
-    return n

@@ -14,13 +14,15 @@ Reference semantics carried over:
 * merge is CONCATENATION (Q1: disjoint docid intervals), so scores are
   invariant under any merge schedule (Q1-OB3) — asserted in tests.
 
-Spark shape: a mini-segment is one directory of parquet tables plus a
-``segmeta.json`` carrying its lease-interval bounds; merging unions the
-members' tables into one new segment directory (one narrow job per
-merge), commits it, then removes the members.  The commit marker plus a
-``replaces`` list makes a crash between "write merged" and "delete old"
-recoverable: readers skip any segment named in a committed segment's
-``replaces``.
+Spark shape: a mini-segment is one directory of the block format an
+engine build makes — ``blocks``, ``docmeta`` and ``termstats`` parquet
+tables — plus a ``segmeta.json`` carrying its lease-interval bounds and
+its block layout (bucket shift, term partitions, codec); merging
+concatenates the members' three tables into one new segment directory
+(the blocks sorted by ``tpart``), commits it, then removes the members.
+The commit marker plus a ``replaces`` list makes a crash between "write
+merged" and "delete old" recoverable: readers skip any segment named in
+a committed segment's ``replaces``.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ TIER_LARGE_MIN = 8 * (1 << 16)  # 8x small
 DEFAULT_FANOUT = 8              # config.rs merge fanout
 MAX_HOLE_RATIO = 0.5            # keeper.rs hole-ratio gate
 
+SEGMENT_TABLES = ("blocks", "docmeta", "termstats")
+
 
 @dataclass
 class SegmentInfo:
@@ -45,14 +49,10 @@ class SegmentInfo:
     lease_hi: int   # exclusive lease-index upper bound
     n_docs: int
     replaces: tuple[str, ...] = ()
-    # positions wire format of the postings table, recorded at SEAL
-    # time: "binary" (canonical LEB128) or "<none>" (no positions
-    # column).  None = sealed before this field existed — readers fall
-    # back to a parquet footer probe for those.  Recording it here
-    # saves an O(n_segments) sequential driver-side footer fetch on
-    # EVERY snapshot read/merge (seconds of pure driver latency on
-    # object storage at thousands of mini-segments).
-    pos_format: str | None = None
+    # the block layout the segment's blocks were cut under:
+    # (bucket shift, term partitions, codec).  None: sealed by an older
+    # writer in the retired postings form — refused at read
+    layout: tuple | None = None
 
     @property
     def width(self) -> int:
@@ -84,7 +84,7 @@ def write_segment_meta(seg_dir: str, info: SegmentInfo) -> None:
                 "lease_hi": info.lease_hi,
                 "n_docs": info.n_docs,
                 "replaces": list(info.replaces),
-                "pos_format": info.pos_format,
+                "layout": list(info.layout) if info.layout else None,
             },
             f,
         )
@@ -110,13 +110,27 @@ def list_segments(out_dir: str) -> list[SegmentInfo]:
             SegmentInfo(
                 d["seg_id"], d["lease_lo"], d["lease_hi"], d["n_docs"],
                 tuple(d.get("replaces", ())),
-                pos_format=d.get("pos_format"),
+                layout=tuple(d["layout"]) if d.get("layout") else None,
             )
         )
     dead = {sid for i in infos for sid in i.replaces}
     return sorted(
         (i for i in infos if i.seg_id not in dead), key=lambda i: i.lease_lo
     )
+
+
+def segment_layout(segs: list[SegmentInfo]) -> tuple:
+    """The block layout ``segs`` were sealed under (every seal uses the
+    writer's default).  A segment without a layout stamp holds the
+    retired postings form: that raises."""
+    old = [s.seg_id for s in segs if s.layout is None]
+    if old:
+        raise ValueError(
+            f"segment(s) {old[:4]} were sealed in the retired postings "
+            "form, which no reader serves any more — re-ingest the "
+            "stream into a new out_dir"
+        )
+    return segs[0].layout
 
 
 def plan_tier_merge(
@@ -177,46 +191,30 @@ def merge_segments(spark, out_dir: str, run: list[SegmentInfo]) -> SegmentInfo:
     if os.path.isdir(dest):
         shutil.rmtree(dest)  # crashed earlier attempt, uncommitted
     src_dirs = [os.path.join(root, s.seg_id) for s in run]
-    merged_fmt: str | None = None
-    for table in ("postings", "docmeta"):
-        if table == "postings":
-            # type-safe per-format-group union (raises LegacyPositionsError
-            # on unmigrated pre-r4 segments; positions-less segments
-            # union in with nulls); member formats ride in from THEIR
-            # segmeta, so a fully-stamped run probes zero footers
-            from frankensearch_spark.streaming.incremental import (
-                read_segment_postings,
-            )
-
-            df = read_segment_postings(
-                spark,
-                [os.path.join(d, table) for d in src_dirs],
-                formats=[s.pos_format for s in run],
-            )
-            # the union's own schema IS the merged format — record it
-            # so downstream reads of the merged segment skip the probe
-            merged_fmt = dict(df.dtypes).get("positions", "<none>")
-        else:
-            df = spark.read.parquet(
-                *[os.path.join(d, table) for d in src_dirs]
-            )
+    layout = segment_layout(run)
+    for table in SEGMENT_TABLES:
+        df = spark.read.parquet(*[os.path.join(d, table) for d in src_dirs])
         # fanout inputs -> ONE file per table per merge output: this is
         # the small-files compaction the tier policy exists for.
         # repartition (a shuffle), NOT coalesce: coalesce(1) is a narrow
-        # dependency that would collapse the whole member read +
-        # position normalization into one single-core task
-        df.repartition(1).write.mode("overwrite").option(
-        "compression", PARQUET_COMPRESSION
-    ).parquet(
-            os.path.join(dest, table)
-        )
+        # dependency that would collapse the whole member read into one
+        # single-core task.  Termstats rows stay per member (the reader
+        # sums them per term); blocks are sorted by tpart, so the
+        # merged file's row groups keep the narrow tpart spans term
+        # filters prune on by parquet statistics
+        df = df.repartition(1)
+        if table == "blocks":
+            df = df.sortWithinPartitions("tpart")
+        df.write.mode("overwrite").option(
+            "compression", PARQUET_COMPRESSION
+        ).parquet(os.path.join(dest, table))
     info = SegmentInfo(
         seg_id=new_id,
         lease_lo=run[0].lease_lo,
         lease_hi=hi,
         n_docs=sum(s.n_docs for s in run),
         replaces=tuple(s.seg_id for s in run),
-        pos_format=merged_fmt,
+        layout=layout,
     )
     write_segment_meta(dest, info)  # commit point
     for d in src_dirs:

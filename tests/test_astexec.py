@@ -13,6 +13,7 @@ from frankensearch_spark.operators.astexec import (
     search_ast_collect,
 )
 from frankensearch_spark.operators.build import build_index
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
@@ -21,11 +22,15 @@ N_DOCS = 300
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def raw(spark):
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=4)
-    idx = build_index(corpus, CORPUS_KEY, docid_mode="global")
     # docmeta keyword columns feed metadata leaves (lang via corpus join)
-    return idx
+    return build_index(corpus, CORPUS_KEY, docid_mode="global")
+
+
+@pytest.fixture(scope="module")
+def built(raw):
+    return serving_from_built(raw)
 
 
 @pytest.fixture(scope="module")
@@ -103,7 +108,7 @@ def test_keyword_field_filter(built):
     assert all(np.float32(s) == np.float32(1.0) for _d, s in rows)
 
 
-def test_keyword_and_text_conjunction(built):
+def test_keyword_and_text_conjunction(built, raw):
     """lang:rust AND fn — metadata filter intersected with a scored term."""
     import pyspark.sql.functions as F
 
@@ -117,14 +122,14 @@ def test_keyword_and_text_conjunction(built):
     }
     fn_docs = {
         int(r["docid"])
-        for r in built.postings.filter(F.col("term") == "fn")
+        for r in raw.postings.filter(F.col("term") == "fn")
         .select("docid")
         .collect()
     }
     assert got_docids == rust_docs & fn_docs
 
 
-def test_numeric_range_on_doclen(built):
+def test_numeric_range_on_doclen(built, raw):
     """doclen:[50 TO 200] — numeric fast-column range (E8/RangeI64)."""
     import pyspark.sql.functions as F
 
@@ -151,7 +156,7 @@ def test_numeric_range_on_doclen(built):
     conj = search_ast_collect(built, "fn AND doclen:[50 TO 200]", k=N_DOCS)
     fn_docs = {
         int(r["docid"])
-        for r in built.postings.filter(F.col("term") == "fn")
+        for r in raw.postings.filter(F.col("term") == "fn")
         .select("docid").collect()
     }
     assert {d for d, _ in conj} == exp & fn_docs
@@ -217,7 +222,9 @@ def test_metadata_pushdown_in_plan(built):
 
 def test_phrase_without_positions_rejected(spark):
     corpus = synthetic_corpus_df(spark, 50, partitions=2)
-    idx = build_index(corpus, CORPUS_KEY, with_positions=False, docid_mode="global")
+    idx = serving_from_built(build_index(
+        corpus, CORPUS_KEY, with_positions=False, docid_mode="global"
+    ))
     with pytest.raises(ValueError):
         search_ast_collect(idx, '"term00001 term00002"', k=5)
 

@@ -2,7 +2,7 @@
 
 One Spark job answers a whole batch of queries (operators/batchexec.py);
 these tests pin that every query's batched top-k equals its single-query
-top-k BIT FOR BIT — over the in-memory BuiltIndex (vs search_ast_bits),
+top-k BIT FOR BIT — over an in-session serving index (vs search_ast_bits),
 over a durable loaded engine (vs search_docids), across the full frozen
 query set (boolean/phrase/glob/identifier/natural/miss shapes), with
 mixed hit/miss/empty batch members and a non-default k.
@@ -16,6 +16,7 @@ from frankensearch_spark.engine import FrankensearchSpark
 from frankensearch_spark.operators.astexec import search_ast_bits
 from frankensearch_spark.operators.batchexec import search_batch_collect
 from frankensearch_spark.operators.build import build_index
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
 
 N_DOCS = 300
@@ -28,7 +29,9 @@ def _bits(hits):
 @pytest.fixture(scope="module")
 def built(spark):
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=4)
-    return build_index(corpus, CORPUS_KEY, docid_mode="global")
+    return serving_from_built(
+        build_index(corpus, CORPUS_KEY, docid_mode="global")
+    )
 
 
 @pytest.fixture(scope="module")
@@ -108,9 +111,9 @@ def test_batch_multifield_reference_fixture(spark):
     corpus = spark.createDataFrame(
         rows, "docid long, title string, content string"
     )
-    idx = build_multifield_index(
+    idx = serving_from_built(build_multifield_index(
         corpus, ["docid"], {"content": "content", "title": "title"}
-    )
+    ))
     texts = [
         "rust ownership borrowing",
         "title:ownership^3 rust",
@@ -315,11 +318,11 @@ def test_phrase_check_scoped_to_phrase_fields(spark):
         corpus, ["docid"], content_col="title",
         with_positions=False, cache=False,
     )
-    mf = MultiFieldIndex(
+    mf = serving_from_built(MultiFieldIndex(
         {"content": content, "title": title},
         "content",
         field_cols={"content": "content", "title": "title"},
-    )
+    ))
 
     mixed = parse_lenient(
         'content:"alpha beta" title:zeta', REFERENCE_SCHEMA
@@ -342,7 +345,7 @@ def test_batch_accepts_generator_queries(spark):
     the plan consumes it — a generator previously produced an empty
     result list and IndexError on the first collected row."""
     corpus = synthetic_corpus_df(spark, 120, partitions=2)
-    built = build_index(corpus, CORPUS_KEY, cache=False)
+    built = serving_from_built(build_index(corpus, CORPUS_KEY, cache=False))
     texts = ["fn", "fn import"]
     got = search_batch_collect(built, (t for t in texts), k=5)
     assert len(got) == 2

@@ -117,6 +117,7 @@ def test_lease_mode_rank_invariance(spark):
     from frankensearch_spark.corpus import corpus_docs, make_corpus
     from frankensearch_spark.operators.astexec import search_ast_bits
     from frankensearch_spark.operators.build import build_index
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.oracle import OracleIndex
 
     n = 150
@@ -128,7 +129,10 @@ def test_lease_mode_rank_invariance(spark):
     results = []
     for parts in (1, 5):
         corpus = synthetic_corpus_df(spark, n, partitions=parts)
-        idx = build_index(corpus, CORPUS_KEY, cache=False)  # lease default
+        idx = serving_from_built(
+            build_index(corpus, CORPUS_KEY, cache=False),  # lease default
+            cache=False,
+        )
         got = search_ast_bits(idx, "fn import term00000", k=10)
         ext = {
             int(r["docid"]): (r["repo"], r["path"], r["commit"])
@@ -265,7 +269,7 @@ def test_build_index_default_tokenizer_is_auto(spark):
     )
     assert with_docid.count() == 80
     contract = build_postings_fused(with_docid)
-    assert canon(dflt.postings_full) == canon(contract)
+    assert canon(explode_grouped_postings(dflt.postings_grouped)) == canon(contract)
 
 
 def test_code_aware_index_end_to_end(spark):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from frankensearch_spark.cass import CASS_SCHEMA, CassQueryFilters, parse_cass
 from frankensearch_spark.operators.astexec import search_ast_collect
 from frankensearch_spark.operators.build import build_multifield_index
+from frankensearch_spark.operators.wand import serving_from_built
 
 DOCS = [
     # (docid, title, content, agent, workspace, origin_kind, created_at)
@@ -32,10 +33,10 @@ def built(spark):
         "docid long, title string, content string, agent string, "
         "workspace string, origin_kind string, created_at long",
     )
-    return build_multifield_index(
+    return serving_from_built(build_multifield_index(
         corpus, ["docid"], {"title": "title", "content": "content"},
         primary="title",
-    )
+    ))
 
 
 def _ids(built, text, filters=None):
@@ -106,16 +107,19 @@ def built_prefix(spark):
             "workspace string, origin_kind string, created_at long",
         )
     )
-    return build_multifield_index(
-        corpus,
-        ["docid"],
-        {
-            "title": "title",
-            "content": "content",
-            "title_prefix": "title_prefix_text",
-            "content_prefix": "content_prefix_text",
-        },
-        primary="title",
+    return serving_from_built(
+        build_multifield_index(
+            corpus,
+            ["docid"],
+            {
+                "title": "title",
+                "content": "content",
+                "title_prefix": "title_prefix_text",
+                "content_prefix": "content_prefix_text",
+            },
+            primary="title",
+        ),
+        bucket_shift=6, n_term_partitions=8,
     )
 
 
@@ -212,8 +216,7 @@ def test_cass_prefix_durable_serving(built_prefix, spark, tmp_path_factory):
     from frankensearch_spark.plans.manifest import read_index, write_index
 
     path = str(tmp_path_factory.mktemp("cass_idx"))
-    write_index(built_prefix, path, bucket_shift=6, n_term_partitions=8,
-                n_groups=1)
+    write_index(built_prefix, path, n_groups=1)
     srv = read_index(spark, path)
     assert set(srv.fields) == {
         "title", "content", "title_prefix", "content_prefix"

@@ -288,10 +288,13 @@ def test_resume_refuses_mismatched_docid_assignment(spark, tmp_path):
     import pytest
 
     from frankensearch_spark.operators.build import build_index
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import load_manifest, write_index
 
     corpus = synthetic_corpus_df(spark, 80, partitions=2)
-    built = build_index(corpus, CORPUS_KEY, docid_mode="global")
+    built = serving_from_built(
+        build_index(corpus, CORPUS_KEY, docid_mode="global")
+    )
     p = str(tmp_path / "idx")
     write_index(built, p, n_groups=2)
     # simulate the crash: committed groups present, completion cleared
@@ -310,7 +313,9 @@ def test_resume_refuses_mismatched_docid_assignment(spark, tmp_path):
     m.tables = {}
     _publish(p, m)
     os.remove(os.path.join(p, "_COMMITTED"))
-    other = build_index(corpus.limit(70), CORPUS_KEY, docid_mode="global")
+    other = serving_from_built(
+        build_index(corpus.limit(70), CORPUS_KEY, docid_mode="global")
+    )
     with pytest.raises(ValueError, match="fingerprint mismatch"):
         write_index(other, p, n_groups=2)
 

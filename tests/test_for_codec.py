@@ -94,12 +94,13 @@ def test_for_serving_bit_parity(pair, oracle, text):
 
 
 def test_for_durable_roundtrip(spark, pair, oracle):
-    """write_index(codec='for') -> read_index serves bit-identical; the
-    manifest records the codec; WAND's pruned path decodes FOR blocks."""
-    built, _vint, _fo = pair
+    """A FOR-coded index -> write_index -> read_index serves
+    bit-identical; the manifest records the codec; WAND's pruned path
+    decodes FOR blocks."""
+    _built, _vint, fo = pair
     path = tempfile.mkdtemp(prefix="fsx_for_")
     try:
-        m = write_index(built, path, n_groups=2, source="test", codec="for")
+        m = write_index(fo, path, n_groups=2, source="test")
         assert m.codec == "for"
         sidx = read_index(spark, path)
         fb = sidx.blocks.toPandas()
@@ -202,11 +203,10 @@ def test_bitmap_serving_bit_parity(bitmap_srv, oracle, text):
     assert serving_search_bits(bitmap_srv, text, k=10) == exp, text
 
 
-def test_bitmap_durable_roundtrip(spark, pair, oracle):
-    built, _vint, _fo = pair
+def test_bitmap_durable_roundtrip(spark, bitmap_srv, oracle):
     path = tempfile.mkdtemp(prefix="fsx_bm_")
     try:
-        m = write_index(built, path, n_groups=2, source="test", codec="bitmap")
+        m = write_index(bitmap_srv, path, n_groups=2, source="test")
         assert m.codec == "bitmap"
         sidx = read_index(spark, path)
         for text in QUERIES:

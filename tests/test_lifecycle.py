@@ -135,3 +135,33 @@ def test_upsert_mixed_position_formats_serves_phrases(spark, built):
     assert len(hits) == 1
     miss = search_ast_bits(up, '"betamix alphamix"', k=5)
     assert miss == []
+
+
+def test_docids_never_reused_after_compaction(spark, tmp_path):
+    """Compaction drops the tombstoned top docids from docmeta, but not
+    from the high-watermark: the next upsert leases above the docids it
+    compacted away, in-session and through save -> load."""
+    from frankensearch_spark.corpus import make_corpus
+    from frankensearch_spark.engine import FrankensearchSpark
+
+    ddl = "repo string, path string, commit string, lang string, content string"
+
+    def upsert_one(eng, tag):
+        eng = eng.upsert(spark.createDataFrame(
+            [("neworg/x", f"src/{tag}.rs", "c1", "rust", f"{tag} fn")], ddl
+        ))
+        (docid, _score), = eng.search_docids(tag)
+        return eng, docid
+
+    eng = FrankensearchSpark.build(
+        spark.createDataFrame(make_corpus(20), ddl), CORPUS_KEY
+    )
+    eng, first = upsert_one(eng, "zzfirst")
+    assert first == 8192
+    compacted = eng.delete_documents([first]).compact()
+    path = str(tmp_path / "compacted")
+    compacted.save(path)
+    _, again = upsert_one(compacted, "zzsecond")
+    assert again >= 16384
+    _, loaded = upsert_one(FrankensearchSpark.load(spark, path), "zzsecond")
+    assert loaded >= 16384

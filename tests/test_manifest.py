@@ -9,7 +9,7 @@ import pytest
 from frankensearch_spark.corpus import corpus_docs
 from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.operators.wand import QuerySpec
-from frankensearch_spark.operators.wand import wand_bits
+from frankensearch_spark.operators.wand import serving_from_built, wand_bits
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.plans.manifest import (
     load_manifest,
@@ -22,13 +22,18 @@ N_DOCS = 200
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def raw(spark):
     return build_index(synthetic_corpus_df(spark, N_DOCS, partitions=3), CORPUS_KEY, docid_mode="global")
+
+
+@pytest.fixture(scope="module")
+def built(raw):
+    return serving_from_built(raw, bucket_shift=7, n_term_partitions=8)
 
 
 def test_write_read_query_roundtrip(built, spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx"))
-    m = write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=3)
+    m = write_index(built, path, n_groups=3)
     assert m.completed
     assert len(m.committed_groups) == 3
     assert os.path.exists(os.path.join(path, "_COMMITTED"))
@@ -41,7 +46,7 @@ def test_write_read_query_roundtrip(built, spark, tmp_path_factory):
 
 def test_resume_skips_committed_groups(built, spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx2"))
-    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=3)
+    write_index(built, path, n_groups=3)
 
     # simulate a crash after group 0: roll the manifest back
     mp = os.path.join(path, "manifest.json")
@@ -70,7 +75,7 @@ def test_resume_skips_committed_groups(built, spark, tmp_path_factory):
 
 def test_rewrite_of_completed_index_is_noop(built, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx3"))
-    m1 = write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=2)
+    m1 = write_index(built, path, n_groups=2)
     g1 = dict(m1.committed_groups)
     m2 = write_index(built, path)
     assert m2.completed and m2.committed_groups == g1
@@ -80,13 +85,12 @@ def test_tombstones_survive_save_load(built, spark, tmp_path_factory):
     """delete -> save -> load must NOT resurrect deleted docs (the
     reference's MANIFEST durably records tombstone sets, keeper.rs:929)."""
     from frankensearch_spark.operators.lifecycle import delete_documents
-    from frankensearch_spark.operators.wand import serving_from_built
 
     oracle = OracleIndex(corpus_docs(N_DOCS))
     victims = [d for d, _ in oracle.search_bits("fn", k=2)]
-    deleted = delete_documents(serving_from_built(built), victims)
+    deleted = delete_documents(built, victims)
     path = str(tmp_path_factory.mktemp("idx5"))
-    write_index(deleted, path, bucket_shift=7, n_term_partitions=8, n_groups=2)
+    write_index(deleted, path, n_groups=2)
 
     idx = read_index(spark, path)
     assert idx.tombstones is not None
@@ -98,7 +102,7 @@ def test_tombstones_survive_save_load(built, spark, tmp_path_factory):
 
 def test_boolean_query_on_persisted_index(built, spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx4"))
-    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=2)
+    write_index(built, path, n_groups=2)
     idx = read_index(spark, path)
     oracle = OracleIndex(corpus_docs(N_DOCS))
     spec = QuerySpec(should=["term00001"], must_not=["term00002"])
@@ -108,7 +112,7 @@ def test_boolean_query_on_persisted_index(built, spark, tmp_path_factory):
 
 
 def test_serving_save_clears_crashed_partial_target(built, spark, tmp_path_factory):
-    """A target holding a CRASHED partial builder write (uncommitted
+    """A target holding a CRASHED partial write (uncommitted
     manifest + staged block groups) under the same docid assignment and
     layout is resumed by a serving save, not duplicated — read_index
     unions every blocks/group=* dir, so stale groups would silently
@@ -147,7 +151,7 @@ def test_resume_repins_fingerprint_when_nothing_committed(
     passes the check and mixes assignments, the exact silent corruption
     the fingerprint exists to prevent."""
     path = str(tmp_path_factory.mktemp("idx_fp"))
-    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=3)
+    write_index(built, path, n_groups=3)
 
     # simulate: published manifest, zero committed groups, a fingerprint
     # from a DIFFERENT session's docid assignment
@@ -178,23 +182,22 @@ def test_resume_repins_fingerprint_when_nothing_committed(
 
 
 def test_serving_save_refuses_partial_target_of_another_layout(
-    built, tmp_path_factory
+    built, raw, tmp_path_factory
 ):
     """A serving index writes its blocks as they are, so a partial
     target whose committed groups were written under another block
     layout cannot be resumed: the save refuses it."""
-    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import _publish
 
     path = str(tmp_path_factory.mktemp("idx_layout"))
-    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=2)
+    write_index(built, path, n_groups=2)
     m = load_manifest(path)
     m.completed = False
     m.tables = {}
     _publish(path, m)
     os.unlink(os.path.join(path, "_COMMITTED"))
     with pytest.raises(ValueError, match="layout mismatch"):
-        write_index(serving_from_built(built), path)
+        write_index(serving_from_built(raw), path)
 
 
 def test_write_clears_uncommitted_block_groups(built, spark, tmp_path_factory):
@@ -202,13 +205,13 @@ def test_write_clears_uncommitted_block_groups(built, spark, tmp_path_factory):
     manifest never landed) are removed before the next write, so
     read_index's union of every group directory sees no stale rows."""
     clean = str(tmp_path_factory.mktemp("idx_clean"))
-    write_index(built, clean, bucket_shift=7, n_term_partitions=8)
+    write_index(built, clean)
     path = str(tmp_path_factory.mktemp("idx_stale"))
-    write_index(built, path, bucket_shift=7, n_term_partitions=8, n_groups=3)
+    write_index(built, path, n_groups=3)
     for name in ("manifest.json", "_COMMITTED"):
         os.unlink(os.path.join(path, name))
 
-    m = write_index(built, path, bucket_shift=7, n_term_partitions=8)
+    m = write_index(built, path)
     assert set(m.committed_groups) == {"0"}
     idx = read_index(spark, path)
     assert idx.blocks.count() == read_index(spark, clean).blocks.count()

@@ -10,6 +10,7 @@ import pytest
 
 from frankensearch_spark.operators.astexec import search_ast_bits
 from frankensearch_spark.operators.build import build_multifield_index
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.oracle import OracleMultiIndex
 from frankensearch_spark.query_ast import REFERENCE_SCHEMA, parse_lenient
 
@@ -28,7 +29,7 @@ def _docs():
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def raw(spark):
     rows = [
         (docid, t["title"], t["content"]) for docid, t in _docs()
     ]
@@ -38,6 +39,11 @@ def built(spark):
     return build_multifield_index(
         corpus, ["docid"], {"content": "content", "title": "title"}
     )
+
+
+@pytest.fixture(scope="module")
+def built(raw):
+    return serving_from_built(raw)
 
 
 @pytest.fixture(scope="module")
@@ -97,7 +103,7 @@ def test_doc_matching_both_fields_sums_scores(oracle):
         assert np.float32(s).view(np.uint32) == expect.view(np.uint32), d
 
 
-def test_multifield_durable_serving_matches_oracle(built, oracle, spark, tmp_path_factory):
+def test_multifield_durable_serving_matches_oracle(raw, oracle, spark, tmp_path_factory):
     """Round-2: multi-field indexes persist to the compressed block store
     (fields/<name>/ per-field serving indexes + root manifest) and serve
     the FULL grammar from disk — bit-identical to the oracle."""
@@ -105,7 +111,10 @@ def test_multifield_durable_serving_matches_oracle(built, oracle, spark, tmp_pat
     from frankensearch_spark.plans.manifest import read_index, write_index
 
     path = str(tmp_path_factory.mktemp("mf_idx"))
-    write_index(built, path, bucket_shift=6, n_term_partitions=8, n_groups=1)
+    write_index(
+        serving_from_built(raw, bucket_shift=6, n_term_partitions=8),
+        path, n_groups=1,
+    )
     srv = read_index(spark, path)
     assert set(srv.fields) == {"content", "title"}
     assert srv.primary_name == "content"
@@ -127,14 +136,12 @@ def test_multifield_lifecycle(built, oracle, spark):
         delete_documents,
         upsert_documents,
     )
-    from frankensearch_spark.operators.wand import serving_from_built
-
     text = "rust ownership borrowing"
     ast = parse_lenient(text, REFERENCE_SCHEMA).query
     baseline = search_ast_bits(built, ast, k=5, schema=REFERENCE_SCHEMA)
     victims = [d for d, _ in baseline[:2]]
 
-    srv = serving_from_built(built)
+    srv = built
     deleted = delete_documents(srv, victims)
     orc = copy.deepcopy(oracle)
     orc.delete(victims)
@@ -190,7 +197,7 @@ def test_multifield_lifecycle(built, oracle, spark):
     assert len(hits2) == 1
 
 
-def test_multifield_wand_pruned_equals_oracle(built, oracle, spark, tmp_path_factory):
+def test_multifield_wand_pruned_equals_oracle(raw, oracle, spark, tmp_path_factory):
     """Round-2 closure of the "multi-field ASTs decode-and-score" gap:
     prunable multi-field shapes (bare terms expanding to content +
     title^2, explicit title: scopes, booleans, boosts) route through
@@ -204,7 +211,10 @@ def test_multifield_wand_pruned_equals_oracle(built, oracle, spark, tmp_path_fac
     from frankensearch_spark.plans.manifest import read_index, write_index
 
     path = str(tmp_path_factory.mktemp("mf_wand_idx"))
-    write_index(built, path, bucket_shift=4, n_term_partitions=8, n_groups=1)
+    write_index(
+        serving_from_built(raw, bucket_shift=4, n_term_partitions=8),
+        path, n_groups=1,
+    )
     srv = read_index(spark, path)
 
     prunable = [

@@ -12,6 +12,7 @@ from frankensearch_spark.operators.astexec import search_ast_bits
 from frankensearch_spark.operators.batchexec import search_batch_collect
 from frankensearch_spark.operators.build import build_multifield_index
 from frankensearch_spark.operators.serving_exec import serving_search_bits
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.oracle import OracleMultiIndex
 from frankensearch_spark.plans.manifest import read_index, write_index
 from frankensearch_spark.query_ast import (
@@ -59,15 +60,18 @@ def built(spark, docs):
         [(d, t["title"], t["content"]) for d, t in docs],
         "docid long, title string, content string",
     )
-    return build_multifield_index(
-        corpus, ["docid"], {"content": "content", "title": "title"}
+    return serving_from_built(
+        build_multifield_index(
+            corpus, ["docid"], {"content": "content", "title": "title"}
+        ),
+        bucket_shift=6, n_term_partitions=8,
     )
 
 
 @pytest.fixture(scope="module")
 def loaded(spark, built, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("mf_generated"))
-    write_index(built, path, bucket_shift=6, n_term_partitions=8, n_groups=1)
+    write_index(built, path, n_groups=1)
     return read_index(spark, path)
 
 

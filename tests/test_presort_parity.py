@@ -12,7 +12,10 @@ tokenize path keyed by external key.
 import numpy as np
 import pytest
 
-from frankensearch_spark.operators.build import build_index
+from frankensearch_spark.operators.build import (
+    build_index,
+    explode_grouped_postings,
+)
 from frankensearch_spark.operators.merge import (
     DEFAULT_BUCKET_SHIFT,
     build_blocks,
@@ -35,7 +38,7 @@ def test_kernel_presort_blocks_decode_to_postings(built):
     from frankensearch_spark.contract import fieldnorm_to_id
     from frankensearch_spark.functions.vbyte import vbyte_decode
 
-    pdf = build_blocks(built.postings_full, positions=built.positions).toPandas()
+    pdf = build_blocks(explode_grouped_postings(built.postings_grouped), positions=built.positions).toPandas()
     got = {}
     for (t, bk), grp in pdf.groupby(["term", "bucket"], sort=True):
         docs, tfs, fids, _rows, pos = decode_blocks_pdf(
@@ -48,7 +51,7 @@ def test_kernel_presort_blocks_decode_to_postings(built):
             [list(p) for p in pos],
         )
 
-    src = built.postings_full.toPandas().sort_values(["term", "docid"])
+    src = explode_grouped_postings(built.postings_grouped).toPandas().sort_values(["term", "docid"])
     src["bucket"] = src["docid"].to_numpy() >> DEFAULT_BUCKET_SHIFT
     want = {}
     for (t, bk), grp in src.groupby(["term", "bucket"], sort=True):
@@ -117,7 +120,7 @@ def test_default_build_matches_reference_postings(spark, built):
         )
 
     want = norm(ref, key_of_r)
-    assert norm(built.postings_full, key_of_b).equals(want)
+    assert norm(explode_grouped_postings(built.postings_grouped), key_of_b).equals(want)
 
     # block decode parity: the grouped writer's blocks decode to the
     # reference postings (bucket boundaries follow the docids, so

@@ -17,7 +17,7 @@ N = 80
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def raw(spark):
     return build_index(
         synthetic_corpus_df(spark, N, partitions=2), CORPUS_KEY,
         docid_mode="global",
@@ -25,8 +25,13 @@ def built(spark):
 
 
 @pytest.fixture(scope="module")
-def srv(built):
-    return serving_from_built(built, bucket_shift=6, n_term_partitions=8)
+def built(raw):
+    return serving_from_built(raw)
+
+
+@pytest.fixture(scope="module")
+def srv(raw):
+    return serving_from_built(raw, bucket_shift=6, n_term_partitions=8)
 
 
 def test_k_zero_and_offset_past_end(built, srv):

@@ -10,6 +10,7 @@ import pytest
 from frankensearch_spark.corpus import corpus_docs
 from frankensearch_spark.operators.build import build_index
 from frankensearch_spark.operators.serving_exec import serving_search_bits
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.plans.manifest import read_index, write_index
 from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
@@ -23,7 +24,10 @@ def serving(spark):
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=4)
     built = build_index(corpus, CORPUS_KEY, docid_mode="global")
     path = tempfile.mkdtemp(prefix="fsx_serving_")
-    write_index(built, path, n_groups=2, source="test")
+    write_index(
+        serving_from_built(built, cache=False), path, n_groups=2,
+        source="test",
+    )
     yield read_index(spark, path)
     shutil.rmtree(path, ignore_errors=True)
 
@@ -184,7 +188,7 @@ def test_phrase_rejected_without_positions(spark):
     )
     path = tempfile.mkdtemp(prefix="fsx_nopos_")
     try:
-        write_index(built, path, n_groups=1)
+        write_index(serving_from_built(built, cache=False), path, n_groups=1)
         idx = read_index(spark, path)
         assert not idx.has_positions
         with pytest.raises(ValueError, match="positions"):

@@ -14,6 +14,7 @@ from frankensearch_spark.operators.astexec import (
     search_ast_collect,
 )
 from frankensearch_spark.operators.build import build_index
+from frankensearch_spark.operators.wand import serving_from_built
 from frankensearch_spark.oracle import OracleIndex
 from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
 from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
@@ -24,7 +25,9 @@ N_DOCS = 300
 @pytest.fixture(scope="module")
 def built(spark):
     corpus = synthetic_corpus_df(spark, N_DOCS, partitions=4)
-    return build_index(corpus, CORPUS_KEY, docid_mode="global")
+    return serving_from_built(
+        build_index(corpus, CORPUS_KEY, docid_mode="global")
+    )
 
 
 @pytest.fixture(scope="module")
@@ -132,7 +135,9 @@ def test_partition_count_invariance(spark, oracle):
     """Q1-OB3 analogue: identical results regardless of parallelism."""
     for parts in (1, 7):
         corpus = synthetic_corpus_df(spark, N_DOCS, partitions=parts)
-        idx = build_index(corpus, CORPUS_KEY, cache=False, docid_mode="global")
+        idx = serving_from_built(build_index(
+            corpus, CORPUS_KEY, cache=False, docid_mode="global"
+        ))
         got = search_ast_bits(idx, "fn import term00000", k=10)
         exp = oracle.search_bits("fn import term00000", k=10)
         assert got == exp, parts

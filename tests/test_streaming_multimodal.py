@@ -27,6 +27,7 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
     one-shot batch build over the same docs (Q1-OB3 merge law)."""
     from frankensearch_spark.operators.astexec import search_ast_collect
     from frankensearch_spark.operators.build import build_index
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.streaming.incremental import (
         read_incremental_index,
         start_incremental_build,
@@ -46,7 +47,7 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
     q.awaitTermination(120)
 
     inc = read_incremental_index(spark, out)
-    batch = build_index(df, CORPUS_KEY)
+    batch = serving_from_built(build_index(df, CORPUS_KEY))
     n_inc, tok_inc = inc.stats()
     n_b, tok_b = batch.stats()
     assert (n_inc, tok_inc) == (n_b, tok_b)
@@ -62,7 +63,7 @@ def test_incremental_equals_batch_scores(spark, stream_dirs):
 
     # streamed mini-segments keep positions: phrase queries work
     # (round-1 gap — incremental.py dropped the positions column)
-    assert inc.positions is not None
+    assert inc.has_positions
     for text in ('"generated record"', '"term00001 term00002"'):
         inc_ph = search_ast_collect(inc, text, k=10)
         b_ph = search_ast_collect(batch, text, k=10)
@@ -203,87 +204,76 @@ def test_unknown_media_kind_raises(spark):
     assert "hologram" in str(exc.value) or isinstance(exc.value, Py4JJavaError)
 
 
-def test_legacy_position_segments_migrate_once(spark):
-    """ONE positions wire format end-to-end: a mini-segment still
-    carrying the retired pre-r4 ``array<int>`` format fails loudly at
-    read (no silent per-read normalization), the one-shot
-    migrate_segment_positions rewrites it through the merge commit
-    protocol (replaces chain, marker-first retirement), and the migrated
-    index serves bit-identically — phrases included — then tier-compacts
-    normally.  Re-running the migration is a no-op."""
+def _seal_batches(spark, out, rows, n_batches):
+    from frankensearch_spark.streaming.incremental import index_microbatch
+
+    per = -(-len(rows) // n_batches)
+    for bid in range(n_batches):
+        batch = spark.createDataFrame(
+            rows[bid * per : (bid + 1) * per], schema=CORPUS_SCHEMA
+        )
+        index_microbatch(batch, bid, out, CORPUS_KEY)
+
+
+def test_streamed_engine_serves_point_shapes_in_one_job(spark, tmp_path):
+    """A streamed snapshot is a working engine: warmed, it answers every
+    bounded point shape in ONE Spark job per search, with the numpy
+    oracle's bits over the same documents."""
+    from frankensearch_spark.engine import FrankensearchSpark
+    from frankensearch_spark.streaming.incremental import (
+        read_incremental_index,
+    )
+    from tests.test_engine import POINT_SHAPES, _bits, _jobs, oracle_bits, oracle_of
+
+    out = str(tmp_path / "out")
+    rows = make_corpus(N_DOCS)
+    _seal_batches(spark, out, rows, 3)
+    eng = FrankensearchSpark(read_incremental_index(spark, out), CORPUS_KEY)
+    eng.warm()
+    oracle = oracle_of(eng, {tuple(r[:3]): r[4] for r in rows}, {})
+    for name, q in POINT_SHAPES.items():
+        hits, n = _jobs(spark, f"streamed:{name}", lambda: eng.search_docids(q))
+        assert _bits(hits) == oracle_bits(oracle, q, 10), name
+        assert n == 1, (name, n)
+
+
+def test_seal_releases_build_caches(spark, tmp_path):
+    """Sealing micro-batches leaves no more persisted RDDs than before:
+    each seal unpersists the frames its build cached once the segment's
+    tables are written."""
+    sc = spark.sparkContext
+
+    def cached():
+        return len(sc._jsc.getPersistentRDDs())
+
+    before = cached()
+    _seal_batches(spark, str(tmp_path / "out"), make_corpus(60), 3)
+    assert cached() <= before
+
+
+def test_postings_form_segment_is_refused(spark, tmp_path):
+    """A segment sealed by the retired postings-form writer (a postings
+    table, no layout stamp in its segmeta) is refused by name at read,
+    with the way out, instead of failing on a missing table."""
+    import json
     import os
 
-    from frankensearch_spark.corpus import make_corpus
-    from frankensearch_spark.operators.astexec import search_ast_bits
-    from frankensearch_spark.operators.build import positions_as_array
-    from frankensearch_spark.plans.manifest import (
-        LegacyPositionsError,
-        migrate_segment_positions,
-    )
-    from frankensearch_spark.plans.tiers import compact_stream, list_segments
     from frankensearch_spark.streaming.incremental import (
-        index_microbatch,
         read_incremental_index,
     )
 
-    out = tempfile.mkdtemp(prefix="fsx_legacy_seg_")
-    try:
-        rows = make_corpus(40)
-        for bid in range(2):
-            batch = spark.createDataFrame(
-                rows[bid * 20 : (bid + 1) * 20], schema=CORPUS_SCHEMA
-            )
-            index_microbatch(batch, bid, out, CORPUS_KEY)
-        inc0 = read_incremental_index(spark, out)
-        doc0_terms = rows[0][4].split()[:2]
-        phrase = f'"{doc0_terms[0]} {doc0_terms[1]}"'
-        hits0 = search_ast_bits(inc0, phrase, k=5)
-        assert hits0
-
-        # rewrite segment 0's postings in the LEGACY array<int> format
-        seg0 = sorted(list_segments(out), key=lambda s: s.seg_id)[0]
-        p0 = os.path.join(out, "segments", seg0.seg_id, "postings")
-        legacy = positions_as_array(spark.read.parquet(p0))
-        assert dict(legacy.dtypes)["positions"] == "array<int>"
-        tmp = p0 + ".legacy"
-        legacy.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(p0)
-        os.rename(tmp, p0)
-        # a faithful legacy segment carries NO pos_format stamp (the
-        # field postdates those writers) — strip it so the reader's
-        # segmeta fast path correctly falls back to the footer probe
-        import json
-
-        smp = os.path.join(out, "segments", seg0.seg_id, "segmeta.json")
-        with open(smp) as fh:
-            sm = json.load(fh)
-        sm.pop("pos_format", None)
-        with open(smp, "w") as fh:
-            json.dump(sm, fh)
-
-        # the shim is retired: reading an unmigrated index raises
-        with pytest.raises(LegacyPositionsError) as exc:
-            read_incremental_index(spark, out)
-        assert "migrate_segment_positions" in str(exc.value)
-
-        assert migrate_segment_positions(spark, out) == 1
-        live = {s.seg_id for s in list_segments(out)}
-        assert f"g{seg0.seg_id}" in live and seg0.seg_id not in live
-        # replaces chain carries the legacy member (resurrection guard)
-        mig = next(s for s in list_segments(out)
-                   if s.seg_id == f"g{seg0.seg_id}")
-        assert seg0.seg_id in mig.replaces
-
-        inc = read_incremental_index(spark, out)
-        assert dict(inc.positions.dtypes)["positions"] == "binary"
-        assert search_ast_bits(inc, phrase, k=5) == hits0
-
-        assert migrate_segment_positions(spark, out) == 0  # idempotent
-
-        # tier compaction over the migrated index
-        n = compact_stream(spark, out, fanout=2)
-        assert n == 1
-        inc2 = read_incremental_index(spark, out)
-        assert search_ast_bits(inc2, phrase, k=5) == hits0
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "out")
+    seg = os.path.join(out, "segments", "s01048576")
+    spark.createDataFrame(
+        [(1 << 53, "fn", 1, 1, b"\x00")],
+        "docid long, term string, tf int, doclen int, positions binary",
+    ).write.parquet(os.path.join(seg, "postings"))
+    spark.createDataFrame(
+        [(1 << 53, 1)], "docid long, doclen int"
+    ).write.parquet(os.path.join(seg, "docmeta"))
+    with open(os.path.join(seg, "segmeta.json"), "w") as fh:
+        json.dump({"seg_id": "s01048576", "lease_lo": 1 << 20,
+                   "lease_hi": (1 << 20) + 1, "n_docs": 1, "replaces": [],
+                   "pos_format": "binary"}, fh)
+    with pytest.raises(ValueError, match="s01048576.*re-ingest"):
+        read_incremental_index(spark, out)

@@ -126,16 +126,24 @@ def test_merge_segments_overlapping_run_keeps_max_hi_and_unique_id(
         pq.write_table(
             pa.table(
                 {
-                    "docid": pa.array(docids, pa.int64()),
+                    "tpart": pa.array([0] * len(docids), pa.int32()),
                     "term": pa.array(["fn"] * len(docids)),
-                    "tf": pa.array([1] * len(docids), pa.int32()),
-                    "doclen": pa.array([1] * len(docids), pa.int64()),
-                    "positions": pa.array(
-                        [b"\x00"] * len(docids), pa.binary()
+                    "bucket": pa.array(
+                        [x >> 13 for x in docids], pa.int64()
                     ),
                 }
             ),
-            os.path.join(d, "postings", "part-0.parquet"),
+            os.path.join(d, "blocks", "part-0.parquet"),
+        )
+        pq.write_table(
+            pa.table(
+                {
+                    "term": pa.array(["fn"]),
+                    "df": pa.array([len(docids)], pa.int64()),
+                    "cf": pa.array([len(docids)], pa.int64()),
+                }
+            ),
+            os.path.join(d, "termstats", "part-0.parquet"),
         )
         pq.write_table(
             pa.table(
@@ -146,14 +154,14 @@ def test_merge_segments_overlapping_run_keeps_max_hi_and_unique_id(
             ),
             os.path.join(d, "docmeta", "part-0.parquet"),
         )
-        info = SegmentInfo(seg_id, lo, hi, len(docids))
+        info = SegmentInfo(seg_id, lo, hi, len(docids),
+                           layout=(13, 64, "vint"))
         write_segment_meta(d, info)
         return info
 
-    os.makedirs(os.path.join(root, "m00000000-00000040", "postings"))
-    os.makedirs(os.path.join(root, "m00000000-00000040", "docmeta"))
-    os.makedirs(os.path.join(root, "nest", "postings"))
-    os.makedirs(os.path.join(root, "nest", "docmeta"))
+    for seg_id in ("m00000000-00000040", "nest"):
+        for table in ("blocks", "docmeta", "termstats"):
+            os.makedirs(os.path.join(root, seg_id, table))
     wide = mk("m00000000-00000040", 0, 40, [0, 1])
     nest = mk("nest", 30, 32, [30 << 33])
 

@@ -36,6 +36,7 @@ def main() -> None:
         build_index,
         build_postings_fused,
     )
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY, synthetic_corpus_df
@@ -87,18 +88,21 @@ def main() -> None:
         fmt(grouped_frame),
     ))
 
-    # 2. exhaustive query path
-    idx = build_index(corpus, CORPUS_KEY)
-    idx.postings.count()
+    # 2. exhaustive query path, over the serving form every engine holds
+    built = build_index(corpus, CORPUS_KEY)
+    idx = serving_from_built(built)
+    idx.blocks.count()
     q = topk_ast(idx, "fn import term00000", k=10)
     sections.append((
         "Exhaustive BM25 top-k (topk_ast)",
-        "term-filtered scan of the CACHED postings (InMemoryTableScan, "
-        "column-pruned) → the pivot aggregation on near-unique (docid) "
-        "keys (one exchange; none here, where the index is one lease and "
-        "one partition) → numpy f32 kernel in a single MapInPandas → TakeOrderedAndProject "
+        "the serving posting source (serving_exec.field_postings): a "
+        "term/tpart-filtered scan of the CACHED block table "
+        "(InMemoryTableScan) → block decode to posting rows in one "
+        "MapInPandas → Spark's two-phase pivot aggregation on "
+        "near-unique (docid, fieldnorm_id) keys (two exchanges) → numpy "
+        "f32 kernel in a single MapInPandas → TakeOrderedAndProject "
         "(per-partition top-k + driver merge = the reference's collector "
-        "fold, E9/E11). No other exchange; no driver-side loop.",
+        "fold, E9/E11). No driver-side loop.",
         fmt(q),
     ))
 
@@ -200,7 +204,10 @@ def main() -> None:
         import frankensearch_spark.operators.wand as W
 
         tmp_b = os.path.join(tmp, "small_buckets")
-        write_index(idx, tmp_b, bucket_shift=5, n_groups=1)
+        write_index(
+            serving_from_built(built, bucket_shift=5, cache=False), tmp_b,
+            n_groups=1,
+        )
         sb = read_index(spark, tmp_b)
         sb.preload_termstats()
         sb.preload_bucket_coverage()
@@ -269,24 +276,26 @@ def main() -> None:
         fmt(q_events_asof_join(spark, "/root/testdata/sf0.001")),
     ))
 
-    # 6b. batched serving: one job for a whole query batch
+    # 6b. batched serving: the pivot lane (All and metadata shapes)
     from frankensearch_spark.operators.batchexec import topk_ast_batch
 
     batch_df = topk_ast_batch(
-        idx, ["fn import", "term00001 AND term00002", '"term00001 term00002"'],
+        idx, ["lang:py fn", "lang:py term00001",
+              "doclen:[40 TO 120] term00002"],
         k=10,
     )
     sections.append((
-        "Batched top-k (3 queries, one job)",
-        "The batch shares ONE term-filtered postings scan (union of all "
-        "batch terms — partition pruning intact), ONE pivot exchange per "
-        "field, and ONE MapInPandas kernel pass that evaluates every "
+        "Batched top-k, pivot lane (3 metadata queries, one job)",
+        "The shapes the bucket lane does not take (All nodes, metadata "
+        "predicates) share ONE candidate-block scan and decode (union of "
+        "all batch terms — partition pruning intact), ONE pivot "
+        "aggregation per field, the docmeta join for the metadata "
+        "columns, and ONE MapInPandas kernel pass that evaluates every "
         "query's AST with a per-query support mask; partitions emit "
         "per-query local top-k, so the only batch-added exchange is the "
         "(batch × k × partitions)-row window for the global cut.  Batch "
         "size multiplies pivot ROWS, never plan STAGES — the per-job "
-        "scheduling constant is paid once per batch (measured 8.7× the "
-        "concurrent-FAIR throughput at 20k docs, BENCH.md §3).",
+        "scheduling constant is paid once per batch.",
         fmt(batch_df),
     ))
 

@@ -190,13 +190,15 @@ def _fuzz_multifield(spark, rng, n_mf: int, n_docs: int,
 
     from frankensearch_spark.operators.astexec import search_ast_bits
     from frankensearch_spark.operators.serving_exec import serving_search_bits
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.query_ast import REFERENCE_SCHEMA, parse_lenient
 
     built, oracle = _corpus(spark, n_docs, clustered, multifield=True)
+    mem = serving_from_built(built, bucket_shift=6, n_term_partitions=8)
     path = tempfile.mkdtemp(prefix="fsx_fuzz_mf_")
     try:
-        write_index(built, path, bucket_shift=6, n_term_partitions=8, n_groups=1)
+        write_index(mem, path, n_groups=1)
         srv = read_index(spark, path)
 
         def compose():
@@ -206,7 +208,7 @@ def _fuzz_multifield(spark, rng, n_mf: int, n_docs: int,
 
         def both(text):
             return (
-                search_ast_bits(built, text, k=10, schema=REFERENCE_SCHEMA),
+                search_ast_bits(mem, text, k=10, schema=REFERENCE_SCHEMA),
                 serving_search_bits(srv, text, k=10, schema=REFERENCE_SCHEMA),
             )
 
@@ -216,8 +218,8 @@ def _fuzz_multifield(spark, rng, n_mf: int, n_docs: int,
             )
             return e, e
 
-        return _phase("MULTIFIELD (primary, serving)", n_mf, compose, both,
-                      exp)
+        return _phase("MULTIFIELD (in-session, loaded)", n_mf, compose,
+                      both, exp)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -236,6 +238,7 @@ def main() -> int:
     from frankensearch_spark.operators.astexec import search_ast_bits
     from frankensearch_spark.operators.batchexec import search_batch_collect
     from frankensearch_spark.operators.serving_exec import serving_search_bits
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.query_ast import ENGINE_SCHEMA, parse_lenient
     from frankensearch_spark.session import get_spark
@@ -254,12 +257,13 @@ def main() -> int:
         for clustered in (False, True):
             label = "clustered" if clustered else "iid"
             built, oracle = _corpus(spark, n_docs, clustered)
+            mem = serving_from_built(built)
 
             def exp(text):
                 ast = parse_lenient(text, ENGINE_SCHEMA).query
                 return _bits(oracle.search_ast(ast, 10))
 
-            write_index(built, f"{path}/{label}", n_groups=2, source="fuzz")
+            write_index(mem, f"{path}/{label}", n_groups=2, source="fuzz")
             serving = read_index(spark, f"{path}/{label}")
             serving.preload_termstats()
             serving.preload_bucket_coverage()
@@ -271,7 +275,7 @@ def main() -> int:
             if not clustered:
                 bad += _phase(
                     "AST", n_ast, compose,
-                    lambda t: search_ast_bits(built, t, k=10), exp,
+                    lambda t: search_ast_bits(mem, t, k=10), exp,
                 )
                 # batched execution: random batches through ONE job
                 # each, every member checked against the oracle — the

@@ -45,6 +45,7 @@ def main() -> None:
     from frankensearch_spark.operators.build import build_index
     from frankensearch_spark.operators.batchexec import search_batch_collect
     from frankensearch_spark.operators.serving_exec import serving_search_bits
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import read_index, write_index
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY
@@ -72,7 +73,10 @@ def main() -> None:
     shutil.rmtree(idx_out, ignore_errors=True)
     corpus = spark.read.parquet(corpus_path)
     idx = build_index(corpus, CORPUS_KEY, docid_mode="lease")
-    write_index(idx, idx_out, n_groups=1, source=corpus_path)
+    write_index(
+        serving_from_built(idx, cache=False), idx_out, n_groups=1,
+        source=corpus_path,
+    )
 
     srv = read_index(spark, idx_out)
     srv.blocks = srv.blocks.persist()

@@ -32,7 +32,8 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--codec", default="vint",
                     choices=["vint", "for", "bitmap"],
-                    help="posting block codec for the durable write")
+                    help="posting block codec (serving_from_built) of "
+                         "the durable write")
     ap.add_argument("--no-warm", action="store_true")
     ap.add_argument("--skip-write", action="store_true",
                     help="stop after in-memory index materialization")
@@ -45,6 +46,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from frankensearch_spark.operators.build import build_index
+    from frankensearch_spark.operators.wand import serving_from_built
     from frankensearch_spark.plans.manifest import write_index
     from frankensearch_spark.sources.corpus import CORPUS_KEY
 
@@ -103,8 +105,10 @@ def main() -> None:
     write_secs = None
     if not args.skip_write:
         t0 = time.perf_counter()
-        write_index(idx, args.out, n_groups=1, source=args.corpus,
-                    codec=args.codec)
+        write_index(
+            serving_from_built(idx, cache=False, codec=args.codec),
+            args.out, n_groups=1, source=args.corpus,
+        )
         write_secs = round(time.perf_counter() - t0, 2)
 
     index_bytes = None

@@ -11,10 +11,13 @@ directory, and measures, per drop:
                    (segmeta.json) exists, i.e. the docs are DURABLY
                    indexed and visible to any new reader;
   * search lag   — file drop -> a query for a token unique to that drop
-                   returns the doc through read_incremental_index
-                   (includes one snapshot-assembly + query round).
+                   returns the doc: read_incremental_index assembles the
+                   snapshot (a ServingIndex over the sealed block
+                   segments) and serving_search_bits answers it.
 
-Prints ONE JSON line with per-drop lags and medians.
+After the drops it seals one more 10-row batch outside the stream, in a
+job group, and reports the Spark jobs that seal ran.  Prints ONE JSON
+line with per-drop lags, medians and the jobs per seal.
 
 Usage: python tools/visibility_bench.py [n_drops]
 """
@@ -37,13 +40,13 @@ def main() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from frankensearch_spark.operators.astexec import search_ast_collect
+    from frankensearch_spark.operators.serving_exec import serving_search_bits
     from frankensearch_spark.plans.tiers import list_segments
     from frankensearch_spark.session import get_spark
     from frankensearch_spark.sources.corpus import CORPUS_KEY, CORPUS_SCHEMA
     from frankensearch_spark.streaming.incremental import (
+        index_microbatch,
         read_incremental_index,
-        start_incremental_build,
     )
 
     spark = get_spark("fsx-visibility", master="local[8]",
@@ -77,10 +80,7 @@ def main() -> None:
     )
     q = (
         stream.writeStream.foreachBatch(
-            lambda df, bid: __import__(
-                "frankensearch_spark.streaming.incremental",
-                fromlist=["index_microbatch"],
-            ).index_microbatch(df, bid, out, CORPUS_KEY)
+            lambda df, bid: index_microbatch(df, bid, out, CORPUS_KEY)
         )
         .option("checkpointLocation", os.path.join(out, "_checkpoint"))
         .trigger(processingTime="500 milliseconds")
@@ -101,11 +101,22 @@ def main() -> None:
             time.sleep(0.02)
         commit_lags.append(time.perf_counter() - t0)
         idx = read_incremental_index(spark, out)
-        hits = search_ast_collect(idx, token, k=5)
+        hits = serving_search_bits(idx, token, k=5)
         assert hits, token
         search_lags.append(time.perf_counter() - t0)
 
     q.stop()
+    sc = spark.sparkContext
+    sc.setJobGroup("seal", "seal")
+    drop(n_drops + 1)
+    index_microbatch(
+        spark.read.parquet(
+            os.path.join(src, f"drop-{n_drops + 1:04d}.parquet")
+        ),
+        0, os.path.join(out, "seal_probe"), CORPUS_KEY,
+    )
+    sc.setJobGroup("other", "other")
+    seal_jobs = len(sc.statusTracker().getJobIdsForGroup("seal"))
     print(json.dumps({
         "metric": "stream_visibility_lag",
         "unit": "sec",
@@ -115,6 +126,7 @@ def main() -> None:
         "commit_lags": [round(x, 3) for x in commit_lags],
         "search_lag_p50": round(statistics.median(search_lags), 3),
         "search_lags": [round(x, 3) for x in search_lags],
+        "seal_jobs": seal_jobs,
     }))
     spark.stop()
     shutil.rmtree(src, ignore_errors=True)
